@@ -1,8 +1,10 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import java.nio.file.{Files, Paths}
-/** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+import scala.util.control.NonFatal
+/** Correctness dump: each SparkEntry.queries result → parquet, plus
+  * oracle_sql.json, for the DuckDB oracle compare. Exits 1 naming every
+  * query that failed. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val (sfDir, outDir) = (args(0), args(1))
@@ -17,21 +19,8 @@ object Verify {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    new java.io.File(outDir).mkdirs()
-    SparkEntry.queries
-      .filter { case (name, _) => only.forall(_.contains(name)) }
-      .foreach { case (name, fn) =>
-      try {
-        System.err.println(s"[verify] $name start")
-        val t0 = System.nanoTime()
-        fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-          .parquet(s"$outDir/$name")
-        System.err.println(
-          f"[verify] $name ok ${(System.nanoTime() - t0) / 1e9}%.2fs")
-      } catch { case e: Throwable =>
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
-      }
-    }
+    val failed = dump(spark, sfDir, outDir, SparkEntry.queries.toSeq
+      .filter { case (name, _) => only.forall(_.contains(name)) })
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the
     // driver's json.load fail and silently zero the round's correctness.
@@ -48,5 +37,32 @@ object Verify {
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()
+    if (failed.nonEmpty) {
+      System.err.println(s"[verify] ${failed.size} queries FAILED: ${failed.mkString(", ")}")
+      sys.exit(1)
+    }
+  }
+
+  /** Runs each query and writes its result to `outDir/<name>` as parquet.
+    * A query that throws is logged and the run moves on (one bad query
+    * must not hide the others' results); the names of the failed queries
+    * are returned, in run order, so the caller can fail loudly. */
+  def dump(spark: SparkSession, sfDir: String, outDir: String,
+           queries: Seq[(String, (SparkSession, String) => DataFrame)]): Seq[String] = {
+    new java.io.File(outDir).mkdirs()
+    queries.flatMap { case (name, fn) =>
+      try {
+        System.err.println(s"[verify] $name start")
+        val t0 = System.nanoTime()
+        fn(spark, sfDir).coalesce(1).write.mode("overwrite")
+          .parquet(s"$outDir/$name")
+        System.err.println(
+          f"[verify] $name ok ${(System.nanoTime() - t0) / 1e9}%.2fs")
+        None
+      } catch { case NonFatal(e) =>
+        System.err.println(s"[verify] $name failed: ${e.getMessage}")
+        Some(name)
+      }
+    }
   }
 }

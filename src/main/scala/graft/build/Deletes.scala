@@ -166,8 +166,7 @@ object Deletes {
     import spark.implicits._
     val ids = spark.read.parquet(IndexPaths.postings(dir))
       .where($"term" === term)
-      .select($"term", $"firstDocId", $"lastDocId", $"numDocs", $"maxTf",
-        $"maxNorm", $"sumTf", $"segId", $"bytes").as[PostingRow]
+      .select(PostingRow.columns: _*).as[PostingRow]
       .flatMap(r => PostingsCodec.decodeBlock(r.firstDocId, r.numDocs, r.bytes)._1)
     deleteDocs(spark, dir, ids)
   }
@@ -252,8 +251,7 @@ object Deletes {
     if (!hasPositions && !hasOffsets && !hasPayloads) {
       val renumbered = sources.map { case (d, remap) =>
         spark.read.parquet(IndexPaths.postings(d))
-          .select($"term", $"firstDocId", $"lastDocId", $"numDocs", $"maxTf",
-            $"maxNorm", $"sumTf", $"segId", $"bytes").as[PostingRow]
+          .select(PostingRow.columns: _*).as[PostingRow]
           .flatMap { r =>
             val (ids, tfs, norms) = PostingsCodec.decodeBlock(r.firstDocId, r.numDocs, r.bytes)
             ids.indices.iterator.map(i => (r.term, ids(i), tfs(i), norms(i)))

@@ -71,8 +71,7 @@ object IndexSorter {
       }
       val live = spark.read.parquet(IndexPaths.postings(dir))
         .where($"term" === term && $"firstDocId".isin(keep.map(_._1).toIndexedSeq: _*))
-        .select($"term", $"firstDocId", $"lastDocId", $"numDocs", $"maxTf",
-          $"maxNorm", $"sumTf", $"segId", $"bytes").as[PostingRow]
+        .select(PostingRow.columns: _*).as[PostingRow]
         .flatMap { r =>
           val (ids, tfs, _) = PostingsCodec.decodeBlock(r.firstDocId, r.numDocs, r.bytes)
           ids.indices.map(i => (ids(i), tfs(i)))

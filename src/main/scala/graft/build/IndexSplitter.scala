@@ -80,8 +80,7 @@ object IndexSplitter {
     if (!hasPositions && !hasOffsets && !hasPayloads) {
       val decoded = spark.read.parquet(IndexPaths.postings(dir))
         .where(blockPrune)
-        .select($"term", $"firstDocId", $"lastDocId", $"numDocs", $"maxTf",
-          $"maxNorm", $"sumTf", $"segId", $"bytes").as[PostingRow]
+        .select(PostingRow.columns: _*).as[PostingRow]
         .flatMap { r =>
           val (ids, tfs, norms) = PostingsCodec.decodeBlock(r.firstDocId, r.numDocs, r.bytes)
           ids.indices.iterator.map(i => (r.term, ids(i), tfs(i), norms(i)))

@@ -45,6 +45,14 @@ final case class PostingRow(
     segId: Int,   // build partition that produced the block (lineage)
     bytes: Array[Byte])
 
+object PostingRow {
+  /** The postings table's columns in [[PostingRow]] field order — the one
+    * projection every typed postings scan selects before `.as[PostingRow]`. */
+  val columns: Seq[org.apache.spark.sql.Column] =
+    Seq("term", "firstDocId", "lastDocId", "numDocs", "maxTf", "maxNorm",
+      "sumTf", "segId", "bytes").map(org.apache.spark.sql.functions.col)
+}
+
 /** Union row emitted by the single fused sort+tokenize pass (segment
   * flush): kind 't' carries a posting block, kind 'd' a stored doc (full
   * content — the flush table's d-partition IS the stored-fields table)
@@ -89,6 +97,15 @@ final case class TermDictRow(
     totalTf: Long,
     maxTf: Int,
     maxNorm: Int) // term-level score upper-bound inputs for WAND
+
+object TermDictRow {
+  /** One term's stats over two disjoint doc spaces (generations): df and
+    * totalTf add, the WAND bounds take the max — the MultiFields.Terms
+    * merge. */
+  def merge(a: TermDictRow, b: TermDictRow): TermDictRow =
+    TermDictRow(a.term, a.df + b.df, a.totalTf + b.totalTf,
+      math.max(a.maxTf, b.maxTf), math.max(a.maxNorm, b.maxNorm))
+}
 
 final case class CollectionStatsRow(
     maxDoc: Long,

@@ -289,8 +289,7 @@ object DocIndex {
     import spark.implicits._
     spark.read.parquet(IndexPaths.postings(dir))
       .where($"term".isin(terms.distinct: _*))
-      .select($"term", $"firstDocId", $"lastDocId", $"numDocs", $"maxTf",
-        $"maxNorm", $"sumTf", $"segId", $"bytes").as[PostingRow]
+      .select(PostingRow.columns: _*).as[PostingRow]
       .flatMap { r =>
         val (docIds, tfs, _) = PostingsCodec.decodeBlock(r.firstDocId, r.numDocs, r.bytes)
         docIds.indices.map(i => (docIds(i), r.term, tfs(i).toLong))

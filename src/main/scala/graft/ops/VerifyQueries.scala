@@ -45,10 +45,7 @@ object VerifyQueries {
     val reader = graft.search.IndexReader.multi(spark, gens)
     val cs = reader.collectionStats
     val avgdl = cs.sumTotalTermFreq * 1.0 / cs.maxDoc
-    val h = reader.postings.where(col("term") === "merge")
-      .select(col("term"), col("firstDocId"), col("lastDocId"), col("numDocs"),
-        col("maxTf"), col("maxNorm"), col("sumTf"), col("segId"), col("bytes"))
-      .as[graft.build.PostingRow]
+    val h = reader.postingRows(Seq("merge"))
       .flatMap { r =>
         val (ids, tfs, _) = graft.postings.PostingsCodec.decodeBlock(r.firstDocId, r.numDocs, r.bytes)
         ids.indices.map(i => (ids(i), tfs(i).toLong))
@@ -78,10 +75,7 @@ object VerifyQueries {
     val reader = new graft.search.IndexReader(spark, dir)
     val cs = reader.collectionStats
     val avgdl = cs.sumTotalTermFreq * 1.0 / cs.maxDoc
-    val h = reader.postings.where(col("term") === "merge")
-      .select(col("term"), col("firstDocId"), col("lastDocId"), col("numDocs"),
-        col("maxTf"), col("maxNorm"), col("sumTf"), col("segId"), col("bytes"))
-      .as[graft.build.PostingRow]
+    val h = reader.postingRows(Seq("merge"))
       .flatMap { r =>
         val (ids, tfs, _) = graft.postings.PostingsCodec.decodeBlock(r.firstDocId, r.numDocs, r.bytes)
         ids.indices.map(i => (ids(i), tfs(i).toLong))
@@ -110,10 +104,7 @@ object VerifyQueries {
     val reader = graft.search.IndexReader.multi(spark, shards)
     val cs = reader.collectionStats
     val avgdl = cs.sumTotalTermFreq * 1.0 / cs.maxDoc
-    val h = reader.postings.where(col("term") === "merge")
-      .select(col("term"), col("firstDocId"), col("lastDocId"), col("numDocs"),
-        col("maxTf"), col("maxNorm"), col("sumTf"), col("segId"), col("bytes"))
-      .as[graft.build.PostingRow]
+    val h = reader.postingRows(Seq("merge"))
       .flatMap { r =>
         val (ids, tfs, _) = graft.postings.PostingsCodec.decodeBlock(r.firstDocId, r.numDocs, r.bytes)
         ids.indices.map(i => (ids(i), tfs(i).toLong))

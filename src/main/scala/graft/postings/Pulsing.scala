@@ -61,8 +61,7 @@ object Pulsing {
     // Pulsed terms: decode their (<= cutoff) postings and fold them into
     // per-term arrays, docId-ascending — the dictionary's inline payload.
     val inlined = routed.where($"df" <= freqCutoff)
-      .select($"term", $"firstDocId", $"lastDocId", $"numDocs", $"maxTf",
-        $"maxNorm", $"sumTf", $"segId", $"bytes").as[PostingRow]
+      .select(PostingRow.columns: _*).as[PostingRow]
       .flatMap { r =>
         val (ids, tfs, _) = PostingsCodec.decodeBlock(r.firstDocId, r.numDocs, r.bytes)
         ids.indices.map(i => (r.term, ids(i), tfs(i)))
@@ -93,8 +92,7 @@ object Pulsing {
         $"p.inlineTfs".cast("long").as("tf"))
     val blocks = spark.read.parquet(IndexPaths.postings(pulsedDir))
       .where($"term".isin(t: _*))
-      .select($"term", $"firstDocId", $"lastDocId", $"numDocs", $"maxTf",
-        $"maxNorm", $"sumTf", $"segId", $"bytes").as[PostingRow]
+      .select(PostingRow.columns: _*).as[PostingRow]
       .flatMap { r =>
         val (ids, tfs, _) = PostingsCodec.decodeBlock(r.firstDocId, r.numDocs, r.bytes)
         ids.indices.map(i => (ids(i), r.term, tfs(i).toLong))

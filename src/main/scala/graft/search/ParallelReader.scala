@@ -32,8 +32,8 @@ final class ParallelIndexReader(spark: SparkSession, primary: String,
   private def unionOf(f: String => String): DataFrame =
     all.map(d => spark.read.parquet(f(d))).reduce(_ unionByName _)
 
-  override def postings: DataFrame = unionOf(IndexPaths.postings)
-  override def termDict: DataFrame = unionOf(IndexPaths.termDict)
+  @transient override lazy val postings: DataFrame = unionOf(IndexPaths.postings)
+  @transient override lazy val termDict: DataFrame = unionOf(IndexPaths.termDict)
 
   override lazy val termFirstChars: Seq[Char] = firstCharsAcross(all)
 
@@ -43,7 +43,7 @@ final class ParallelIndexReader(spark: SparkSession, primary: String,
   // primary-only expansion would silently miss secondary keyword terms)
   override lazy val hasReversedDict: Boolean =
     allHave(all, IndexPaths.termDictRev)
-  override def termDictRev: DataFrame = unionOf(IndexPaths.termDictRev)
+  @transient override lazy val termDictRev: DataFrame = unionOf(IndexPaths.termDictRev)
 
   override def tombstoneDirs: Seq[String] = all
 }

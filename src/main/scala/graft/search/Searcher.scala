@@ -10,117 +10,137 @@ import org.apache.spark.sql.functions._
   * reference: /root/reference/src/Lucene.Net/Index/IndexReader.cs). Pulls
   * global statistics once per query, like CreateNormalizedWeight
   * (IndexSearcher.cs:720-732). [[MultiIndexReader]] overrides the table
-  * accessors to span several segment-generation indexes. */
+  * accessors to span several segment-generation indexes.
+  *
+  * A reader pins its table handles: each table is opened (file listing
+  * and parquet schema read) on first use and reused by every later query,
+  * and the handles are `@transient`, so a reader captured in a closure
+  * never ships a DataFrame. Generation directories are immutable, so this
+  * is the same point-in-time contract tombstones already follow (loaded
+  * once per [[Searcher]]). After rebuilding a directory IN PLACE, open a
+  * new reader (the DirectoryReader.openIfChanged contract). */
 class IndexReader(val spark: SparkSession, val dir: String) extends Serializable {
   import spark.implicits._
 
   lazy val collectionStats: CollectionStatsRow =
     spark.read.parquet(IndexPaths.collectionStats(dir)).as[CollectionStatsRow].head()
 
-  def postings: DataFrame = spark.read.parquet(IndexPaths.postings(dir))
-  def docstats: DataFrame = spark.read.parquet(IndexPaths.docstats(dir))
-  def termDict: DataFrame = spark.read.parquet(IndexPaths.termDict(dir))
+  /** Directories whose data tables this view spans — every optional-
+    * sidecar probe requires the sidecar in all of them. */
+  def dataDirs: Seq[String] = Seq(dir)
+
+  /** Opens one data table across [[dataDirs]] (one relation, one listing). */
+  protected def open(path: String => String): DataFrame =
+    spark.read.parquet(dataDirs.map(path): _*)
+
+  @transient lazy val postings: DataFrame = open(IndexPaths.postings)
+  @transient lazy val docstats: DataFrame = open(IndexPaths.docstats)
+  @transient lazy val termDict: DataFrame = open(IndexPaths.termDict)
+  /** The dictionary rows as stored, one per term per data dir — what
+    * [[termStats]] reads; a multi-generation [[termDict]] re-aggregates
+    * them relationally. */
+  @transient protected lazy val storedTermDict: DataFrame = termDict
   /** Stored fields (≙ the compressed row store) — phrase verification
     * re-reads candidate docs' content from here. */
-  def docsTable: DataFrame = graft.build.DocsTable.read(spark, dir)
+  @transient lazy val docsTable: DataFrame =
+    dataDirs.map(d => graft.build.DocsTable.read(spark, d)).reduce(_ unionByName _)
+
+  /** Typed postings blocks of `terms` — the one postings scan every
+    * reader path shares; the term filter prunes parquet row groups on the
+    * sorted term column, further `where`s push into the same scan. */
+  def postingRows(terms: Seq[String]): Dataset[PostingRow] =
+    allPostingRows.where($"term".isin(terms.distinct: _*))
+
+  /** Every postings block, typed (narrowed by the caller's `where`/join). */
+  private[search] def allPostingRows: Dataset[PostingRow] =
+    postings.select(PostingRow.columns: _*).as[PostingRow]
 
   /** Per-doc term vector (reference: term vectors are a per-doc mini
     * inverted index, Codecs/Compressing/CompressingTermVectorsWriter.cs;
     * here recovered from the postings via block-metadata docId pruning —
     * only blocks whose [firstDocId, lastDocId] straddle the doc decode). */
-  def termVector(docId: Long): DataFrame = {
-    import graft.postings.PostingsCodec
-    postings
+  def termVector(docId: Long): DataFrame =
+    allPostingRows
       .where($"firstDocId" <= docId && $"lastDocId" >= docId)
-      .select($"term", $"firstDocId", $"lastDocId", $"numDocs", $"maxTf",
-        $"maxNorm", $"sumTf", $"segId", $"bytes").as[PostingRow]
       .flatMap { r =>
         val (ids, tfs, _) = PostingsCodec.decodeBlock(r.firstDocId, r.numDocs, r.bytes)
         val i = java.util.Arrays.binarySearch(ids, docId)
         if (i >= 0) Iterator.single((r.term, tfs(i))) else Iterator.empty
       }.toDF("term", "tf")
-  }
 
   /** True when the index was built with `indexPositions = true` (the
     * DOCS_AND_FREQS_AND_POSITIONS option): phrase queries then read the
     * positions sidecar instead of re-analyzing stored content. */
-  lazy val hasPositions: Boolean = {
-    val p = new org.apache.hadoop.fs.Path(IndexPaths.positions(dir))
-    p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
-  }
-  def positions: DataFrame = spark.read.parquet(IndexPaths.positions(dir))
+  lazy val hasPositions: Boolean = allHave(dataDirs, IndexPaths.positions)
+  @transient lazy val positions: DataFrame = open(IndexPaths.positions)
 
   /** True when the index carries the char-offset sidecar (the
     * ..._AND_OFFSETS level, reference: Index/FieldInfo.cs:373-397) —
     * highlighting then reads offsets from the index instead of
     * re-analyzing stored content (the PostingsHighlighter idea,
     * reference: PostingsHighlight/PostingsHighlighter.cs:74). */
-  lazy val hasOffsets: Boolean = {
-    val p = new org.apache.hadoop.fs.Path(IndexPaths.offsets(dir))
-    p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
-  }
-  def offsets: DataFrame = spark.read.parquet(IndexPaths.offsets(dir))
+  lazy val hasOffsets: Boolean = allHave(dataDirs, IndexPaths.offsets)
+  @transient lazy val offsets: DataFrame = open(IndexPaths.offsets)
 
   /** True when the index carries the per-position payload sidecar (the
     * .pay stream analog — reference: Index/Payload semantics and the
     * Search/Payloads query family). */
-  lazy val hasPayloads: Boolean = {
-    val p = new org.apache.hadoop.fs.Path(IndexPaths.payloads(dir))
-    p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
-  }
-  def payloads: DataFrame = spark.read.parquet(IndexPaths.payloads(dir))
+  lazy val hasPayloads: Boolean = allHave(dataDirs, IndexPaths.payloads)
+  @transient lazy val payloads: DataFrame = open(IndexPaths.payloads)
 
-  /** (docId, term, tf, normByte, per-position payloads) for a term set,
-    * decoded from the aligned postings/payloads blocks. */
-  def termPayloadRows(terms: Seq[String])
-      : Dataset[(Long, String, Int, Int, Array[Array[Byte]])] = {
+  /** The postings blocks of `terms` joined to their aligned blocks in a
+    * `sidecar` table (positions, offsets and payloads share the postings'
+    * block boundaries), both scans parquet-pruned by the sorted term
+    * column: (term, firstDocId, numDocs, postings bytes, sidecar bytes). */
+  private[search] def sidecarBlocks(sidecar: DataFrame, terms: Seq[String])
+      : Dataset[(String, Long, Int, Array[Byte], Array[Byte])] = {
     val distinct = terms.distinct
     val t = postings.where($"term".isin(distinct: _*))
       .select($"term", $"firstDocId", $"numDocs", $"bytes")
       .toDF("term", "firstDocId", "tn", "tbytes")
-    val y = payloads.where($"term".isin(distinct: _*))
-      .select($"term", $"firstDocId", $"bytes").toDF("term", "firstDocId", "ybytes")
-    t.join(y, Seq("term", "firstDocId"))
-      .select($"term", $"firstDocId", $"tn", $"tbytes", $"ybytes")
+    val s = sidecar.where($"term".isin(distinct: _*))
+      .select($"term", $"firstDocId", $"bytes").toDF("term", "firstDocId", "sbytes")
+    t.join(s, Seq("term", "firstDocId"))
+      .select($"term", $"firstDocId", $"tn", $"tbytes", $"sbytes")
       .as[(String, Long, Int, Array[Byte], Array[Byte])]
+  }
+
+  /** (docId, term, tf, normByte, per-position payloads) for a term set,
+    * decoded from the aligned postings/payloads blocks. */
+  def termPayloadRows(terms: Seq[String])
+      : Dataset[(Long, String, Int, Int, Array[Array[Byte]])] =
+    sidecarBlocks(payloads, terms)
       .flatMap { case (term, firstDocId, n, tbytes, ybytes) =>
         val (ids, tfs, norms) = PostingsCodec.decodeBlock(firstDocId, n, tbytes)
         val pays = PostingsCodec.decodePayloadsBlock(n, ybytes)
         ids.indices.iterator.map(i => (ids(i), term, tfs(i), norms(i), pays(i)))
       }
-  }
 
   /** (docId, term, flattened [s0,e0,s1,e1,…] char offsets) for a term
-    * set, decoded from the aligned postings/offsets blocks — both scans
-    * parquet-pruned by the sorted term column. */
-  def termOffsetRows(terms: Seq[String]): Dataset[(Long, String, Array[Int])] = {
-    val distinct = terms.distinct
-    val t = postings.where($"term".isin(distinct: _*))
-      .select($"term", $"firstDocId", $"numDocs", $"bytes")
-      .toDF("term", "firstDocId", "tn", "tbytes")
-    val o = offsets.where($"term".isin(distinct: _*))
-      .select($"term", $"firstDocId", $"bytes").toDF("term", "firstDocId", "obytes")
-    t.join(o, Seq("term", "firstDocId"))
-      .select($"term", $"firstDocId", $"tn", $"tbytes", $"obytes")
-      .as[(String, Long, Int, Array[Byte], Array[Byte])]
+    * set, decoded from the aligned postings/offsets blocks. */
+  def termOffsetRows(terms: Seq[String]): Dataset[(Long, String, Array[Int])] =
+    sidecarBlocks(offsets, terms)
       .flatMap { case (term, firstDocId, n, tbytes, obytes) =>
         val (ids, _, _) = PostingsCodec.decodeBlock(firstDocId, n, tbytes)
         val offs = PostingsCodec.decodeOffsetsBlock(n, obytes)
         ids.indices.iterator.map(i => (ids(i), term, offs(i)))
       }
-  }
 
   /** True when the optional bloom sidecar exists for this index
     * (graft.build.BloomFilter.build — the BloomFilteringPostingsFormat
-    * analog). Checked once per reader. */
-  private lazy val hasBloom: Boolean = tombstoneDirs.forall { d =>
-    val p = new org.apache.hadoop.fs.Path(graft.build.BloomFilter.path(d))
-    p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
-  }
+    * analog). Checked once per reader. Probed on [[tombstoneDirs]], not
+    * [[dataDirs]]: [[termStats]] consults the filter of every dir whose
+    * terms the dictionary holds, and a [[ParallelIndexReader]]'s dataDirs
+    * is its primary alone while its dictionary unions every side. */
+  private lazy val hasBloom: Boolean =
+    allHave(tombstoneDirs, graft.build.BloomFilter.path)
 
   /** Stats pull for query terms — one tiny dictionary lookup job,
     * parquet-pruned by the sorted term column (≙ the FST term-index seek,
-    * reference: Codecs/BlockTreeTermsReader.cs). When the bloom sidecar
+    * reference: Codecs/BlockTreeTermsReader.cs). A term's rows from
+    * several generations merge on the driver ([[TermDictRow.merge]], the
+    * same sums and maxes [[MultiIndexReader.termDict]] computes), so the
+    * lookup never needs a shuffle. When the bloom sidecar
     * is present, definitely-absent terms are dropped FIRST (k point reads
     * each) so a miss never touches the dictionary — the
     * BloomFilteringPostingsFormat short circuit; at cross-shard fan-out
@@ -133,8 +153,8 @@ class IndexReader(val spark: SparkSession, val dir: String) extends Serializable
           graft.build.BloomFilter.mightContain(spark, d, t)))
       else distinct
     if (candidates.isEmpty) Map.empty
-    else termDict.where($"term".isin(candidates: _*)).as[TermDictRow]
-      .collect().map(t => t.term -> t).toMap
+    else storedTermDict.where($"term".isin(candidates: _*)).as[TermDictRow]
+      .collect().groupBy(_.term).map { case (t, rows) => t -> rows.reduce(TermDictRow.merge) }
   }
 
   /** Term-dictionary expansion for multi-term queries (MultiTermQuery
@@ -182,11 +202,12 @@ class IndexReader(val spark: SparkSession, val dir: String) extends Serializable
 
   /** True when the reversed-dictionary sidecar exists
     * ([[graft.build.ReversedDict]]) — leading wildcards then SEEK a
-    * reversed-prefix range instead of scanning the whole dictionary. */
-  lazy val hasReversedDict: Boolean =
-    allHave(Seq(dir), graft.build.IndexPaths.termDictRev)
-  def termDictRev: DataFrame =
-    spark.read.parquet(graft.build.IndexPaths.termDictRev(dir))
+    * reversed-prefix range instead of scanning the whole dictionary. On a
+    * multi-generation view EVERY generation must carry it: a head-only
+    * check would silently drop matches living in newer generations, so
+    * otherwise the multi-term path scans the dictionary (correct, slower). */
+  lazy val hasReversedDict: Boolean = allHave(dataDirs, IndexPaths.termDictRev)
+  @transient lazy val termDictRev: DataFrame = open(IndexPaths.termDictRev)
 
   /** Expand a pure-suffix pattern (`*literal`) on the reversed
     * dictionary: a prefix range on rterm, parquet min/max-pruned like
@@ -208,7 +229,7 @@ class IndexReader(val spark: SparkSession, val dir: String) extends Serializable
   /** The dictionary's alphabet (distinct first characters) — read from the
     * tiny build-time sidecar when present, else derived once per reader.
     * Feeds the fuzzy range banding ([[DictSeek.fuzzyRanges]]). */
-  lazy val termFirstChars: Seq[Char] = firstCharsAcross(Seq(dir))
+  lazy val termFirstChars: Seq[Char] = firstCharsAcross(dataDirs)
 
   /** Directories whose tombstone tables apply to this view. */
   def tombstoneDirs: Seq[String] = Seq(dir)
@@ -237,9 +258,10 @@ object IndexReader {
 
 /** Union view over generation indexes: docId spaces are disjoint ascending
   * by construction (each generation built with `docIdBase` past its
-  * predecessors), so postings/docstats/sidecar tables simply union, while
-  * the dictionary and collection stats re-aggregate on the fly — exactly
-  * what [[graft.streaming.StreamingIndexer.compact]] materializes, read
+  * predecessors), so postings/docstats/sidecar tables simply union (one
+  * multi-path relation each, via [[dataDirs]]), while the dictionary and
+  * collection stats re-aggregate on the fly — exactly what
+  * [[graft.streaming.StreamingIndexer.compact]] materializes, read
   * virtually. Scores equal the compacted index's bit-for-bit because the
   * aggregated statistics are the same sums. */
 final class MultiIndexReader(spark0: SparkSession, dirs: Seq[String])
@@ -247,12 +269,11 @@ final class MultiIndexReader(spark0: SparkSession, dirs: Seq[String])
   require(dirs.nonEmpty, "no generation dirs")
   import spark.implicits._
 
-  private def unionOf(path: String => String): DataFrame =
-    spark.read.parquet(dirs.map(path): _*)
+  override def dataDirs: Seq[String] = dirs
 
+  /** One read over every generation's stats row, summed driver-side. */
   override lazy val collectionStats: CollectionStatsRow = {
-    val all = dirs.map(d =>
-      spark.read.parquet(IndexPaths.collectionStats(d)).as[CollectionStatsRow].head())
+    val all = open(IndexPaths.collectionStats).as[CollectionStatsRow].collect()
     CollectionStatsRow(
       maxDoc = all.map(_.maxDoc).sum,
       docCount = all.map(_.docCount).sum,
@@ -260,49 +281,21 @@ final class MultiIndexReader(spark0: SparkSession, dirs: Seq[String])
       sumDocFreq = all.map(_.sumDocFreq).sum)
   }
 
-  override def postings: DataFrame = unionOf(IndexPaths.postings)
-  override def docstats: DataFrame = unionOf(IndexPaths.docstats)
-  override def docsTable: DataFrame =
-    dirs.map(d => graft.build.DocsTable.read(spark, d)).reduce(_ unionByName _)
+  @transient override protected lazy val storedTermDict: DataFrame =
+    open(IndexPaths.termDict)
 
   /** Per-term stats re-aggregate across generations (df/ttf sum, bounds
     * max) — the MultiFields.Terms merge, done relationally. */
-  override def termDict: DataFrame =
-    unionOf(IndexPaths.termDict)
+  @transient override lazy val termDict: DataFrame =
+    storedTermDict
       .groupBy($"term")
       .agg(sum($"df").as("df"), sum($"totalTf").as("totalTf"),
         max($"maxTf").as("maxTf"), max($"maxNorm").as("maxNorm"))
 
-  override lazy val hasPositions: Boolean = dirs.forall { d =>
-    val p = new org.apache.hadoop.fs.Path(IndexPaths.positions(d))
-    p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
-  }
-  override def positions: DataFrame = unionOf(IndexPaths.positions)
-
-  override lazy val hasOffsets: Boolean = dirs.forall { d =>
-    val p = new org.apache.hadoop.fs.Path(IndexPaths.offsets(d))
-    p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
-  }
-  override def offsets: DataFrame = unionOf(IndexPaths.offsets)
-
-  override lazy val hasPayloads: Boolean = dirs.forall { d =>
-    val p = new org.apache.hadoop.fs.Path(IndexPaths.payloads(d))
-    p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
-  }
-  override def payloads: DataFrame = unionOf(IndexPaths.payloads)
-
-  override lazy val termFirstChars: Seq[Char] = firstCharsAcross(dirs)
-
-  // leading wildcards may only take the reversed-dict seek when EVERY
-  // generation carries the sidecar — a head-only check would silently
-  // drop matches living in newer generations; otherwise the multi-term
-  // path falls back to scanning the unioned dictionary (correct, slower)
-  override lazy val hasReversedDict: Boolean =
-    allHave(dirs, IndexPaths.termDictRev)
   // distinct: the same (rterm, term) row can appear in several
   // generations and would otherwise count against maxExpansions twice
-  override def termDictRev: DataFrame =
-    unionOf(IndexPaths.termDictRev).distinct()
+  @transient override lazy val termDictRev: DataFrame =
+    open(IndexPaths.termDictRev).distinct()
 
   override def tombstoneDirs: Seq[String] = dirs
 }
@@ -326,8 +319,8 @@ object Searcher {
   *     reference predates WAND, SURVEY.md §2.4 note);
   *   - conjunction candidates pre-pruned by the rarest term's block
   *     intervals (≙ leapfrog skipping, ConjunctionScorer.cs:84-124);
-  *   - per-partition bounded HitQueue heaps merged through a typed
-  *     Aggregator (map-side partial heaps + one merge ≙ TopDocs.Merge).
+  *   - per-partition bounded HitQueue heaps, merged on the driver in
+  *     the same job ([[TopK]] ≙ TopDocs.Merge).
   *
   * Float determinism: clause scores are summed in clause-declaration order
   * per doc (the reference's in-order sum, DisjunctionSumScorer.cs:59-85);
@@ -516,21 +509,42 @@ final class Searcher(val reader: IndexReader, pruneMinBlocks: Int = 64,
 
   /** Full scored Dataset for a query — the composable scorer tree. Exact
     * scores, no pruning (also the brute-force oracle path for tests). */
-  def scored(q: Query): Dataset[ScoreDoc] = liveOnly(scoredRaw(rewrite(q)))
+  def scored(q: Query): Dataset[ScoreDoc] = {
+    val rq = rewrite(q)
+    liveOnly(scoredRaw(rq, reader.termStats(leafTerms(rq))))
+  }
+
+  /** Every term whose dictionary stats scoring a rewritten tree reads —
+    * term, phrase and multi-phrase leaves under any composite. Entry
+    * points look them all up in ONE [[IndexReader.termStats]] call and
+    * thread the map through every scorer (absent terms are absent keys). */
+  private def leafTerms(q: Query): Seq[String] = q match {
+    case TermQ(t, _) => Seq(t)
+    case PhraseQ(ts, _, _, _) => ts
+    case SparsePhraseQ(parts, _) => parts.map(_._1)
+    case MultiPhraseQ(slots, _, _) => slots.flatten
+    case BoolQ(must, should, mustNot, _, _) => (must ++ should ++ mustNot).flatMap(leafTerms)
+    case DisMaxQ(qs, _) => qs.flatMap(leafTerms)
+    case ConstantScoreQ(sub, _) => leafTerms(sub)
+    case FunctionScoreQ(sub, _) => leafTerms(sub)
+    case BoostingQ(pos, ctx, _) => leafTerms(pos) ++ leafTerms(ctx)
+    case _ => Nil
+  }
 
   /** Scores an ALREADY-REWRITTEN tree — every entry point calls
     * [[rewrite]] exactly once, so the dictionary probes a multi-term
     * rewrite needs are never repeated (the reference caches its rewrite
-    * the same way, IndexSearcher.cs:667-670). */
-  private def scoredRaw(q: Query): Dataset[ScoreDoc] = q match {
+    * the same way, IndexSearcher.cs:667-670); `stats` covers the
+    * [[leafTerms]] of the whole tree. */
+  private def scoredRaw(q: Query, stats: Map[String, TermDictRow]): Dataset[ScoreDoc] = q match {
     case TermQ(t, boost) =>
-      scoredTerms(Seq(t -> boost), theta = 0f).map(h => ScoreDoc(h.docId, h.score))
+      scoredTerms(Seq(t -> boost), theta = 0f, stats).map(h => ScoreDoc(h.docId, h.score))
     case MatchAllQ(boost) =>
       reader.docstats.select($"docId").as[Long].map(ScoreDoc(_, boost))
     case ConstantScoreQ(sub, boost) =>
-      scoredRaw(sub).map(sd => ScoreDoc(sd.docId, boost))
+      scoredRaw(sub, stats).map(sd => ScoreDoc(sd.docId, boost))
     case dm @ DisMaxQ(qs, tieBreak) =>
-      val hits = unionClauses(qs)
+      val hits = unionClauses(qs, stats)
       hits.groupByKey(_.docId).mapGroups { (docId, it) =>
         // the reference sums sub-scorer scores in clause order
         // (DisjunctionMaxScorer.cs) — buffer and sort by clause idx so the
@@ -549,7 +563,7 @@ final class Searcher(val reader: IndexReader, pruneMinBlocks: Int = 64,
       // lossy norm byte; evaluated per hit inside the join, no driver hop.
       val dl = reader.docstats
         .select($"docId", $"tokenCount".cast("float").as("dl")).as[(Long, Float)]
-      val subScores = scoredRaw(subQ)
+      val subScores = scoredRaw(subQ, stats)
       subScores.joinWith(dl, subScores("docId") === dl("docId"))
         .map { case (sd, (_, len)) =>
           ScoreDoc(sd.docId, ScoreExpr.eval(expr, sd.score, len)) }
@@ -558,16 +572,16 @@ final class Searcher(val reader: IndexReader, pruneMinBlocks: Int = 64,
       // score by contextBoost; context alone never matches — a left outer
       // join against the context's docId set (tuple-typed so an unmatched
       // row decodes as a null tuple, not a primitive default)
-      val posScores = scoredRaw(pos)
-      val ctxDocs = scoredRaw(ctx).map(_.docId).distinct().map(id => (id, true))
+      val posScores = scoredRaw(pos, stats)
+      val ctxDocs = scoredRaw(ctx, stats).map(_.docId).distinct().map(id => (id, true))
       posScores.joinWith(ctxDocs, posScores("docId") === ctxDocs("_1"), "left_outer")
         .map { case (sd, matched) =>
           if (matched == null) sd else ScoreDoc(sd.docId, sd.score * b)
         }
-    case bq: BoolQ => scoredBool(bq)
-    case PhraseQ(terms, slop, boost, _) => scoredPhrase(terms, slop, boost)
-    case SparsePhraseQ(parts, boost) => scoredSparsePhrase(parts, boost)
-    case MultiPhraseQ(slots, slop, boost) => scoredMultiPhrase(slots, slop, boost)
+    case bq: BoolQ => scoredBool(bq, stats)
+    case PhraseQ(terms, slop, boost, _) => scoredPhrase(terms, slop, boost, stats)
+    case SparsePhraseQ(parts, boost) => scoredSparsePhrase(parts, boost, stats)
+    case MultiPhraseQ(slots, slop, boost) => scoredMultiPhrase(slots, slop, boost, stats)
     case mt if multiTermPred(mt).isDefined =>
       // CONSTANT_SCORE_AUTO fallback: a wide multi-term query (dictionary
       // match past the clause budget) scores constant over the docs of
@@ -580,10 +594,8 @@ final class Searcher(val reader: IndexReader, pruneMinBlocks: Int = 64,
   private def constantScoreMultiTerm(pred: org.apache.spark.sql.Column,
                                      boost: Float): Dataset[ScoreDoc] = {
     val matchedTerms = reader.termDict.where(pred).select($"term")
-    reader.postings
-      .join(matchedTerms, Seq("term"), "left_semi")
-      .select($"term", $"firstDocId", $"lastDocId", $"numDocs", $"maxTf",
-        $"maxNorm", $"sumTf", $"segId", $"bytes").as[PostingRow]
+    reader.allPostingRows
+      .join(matchedTerms, Seq("term"), "left_semi").as[PostingRow]
       .flatMap(r => PostingsCodec.decodeBlock(r.firstDocId, r.numDocs, r.bytes)._1)
       .distinct()
       .map(ScoreDoc(_, boost))
@@ -608,10 +620,10 @@ final class Searcher(val reader: IndexReader, pruneMinBlocks: Int = 64,
     * reference-exact SloppyPhraseScorer traversal ([[SloppyPhrase]]):
     * out-of-order matches within slop, slop-factor-weighted float freq,
     * repeat-group collision handling. */
-  private def scoredPhrase(terms: Seq[String], slop: Int, boost: Float): Dataset[ScoreDoc] = {
+  private def scoredPhrase(terms: Seq[String], slop: Int, boost: Float,
+                           stats: Map[String, TermDictRow]): Dataset[ScoreDoc] = {
     require(terms.nonEmpty, "empty phrase")
-    if (terms.size == 1) return scoredRaw(TermQ(terms.head, boost))
-    val stats = reader.termStats(terms.distinct)
+    if (terms.size == 1) return scoredRaw(TermQ(terms.head, boost), stats)
     if (!terms.forall(stats.contains)) return spark.emptyDataset[ScoreDoc]
     // idf sum over phrase terms in query order, duplicates included
     val weight = BM25.weightValue(
@@ -635,11 +647,11 @@ final class Searcher(val reader: IndexReader, pruneMinBlocks: Int = 64,
     * optimized PhraseQuery carries only the kept terms, so its weight
     * drops the skipped grams' idf the same way). Positions index
     * required — the positionless re-analysis fallback can't see gaps. */
-  private def scoredSparsePhrase(parts: Seq[(String, Int)], boost: Float): Dataset[ScoreDoc] = {
+  private def scoredSparsePhrase(parts: Seq[(String, Int)], boost: Float,
+                                 stats: Map[String, TermDictRow]): Dataset[ScoreDoc] = {
     require(parts.nonEmpty, "empty sparse phrase")
-    if (parts.size == 1) return scoredRaw(TermQ(parts.head._1, boost))
+    if (parts.size == 1) return scoredRaw(TermQ(parts.head._1, boost), stats)
     require(reader.hasPositions, "SparsePhraseQ requires a positions-enabled index")
-    val stats = reader.termStats(parts.map(_._1).distinct)
     if (!parts.forall(p => stats.contains(p._1))) return spark.emptyDataset[ScoreDoc]
     val weight = BM25.weightValue(
       parts.map(p => BM25.idf(stats(p._1).df, cs.maxDoc)).sum, boost)
@@ -684,11 +696,11 @@ final class Searcher(val reader: IndexReader, pruneMinBlocks: Int = 64,
     * norm) rows, one docId shuffle, then the same exact/sloppy matching
     * the re-analysis path runs (bit-identical freqs — PositionsSpec).
     * This is the plan for the re-analysis worst case: phrases of very
-    * common terms whose candidate set after conjunction is large. */
+    * common terms whose candidate set after conjunction is large. No
+    * dictionary lookup: an unindexed term fails every doc's conjunction,
+    * and the scoring caller has already checked its stats. */
   def phraseFreqsFromIndex(terms: Seq[String], slop: Int): Dataset[(Long, Float, Int)] = {
     val distinct = terms.distinct
-    val stats = reader.termStats(distinct)
-    if (!distinct.forall(stats.contains)) return spark.emptyDataset[(Long, Float, Int)]
     val phraseArr = terms.toIndexedSeq
     val nDistinct = distinct.length
     val rows = termPositionRows(distinct)
@@ -717,21 +729,13 @@ final class Searcher(val reader: IndexReader, pruneMinBlocks: Int = 64,
 
   /** (docId, term, positions, normByte) rows for a term set, decoded from
     * the aligned postings/positions blocks. */
-  private def termPositionRows(distinct: Seq[String]): Dataset[(Long, String, Array[Int], Int)] = {
-    val t = reader.postings.where($"term".isin(distinct: _*))
-      .select($"term", $"firstDocId", $"numDocs", $"bytes")
-      .toDF("term", "firstDocId", "tn", "tbytes")
-    val p = reader.positions.where($"term".isin(distinct: _*))
-      .select($"term", $"firstDocId", $"bytes").toDF("term", "firstDocId", "pbytes")
-    t.join(p, Seq("term", "firstDocId"))
-      .select($"term", $"firstDocId", $"tn", $"tbytes", $"pbytes")
-      .as[(String, Long, Int, Array[Byte], Array[Byte])]
+  private def termPositionRows(distinct: Seq[String]): Dataset[(Long, String, Array[Int], Int)] =
+    reader.sidecarBlocks(reader.positions, distinct)
       .flatMap { case (term, firstDocId, n, tbytes, pbytes) =>
         val (ids, _, norms) = PostingsCodec.decodeBlock(firstDocId, n, tbytes)
         val poss = PostingsCodec.decodePositionsBlock(n, pbytes)
         ids.indices.iterator.map(i => (ids(i), term, poss(i), norms(i)))
       }
-  }
 
   /** FastVectorHighlighter analog (reference: Highlighter/VectorHighlight/
     * FieldTermStack.cs + FieldPhraseList.cs): phrase-aware highlight spans
@@ -846,8 +850,6 @@ final class Searcher(val reader: IndexReader, pruneMinBlocks: Int = 64,
     * [[SloppyPhrase.freq]]. */
   def sloppyPhraseFreqs(terms: Seq[String], slop: Int): Dataset[(Long, Float, Int)] = {
     val distinct = terms.distinct
-    val stats = reader.termStats(distinct)
-    if (!distinct.forall(stats.contains)) return spark.emptyDataset[(Long, Float, Int)]
     val candidates = distinct.map(termDocIds).reduce(_.intersect(_))
     val phraseArr = terms.toIndexedSeq
     val termSet = distinct.toSet
@@ -878,11 +880,11 @@ final class Searcher(val reader: IndexReader, pruneMinBlocks: Int = 64,
 
   /** (docId, exact phraseFreq, normByte) for docs containing the phrase
     * verbatim — the verification surface of the exact-phrase machinery
-    * (sloppy matching lives in [[sloppyPhraseFreqs]]). */
+    * (sloppy matching lives in [[sloppyPhraseFreqs]]). Like
+    * [[phraseFreqsFromIndex]] it takes no dictionary lookup: an unindexed
+    * term empties the candidate conjunction. */
   def phraseFreqs(terms: Seq[String]): Dataset[(Long, Int, Int)] = {
     val distinct = terms.distinct
-    val stats = reader.termStats(distinct)
-    if (!distinct.forall(stats.contains)) return spark.emptyDataset[(Long, Int, Int)]
     // index prune: docs containing every phrase term (conjunction)
     val candidates = distinct.map(termDocIds).reduce(_.intersect(_))
     val phraseArr = terms.toArray
@@ -926,11 +928,10 @@ final class Searcher(val reader: IndexReader, pruneMinBlocks: Int = 64,
     * with df = 0 (the reference's TermContext behavior); the norm byte
     * joins in from docstats (the multi-phrase freq paths don't carry
     * it). */
-  private def scoredMultiPhrase(slots: Seq[Seq[String]], slop: Int,
-                                boost: Float): Dataset[ScoreDoc] = {
+  private def scoredMultiPhrase(slots: Seq[Seq[String]], slop: Int, boost: Float,
+                                stats: Map[String, TermDictRow]): Dataset[ScoreDoc] = {
     require(slots.nonEmpty && slots.forall(_.nonEmpty), "empty slot")
     val flat = slots.flatten
-    val stats = reader.termStats(flat.distinct)
     val liveSlots = slots.map(_.filter(stats.contains))
     if (liveSlots.exists(_.isEmpty)) return spark.emptyDataset[ScoreDoc]
     val weight = BM25.weightValue(
@@ -1235,7 +1236,7 @@ final class Searcher(val reader: IndexReader, pruneMinBlocks: Int = 64,
 
   def payloadTermTopK(t: String, k: Int, agg: String = "avg",
                       boost: Float = 1f): Array[ScoreDoc] =
-    payloadTermScores(t, agg, boost).select(new TopKAggregator(k).toColumn).head()
+    TopK(payloadTermScores(t, agg, boost), k)
 
   /** PayloadNearQuery analog (reference:
     * Search/Payloads/PayloadNearQuery.cs, includeSpanScore = true):
@@ -1387,9 +1388,7 @@ final class Searcher(val reader: IndexReader, pruneMinBlocks: Int = 64,
 
   /** DocIds of one term, decoded from the pruned postings scan. */
   private def termDocIds(t: String): Dataset[Long] =
-    reader.postings.where($"term" === t)
-      .select($"term", $"firstDocId", $"lastDocId", $"numDocs", $"maxTf",
-        $"maxNorm", $"sumTf", $"segId", $"bytes").as[PostingRow]
+    reader.postingRows(Seq(t))
       .flatMap(r => PostingsCodec.decodeBlock(r.firstDocId, r.numDocs, r.bytes)._1)
 
   // ------------------------------------------- pluggable-similarity path
@@ -1427,7 +1426,7 @@ final class Searcher(val reader: IndexReader, pruneMinBlocks: Int = 64,
       val aDoc = after.docId
       live.filter(sd => sd.score < aScore || (sd.score == aScore && sd.docId > aDoc))
     }
-    filtered.select(new TopKAggregator(k).toColumn).head()
+    TopK(filtered, k)
   }
 
   /** One scoring clause of the generic path: a term (`terms.size == 1`,
@@ -1473,9 +1472,7 @@ final class Searcher(val reader: IndexReader, pruneMinBlocks: Int = 64,
     val bSim = sim
     val termHits: Seq[Dataset[ClauseHit]] =
       if (liveByTerm.isEmpty) Nil
-      else Seq(reader.postings.where($"term".isin(liveByTerm.keys.toSeq: _*))
-        .select($"term", $"firstDocId", $"lastDocId", $"numDocs", $"maxTf",
-          $"maxNorm", $"sumTf", $"segId", $"bytes").as[PostingRow]
+      else Seq(reader.postingRows(liveByTerm.keys.toSeq)
         .flatMap { r =>
           val entries = liveByTerm(r.term)
           val (ids, tfs, norms) = PostingsCodec.decodeBlock(r.firstDocId, r.numDocs, r.bytes)
@@ -1538,10 +1535,8 @@ final class Searcher(val reader: IndexReader, pruneMinBlocks: Int = 64,
 
   /** (tf, normByte) of one (term, doc) — block-pruned point lookup. */
   private[search] def termHit(t: String, docId: Long): Option[(Int, Int)] = {
-    val rows = reader.postings
-      .where($"term" === t && $"firstDocId" <= docId && $"lastDocId" >= docId)
-      .select($"term", $"firstDocId", $"lastDocId", $"numDocs", $"maxTf",
-        $"maxNorm", $"sumTf", $"segId", $"bytes").as[PostingRow].collect()
+    val rows = reader.postingRows(Seq(t))
+      .where($"firstDocId" <= docId && $"lastDocId" >= docId).collect()
     rows.iterator.flatMap { r =>
       val (ids, tfs, norms) = PostingsCodec.decodeBlock(r.firstDocId, r.numDocs, r.bytes)
       val i = java.util.Arrays.binarySearch(ids, docId)
@@ -1549,17 +1544,18 @@ final class Searcher(val reader: IndexReader, pruneMinBlocks: Int = 64,
     }.nextOption()
   }
 
-  private def unionClauses(qs: Seq[Query]): Dataset[ClauseHit] = {
+  private def unionClauses(qs: Seq[Query],
+                           stats: Map[String, TermDictRow]): Dataset[ClauseHit] = {
     // batch TermQ leaves into ONE postings scan; recurse for the rest
     val indexed = qs.zipWithIndex
     val termLeaves = indexed.collect { case (TermQ(t, b), i) => (t, b, i) }
     val complex = indexed.filterNot(_._1.isInstanceOf[TermQ])
     val parts =
       (if (termLeaves.nonEmpty)
-        Seq(scoredTermsIndexed(termLeaves.map(t => (t._1, t._2, t._3))))
+        Seq(scoredTermsIndexed(termLeaves.map(t => (t._1, t._2, t._3)), 0f, stats))
       else Nil) ++
       complex.map { case (q, i) =>
-        scoredRaw(q).map(sd => ClauseHit(sd.docId, i, sd.score))
+        scoredRaw(q, stats).map(sd => ClauseHit(sd.docId, i, sd.score))
       }
     if (parts.isEmpty) spark.emptyDataset[ClauseHit]
     else parts.reduce(_ union _)
@@ -1568,14 +1564,14 @@ final class Searcher(val reader: IndexReader, pruneMinBlocks: Int = 64,
   /** Boolean composition: one shuffle by docId; musts enforced by presence
     * bitmask, minShouldMatch by count, score = in-clause-order float sum
     * (BooleanScorer2 semantics under BM25). */
-  private def scoredBool(q: BoolQ): Dataset[ScoreDoc] = {
+  private def scoredBool(q: BoolQ, stats: Map[String, TermDictRow]): Dataset[ScoreDoc] = {
     val scoring = q.must ++ q.should
     if (scoring.isEmpty) return spark.emptyDataset[ScoreDoc]
     val nMust = q.must.size
     val n = scoring.size
     val msm = math.max(q.minShouldMatch, if (nMust == 0) 1 else 0)
     val boost = q.boost
-    val hits = unionClauses(scoring)
+    val hits = unionClauses(scoring, stats)
     val combined = hits.groupByKey(_.docId).flatMapGroups { (docId, it) =>
       val scores = new Array[Float](n)
       val present = new Array[Boolean](n)
@@ -1595,7 +1591,7 @@ final class Searcher(val reader: IndexReader, pruneMinBlocks: Int = 64,
     }
     if (q.mustNot.isEmpty) combined
     else {
-      val excluded = q.mustNot.map(mq => scoredRaw(mq).map(_.docId))
+      val excluded = q.mustNot.map(mq => scoredRaw(mq, stats).map(_.docId))
         .reduce(_ union _).distinct().toDF("docId_ex")
       // ReqExclScorer ≙ anti-join (reference: ReqExclScorer.cs)
       combined.join(excluded, combined("docId") === excluded("docId_ex"), "left_anti")
@@ -1609,13 +1605,13 @@ final class Searcher(val reader: IndexReader, pruneMinBlocks: Int = 64,
     * WAND threshold: blocks whose own upper bound plus every OTHER term's
     * whole-list upper bound stays below theta cannot contain a top-k doc
     * and are skipped before decoding. */
-  private def scoredTerms(terms: Seq[(String, Float)], theta: Float): Dataset[ClauseHit] =
-    scoredTermsIndexed(terms.zipWithIndex.map { case ((t, b), i) => (t, b, i) }, theta)
+  private def scoredTerms(terms: Seq[(String, Float)], theta: Float,
+                          stats: Map[String, TermDictRow]): Dataset[ClauseHit] =
+    scoredTermsIndexed(terms.zipWithIndex.map { case ((t, b), i) => (t, b, i) }, theta, stats)
 
-  private def scoredTermsIndexed(terms: Seq[(String, Float, Int)],
-                                 theta: Float = 0f): Dataset[ClauseHit] = {
+  private def scoredTermsIndexed(terms: Seq[(String, Float, Int)], theta: Float,
+                                 stats: Map[String, TermDictRow]): Dataset[ClauseHit] = {
     if (terms.isEmpty) return spark.emptyDataset[ClauseHit]
-    val stats = reader.termStats(terms.map(_._1))
     val live = terms.filter(t => stats.contains(t._1)) // df=0 → no hits, no NaN
     if (live.isEmpty) return spark.emptyDataset[ClauseHit]
     // per-term ARRAY of (weightValue, clauseIdx): a term shared by several
@@ -1636,10 +1632,7 @@ final class Searcher(val reader: IndexReader, pruneMinBlocks: Int = 64,
     }
     val sumUB = termUB.values.sum
     val localCache = cache
-    val rows = reader.postings.where($"term".isin(live.map(_._1).distinct: _*))
-      .select($"term", $"firstDocId", $"lastDocId", $"numDocs", $"maxTf",
-        $"maxNorm", $"sumTf", $"segId", $"bytes").as[PostingRow]
-    rows.mapPartitions { it =>
+    reader.postingRows(live.map(_._1)).mapPartitions { it =>
       it.flatMap { r =>
         val entries = weights(r.term)
         var blockUB = 0f
@@ -1695,22 +1688,23 @@ final class Searcher(val reader: IndexReader, pruneMinBlocks: Int = 64,
     * (score desc, docId asc) order compete. */
   def searchAfter(after: ScoreDoc, q: Query, k: Int): Array[ScoreDoc] = {
     val rq = rewrite(q)
+    val stats = reader.termStats(leafTerms(rq))
     val base: Dataset[ScoreDoc] = rq match {
       // WAND fast path: single term / pure disjunction of terms, msm<=1
       case TermQ(t, b) =>
-        scoredTerms(Seq(t -> b), theta = bootstrapTheta(Seq(t -> b), k, after))
+        scoredTerms(Seq(t -> b), bootstrapTheta(Seq(t -> b), k, after, stats), stats)
           .map(h => ScoreDoc(h.docId, h.score))
       case BoolQ(Nil, should, Nil, msm, boost)
           if msm <= 1 && boost == 1f && should.forall(_.isInstanceOf[TermQ]) =>
         val ts = should.map { case TermQ(t, b) => (t, b) }
-        val theta = bootstrapTheta(ts, k, after)
-        scoredTerms(ts, theta).groupByKey(_.docId).mapGroups { (docId, it) =>
+        val theta = bootstrapTheta(ts, k, after, stats)
+        scoredTerms(ts, theta, stats).groupByKey(_.docId).mapGroups { (docId, it) =>
           val buf = it.toArray.sortBy(_.idx)
           var sum = 0f
           buf.foreach(h => sum += h.score)
           ScoreDoc(docId, sum)
         }
-      case other => scoredRaw(other)
+      case other => scoredRaw(other, stats)
     }
     val live = liveOnly(base)
     val filtered = if (after == null) live else {
@@ -1718,8 +1712,7 @@ final class Searcher(val reader: IndexReader, pruneMinBlocks: Int = 64,
       val aDoc = after.docId
       live.filter(sd => sd.score < aScore || (sd.score == aScore && sd.docId > aDoc))
     }
-    val agg = new TopKAggregator(k).toColumn
-    filtered.select(agg).head()
+    TopK(filtered, k)
   }
 
   /** Exact-but-cheap WAND threshold bootstrap: decode the single best block
@@ -1727,10 +1720,9 @@ final class Searcher(val reader: IndexReader, pruneMinBlocks: Int = 64,
     * lower bounds of their true scores, so the kth best is a sound
     * threshold. Returns 0 (no pruning) when the index is too small to
     * bother. */
-  private def bootstrapTheta(terms: Seq[(String, Float)], k: Int,
-                             after: ScoreDoc): Float = {
+  private def bootstrapTheta(terms: Seq[(String, Float)], k: Int, after: ScoreDoc,
+                             stats: Map[String, TermDictRow]): Float = {
     if (after != null) return 0f // pagination: correctness over speed
-    val stats = reader.termStats(terms.map(_._1))
     val live = terms.filter(t => stats.contains(t._1))
     if (live.isEmpty) return 0f
     val totalBlocks = live.map(t => (stats(t._1).df / PostingsCodec.BlockSize) + 1).sum
@@ -1743,9 +1735,7 @@ final class Searcher(val reader: IndexReader, pruneMinBlocks: Int = 64,
     val (t, b) = best
     val w = BM25.weightValue(BM25.idf(stats(t).df, cs.maxDoc), b)
     val localCache = cache
-    val bestBlock = reader.postings.where($"term" === t)
-      .select($"term", $"firstDocId", $"lastDocId", $"numDocs", $"maxTf",
-        $"maxNorm", $"sumTf", $"segId", $"bytes").as[PostingRow]
+    val bestBlock = reader.postingRows(Seq(t))
       .map(r => (BM25.blockMaxScore(r.maxTf, localCache(r.maxNorm & 0xff), w), r))
       .orderBy($"_1".desc).limit(1).collect()
     if (bestBlock.isEmpty) return 0f

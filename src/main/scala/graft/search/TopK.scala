@@ -1,7 +1,6 @@
 package graft.search
 
-import org.apache.spark.sql.{Encoder, Encoders}
-import org.apache.spark.sql.expressions.Aggregator
+import org.apache.spark.sql.Dataset
 
 /** Bounded top-k heap with the reference's exact ordering contract:
   * weakest hit = lowest score, ties broken by HIGHER docId (so the
@@ -53,12 +52,6 @@ final class HitQueue(val k: Int) extends Serializable {
     }
   }
 
-  def merge(other: HitQueue): HitQueue = {
-    var i = 0
-    while (i < other.count) { insertWithOverflow(other.heap(i)); i += 1 }
-    this
-  }
-
   /** Drain to (score desc, docId asc) order. */
   def sorted: Array[ScoreDoc] = {
     val out = heap.take(count)
@@ -70,15 +63,23 @@ final class HitQueue(val k: Int) extends Serializable {
   }
 }
 
-/** Typed Aggregator: per-partition bounded heaps merged through Spark's
-  * partial-aggregation tree — the distributed TopDocs.Merge (reference:
-  * Search/TopDocs.cs:265-275, IndexSearcher.cs:466-500; the north rule's
-  * treeReduce-style merge). Never sorts the full score set. */
-final class TopKAggregator(k: Int) extends Aggregator[ScoreDoc, HitQueue, Array[ScoreDoc]] {
-  override def zero: HitQueue = new HitQueue(k)
-  override def reduce(b: HitQueue, a: ScoreDoc): HitQueue = { b.insertWithOverflow(a); b }
-  override def merge(b1: HitQueue, b2: HitQueue): HitQueue = b1.merge(b2)
-  override def finish(r: HitQueue): Array[ScoreDoc] = r.sorted
-  override def bufferEncoder: Encoder[HitQueue] = Encoders.kryo[HitQueue]
-  override def outputEncoder: Encoder[Array[ScoreDoc]] = Encoders.kryo[Array[ScoreDoc]]
+/** Distributed TopDocs.Merge (reference: Search/TopDocs.cs:265-275,
+  * IndexSearcher.cs:466-500): a bounded [[HitQueue]] per partition, the at
+  * most k survivors of each collected and merged on the driver. One Spark
+  * job over the scored plan — no shuffle stage just to merge k-sized
+  * heaps — and the full score set is never sorted. The result is the
+  * unique top k under the total (score desc, docId asc) order, however
+  * the hits are partitioned. */
+object TopK {
+  def apply(hits: Dataset[ScoreDoc], k: Int): Array[ScoreDoc] = {
+    import hits.sparkSession.implicits._
+    val perPartition = hits.mapPartitions { it =>
+      val q = new HitQueue(k)
+      it.foreach(q.insertWithOverflow)
+      q.sorted.iterator
+    }.collect()
+    val q = new HitQueue(k)
+    perPartition.foreach(q.insertWithOverflow)
+    q.sorted
+  }
 }

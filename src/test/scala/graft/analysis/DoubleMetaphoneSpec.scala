@@ -6,7 +6,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * every (word, primary, alternate) triple from the reference test module
   * (Lucene.Net.Tests.Analysis.Phonetic/Language/DoubleMetaphone2Test.cs,
   * ~1,200 rows) is parsed at test time and both codes asserted. */
-class DoubleMetaphoneSpec extends AnyFunSuite {
+class DoubleMetaphoneSpec extends AnyFunSuite with graft.ReferenceData {
 
   private val TestFile = new java.io.File(
     "/root/reference/src/Lucene.Net.Tests.Analysis.Phonetic/Language/" +
@@ -20,7 +20,7 @@ class DoubleMetaphoneSpec extends AnyFunSuite {
   }
 
   test("full reference vector table: primary AND alternate (~1200 words)") {
-    assume(TestFile.exists(), "reference test vectors unavailable")
+    referenceFile(TestFile)
     assert(vectors.length > 1000, s"parsed only ${vectors.length} vectors")
     val bad = vectors.flatMap { case (w, p, a) =>
       val (gp, ga) = DoubleMetaphone.encode(w)

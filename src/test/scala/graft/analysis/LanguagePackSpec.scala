@@ -5,9 +5,9 @@ import org.scalatest.funsuite.AnyFunSuite
 /** Validates the per-language packs ([[LanguagePacks]]) against the
   * reference's own public test vectors, parsed out of the reference test
   * sources at test time (same pattern as StemmerSpec's voc.txt archives —
-  * behavior data, no code). Skips cleanly when the reference tree is
-  * absent. */
-class LanguagePackSpec extends AnyFunSuite {
+  * behavior data, no code). When the reference tree is absent the vector
+  * tests cancel and the suite reports them NOT RUN ([[graft.ReferenceData]]). */
+class LanguagePackSpec extends AnyFunSuite with graft.ReferenceData {
 
   private val TestRoot = "/root/reference/src/Lucene.Net.Tests.Analysis.Common/Analysis"
 
@@ -15,8 +15,7 @@ class LanguagePackSpec extends AnyFunSuite {
     * source, decoding \uXXXX escapes. `call` anchors which helper/analyzer
     * variant the pair exercises. */
   private def vectors(file: String, call: String): Seq[(String, String)] = {
-    val f = new java.io.File(s"$TestRoot/$file")
-    assume(f.exists(), s"reference test source unavailable: $file")
+    val f = referenceFile(new java.io.File(s"$TestRoot/$file"))
     val src = scala.io.Source.fromFile(f, "UTF-8")
     val text = try src.mkString finally src.close()
     val lit = "\"((?:[^\"\\\\]|\\\\.)*)\""

@@ -5,7 +5,7 @@ import org.scalatest.funsuite.AnyFunSuite
 /** Porter stemmer vs Martin Porter's published test corpus (the same
   * voc.txt/output.txt pair the reference's TestPorterStemFilter uses),
   * plus the analyzer-chain integration. */
-class StemmerSpec extends AnyFunSuite {
+class StemmerSpec extends AnyFunSuite with graft.ReferenceData {
 
   test("inline golden pairs from the published algorithm") {
     val pairs = Seq(
@@ -45,8 +45,7 @@ class StemmerSpec extends AnyFunSuite {
   test("full published vocabulary (23k words) when the archive is present") {
     val zipPath = new java.io.File("/root/reference/src/" +
       "Lucene.Net.Tests.Analysis.Common/Analysis/En/porterTestData.zip")
-    assume(zipPath.exists(), "reference test archive unavailable")
-    val zf = new java.util.zip.ZipFile(zipPath)
+    val zf = new java.util.zip.ZipFile(referenceFile(zipPath))
     def lines(name: String): Seq[String] = {
       val e = zf.getEntry(name)
       val src = scala.io.Source.fromInputStream(zf.getInputStream(e), "UTF-8")
@@ -65,8 +64,7 @@ class StemmerSpec extends AnyFunSuite {
   test("snowball ru/pt/it/nl: full official vocabularies when the archive is present") {
     val zipPath = new java.io.File("/root/reference/src/" +
       "Lucene.Net.Tests.Analysis.Common/Analysis/Snowball/TestSnowballVocabData.zip")
-    assume(zipPath.exists(), "reference test archive unavailable")
-    val zf = new java.util.zip.ZipFile(zipPath)
+    val zf = new java.util.zip.ZipFile(referenceFile(zipPath))
     def lines(name: String): Seq[String] = {
       val e = zf.getEntry(name)
       val src = scala.io.Source.fromInputStream(zf.getInputStream(e), "UTF-8")
