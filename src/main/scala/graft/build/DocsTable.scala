@@ -27,11 +27,11 @@ object DocsTable {
     val offP = new org.apache.hadoop.fs.Path(offsetsPath(dir))
     val fs = offP.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(offP))
-      spark.read.parquet(IndexPaths.docs(dir))
+      Tables.read[DocRow](spark, IndexPaths.docs(dir))
         .select("docId", "repo", "path", "commit", "lang", "content", "sha256")
     else {
-      val off = spark.read.parquet(offsetsPath(dir)).select("pid", "offset")
-      spark.read.parquet(IndexPaths.flush(dir)).where(col("kind") === "d")
+      val off = Tables.read[DocOffsetRow](spark, offsetsPath(dir)).select("pid", "offset")
+      Tables.read[FlushRow](spark, IndexPaths.flush(dir)).where(col("kind") === "d")
         .join(broadcast(off), col("segId") === col("pid"))
         .select((col("offset") + col("docId")).as("docId"),
           col("repo"), col("path"), col("commit"), col("lang"),

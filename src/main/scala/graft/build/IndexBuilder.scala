@@ -5,11 +5,13 @@ import graft.bm25.BM25
 import graft.corpus.SourceFile
 import graft.postings.PostingsCodec
 import org.apache.spark.TaskContext
-import org.apache.spark.sql.{DataFrame, Dataset, SaveMode, SparkSession}
+import org.apache.spark.util.AccumulatorV2
+import org.apache.spark.sql.{DataFrame, Dataset, Encoders, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
 import java.util.zip.CRC32
 import scala.collection.mutable
+import scala.jdk.CollectionConverters._
 
 /** Spark-native inverted-index builder (SURVEY.md §3.1 restated for Spark).
   *
@@ -53,6 +55,26 @@ import scala.collection.mutable
   * ≙ segments_N commit, reference: Index/SegmentInfos.cs:49-69,146-147).
   * `build(resume = true)` skips stages whose manifest rows exist, giving
   * checkpoint-resume at stage granularity with per-partition evidence.
+  *
+  * Spark jobs per stage (adaptive execution runs each shuffle stage as
+  * its own job; a range shuffle adds a sampling job, a broadcast join a
+  * collect job). No job re-reads what the build knows: tables open with
+  * their row type's schema ([[Tables.read]]), the flush directory
+  * listing answers the sidecar probes, and the collection stats are
+  * counted while docstats and term_dict are written.
+  *   - flush (7): sample, shuffle and write of the flush; the per-
+  *     partition doc counts (shuffle, collect); the docs_offsets write;
+  *     the manifest commit.
+  *   - postings (7, plus 4 per sidecar): per table, the offsets
+  *     broadcast, sample, shuffle and write; the manifest's per-partition
+  *     stats (shuffle, collect); the manifest commit.
+  *   - stats (10, plus a sample when term_dict has more than one
+  *     partition): docstats (broadcast, sample, shuffle, write); term_dict
+  *     (aggregate shuffle, range shuffle, write); one single-partition
+  *     write each for term_firstchars, collection_stats and the manifest
+  *     commit.
+  * Each stage labels its jobs ([[labelled]]) with its layer, `build.flush`,
+  * `build.postings` or `build.stats`.
   */
 object IndexBuilder {
 
@@ -63,18 +85,33 @@ object IndexBuilder {
 
   // ---------------------------------------------------------------- stages
 
+  /** The local property naming the engine layer a Spark job runs for. */
+  val LayerProperty = "graft.layer"
+
+  /** Runs `f` with its Spark jobs labelled: local property
+    * [[LayerProperty]] = `layer`, job description `"<layer> <dir>"`. The
+    * caller's values are restored afterwards; the job group is left
+    * alone (callers set it per request). */
+  private[graft] def labelled[A](spark: SparkSession, layer: String, dir: String)(f: => A): A = {
+    val sc = spark.sparkContext
+    val saved = Seq(LayerProperty, "spark.job.description").map(k => k -> sc.getLocalProperty(k))
+    sc.setLocalProperty(LayerProperty, layer)
+    sc.setJobDescription(s"$layer $dir")
+    try f finally saved.foreach { case (k, v) => sc.setLocalProperty(k, v) }
+  }
+
   def stageDone(spark: SparkSession, dir: String, stage: String): Boolean = {
     val manifestPath = new org.apache.hadoop.fs.Path(IndexPaths.manifest(dir))
     val fs = manifestPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(manifestPath)) return false
     import spark.implicits._
-    spark.read.parquet(IndexPaths.manifest(dir))
-      .where($"stage" === stage).limit(1).count() > 0
+    Tables.read[ManifestRow](spark, IndexPaths.manifest(dir))
+      .where($"stage" === stage).select($"partitionId").collect().nonEmpty
   }
 
   private def commitStage(spark: SparkSession, dir: String, rows: Seq[ManifestRow]): Unit = {
     import spark.implicits._
-    spark.createDataset(rows).repartition(1).write.mode(SaveMode.Append)
+    spark.createDataset(rows).coalesce(1).write.mode(SaveMode.Append)
       .parquet(IndexPaths.manifest(dir))
   }
 
@@ -107,7 +144,7 @@ object IndexBuilder {
                  keywordFields: Seq[String] = Nil,
                  indexPositions: Boolean = false,
                  indexOffsets: Boolean = false,
-                 indexPayloads: Boolean = false): Unit = {
+                 indexPayloads: Boolean = false): Unit = labelled(spark, "build.flush", dir) {
     import spark.implicits._
     val sorted = corpus
       .repartitionByRange(numPartitions, $"repo", $"path", $"commit")
@@ -138,7 +175,7 @@ object IndexBuilder {
     // negligible against the payload sort. repartitionByRange assigns
     // ascending key ranges to ascending partition ids, so cumulative
     // offsets in segId order reproduce global corpus-sort ordinals.
-    val counts = spark.read.parquet(IndexPaths.flush(dir)).where($"kind" === "d")
+    val counts = Tables.read[FlushRow](spark, IndexPaths.flush(dir)).where($"kind" === "d")
       .groupBy($"segId")
       .agg(count("*").as("rows"), (max($"docId") + 1).as("rowsByIdx"))
       .as[(Int, Long, Long)].collect().sortBy(_._1)
@@ -149,20 +186,22 @@ object IndexBuilder {
     val offsets = counts.map { case (pid, n, _) =>
       val o = DocOffsetRow(pid, off, n); off += n; o
     }
-    spark.createDataset(offsets.toSeq).repartition(1)
+    spark.createDataset(offsets.toSeq).coalesce(1)
       .write.mode(SaveMode.Overwrite).parquet(DocsTable.offsetsPath(dir))
     commitStage(spark, dir, dedupeByPartition(acc.value))
   }
 
   private def offsetsDf(spark: SparkSession, dir: String): DataFrame =
-    spark.read.parquet(DocsTable.offsetsPath(dir)).select("pid", "offset")
+    Tables.read[DocOffsetRow](spark, DocsTable.offsetsPath(dir)).select("pid", "offset")
 
   /** Stage 2: global term-sorted postings table (the "merge"): rebase
     * block metadata to the global doc space (broadcast offsets join —
     * map-side projection, the DocMap analog), then range-shuffle. */
-  def buildPostings(spark: SparkSession, dir: String, numPartitions: Int): Unit = {
+  def buildPostings(spark: SparkSession, dir: String, numPartitions: Int): Unit =
+      labelled(spark, "build.postings", dir) {
     import spark.implicits._
-    val blocks = spark.read.parquet(IndexPaths.flush(dir))
+    val flush = Tables.read[FlushRow](spark, IndexPaths.flush(dir))
+    val blocks = flush
       .where($"kind" === "t")
       .join(broadcast(offsetsDf(spark, dir)), $"segId" === $"pid")
       .select($"term", ($"firstDocId" + $"offset").as("firstDocId"),
@@ -174,14 +213,14 @@ object IndexBuilder {
       .write.mode(SaveMode.Overwrite).parquet(IndexPaths.postings(dir))
     // optional sidecars (kind 'p' = positions, 'o' = char offsets),
     // aligned 1:1 with the posting blocks: same rebase, same term-sorted
-    // layout
+    // layout. partitionBy("kind") creates flush/kind=<k> only when the
+    // flush wrote rows of that kind, so the directory answers the probe.
+    val fs = new org.apache.hadoop.fs.Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
     for ((kind, path) <- Seq("p" -> IndexPaths.positions(dir),
                              "o" -> IndexPaths.offsets(dir),
                              "y" -> IndexPaths.payloads(dir))) {
-      val has = spark.read.parquet(IndexPaths.flush(dir))
-        .where($"kind" === kind).limit(1).count() > 0
-      if (has) {
-        spark.read.parquet(IndexPaths.flush(dir))
+      if (fs.exists(new org.apache.hadoop.fs.Path(s"${IndexPaths.flush(dir)}/kind=$kind"))) {
+        flush
           .where($"kind" === kind)
           .join(broadcast(offsetsDf(spark, dir)), $"segId" === $"pid")
           .select($"term", ($"firstDocId" + $"offset").as("firstDocId"),
@@ -192,7 +231,7 @@ object IndexBuilder {
           .write.mode(SaveMode.Overwrite).parquet(path)
       }
     }
-    val p = spark.read.parquet(IndexPaths.postings(dir))
+    val p = Tables.read[PostingRow](spark, IndexPaths.postings(dir))
     val stats = p.groupBy(spark_partition_id().as("pid"))
       .agg(min($"term").as("tmin"), max($"term").as("tmax"),
         sum($"numDocs").as("docCount"), count("*").as("rows"),
@@ -204,58 +243,93 @@ object IndexBuilder {
       r.getLong(6), now)).toSeq)
   }
 
-  /** Stage 3: docstats + term_dict + collection_stats. */
-  def buildStats(spark: SparkSession, dir: String, numPartitions: Int): Unit = {
+  /** Stage 3: docstats + term_dict + collection_stats. The docstats
+    * write counts the collection's doc totals on the way, so nothing is
+    * read back. */
+  def buildStats(spark: SparkSession, dir: String, numPartitions: Int): Unit =
+      labelled(spark, "build.stats", dir) {
     import spark.implicits._
-    val ds = spark.read.parquet(IndexPaths.flush(dir)).where($"kind" === "d")
+    val docstats = Tables.read[FlushRow](spark, IndexPaths.flush(dir)).where($"kind" === "d")
       .join(broadcast(offsetsDf(spark, dir)), $"segId" === $"pid")
       .select(($"docId" + $"offset").as("docId"), $"repo", $"path", $"commit",
         $"lang", $"sha256", $"tokenCount", $"norm").as[DocStatRow]
-    ds.repartitionByRange(numPartitions, $"docId").sortWithinPartitions($"docId")
-      .write.mode(SaveMode.Overwrite).parquet(IndexPaths.docstats(dir))
-    buildDictAndStats(spark, dir, numPartitions)
+      .repartitionByRange(numPartitions, $"docId").sortWithinPartitions($"docId")
+    val (counted, totals) = countDocTotals(spark, docstats.toDF())
+    counted.write.mode(SaveMode.Overwrite).parquet(IndexPaths.docstats(dir))
+    val (maxDoc, sumTtf) = totals()
+    commitStats(spark, dir, writeDictAndStats(spark, dir, numPartitions, maxDoc, sumTtf))
   }
 
   /** Dictionary + collection stats from already-written postings +
-    * docstats (also the tail of Deletes.expunge, which rewrites those two
-    * tables itself). */
+    * docstats (the tail of Deletes.expunge and IndexSplitter, which
+    * rewrite those two tables themselves). */
   def buildDictAndStats(spark: SparkSession, dir: String, numPartitions: Int): Unit = {
+    val t = Tables.read[DocStatRow](spark, IndexPaths.docstats(dir))
+      .agg(count(lit(1)), coalesce(sum(col("tokenCount")), lit(0L))).head()
+    commitStats(spark, dir, writeDictAndStats(spark, dir, numPartitions, t.getLong(0), t.getLong(1)))
+  }
+
+  private def commitStats(spark: SparkSession, dir: String, cs: CollectionStatsRow): Unit =
+    commitStage(spark, dir, Seq(ManifestRow("stats", 0, null, null,
+      cs.maxDoc, cs.maxDoc, 0L, 0L, System.currentTimeMillis())))
+
+  /** `rows` unchanged (same schema), with `count` applied to each row on
+    * its way to a write; `count` adds to accumulators. Apply it after the
+    * write's final sort: the counting then runs in the write's result
+    * stage, whose accumulator updates Spark merges once per partition,
+    * and not below a range shuffle, whose sampling job would re-run it. */
+  private def counting(rows: DataFrame)(count: Row => Unit): DataFrame =
+    rows.mapPartitions(_.map { r => count(r); r })(Encoders.row(rows.schema))
+
+  /** `docstats` counted on its way to a write, and a read of the counts
+    * (maxDoc, sumTotalTermFreq) once the write is done. */
+  private[graft] def countDocTotals(spark: SparkSession, docstats: DataFrame)
+      : (DataFrame, () => (Long, Long)) = {
+    val docs = spark.sparkContext.longAccumulator("maxDoc")
+    val ttf = spark.sparkContext.longAccumulator("sumTotalTermFreq")
+    val tc = docstats.schema.fieldIndex("tokenCount")
+    (counting(docstats) { r => docs.add(1); ttf.add(r.getInt(tc)) }, () => (docs.sum, ttf.sum))
+  }
+
+  /** Writes term_dict (aggregated from the postings in `dir`), its
+    * first-character alphabet and collection_stats, given the doc
+    * totals of `dir`'s docstats. The dictionary write counts sumDocFreq
+    * and the alphabet on the way. Returns the collection stats. */
+  private[graft] def writeDictAndStats(spark: SparkSession, dir: String, numPartitions: Int,
+                                       maxDoc: Long, sumTtf: Long): CollectionStatsRow = {
     import spark.implicits._
-    val dict = spark.read.parquet(IndexPaths.postings(dir))
+    val dict = Tables.read[PostingRow](spark, IndexPaths.postings(dir))
       .groupBy($"term")
       .agg(sum($"numDocs").as("df"), sum($"sumTf").as("totalTf"),
         max($"maxTf").as("maxTf"), max($"maxNorm").as("maxNorm"))
       .repartitionByRange(math.max(1, numPartitions / 8), $"term")
       .sortWithinPartitions($"term")
-    dict.write.mode(SaveMode.Overwrite).parquet(IndexPaths.termDict(dir))
-    writeFirstChars(spark, dir)
-
-    val docAgg = spark.read.parquet(IndexPaths.docstats(dir))
-      .agg(count("*").as("maxDoc"), sum($"tokenCount").as("sumTtf")).collect()(0)
-    val dictAgg = spark.read.parquet(IndexPaths.termDict(dir))
-      .agg(coalesce(sum($"df"), lit(0L)).as("sumDocFreq")).collect()(0)
-    val cs = CollectionStatsRow(
-      maxDoc = docAgg.getLong(0),
-      docCount = docAgg.getLong(0),
-      sumTotalTermFreq = if (docAgg.isNullAt(1)) 0L else docAgg.getLong(1),
-      sumDocFreq = dictAgg.getLong(0))
-    spark.createDataset(Seq(cs)).repartition(1)
+    val sumDocFreq = spark.sparkContext.longAccumulator("sumDocFreq")
+    val firstChars = new DistinctStrings
+    spark.sparkContext.register(firstChars, "firstChars")
+    counting(dict) { r =>
+      sumDocFreq.add(r.getLong(1))
+      val t = r.getString(0)
+      // the first code point, as substring(term, 1, 1) in SQL
+      if (t.nonEmpty) firstChars.add(t.substring(0, t.offsetByCodePoints(0, 1)))
+    }.write.mode(SaveMode.Overwrite).parquet(IndexPaths.termDict(dir))
+    writeFirstChars(spark, dir, firstChars.value.asScala.toSeq)
+    val cs = CollectionStatsRow(maxDoc = maxDoc, docCount = maxDoc,
+      sumTotalTermFreq = sumTtf, sumDocFreq = sumDocFreq.sum)
+    spark.createDataset(Seq(cs)).coalesce(1)
       .write.mode(SaveMode.Overwrite).parquet(IndexPaths.collectionStats(dir))
-    val now = System.currentTimeMillis()
-    commitStage(spark, dir, Seq(ManifestRow("stats", 0, null, null,
-      cs.maxDoc, cs.maxDoc, 0L, 0L, now)))
+    cs
   }
 
   /** Alphabet sidecar: the dictionary's distinct first characters — the
     * fuzzy range banding (graft.search.DictSeek) expands its depth-1
-    * prefixes over the ACTUAL alphabet instead of all of Unicode. One
-    * tiny agg over the just-written dictionary, amortized at build time
-    * so fuzzy queries seek instead of scanning. */
-  def writeFirstChars(spark: SparkSession, dir: String): Unit = {
+    * prefixes over the ACTUAL alphabet instead of all of Unicode. The
+    * dictionary write collects the set, and the collected set is written
+    * as one row per character in code point order, amortized at build
+    * time so fuzzy queries seek instead of scanning. */
+  private def writeFirstChars(spark: SparkSession, dir: String, chars: Seq[String]): Unit = {
     import spark.implicits._
-    spark.read.parquet(IndexPaths.termDict(dir))
-      .select(substring($"term", 1, 1).as("c")).where(length($"c") > 0)
-      .distinct().repartition(1).sortWithinPartitions($"c")
+    chars.sortBy(_.codePointAt(0)).toDF("c").coalesce(1)
       .write.mode(SaveMode.Overwrite).parquet(IndexPaths.termFirstChars(dir))
   }
 
@@ -289,6 +363,18 @@ object IndexBuilder {
     if (!resume || !stageDone(spark, dir, "stats"))
       timed("stats")(buildStats(spark, dir, numPartitions))
   }
+}
+
+/** The distinct strings added across a job's tasks. */
+private final class DistinctStrings extends AccumulatorV2[String, java.util.Set[String]] {
+  private val set = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
+  override def isZero: Boolean = set.isEmpty
+  override def copy(): DistinctStrings = { val c = new DistinctStrings; c.set.addAll(set); c }
+  override def reset(): Unit = set.clear()
+  override def add(v: String): Unit = set.add(v)
+  override def merge(other: AccumulatorV2[String, java.util.Set[String]]): Unit =
+    set.addAll(other.value)
+  override def value: java.util.Set[String] = set
 }
 
 /** The per-partition segment builder: streaming DWPT analog. Consumes

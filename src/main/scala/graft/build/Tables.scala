@@ -1,5 +1,9 @@
 package graft.build
 
+import org.apache.spark.sql.{DataFrame, Encoders, SparkSession}
+
+import scala.reflect.runtime.universe.TypeTag
+
 /** Schemas of the index tables (SURVEY.md §7 step 3).
   * An index directory contains:
   *   flush/kind=d/      stored fields (≙ the reference's compressed row
@@ -123,6 +127,15 @@ final case class ManifestRow(
     bytes: Long,
     checksum: Long, // order-independent sum of per-row crc32s
     committedAtMs: Long)
+
+object Tables {
+  /** Opens an index table with the schema of its row type `T`. Spark
+    * then skips schema inference, which costs one job per read. For the
+    * `flush` table, `FlushRow.kind` types the `kind=<k>` partition
+    * column. Only for tables every writer gives exactly `T`'s columns. */
+  def read[T <: Product : TypeTag](spark: SparkSession, paths: String*): DataFrame =
+    spark.read.schema(Encoders.product[T].schema).parquet(paths: _*)
+}
 
 object IndexPaths {
   def docs(dir: String) = s"$dir/docs"

@@ -1,7 +1,7 @@
 package graft.search
 
 import graft.bm25.BM25
-import graft.build.{CollectionStatsRow, IndexPaths, PostingRow, TermDictRow}
+import graft.build.{CollectionStatsRow, DocStatRow, IndexPaths, PositionsRow, PostingRow, Tables, TermDictRow}
 import graft.postings.PostingsCodec
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
@@ -23,7 +23,8 @@ class IndexReader(val spark: SparkSession, val dir: String) extends Serializable
   import spark.implicits._
 
   lazy val collectionStats: CollectionStatsRow =
-    spark.read.parquet(IndexPaths.collectionStats(dir)).as[CollectionStatsRow].head()
+    Tables.read[CollectionStatsRow](spark, IndexPaths.collectionStats(dir))
+      .as[CollectionStatsRow].head()
 
   /** Directories whose data tables this view spans — every optional-
     * sidecar probe requires the sidecar in all of them. */
@@ -33,8 +34,15 @@ class IndexReader(val spark: SparkSession, val dir: String) extends Serializable
   protected def open(path: String => String): DataFrame =
     spark.read.parquet(dataDirs.map(path): _*)
 
-  @transient lazy val postings: DataFrame = open(IndexPaths.postings)
-  @transient lazy val docstats: DataFrame = open(IndexPaths.docstats)
+  /** [[open]] with the schema of the table's one row type `T`, so the
+    * open runs no schema-inference job. term_dict is not opened this way:
+    * a pulsed dictionary carries extra inline-postings columns. */
+  protected def openAs[T <: Product : scala.reflect.runtime.universe.TypeTag](
+      path: String => String): DataFrame =
+    Tables.read[T](spark, dataDirs.map(path): _*)
+
+  @transient lazy val postings: DataFrame = openAs[PostingRow](IndexPaths.postings)
+  @transient lazy val docstats: DataFrame = openAs[DocStatRow](IndexPaths.docstats)
   @transient lazy val termDict: DataFrame = open(IndexPaths.termDict)
   /** The dictionary rows as stored, one per term per data dir — what
     * [[termStats]] reads; a multi-generation [[termDict]] re-aggregates
@@ -72,7 +80,7 @@ class IndexReader(val spark: SparkSession, val dir: String) extends Serializable
     * DOCS_AND_FREQS_AND_POSITIONS option): phrase queries then read the
     * positions sidecar instead of re-analyzing stored content. */
   lazy val hasPositions: Boolean = allHave(dataDirs, IndexPaths.positions)
-  @transient lazy val positions: DataFrame = open(IndexPaths.positions)
+  @transient lazy val positions: DataFrame = openAs[PositionsRow](IndexPaths.positions)
 
   /** True when the index carries the char-offset sidecar (the
     * ..._AND_OFFSETS level, reference: Index/FieldInfo.cs:373-397) —
@@ -80,13 +88,13 @@ class IndexReader(val spark: SparkSession, val dir: String) extends Serializable
     * re-analyzing stored content (the PostingsHighlighter idea,
     * reference: PostingsHighlight/PostingsHighlighter.cs:74). */
   lazy val hasOffsets: Boolean = allHave(dataDirs, IndexPaths.offsets)
-  @transient lazy val offsets: DataFrame = open(IndexPaths.offsets)
+  @transient lazy val offsets: DataFrame = openAs[PositionsRow](IndexPaths.offsets)
 
   /** True when the index carries the per-position payload sidecar (the
     * .pay stream analog — reference: Index/Payload semantics and the
     * Search/Payloads query family). */
   lazy val hasPayloads: Boolean = allHave(dataDirs, IndexPaths.payloads)
-  @transient lazy val payloads: DataFrame = open(IndexPaths.payloads)
+  @transient lazy val payloads: DataFrame = openAs[PositionsRow](IndexPaths.payloads)
 
   /** The postings blocks of `terms` joined to their aligned blocks in a
     * `sidecar` table (positions, offsets and payloads share the postings'
@@ -273,7 +281,7 @@ final class MultiIndexReader(spark0: SparkSession, dirs: Seq[String])
 
   /** One read over every generation's stats row, summed driver-side. */
   override lazy val collectionStats: CollectionStatsRow = {
-    val all = open(IndexPaths.collectionStats).as[CollectionStatsRow].collect()
+    val all = openAs[CollectionStatsRow](IndexPaths.collectionStats).as[CollectionStatsRow].collect()
     CollectionStatsRow(
       maxDoc = all.map(_.maxDoc).sum,
       docCount = all.map(_.docCount).sum,

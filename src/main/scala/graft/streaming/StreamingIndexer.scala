@@ -1,7 +1,7 @@
 package graft.streaming
 
 import graft.analysis.Analyzer
-import graft.build.{CollectionStatsRow, IndexBuilder, IndexPaths, ManifestRow}
+import graft.build.{DocStatRow, DocsTable, IndexBuilder, IndexPaths, ManifestRow, PositionsRow, PostingRow, Tables}
 import graft.corpus.SourceFile
 import org.apache.spark.sql.{DataFrame, Dataset, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
@@ -22,29 +22,41 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   * concatenation, no re-tokenization, because generations own disjoint
   * ascending docId ranges and posting blocks are self-contained (the
   * design invariant the batch builder already relies on). */
+/** A committed generation and its maxDoc. */
+private final case class Committed(gen: Long, maxDoc: Long)
+
 object StreamingIndexer {
 
   def genDir(root: String, batchId: Long): String = f"$root/gen=$batchId%06d"
 
-  /** Committed generations, ascending. */
-  def generations(spark: SparkSession, root: String): Seq[Long] = {
+
+  /** Committed generations, ascending, from one read over every
+    * generation's manifest: a generation is committed once its manifest
+    * holds a stats row, and that row carries the generation's maxDoc. */
+  private def committed(spark: SparkSession, root: String): Seq[Committed] = {
+    import spark.implicits._
     val p = new org.apache.hadoop.fs.Path(root)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(p)) return Nil
-    fs.listStatus(p).toSeq
+    val manifests = fs.listStatus(p).toSeq
       .filter(s => s.isDirectory && s.getPath.getName.startsWith("gen="))
-      .map(_.getPath.getName.stripPrefix("gen=").toLong).sorted
-      .filter(g => IndexBuilder.stageDone(spark, genDir(root, g), "stats"))
+      .map(s => IndexPaths.manifest(s.getPath.toString))
+      .filter(m => fs.exists(new org.apache.hadoop.fs.Path(m)))
+    if (manifests.isEmpty) return Nil
+    Tables.read[ManifestRow](spark, manifests: _*)
+      .where($"stage" === "stats")
+      .select(regexp_extract(col("_metadata.file_path"), "/gen=(\\d+)/manifest/[^/]*$", 1)
+        .cast("long").as("gen"), $"docCount".as("maxDoc"))
+      .as[Committed].collect().toSeq.sortBy(_.gen)
   }
 
+  /** Committed generations, ascending. */
+  def generations(spark: SparkSession, root: String): Seq[Long] =
+    committed(spark, root).map(_.gen)
+
   /** Sum of maxDoc over committed generations = next docId base. */
-  def totalDocs(spark: SparkSession, root: String): Long = {
-    import spark.implicits._
-    generations(spark, root).map { g =>
-      spark.read.parquet(IndexPaths.collectionStats(genDir(root, g)))
-        .as[CollectionStatsRow].head().maxDoc
-    }.sum
-  }
+  def totalDocs(spark: SparkSession, root: String): Long =
+    committed(spark, root).map(_.maxDoc).sum
 
   /** Index one micro-batch as a new generation. Idempotent: if the
     * generation is already committed (stats stage in its manifest), the
@@ -54,12 +66,20 @@ object StreamingIndexer {
                   batchId: Long, numPartitions: Int = 8,
                   analyzerFor: String => Analyzer = Analyzer.forLang,
                   indexPositions: Boolean = false,
-                  indexOffsets: Boolean = false): Unit = {
-    val dir = genDir(root, batchId)
-    if (IndexBuilder.stageDone(spark, dir, "stats")) return // replay
-    val base = totalDocs(spark, root)
-    IndexBuilder.build(spark, batch, dir, numPartitions, resume = false,
-      analyzerFor, docIdBase = base, indexPositions = indexPositions,
+                  indexOffsets: Boolean = false): Unit =
+    IndexBuilder.labelled(spark, "streaming.append", genDir(root, batchId)) {
+      append(spark, batch, root, batchId, committed(spark, root), numPartitions,
+        analyzerFor, indexPositions, indexOffsets)
+    }
+
+  /** [[appendBatch]] over an already-listed set of committed generations. */
+  private def append(spark: SparkSession, batch: Dataset[SourceFile], root: String,
+                     batchId: Long, gens: Seq[Committed], numPartitions: Int,
+                     analyzerFor: String => Analyzer, indexPositions: Boolean,
+                     indexOffsets: Boolean): Unit = {
+    if (gens.exists(_.gen == batchId)) return // replay
+    IndexBuilder.build(spark, batch, genDir(root, batchId), numPartitions, resume = false,
+      analyzerFor, docIdBase = gens.map(_.maxDoc).sum, indexPositions = indexPositions,
       indexOffsets = indexOffsets)
   }
 
@@ -67,25 +87,34 @@ object StreamingIndexer {
     * `UpdateDocument(Term, doc)` = atomic delete-by-term + add): every doc
     * in `batch` REPLACES any existing doc with the same `path` (the
     * primary-key term). Old versions across all committed generations are
-    * tombstoned (one metadata semi-join per generation — docsTable is
-    * docId-keyed and path-carrying), then the batch indexes as a new
-    * generation; the multi-generation reader sees only the new versions,
-    * like the reference's NRT reader after an update. Old postings remain
-    * until compaction folds the tombstones — reference semantics (deleted
-    * docs still count in df until merge). */
+    * tombstoned, then the batch indexes as a new generation; the
+    * multi-generation reader sees only the new versions, like the
+    * reference's NRT reader after an update. Old postings remain until
+    * compaction folds the tombstones — reference semantics (deleted docs
+    * still count in df until merge). The old versions are found by one
+    * metadata semi-join over every generation's docsTable (docId-keyed
+    * and path-carrying); their ids, at most a few per updated path, are
+    * collected and each generation's share is appended to its
+    * tombstones. A replayed, already committed batch is a no-op. */
   def updateDocuments(spark: SparkSession, batch: Dataset[SourceFile],
                       root: String, batchId: Long, numPartitions: Int = 8,
-                      analyzerFor: String => Analyzer = Analyzer.forLang): Unit = {
+                      analyzerFor: String => Analyzer = Analyzer.forLang): Unit =
+      IndexBuilder.labelled(spark, "streaming.update", genDir(root, batchId)) {
     import spark.implicits._
-    val newPaths = batch.select(col("path")).distinct()
-    generations(spark, root).map(genDir(root, _)).foreach { g =>
-      val dead = graft.build.DocsTable.read(spark, g)
+    val gens = committed(spark, root)
+    if (gens.nonEmpty && !gens.exists(_.gen == batchId)) {
+      val newPaths = batch.select(col("path")) // a semi-join needs no distinct
+      val dead = gens.map(g => DocsTable.read(spark, genDir(root, g.gen))
+          .select(lit(g.gen).as("gen"), col("docId"), col("path")))
+        .reduce(_ unionByName _)
         .join(newPaths, Seq("path"), "left_semi")
-        .select(col("docId")).as[Long]
-      if (dead.limit(1).count() > 0)
-        graft.build.Deletes.deleteDocs(spark, g, dead)
+        .select($"gen", $"docId").as[(Long, Long)].collect()
+      for ((g, ids) <- dead.groupBy(_._1))
+        graft.build.Deletes.deleteDocs(spark, genDir(root, g),
+          spark.createDataset(ids.map(_._2).toSeq).coalesce(1))
     }
-    appendBatch(spark, batch, root, batchId, numPartitions, analyzerFor)
+    append(spark, batch, root, batchId, gens, numPartitions, analyzerFor,
+      indexPositions = false, indexOffsets = false)
   }
 
   /** LiveFieldValues analog (reference:
@@ -158,13 +187,14 @@ object StreamingIndexer {
     val fs = outPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (fs.exists(outPath)) fs.delete(outPath, true)
 
-    dirs.map(d => graft.build.DocsTable.read(spark, d)).reduce(_ unionByName _)
+    dirs.map(d => DocsTable.read(spark, d)).reduce(_ unionByName _)
       .repartitionByRange(numPartitions, $"docId").sortWithinPartitions($"docId")
       .write.mode(SaveMode.Overwrite).parquet(IndexPaths.docs(outDir))
-    spark.read.parquet(dirs.map(IndexPaths.docstats): _*)
-      .repartitionByRange(numPartitions, $"docId").sortWithinPartitions($"docId")
-      .write.mode(SaveMode.Overwrite).parquet(IndexPaths.docstats(outDir))
-    spark.read.parquet(dirs.map(IndexPaths.postings): _*)
+    val (docstats, docTotals) = IndexBuilder.countDocTotals(spark,
+      Tables.read[DocStatRow](spark, dirs.map(IndexPaths.docstats): _*)
+        .repartitionByRange(numPartitions, $"docId").sortWithinPartitions($"docId"))
+    docstats.write.mode(SaveMode.Overwrite).parquet(IndexPaths.docstats(outDir))
+    Tables.read[PostingRow](spark, dirs.map(IndexPaths.postings): _*)
       .repartitionByRange(numPartitions, $"term", $"firstDocId")
       .sortWithinPartitions($"term", $"firstDocId")
       .write.mode(SaveMode.Overwrite).parquet(IndexPaths.postings(outDir))
@@ -175,37 +205,22 @@ object StreamingIndexer {
                      IndexPaths.payloads _)) {
       val sideDirs = dirs.map(side)
       if (sideDirs.forall(d => fs.exists(new org.apache.hadoop.fs.Path(d)))) {
-        spark.read.parquet(sideDirs: _*)
+        Tables.read[PositionsRow](spark, sideDirs: _*)
           .repartitionByRange(numPartitions, $"term", $"firstDocId")
           .sortWithinPartitions($"term", $"firstDocId")
           .write.mode(SaveMode.Overwrite).parquet(side(outDir))
       }
     }
 
-    val dict = spark.read.parquet(IndexPaths.postings(outDir))
-      .groupBy($"term")
-      .agg(sum($"numDocs").as("df"), sum($"sumTf").as("totalTf"),
-        max($"maxTf").as("maxTf"), max($"maxNorm").as("maxNorm"))
-      .repartitionByRange(math.max(1, numPartitions / 8), $"term")
-      .sortWithinPartitions($"term")
-    dict.write.mode(SaveMode.Overwrite).parquet(IndexPaths.termDict(outDir))
-    IndexBuilder.writeFirstChars(spark, outDir)
-
-    val docAgg = spark.read.parquet(IndexPaths.docstats(outDir))
-      .agg(count("*").as("maxDoc"), sum($"tokenCount").as("sumTtf")).head()
-    val dictAgg = spark.read.parquet(IndexPaths.termDict(outDir))
-      .agg(coalesce(sum($"df"), lit(0L))).head()
-    val cs = CollectionStatsRow(docAgg.getLong(0), docAgg.getLong(0),
-      if (docAgg.isNullAt(1)) 0L else docAgg.getLong(1), dictAgg.getLong(0))
-    spark.createDataset(Seq(cs)).repartition(1)
-      .write.mode(SaveMode.Overwrite).parquet(IndexPaths.collectionStats(outDir))
+    val (maxDoc, sumTtf) = docTotals()
+    val cs = IndexBuilder.writeDictAndStats(spark, outDir, numPartitions, maxDoc, sumTtf)
     val now = System.currentTimeMillis()
     spark.createDataset(Seq(
       ManifestRow("docs", 0, null, null, cs.maxDoc, cs.maxDoc, 0L, 0L, now),
       ManifestRow("flush", 0, null, null, cs.maxDoc, cs.maxDoc, 0L, 0L, now),
       ManifestRow("postings", 0, null, null, cs.maxDoc, cs.maxDoc, 0L, 0L, now),
       ManifestRow("stats", 0, null, null, cs.maxDoc, cs.maxDoc, 0L, 0L, now)))
-      .repartition(1).write.mode(SaveMode.Append).parquet(IndexPaths.manifest(outDir))
+      .coalesce(1).write.mode(SaveMode.Append).parquet(IndexPaths.manifest(outDir))
 
     // carry tombstones: global docIds make a plain union correct
     val tombDirs = dirs.map(graft.build.Deletes.tombstonesPath)
@@ -262,14 +277,12 @@ object StreamingIndexer {
                        root: String): Seq[(Long, Long, Long, Long)] = {
     val fs = new org.apache.hadoop.fs.Path(root)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    generations(spark, root).map { g =>
-      val d = genDir(root, g)
+    committed(spark, root).map { c =>
+      val d = genDir(root, c.gen)
       val bytes =
         fs.getContentSummary(new org.apache.hadoop.fs.Path(d)).getLength
-      val maxDoc = spark.read.parquet(IndexPaths.collectionStats(d))
-        .select("maxDoc").head().getLong(0)
       val dels = graft.build.Deletes.tombstones(spark, d).count()
-      (g, bytes, maxDoc, dels)
+      (c.gen, bytes, c.maxDoc, dels)
     }
   }
 

@@ -81,10 +81,20 @@ class MultiFieldParserSpec extends AnyFunSuite {
     val inexpressible = MatchAllQ()
     val q = BoolQ(Seq(TermQ("a"), inexpressible), Seq(TermQ("b")), Nil)
     assert(MultiFieldQueryParser.prefixField(q, "path").isEmpty)
-    // SHOULD/MUST_NOT drops still narrow-or-keep: fine to drop
+    // a SHOULD drop only narrows or keeps the branch: fine to drop
     val q2 = BoolQ(Seq(TermQ("a")), Seq(inexpressible, TermQ("b")), Nil)
     assert(MultiFieldQueryParser.prefixField(q2, "path")
       .contains(BoolQ(Seq(TermQ("path:a")), Seq(TermQ("path:b")), Nil)))
+  }
+
+  test("multi-field — inexpressible MUST_NOT clause fails the whole field branch") {
+    // Dropping an exclusion broadens the branch: `+a -<x>` rewritten as
+    // `+path:a` would match the docs the negation was there to remove.
+    val q = BoolQ(Seq(TermQ("a")), Nil, Seq(MatchAllQ()))
+    assert(MultiFieldQueryParser.prefixField(q, "path").isEmpty)
+    // an expressible negation still rewrites into the field
+    assert(MultiFieldQueryParser.prefixField(BoolQ(Seq(TermQ("a")), Nil, Seq(TermQ("b"))), "path")
+      .contains(BoolQ(Seq(TermQ("path:a")), Nil, Seq(TermQ("path:b")))))
   }
 
   test("multi-field statics — parseEach and parseWithFlags") {

@@ -2,7 +2,7 @@ package graft.search
 
 import graft.SparkTestSession
 import graft.bm25.BM25
-import graft.build.{CheckIndex, IndexBuilder}
+import graft.build.{CheckIndex, CollectionStatsRow, IndexBuilder, IndexPaths, TermDictRow}
 import graft.corpus.CorpusGen
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
@@ -279,5 +279,41 @@ class CorpusSearchSpec extends AnyFunSuite with BeforeAndAfterAll {
     IndexBuilder.build(spark, corpus, fresh, numPartitions = 2)
     val s3 = new Searcher(new IndexReader(spark, fresh))
     assert(s2.search(TermQ("def"), 5).toSeq == s3.search(TermQ("def"), 5).toSeq)
+  }
+
+  test("resume with sidecars: killed-after-postings positions build == a fresh build") {
+    import spark.implicits._
+    val dir2 = SparkTestSession.tmpDir("graft-resume-pos-")
+    val corpus = CorpusGen.dataset(spark, 40, 2)
+    // simulate a job killed after the postings stage (and its positions
+    // sidecar) committed
+    IndexBuilder.buildFlush(spark, corpus, dir2, numPartitions = 2, indexPositions = true)
+    IndexBuilder.buildPostings(spark, dir2, numPartitions = 2)
+    assert(IndexBuilder.stageDone(spark, dir2, "postings"))
+    assert(!IndexBuilder.stageDone(spark, dir2, "stats"))
+    val postingsMtime = new java.io.File(IndexPaths.postings(dir2)).lastModified()
+    IndexBuilder.build(spark, corpus, dir2, numPartitions = 2, resume = true,
+      indexPositions = true)
+    assert(new java.io.File(IndexPaths.postings(dir2)).lastModified() == postingsMtime,
+      "resume must not rewrite the committed postings stage")
+    val report = CheckIndex.check(spark, dir2)
+    assert(report.ok, report.problems.mkString("; "))
+
+    val fresh = SparkTestSession.tmpDir("graft-fresh-pos-")
+    IndexBuilder.build(spark, corpus, fresh, numPartitions = 2, indexPositions = true)
+    // equal on content, not bytes: rows compared as sorted sets
+    assert(spark.read.parquet(IndexPaths.collectionStats(dir2)).as[CollectionStatsRow].collect()
+      === spark.read.parquet(IndexPaths.collectionStats(fresh)).as[CollectionStatsRow].collect())
+    def dict(d: String) =
+      spark.read.parquet(IndexPaths.termDict(d)).as[TermDictRow].collect().sortBy(_.term).toSeq
+    assert(dict(dir2) === dict(fresh))
+    val resumed = new Searcher(new IndexReader(spark, dir2))
+    val ref = new Searcher(new IndexReader(spark, fresh))
+    assert(resumed.reader.hasPositions && ref.reader.hasPositions)
+    for (q <- Seq(TermQ("def"), PhraseQ(Seq("def", "f1")))) {
+      val hits = ref.search(q, 10).toSeq
+      assert(hits.nonEmpty, s"$q matched nothing")
+      assert(resumed.search(q, 10).toSeq === hits, q)
+    }
   }
 }

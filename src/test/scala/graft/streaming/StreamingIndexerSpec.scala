@@ -106,6 +106,12 @@ class StreamingIndexerSpec extends AnyFunSuite {
     assert(s.search(TermQ("shared"), 10).length === 1,
       "shared terms hit only the live version")
     assert(s.search(TermQ("other"), 10).length === 1, "unrelated doc untouched")
+    // replaying the committed update batch is a no-op: it must not
+    // tombstone the new version it committed
+    StreamingIndexer.updateDocuments(spark, spark.createDataset(Seq(
+      mk("a", "newterm shared words here"))), root, batchId = 1, numPartitions = 2)
+    assert(new Searcher(reader).search(TermQ("newterm"), 10).length === 1,
+      "replayed update keeps the live version")
     // updating a path that never existed behaves as a plain add
     StreamingIndexer.updateDocuments(spark, spark.createDataset(Seq(
       mk("c", "brand new doc"))), root, batchId = 2, numPartitions = 2)
