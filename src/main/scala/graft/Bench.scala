@@ -34,33 +34,10 @@ object Bench {
     s
   }
 
-  /** Full index build (docs → flush → postings → stats) of `n` synthetic
-    * source files on an emulated `cores`-core cluster: a child JVM pinned
-    * to exactly that many CPUs via `taskset`, so GC/JIT/shuffle threads
-    * compete for the measured cores like they would on a real executor.
-    * Returns files/sec (parsed from the child's one-line report). */
-  private def childJvm(cores: Int, progArgs: Seq[String], resultKey: String): Double = {
-    val javaBin = s"${System.getProperty("java.home")}/bin/java"
-    val cp = System.getProperty("java.class.path")
-    val jvmOpts = java.lang.management.ManagementFactory.getRuntimeMXBean
-      .getInputArguments.toArray.map(_.toString)
-      .filter(o => o.startsWith("--add-opens") || o.startsWith("java.base/"))
-    val pinned = Seq("taskset", "-c", s"0-${cores - 1}")
-    val cmd = pinned ++ Seq(javaBin, "-Xmx16g") ++ jvmOpts ++
-      Seq("-cp", cp, "graft.BuildBench") ++ progArgs
-    val out = new StringBuilder
-    val proc = new ProcessBuilder(cmd: _*)
-      .redirectError(ProcessBuilder.Redirect.INHERIT) // Spark logs → our stderr
-      .start()
-    scala.io.Source.fromInputStream(proc.getInputStream).getLines()
-      .foreach(l => out.append(l).append('\n'))
-    val rc = proc.waitFor()
-    require(rc == 0, s"BuildBench($progArgs) failed rc=$rc")
-    out.toString.linesIterator.find(_.startsWith(s"$resultKey="))
-      .getOrElse(sys.error(s"no $resultKey line"))
-      .stripPrefix(s"$resultKey=").toDouble
-  }
-
+  /** Runs `graft.BuildBench progArgs` in a child JVM pinned to exactly
+    * `cores` CPUs via `taskset`, so GC/JIT/shuffle threads compete for the
+    * measured cores like they would on a real executor. Returns the
+    * child's `key=value` report lines as a map. */
   private def childJvmAll(cores: Int, progArgs: Seq[String]): Map[String, Double] = {
     val javaBin = s"${System.getProperty("java.home")}/bin/java"
     val cp = System.getProperty("java.class.path")
@@ -102,8 +79,8 @@ object Bench {
 
   /** Sandbox CPU-scaling ceiling: pinned pure-SHA256 at both sizes. */
   private def cpuCeiling(nCores: Int, n4Cores: Int): Double = {
-    val a = childJvm(nCores, Seq("calibrate", nCores.toString), "hashes_per_sec")
-    val b = childJvm(n4Cores, Seq("calibrate", n4Cores.toString), "hashes_per_sec")
+    val a = childJvmAll(nCores, Seq("calibrate", nCores.toString))("hashes_per_sec")
+    val b = childJvmAll(n4Cores, Seq("calibrate", n4Cores.toString))("hashes_per_sec")
     b / (4.0 * a)
   }
 

@@ -1,6 +1,5 @@
 package graft.build
 
-import graft.postings.PostingsCodec
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -69,13 +68,9 @@ object IndexSorter {
       val keep = meta.takeWhile { case (_, n) =>
         val take = need > 0; need -= n; take
       }
-      val live = spark.read.parquet(IndexPaths.postings(dir))
-        .where($"term" === term && $"firstDocId".isin(keep.map(_._1).toIndexedSeq: _*))
-        .select(PostingRow.columns: _*).as[PostingRow]
-        .flatMap { r =>
-          val (ids, tfs, _) = PostingsCodec.decodeBlock(r.firstDocId, r.numDocs, r.bytes)
-          ids.indices.map(i => (ids(i), tfs(i)))
-        }.toDF("docId", "tf")
+      val live = PostingRow.decoded(spark.read.parquet(IndexPaths.postings(dir))
+        .where($"term" === term && $"firstDocId".isin(keep.map(_._1).toIndexedSeq: _*)))
+        .select($"docId", $"tf")
         .join(dead, Seq("docId"), "left_anti")
       (live, keep.length == meta.length)
     }

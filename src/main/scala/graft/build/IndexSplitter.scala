@@ -1,7 +1,6 @@
 package graft.build
 
-import graft.postings.PostingsCodec
-import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Index splitting — carve one index into self-contained sub-indexes
@@ -14,38 +13,29 @@ import org.apache.spark.sql.functions._
   * shards, peel a docId range into its own index, or separate a corpus on
   * a primary-key predicate.
   *
-  * Spark-native restatement, keeping the reference's N-pass shape (pass k
-  * touches only shard k's data):
+  * Every mode is a docId remap through the one index rewrite,
+  * [[Deletes.rewriteWithRemap]], once per output (the reference's N-pass
+  * shape): the remap holds the output's live docs, so tombstones are
+  * dropped and pending docvalue updates folded, the same
+  * merge-applies-everything behavior as [[Deletes.expunge]].
   *   - [[split]]: shard k owns the contiguous docId range
   *     [bounds(k), bounds(k+1)) — the PKIndexSplitter boundary model
-  *     generalized to N shards; posting blocks are PRUNED by their
-  *     [firstDocId, lastDocId] metadata before decode (a block strictly
-  *     outside the shard range is never read — the reference's per-pass
-  *     liveDocs skip, done relationally);
-  *   - [[splitByFilter]]: the PKIndexSplitter Filter form — an arbitrary
-  *     predicate over the doc-metadata table decides membership, docs
-  *     matching go to shard 0 and the rest to shard 1 (PKIndexSplitter
-  *     .cs:33-35 "All documents that match the filter are sent to dir1,
-  *     remaining ones to dir2"). No metadata prune is possible (any block
-  *     may hold survivors of an arbitrary predicate — the reference
-  *     likewise walks all postings for both outputs); membership is a
-  *     semi/anti equi-join of decoded postings against the keep-id set;
-  *   - original docIds are PRESERVED (no DocMap): shard docId spaces are
-  *     disjoint, so the shards together read as one index via
+  *     generalized to N shards. Its remap is the IDENTITY on the shard's
+  *     live docs, so original docIds are PRESERVED: shard docId spaces are
+  *     disjoint, and the shards together read as one index via
   *     [[graft.search.IndexReader.multi]] — union postings, re-aggregated
-  *     dictionary/stats — and must reproduce the unsplit index's answers
-  *     bit-for-bit (the splitter's correctness gate);
-  *   - pending docvalue updates are folded and tombstones dropped, the
-  *     same merge-applies-everything behavior as [[Deletes.expunge]].
+  *     dictionary/stats — that must reproduce the unsplit index's answers
+  *     bit-for-bit (the splitter's correctness gate). Posting blocks are
+  *     PRUNED by their [firstDocId, lastDocId] metadata before decode (a
+  *     block strictly outside the shard range is never read — the
+  *     reference's per-pass liveDocs skip, done relationally).
+  *   - [[splitRoundRobin]] and [[splitByFilter]]: membership by residue
+  *     class or by an arbitrary predicate, each shard renumbered dense
+  *     (no block prune is possible: any block may hold members).
   */
 object IndexSplitter {
 
   def shardDir(root: String, k: Int): String = f"$root/shard=$k%04d"
-
-  private def pathExists(spark: SparkSession, p: String): Boolean = {
-    val hp = new org.apache.hadoop.fs.Path(p)
-    hp.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(hp)
-  }
 
   private def deleteIfExists(spark: SparkSession, p: String): Unit = {
     val hp = new org.apache.hadoop.fs.Path(p)
@@ -53,108 +43,12 @@ object IndexSplitter {
     if (fs.exists(hp)) fs.delete(hp, true)
   }
 
-  /** Write one output shard: `keepDoc` filters any docId-carrying frame
-    * to the shard's live membership (range or keep-set, tombstones
-    * already folded in by the caller); `blockPrune` skips posting blocks
-    * that provably hold no member before any decode happens. */
-  private def carve(spark: SparkSession, dir: String, sd: String,
-      blockPrune: Column, keepDoc: DataFrame => DataFrame,
-      numPartitions: Int): Unit = {
+  /** The docstats rows of `dir`'s live (non-tombstoned) docs. */
+  private def liveDocstats(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-
-    val hasPositions = pathExists(spark, IndexPaths.positions(dir))
-    val hasOffsets = pathExists(spark, IndexPaths.offsets(dir))
-    val hasPayloads = pathExists(spark, IndexPaths.payloads(dir))
-
-    def writeDocTable(df: DataFrame, out: String): Unit =
-      keepDoc(df)
-        .repartitionByRange(numPartitions, $"docId")
-        .sortWithinPartitions($"docId")
-        .write.mode(SaveMode.Overwrite).parquet(out)
-
-    writeDocTable(DocValues.readDocs(spark, dir), IndexPaths.docs(sd))
-    writeDocTable(DocValues.readDocstats(spark, dir), IndexPaths.docstats(sd))
-
-    // posting blocks surviving the metadata prune: decode, keep member
-    // docs, re-encode per partition.
-    if (!hasPositions && !hasOffsets && !hasPayloads) {
-      val decoded = spark.read.parquet(IndexPaths.postings(dir))
-        .where(blockPrune)
-        .select(PostingRow.columns: _*).as[PostingRow]
-        .flatMap { r =>
-          val (ids, tfs, norms) = PostingsCodec.decodeBlock(r.firstDocId, r.numDocs, r.bytes)
-          ids.indices.iterator.map(i => (r.term, ids(i), tfs(i), norms(i)))
-        }.toDF("term", "docId", "tf", "norm")
-      keepDoc(decoded)
-        .repartitionByRange(numPartitions, $"term", $"docId")
-        .sortWithinPartitions($"term", $"docId")
-        .as[(String, Long, Int, Int)]
-        .mapPartitions { it =>
-          val segId = org.apache.spark.TaskContext.getPartitionId()
-          new PostingsReencoder(it, segId)
-        }
-        .write.mode(SaveMode.Overwrite).parquet(IndexPaths.postings(sd))
-    } else {
-      // sidecar-aligned rewrite (same join shape as Deletes.expunge:
-      // LEFT joins let DOCS_ONLY keyword terms pass with null blobs)
-      val t = spark.read.parquet(IndexPaths.postings(dir))
-        .where(blockPrune)
-        .select($"term", $"firstDocId", $"numDocs", $"bytes")
-        .toDF("term", "firstDocId", "tn", "tbytes")
-      def withSidecar(df: DataFrame, has: Boolean, path: String, as: String): DataFrame =
-        if (has)
-          df.join(spark.read.parquet(path)
-            .select($"term", $"firstDocId", $"bytes").toDF("term", "firstDocId", as),
-            Seq("term", "firstDocId"), "left_outer")
-        else df.withColumn(as, lit(null).cast("binary"))
-      val joined = withSidecar(withSidecar(withSidecar(t,
-        hasPositions, IndexPaths.positions(dir), "pbytes"),
-        hasOffsets, IndexPaths.offsets(dir), "obytes"),
-        hasPayloads, IndexPaths.payloads(dir), "ybytes")
-      val decoded = joined
-        .select($"term", $"firstDocId", $"tn", $"tbytes", $"pbytes", $"obytes", $"ybytes")
-        .as[(String, Long, Int, Array[Byte], Array[Byte], Array[Byte], Array[Byte])]
-        .flatMap { case (term, firstDocId, n, tbytes, pbytes, obytes, ybytes) =>
-          val (ids, tfs, norms) = PostingsCodec.decodeBlock(firstDocId, n, tbytes)
-          val poss =
-            if (pbytes == null) Array.fill[Array[Int]](n)(null)
-            else PostingsCodec.decodePositionsBlock(n, pbytes)
-          val offs =
-            if (obytes == null) Array.fill[Array[Int]](n)(null)
-            else PostingsCodec.decodeOffsetsBlock(n, obytes)
-          val pays =
-            if (ybytes == null) Array.fill[Array[Array[Byte]]](n)(null)
-            else PostingsCodec.decodePayloadsBlock(n, ybytes)
-          ids.indices.iterator
-            .map(i => (term, ids(i), tfs(i), norms(i), poss(i), offs(i), pays(i)))
-        }.toDF("term", "docId", "tf", "norm", "ps", "os", "ys")
-      val combined = keepDoc(decoded)
-        .repartitionByRange(numPartitions, $"term", $"docId")
-        .sortWithinPartitions($"term", $"docId")
-        .as[(String, Long, Int, Int, Array[Int], Array[Int], Array[Array[Byte]])]
-        .mapPartitions { it =>
-          val segId = org.apache.spark.TaskContext.getPartitionId()
-          new PostingsSidecarReencoder(it, segId)
-        }.toDF("post", "posBytes", "offBytes", "payBytes")
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      combined.select(col("post.*"))
-        .write.mode(SaveMode.Overwrite).parquet(IndexPaths.postings(sd))
-      def writeSidecar(byteCol: String, out: String): Unit =
-        combined.where(col(byteCol).isNotNull)
-          .select(col("post.term").as("term"),
-            col("post.firstDocId").as("firstDocId"),
-            col("post.lastDocId").as("lastDocId"),
-            col("post.numDocs").as("numDocs"),
-            col("post.segId").as("segId"),
-            col(byteCol).as("bytes"))
-          .write.mode(SaveMode.Overwrite).parquet(out)
-      if (hasPositions) writeSidecar("posBytes", IndexPaths.positions(sd))
-      if (hasOffsets) writeSidecar("offBytes", IndexPaths.offsets(sd))
-      if (hasPayloads) writeSidecar("payBytes", IndexPaths.payloads(sd))
-      combined.unpersist()
-    }
-
-    IndexBuilder.buildDictAndStats(spark, sd, numPartitions)
+    val dead = Deletes.tombstones(spark, dir).toDF("deadId").distinct()
+    spark.read.parquet(IndexPaths.docstats(dir))
+      .join(dead, $"docId" === $"deadId", "left_anti")
   }
 
   /** Split `dir` into `numShards` contiguous-docId-range sub-indexes under
@@ -173,16 +67,14 @@ object IndexSplitter {
     // standard builds, so equal width == equal count)
     val bounds = (0 to numShards).map(k => minId + span * k / numShards)
 
-    val dead = Deletes.tombstones(spark, dir).toDF("deadId").distinct()
-
+    val live = liveDocstats(spark, dir)
     (0 until numShards).map { k =>
       val lo = bounds(k); val hi = bounds(k + 1)
       val sd = shardDir(outRoot, k)
-      carve(spark, dir, sd,
-        blockPrune = $"lastDocId" >= lo && $"firstDocId" < hi,
-        keepDoc = df => df.where(df("docId") >= lo && df("docId") < hi)
-          .join(dead, df("docId") === $"deadId", "left_anti"),
-        numPartitions = numPartitions)
+      val remap = live.where($"docId" >= lo && $"docId" < hi)
+        .select($"docId".as("oldId"), $"docId".as("newId"))
+      Deletes.rewriteWithRemap(spark, dir, sd, remap, numPartitions,
+        blockPrune = $"lastDocId" >= lo && $"firstDocId" < hi)
       sd
     }
   }
@@ -204,9 +96,7 @@ object IndexSplitter {
     import spark.implicits._
     require(numShards >= 2, s"numShards must be >= 2, got $numShards")
     deleteIfExists(spark, outRoot)
-    val dead = Deletes.tombstones(spark, dir).toDF("deadId").distinct()
-    val live = spark.read.parquet(IndexPaths.docstats(dir))
-      .join(dead, $"docId" === $"deadId", "left_anti")
+    val live = liveDocstats(spark, dir)
     (0 until numShards).map { k =>
       val sd = shardDir(outRoot, k)
       val keep = live.where(pmod($"docId", lit(numShards.toLong)) === k)
@@ -236,9 +126,7 @@ object IndexSplitter {
     import spark.implicits._
     deleteIfExists(spark, outRoot)
 
-    val dead = Deletes.tombstones(spark, dir).toDF("deadId").distinct()
-    val live = spark.read.parquet(IndexPaths.docstats(dir))
-      .join(dead, $"docId" === $"deadId", "left_anti")
+    val live = liveDocstats(spark, dir)
     // complement via except (not !predicate): a null-valued predicate
     // row must land in exactly one shard, the reference's "remaining"
     val keep0 = live.where(predicate).select($"docId".as("oldId"))

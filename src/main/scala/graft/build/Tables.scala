@@ -1,6 +1,7 @@
 package graft.build
 
-import org.apache.spark.sql.{DataFrame, Encoders, SparkSession}
+import graft.postings.PostingsCodec
+import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SparkSession}
 
 import scala.reflect.runtime.universe.TypeTag
 
@@ -55,6 +56,19 @@ object PostingRow {
   val columns: Seq[org.apache.spark.sql.Column] =
     Seq("term", "firstDocId", "lastDocId", "numDocs", "maxTf", "maxNorm",
       "sumTf", "segId", "bytes").map(org.apache.spark.sql.functions.col)
+
+  /** One (term, docId, tf, norm) row per posting of `blocks` (postings
+    * table rows, narrowed by the caller) — the decode of the cold paths
+    * (deletes, sorted early termination, pulsing, the gate's relational
+    * BM25); the serving path fuses decode with scoring in
+    * [[graft.search.Searcher]] instead. */
+  def decoded(blocks: Dataset[_]): DataFrame = {
+    import blocks.sparkSession.implicits._
+    blocks.select(columns: _*).as[PostingRow].flatMap { r =>
+      val (ids, tfs, norms) = PostingsCodec.decodeBlock(r.firstDocId, r.numDocs, r.bytes)
+      ids.indices.iterator.map(i => (r.term, ids(i), tfs(i), norms(i)))
+    }.toDF("term", "docId", "tf", "norm")
+  }
 }
 
 /** Union row emitted by the single fused sort+tokenize pass (segment

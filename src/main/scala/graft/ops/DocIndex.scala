@@ -3,7 +3,6 @@ package graft.ops
 import graft.analysis.Analyzer
 import graft.build.{IndexBuilder, IndexPaths, PostingRow, CollectionStatsRow}
 import graft.corpus.SourceFile
-import graft.postings.PostingsCodec
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -287,13 +286,9 @@ object DocIndex {
     * postings scan + block decode. */
   def hits(spark: SparkSession, dir: String, terms: Seq[String]): DataFrame = {
     import spark.implicits._
-    spark.read.parquet(IndexPaths.postings(dir))
-      .where($"term".isin(terms.distinct: _*))
-      .select(PostingRow.columns: _*).as[PostingRow]
-      .flatMap { r =>
-        val (docIds, tfs, _) = PostingsCodec.decodeBlock(r.firstDocId, r.numDocs, r.bytes)
-        docIds.indices.map(i => (docIds(i), r.term, tfs(i).toLong))
-      }.toDF("doc_id", "term", "tf")
+    PostingRow.decoded(spark.read.parquet(IndexPaths.postings(dir))
+      .where($"term".isin(terms.distinct: _*)))
+      .select($"docId".as("doc_id"), $"term", $"tf".cast("long").as("tf"))
   }
 
   /** Double-precision BM25 score column, structured EXACTLY like the oracle

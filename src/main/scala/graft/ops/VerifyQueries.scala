@@ -31,27 +31,17 @@ object VerifyQueries {
        |SELECT doc_id, round(score, 6) AS score FROM scored
        |ORDER BY score DESC, doc_id LIMIT 20""".stripMargin
 
-  /** TermQuery top-k through the NRT MULTI-GENERATION reader (reference:
-    * DirectoryReader over uncommitted segments): the documents corpus is
-    * indexed as TWO streaming generations, never compacted; the union
-    * view re-aggregates dictionary + collection stats on the fly and
-    * must reproduce the single-index answer — same oracle as
-    * q_term_topk, bit for bit. */
-  def qNrtTopk(spark: SparkSession, sf: String): DataFrame = {
-    import spark.implicits._
-    val root = DocIndex.ensureNrt(spark, sf)
-    val gens = graft.streaming.StreamingIndexer.generations(spark, root)
-      .map(g => graft.streaming.StreamingIndexer.genDir(root, g))
-    val reader = graft.search.IndexReader.multi(spark, gens)
+  /** The q_term_topk answer (BM25 top 20 for "merge", the relational
+    * double-precision form the oracle mirrors) computed over `reader`'s
+    * tables: postings decode, term_dict df, docstats lengths and
+    * collection stats. */
+  private def mergeTopk(reader: graft.search.IndexReader): DataFrame = {
     val cs = reader.collectionStats
     val avgdl = cs.sumTotalTermFreq * 1.0 / cs.maxDoc
-    val h = reader.postingRows(Seq("merge"))
-      .flatMap { r =>
-        val (ids, tfs, _) = graft.postings.PostingsCodec.decodeBlock(r.firstDocId, r.numDocs, r.bytes)
-        ids.indices.map(i => (ids(i), tfs(i).toLong))
-      }.toDF("doc_id", "tf")
-    val dict = reader.termDict.where(col("term") === "merge").select(col("df"))
-    val df0 = dict.head().getLong(0)
+    val h = graft.build.PostingRow.decoded(reader.postingRows(Seq("merge")))
+      .select(col("docId").as("doc_id"), col("tf").cast("long").as("tf"))
+    val df0 = reader.termDict.where(col("term") === "merge")
+      .select(col("df")).head().getLong(0)
     val dl = reader.docstats
       .select(col("docId").as("doc_id"), col("tokenCount").cast("long").as("dl"))
     h.join(dl, Seq("doc_id"))
@@ -59,6 +49,19 @@ object VerifyQueries {
         col("dl").cast("double"), cs.maxDoc, avgdl))
       .select(col("doc_id"), round(col("score"), 6).as("score"))
       .orderBy(col("score").desc, col("doc_id")).limit(20)
+  }
+
+  /** TermQuery top-k through the NRT MULTI-GENERATION reader (reference:
+    * DirectoryReader over uncommitted segments): the documents corpus is
+    * indexed as TWO streaming generations, never compacted; the union
+    * view re-aggregates dictionary + collection stats on the fly and
+    * must reproduce the single-index answer — same oracle as
+    * q_term_topk, bit for bit. */
+  def qNrtTopk(spark: SparkSession, sf: String): DataFrame = {
+    val root = DocIndex.ensureNrt(spark, sf)
+    val gens = graft.streaming.StreamingIndexer.generations(spark, root)
+      .map(g => graft.streaming.StreamingIndexer.genDir(root, g))
+    mergeTopk(graft.search.IndexReader.multi(spark, gens))
   }
   val oNrtTopk: String = oTermTopk
 
@@ -70,25 +73,7 @@ object VerifyQueries {
     * equal the single-index answer bit for bit — same oracle as
     * q_term_topk. */
   def qAddIndexesTopk(spark: SparkSession, sf: String): DataFrame = {
-    import spark.implicits._
-    val dir = DocIndex.ensureMerged(spark, sf)
-    val reader = new graft.search.IndexReader(spark, dir)
-    val cs = reader.collectionStats
-    val avgdl = cs.sumTotalTermFreq * 1.0 / cs.maxDoc
-    val h = reader.postingRows(Seq("merge"))
-      .flatMap { r =>
-        val (ids, tfs, _) = graft.postings.PostingsCodec.decodeBlock(r.firstDocId, r.numDocs, r.bytes)
-        ids.indices.map(i => (ids(i), tfs(i).toLong))
-      }.toDF("doc_id", "tf")
-    val df0 = reader.termDict.where(col("term") === "merge")
-      .select(col("df")).head().getLong(0)
-    val dl = reader.docstats
-      .select(col("docId").as("doc_id"), col("tokenCount").cast("long").as("dl"))
-    h.join(dl, Seq("doc_id"))
-      .withColumn("score", DocIndex.bm25d(col("tf").cast("double"), lit(df0.toDouble),
-        col("dl").cast("double"), cs.maxDoc, avgdl))
-      .select(col("doc_id"), round(col("score"), 6).as("score"))
-      .orderBy(col("score").desc, col("doc_id")).limit(20)
+    mergeTopk(new graft.search.IndexReader(spark, DocIndex.ensureMerged(spark, sf)))
   }
   val oAddIndexesTopk: String = oTermTopk
 
@@ -99,25 +84,7 @@ object VerifyQueries {
     * and must reproduce the single-index BM25 answer — same oracle as
     * q_term_topk, bit for bit. */
   def qSplitSearch(spark: SparkSession, sf: String): DataFrame = {
-    import spark.implicits._
-    val shards = DocIndex.ensureSplit(spark, sf)
-    val reader = graft.search.IndexReader.multi(spark, shards)
-    val cs = reader.collectionStats
-    val avgdl = cs.sumTotalTermFreq * 1.0 / cs.maxDoc
-    val h = reader.postingRows(Seq("merge"))
-      .flatMap { r =>
-        val (ids, tfs, _) = graft.postings.PostingsCodec.decodeBlock(r.firstDocId, r.numDocs, r.bytes)
-        ids.indices.map(i => (ids(i), tfs(i).toLong))
-      }.toDF("doc_id", "tf")
-    val df0 = reader.termDict.where(col("term") === "merge")
-      .select(col("df")).head().getLong(0)
-    val dl = reader.docstats
-      .select(col("docId").as("doc_id"), col("tokenCount").cast("long").as("dl"))
-    h.join(dl, Seq("doc_id"))
-      .withColumn("score", DocIndex.bm25d(col("tf").cast("double"), lit(df0.toDouble),
-        col("dl").cast("double"), cs.maxDoc, avgdl))
-      .select(col("doc_id"), round(col("score"), 6).as("score"))
-      .orderBy(col("score").desc, col("doc_id")).limit(20)
+    mergeTopk(graft.search.IndexReader.multi(spark, DocIndex.ensureSplit(spark, sf)))
   }
   val oSplitSearch: String = oTermTopk
 

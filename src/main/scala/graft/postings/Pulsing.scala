@@ -60,12 +60,8 @@ object Pulsing {
 
     // Pulsed terms: decode their (<= cutoff) postings and fold them into
     // per-term arrays, docId-ascending — the dictionary's inline payload.
-    val inlined = routed.where($"df" <= freqCutoff)
-      .select(PostingRow.columns: _*).as[PostingRow]
-      .flatMap { r =>
-        val (ids, tfs, _) = PostingsCodec.decodeBlock(r.firstDocId, r.numDocs, r.bytes)
-        ids.indices.map(i => (r.term, ids(i), tfs(i)))
-      }.toDF("term", "doc_id", "tf")
+    val inlined = PostingRow.decoded(routed.where($"df" <= freqCutoff))
+      .select($"term", $"docId".as("doc_id"), $"tf")
       .groupBy($"term")
       .agg(sort_array(collect_list(struct($"doc_id", $"tf"))).as("ps"))
       .select($"term",
@@ -90,13 +86,9 @@ object Pulsing {
         explode(arrays_zip($"inlineDocIds", $"inlineTfs")).as("p"))
       .select($"p.inlineDocIds".as("doc_id"), $"term",
         $"p.inlineTfs".cast("long").as("tf"))
-    val blocks = spark.read.parquet(IndexPaths.postings(pulsedDir))
-      .where($"term".isin(t: _*))
-      .select(PostingRow.columns: _*).as[PostingRow]
-      .flatMap { r =>
-        val (ids, tfs, _) = PostingsCodec.decodeBlock(r.firstDocId, r.numDocs, r.bytes)
-        ids.indices.map(i => (ids(i), r.term, tfs(i).toLong))
-      }.toDF("doc_id", "term", "tf")
+    val blocks = PostingRow.decoded(spark.read.parquet(IndexPaths.postings(pulsedDir))
+      .where($"term".isin(t: _*)))
+      .select($"docId".as("doc_id"), $"term", $"tf".cast("long").as("tf"))
     inline.unionByName(blocks)
   }
 }

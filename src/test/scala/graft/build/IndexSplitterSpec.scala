@@ -151,4 +151,61 @@ class IndexSplitterSpec extends AnyFunSuite {
       spark.read.parquet(IndexPaths.docstats(sd)).select("docId").as[Long].collect())
     assert(ids.size === 117 && !ids.exists(Set(3L, 60L, 119L)))
   }
+
+  test("split with positions, offsets and payloads: shards valid, union == unsplit live index") {
+    import spark.implicits._
+    import graft.corpus.SourceFile
+    import graft.search.{PayloadSpec, PhraseQ}
+    def mk(i: Int): SourceFile = {
+      val text = Seq(
+        if (i % 2 == 0) s"alpha|${1 + i % 3}.0 beta" else "beta alpha",
+        s"gamma w${i % 5}",
+        if (i % 3 == 0) "alpha beta delta|0.5" else "delta").mkString(" ")
+      SourceFile("r", f"f$i%02d", "0" * 40, "txt", text, CorpusGen.sha256Hex(text))
+    }
+    def build(docs: Seq[SourceFile], prefix: String): String = {
+      val d = SparkTestSession.tmpDir(prefix)
+      IndexBuilder.build(spark, spark.createDataset(docs), d, numPartitions = 2,
+        analyzerFor = _ => PayloadSpec.analyzer,
+        indexPositions = true, indexOffsets = true, indexPayloads = true)
+      d
+    }
+    val docs = (0 until 30).map(mk)
+    val dir = build(docs, "graft-split-side-")
+    // the last doc in corpus order has the highest docId, so the live
+    // docs keep their ids in a fresh build without it
+    Deletes.deleteDocs(spark, dir, spark.createDataset(Seq(29L)))
+    val live = build(docs.init, "graft-split-side-live-")
+    def ids(d: String) = spark.read.parquet(IndexPaths.docstats(d))
+      .select("docId", "path").as[(Long, String)].collect().toSet
+    assert(ids(live) === ids(dir).filter(_._1 != 29L))
+
+    val root = SparkTestSession.tmpDir("graft-split-side-out-")
+    val shards = IndexSplitter.split(spark, dir, root, numShards = 3, numPartitions = 2)
+    shards.foreach { sd =>
+      val report = CheckIndex.check(spark, sd)
+      assert(report.ok, s"$sd: ${report.problems.mkString("; ")}")
+    }
+    val whole = new IndexReader(spark, live)
+    val union = IndexReader.multi(spark, shards)
+    assert(union.hasPositions && union.hasOffsets && union.hasPayloads)
+
+    def phrase(r: IndexReader) =
+      new Searcher(r, analyzerFor = _ => PayloadSpec.analyzer)
+        .search(PhraseQ(Seq("alpha", "beta")), 50).map(h => (h.docId, h.score)).toSeq
+    val a = phrase(whole)
+    assert(a.nonEmpty)
+    assert(phrase(union) === a)
+
+    val terms = Seq("alpha", "beta", "delta")
+    def offsets(r: IndexReader) = r.termOffsetRows(terms).collect()
+      .map { case (id, t, o) => (id, t, o.toSeq) }.sortBy(x => (x._1, x._2)).toSeq
+    def payloads(r: IndexReader) = r.termPayloadRows(terms).collect()
+      .map { case (id, t, tf, norm, ys) =>
+        (id, t, tf, norm, ys.toSeq.map(y => Option(y).map(_.toSeq)))
+      }.sortBy(x => (x._1, x._2)).toSeq
+    assert(offsets(whole).nonEmpty && payloads(whole).nonEmpty)
+    assert(offsets(union) === offsets(whole))
+    assert(payloads(union) === payloads(whole))
+  }
 }
