@@ -431,7 +431,7 @@ object VerifyQueries {
     val dir = DocIndex.ensurePositions(spark, sf)
     val searcher = new graft.search.Searcher(new graft.search.IndexReader(spark, dir),
       analyzerFor = _ => graft.analysis.Analyzer.sqlParity)
-    searcher.phraseFreqsFromIndex(Seq("table", "hash"), 0)
+    searcher.phraseFreqs(Seq("table", "hash"))
       .toDF("doc_id", "ptf", "norm")
       .select(col("doc_id"), col("ptf").cast("long").as("ptf"))
       .orderBy(col("doc_id"))
@@ -450,7 +450,7 @@ object VerifyQueries {
     val dir = ensure(spark, sf)
     val searcher = new graft.search.Searcher(new graft.search.IndexReader(spark, dir),
       analyzerFor = _ => graft.analysis.Analyzer.sqlParity)
-    val matched = searcher.sloppyPhraseFreqs(Seq("table", "hash"), 3)
+    val matched = searcher.phraseFreqs(Seq("table", "hash"), 3)
       .toDF("doc_id", "freq", "norm").select("doc_id")
     val pos = spark.read.parquet(s"$sf/documents.parquet")
       .select(col("doc_id"),
@@ -482,7 +482,7 @@ object VerifyQueries {
     val dir = DocIndex.ensurePositions(spark, sf)
     val searcher = new graft.search.Searcher(new graft.search.IndexReader(spark, dir),
       analyzerFor = _ => graft.analysis.Analyzer.sqlParity)
-    val matched = searcher.phraseFreqsFromIndex(Seq("table", "hash"), 3)
+    val matched = searcher.phraseFreqs(Seq("table", "hash"), 3)
       .toDF("doc_id", "freq", "norm").select("doc_id")
     val pos = spark.read.parquet(s"$sf/documents.parquet")
       .select(col("doc_id"),
@@ -504,7 +504,7 @@ object VerifyQueries {
     val searcher = new graft.search.Searcher(new graft.search.IndexReader(spark, dir),
       analyzerFor = _ => graft.analysis.Analyzer.sqlParity)
     searcher.multiPhraseFreqs(Seq(Seq("table", "part"), Seq("hash", "filter")))
-      .toDF("doc_id", "ptf")
+      .toDF("doc_id", "ptf", "norm")
       .select(col("doc_id"), col("ptf").cast("long").as("ptf"))
       .orderBy(col("doc_id"))
   }
@@ -528,9 +528,9 @@ object VerifyQueries {
     val dir = ensure(spark, sf)
     val searcher = new graft.search.Searcher(new graft.search.IndexReader(spark, dir),
       analyzerFor = _ => graft.analysis.Analyzer.sqlParity)
-    val matched = searcher.multiPhraseFreqsSloppy(
+    val matched = searcher.multiPhraseFreqs(
       Seq(Seq("table", "part"), Seq("hash", "filter")), 3)
-      .toDF("doc_id", "freq").select("doc_id")
+      .toDF("doc_id", "freq", "norm").select("doc_id")
     val pos = spark.read.parquet(s"$sf/documents.parquet")
       .select(col("doc_id"),
         posexplode(expr("regexp_extract_all(lower(text), '[a-z0-9_]+', 0)")).as(Seq("p", "t")))

@@ -366,7 +366,9 @@ object Dedup {
     * shingle). Default cap is far above verification-fixture dfs. */
   def ngramJaccardPairs(docs: DataFrame, w: Int = 3, minJaccard: Double = 0.35,
                         maxShingleDf: Long = 10000L): DataFrame = {
-    val ds = docShingles(docs, w)
+    // ds feeds the df count, both sides of the candidate self-join and the
+    // Jaccard confirm: materialize it once, as minhashNearDups does
+    val ds = docShingles(docs, w).localCheckpoint(true)
     val eligible = ds.groupBy(col("s")).agg(count("*").as("df"))
       .where(col("df") <= maxShingleDf).select(col("s"))
     val dsCand = ds.join(eligible, Seq("s"), "left_semi")

@@ -48,17 +48,9 @@ trait Explains { self: Searcher =>
       else Explanation(m.value, "Boosting: context not matched", Seq(m))
     case bq: BoolQ => explainBool(bq, docId)
     case PhraseQ(terms, slop, boost, _) =>
-      // one-doc point lookup: push the docId predicate, don't collect all
-      val freqs: Option[(Float, Int)] =
-        if (slop == 0)
-          phraseFreqs(terms).filter(_._1 == docId).collect()
-            .headOption.map(t => (t._2.toFloat, t._3))
-        else
-          sloppyPhraseFreqs(terms, slop).filter(_._1 == docId).collect()
-            .headOption.map(t => (t._2, t._3))
-      freqs match {
+      phraseFreqs(terms, slop).filter(_._1 == docId).collect().headOption match {
         case None => Explanation(0f, s"no phrase match for ${terms.mkString(" ")}")
-        case Some((freq, norm)) =>
+        case Some((_, freq, norm)) =>
           val stats = readerTermStats(terms.distinct)
           val idfs = terms.map(t => BM25.idf(stats(t).df, maxDocStat))
           val w = BM25.weightValue(idfs.sum, boost)
@@ -67,15 +59,8 @@ trait Explains { self: Searcher =>
             terms.zip(idfs).map { case (t, i) => Explanation(i, s"idf(term=$t)") })
       }
     case MultiPhraseQ(slots, slop, boost) =>
-      val freq: Option[Float] =
-        if (slop == 0)
-          multiPhraseFreqs(slots).filter(_._1 == docId).collect()
-            .headOption.map(_._2.toFloat)
-        else
-          multiPhraseFreqsSloppy(slots, slop).filter(_._1 == docId).collect()
-            .headOption.map(_._2)
-      (freq, docNorm(docId)) match {
-        case (Some(f), Some(norm)) =>
+      multiPhraseFreqs(slots, slop).filter(_._1 == docId).collect().headOption match {
+        case Some((_, f, norm)) =>
           val flat = slots.flatten
           val stats = readerTermStats(flat.distinct)
           val idfs = flat.map(t =>
@@ -84,7 +69,7 @@ trait Explains { self: Searcher =>
           Explanation(BM25.score(f, norm.toByte, w, normCacheStat),
             s"multiPhraseFreq=$f, weight(idfSum=${idfs.sum})",
             flat.zip(idfs).map { case (t, i) => Explanation(i, s"idf(term=$t)") })
-        case _ => Explanation(0f,
+        case None => Explanation(0f,
           s"no multi-phrase match for ${slots.map(_.mkString("|")).mkString(" ")}")
       }
     case other => Explanation(0f, s"explain unsupported for $other")

@@ -112,7 +112,7 @@ final class MemoryIndex private (
 
     case SparsePhraseQ(parts, b) =>
       // explicit-position phrase (PhraseQuery.Add(term, position)):
-      // same anchor walk as Searcher.sparsePhraseFreqs, same weight
+      // same anchor walk as Searcher.slotFreq at slop 0, same weight
       // framing (Σ idf over the parts actually queried — all idf1 here)
       val freq = sparsePhraseFreq(parts)
       if (freq > 0) Some((b * parts.size * idf1 * tfNorm(freq.toFloat)).toFloat)
@@ -159,9 +159,9 @@ final class MemoryIndex private (
     case t: SpanTermQ => t
   }
 
-  /** Sparse-phrase anchor count — [[Searcher.sparsePhraseFreqs]]'s
-    * binary-search walk with each part offset by its explicit relative
-    * position. */
+  /** Sparse-phrase anchor count — the binary-search walk
+    * [[Searcher.slotFreq]] runs at slop 0, each part offset by its
+    * explicit relative position. */
   private def sparsePhraseFreq(parts: Seq[(String, Int)]): Int = {
     require(parts.nonEmpty, "empty sparse phrase")
     val sorted = parts.sortBy(_._2).toIndexedSeq
@@ -179,7 +179,7 @@ final class MemoryIndex private (
   }
 
   /** slop=0 phrase freq — the same binary-search consecutive-positions
-    * check [[Searcher.phraseFreqsFromIndex]] runs per candidate. */
+    * check [[Searcher.slotFreq]] runs per doc. */
   private def exactPhraseFreq(terms: IndexedSeq[String]): Int = {
     if (terms.exists(!contains(_))) return 0
     var f = 0
@@ -196,7 +196,7 @@ final class MemoryIndex private (
     val liveSlots = slots.map(_.filter(contains))
     if (liveSlots.exists(_.isEmpty)) return 0f
     // identical slots share a key so SloppyPhrase treats them as a repeat
-    // group — same encoding as Searcher.multiPhraseFreqsSloppyWith
+    // group — same encoding as Searcher.slotFreq
     val slotKeys: IndexedSeq[String] =
       liveSlots.map(_.distinct.sorted.mkString("|")).toIndexedSeq
     val altsByKey: Map[String, Seq[String]] =

@@ -314,6 +314,40 @@ object Searcher {
   /** FuzzyQuery's TOP_TERMS budget (reference: FuzzyQuery
     * defaultMaxExpansions = 50). */
   val FuzzyMaxExpansions = 50
+
+  /** One doc's phrase freq over its term positions, for slot i accepting
+    * any of `slots(i)` at `offsets(i)` past slot 0 (`offsets(0) == 0`).
+    * slop 0: the number of distinct anchor positions of slot 0 at which
+    * every slot matches. slop > 0: the [[SloppyPhrase]] traversal over
+    * each slot's union positions; slots with identical alternative sets
+    * share a key and so form a repeat group. */
+  private[search] def slotFreq(slots: IndexedSeq[Seq[String]], offsets: IndexedSeq[Int],
+                               slop: Int): (String => Array[Int]) => Float =
+    if (slop == 0) { posOf =>
+      val pos = slots.map(slotPositions(_, posOf))
+      var f = 0
+      var last = Int.MinValue
+      pos(0).foreach { p =>
+        if (p != last) {
+          var i = 1
+          while (i < pos.length &&
+            java.util.Arrays.binarySearch(pos(i), p + offsets(i)) >= 0) i += 1
+          if (i == pos.length) f += 1
+          last = p
+        }
+      }
+      f.toFloat
+    } else {
+      val keys = slots.map(_.distinct.sorted.mkString("|"))
+      val altsOf = keys.zip(slots).toMap
+      posOf => SloppyPhrase.freq(keys, k => slotPositions(altsOf(k), posOf), slop)
+    }
+
+  /** A slot's sorted positions: its one term's, or the distinct union of
+    * its alternatives' (UnionDocsAndPositionsEnum). */
+  private def slotPositions(alts: Seq[String], posOf: String => Array[Int]): Array[Int] =
+    if (alts.size == 1) posOf(alts.head)
+    else alts.iterator.flatMap(posOf(_).iterator).toArray.distinct.sorted
 }
 
 /** BM25 top-k search over the index tables (≙ IndexSearcher, reference:
@@ -361,9 +395,11 @@ final class Searcher(val reader: IndexReader, pruneMinBlocks: Int = 64,
       .select($"docId".as("exDocId")).distinct())
   }
 
-  private def liveOnly(ds: Dataset[ScoreDoc]): Dataset[ScoreDoc] = tombstones match {
+  /** The one tombstone filter: drops the rows of a docId-keyed dataset
+    * (its first column is the docId) whose doc is deleted. */
+  private def liveOnly[T](ds: Dataset[T]): Dataset[T] = tombstones match {
     case None => ds
-    case Some(t) => ds.join(t, ds("docId") === t("exDocId"), "left_anti").as[ScoreDoc]
+    case Some(t) => ds.join(t, ds(ds.columns.head) === t("exDocId"), "left_anti").as(ds.encoder)
   }
 
   // ------------------------------------------------------------- rewrite
@@ -611,129 +647,143 @@ final class Searcher(val reader: IndexReader, pruneMinBlocks: Int = 64,
 
   // ------------------------------------------------------------- phrase
 
-  /** Phrase scoring without a positions index — the FilteredQuery
-    * QUERY_FIRST strategy (reference: Search/FilteredQuery.cs:536-575)
-    * restated for Spark: the inverted index prunes to docs containing ALL
-    * phrase terms (a docId conjunction join, usually a vanishing fraction
-    * of the corpus), then ONLY those docs' stored content is re-analyzed
-    * to verify positions and count phrase occurrences. At 100 TB the
-    * candidate set after an AND of 2+ terms is small enough that
-    * re-analysis is cheaper than carrying (and shuffling) a positions
-    * column on every posting.
-    *
-    * Scoring matches the reference's ExactPhraseScorer: phraseFreq plays
-    * tf in BM25, weight = Σ idf over phrase terms (BM25Similarity.cs:
-    * 210-225), same norm byte as term scoring. Single-term phrases
-    * rewrite to TermQuery (PhraseQuery.cs:175). slop > 0 runs the
-    * reference-exact SloppyPhraseScorer traversal ([[SloppyPhrase]]):
-    * out-of-order matches within slop, slop-factor-weighted float freq,
-    * repeat-group collision handling. */
+  /** Phrase scoring (reference: ExactPhraseScorer / SloppyPhraseScorer):
+    * phraseFreq plays tf in BM25, weight = Σ idf over phrase terms
+    * (BM25Similarity.cs:210-225), same norm byte as term scoring.
+    * Single-term phrases rewrite to TermQuery (PhraseQuery.cs:175). The
+    * freqs come from [[phraseFreqs]]: positions sidecar or re-analysis,
+    * exact walk or the reference-exact [[SloppyPhrase]] traversal. */
   private def scoredPhrase(terms: Seq[String], slop: Int, boost: Float,
                            stats: Map[String, TermDictRow]): Dataset[ScoreDoc] = {
     require(terms.nonEmpty, "empty phrase")
     if (terms.size == 1) return scoredRaw(TermQ(terms.head, boost), stats)
     if (!terms.forall(stats.contains)) return spark.emptyDataset[ScoreDoc]
     // idf sum over phrase terms in query order, duplicates included
-    val weight = BM25.weightValue(
+    phraseScored(phraseFreqs(terms, slop),
       terms.map(t => BM25.idf(stats(t).df, cs.maxDoc)).sum, boost)
+  }
+
+  /** Exact phrase at EXPLICIT positions (PhraseQuery.Add(term, position)
+    * / the NGramPhraseQuery rewrite target). Same BM25 framing as the
+    * dense exact phrase (weight = Σ idf over the parts actually queried —
+    * the reference's optimized PhraseQuery carries only the kept terms,
+    * so its weight drops the skipped grams' idf the same way). */
+  private def scoredSparsePhrase(parts: Seq[(String, Int)], boost: Float,
+                                 stats: Map[String, TermDictRow]): Dataset[ScoreDoc] = {
+    require(parts.nonEmpty, "empty sparse phrase")
+    if (parts.size == 1) return scoredRaw(TermQ(parts.head._1, boost), stats)
+    if (!parts.forall(p => stats.contains(p._1))) return spark.emptyDataset[ScoreDoc]
+    phraseScored(sparsePhraseFreqs(parts),
+      parts.map(p => BM25.idf(stats(p._1).df, cs.maxDoc)).sum, boost)
+  }
+
+  /** Scored MultiPhraseQuery (reference: MultiPhraseQuery.cs
+    * MultiPhraseWeight): the weight's idf is the sum over EVERY term in
+    * every slot, unindexed alternatives included with df = 0 (the
+    * reference's TermContext behavior). */
+  private def scoredMultiPhrase(slots: Seq[Seq[String]], slop: Int, boost: Float,
+                                stats: Map[String, TermDictRow]): Dataset[ScoreDoc] = {
+    require(slots.nonEmpty && slots.forall(_.nonEmpty), "empty slot")
+    val liveSlots = slots.map(_.filter(stats.contains))
+    if (liveSlots.exists(_.isEmpty)) return spark.emptyDataset[ScoreDoc]
+    phraseScored(slotFreqs(liveSlots, liveSlots.indices, slop),
+      slots.flatten.map(t => BM25.idf(stats.get(t).map(_.df).getOrElse(0L), cs.maxDoc)).sum,
+      boost)
+  }
+
+  /** BM25 over (docId, phraseFreq, normByte) rows. */
+  private def phraseScored(freqs: Dataset[(Long, Float, Int)], idfSum: Float,
+                           boost: Float): Dataset[ScoreDoc] = {
+    val weight = BM25.weightValue(idfSum, boost)
     val localCache = cache
-    val freqs: Dataset[(Long, Float, Int)] =
-      if (reader.hasPositions) phraseFreqsFromIndex(terms, slop)
-      else if (slop == 0)
-        phraseFreqs(terms).map(t => (t._1, t._2.toFloat, t._3))
-      else sloppyPhraseFreqs(terms, slop)
     freqs.map { case (docId, freq, norm) =>
       ScoreDoc(docId, BM25.score(freq, norm.toByte, weight, localCache))
     }
   }
 
-  /** Exact phrase at EXPLICIT positions (PhraseQuery.Add(term, position)
-    * / the NGramPhraseQuery rewrite target): anchor = a match of the
-    * first part; every later part must sit exactly at anchor + its
-    * relative position. Same BM25 framing as the dense exact phrase
-    * (weight = Σ idf over the parts actually queried — the reference's
-    * optimized PhraseQuery carries only the kept terms, so its weight
-    * drops the skipped grams' idf the same way). Positions index
-    * required — the positionless re-analysis fallback can't see gaps. */
-  private def scoredSparsePhrase(parts: Seq[(String, Int)], boost: Float,
-                                 stats: Map[String, TermDictRow]): Dataset[ScoreDoc] = {
-    require(parts.nonEmpty, "empty sparse phrase")
-    if (parts.size == 1) return scoredRaw(TermQ(parts.head._1, boost), stats)
-    require(reader.hasPositions, "SparsePhraseQ requires a positions-enabled index")
-    if (!parts.forall(p => stats.contains(p._1))) return spark.emptyDataset[ScoreDoc]
-    val weight = BM25.weightValue(
-      parts.map(p => BM25.idf(stats(p._1).df, cs.maxDoc)).sum, boost)
-    val localCache = cache
-    sparsePhraseFreqs(parts).map { case (docId, freq, norm) =>
-      ScoreDoc(docId, BM25.score(freq, norm.toByte, weight, localCache))
-    }
+  /** (docId, phraseFreq, normByte) for docs containing the phrase: exact
+    * occurrences at slop 0, else the SloppyPhraseScorer freq
+    * (out-of-order matches within slop, slop-factor-weighted, repeat
+    * groups). No dictionary lookup: an unindexed term fails every doc's
+    * match. */
+  def phraseFreqs(terms: Seq[String], slop: Int = 0): Dataset[(Long, Float, Int)] =
+    slotFreqs(terms.map(Seq(_)), terms.indices, slop)
+
+  /** MultiPhraseQuery analog (reference: Search/MultiPhraseQuery.cs): a
+    * phrase whose slot i accepts any of `slots(i)`; with slop, the sloppy
+    * traversal runs over each slot's union positions
+    * (UnionDocsAndPositionsEnum). Unindexed alternatives are dropped; a
+    * slot left empty matches nothing. (docId, phraseFreq, normByte). */
+  def multiPhraseFreqs(slots: Seq[Seq[String]], slop: Int = 0): Dataset[(Long, Float, Int)] = {
+    require(slots.nonEmpty && slots.forall(_.nonEmpty), "empty slot")
+    val stats = reader.termStats(slots.flatten.distinct)
+    val liveSlots = slots.map(_.filter(stats.contains))
+    if (liveSlots.exists(_.isEmpty)) spark.emptyDataset[(Long, Float, Int)]
+    else slotFreqs(liveSlots, liveSlots.indices, slop)
   }
 
-  /** (docId, anchorCount, normByte) for a sparse phrase — the pruned
-    * aligned postings+positions scans and the one docId shuffle of
-    * [[phraseFreqsFromIndex]], with the binary-search walk offset by each
-    * part's explicit relative position instead of `i`. */
+  /** (docId, anchorCount, normByte) for a sparse phrase: the exact walk
+    * with each part at its explicit position relative to the first. */
   def sparsePhraseFreqs(parts: Seq[(String, Int)]): Dataset[(Long, Float, Int)] = {
-    val sorted = parts.sortBy(_._2).toIndexedSeq
-    val rels = sorted.map(p => p._2 - sorted.head._2)
-    val termArr = sorted.map(_._1)
-    val distinct = termArr.distinct
-    val nDistinct = distinct.length
-    val rows = termPositionRows(distinct)
-    rows.groupByKey(_._1).flatMapGroups { (docId, it) =>
-      val posBy = scala.collection.mutable.HashMap.empty[String, Array[Int]]
-      var norm = 0
-      it.foreach { case (_, term, ps, n) => posBy(term) = ps; norm = n }
-      if (posBy.size < nDistinct) Iterator.empty
-      else {
-        var f = 0
-        posBy(termArr.head).foreach { p =>
-          var i = 1
-          while (i < termArr.length &&
-            java.util.Arrays.binarySearch(posBy(termArr(i)), p + rels(i)) >= 0) i += 1
-          if (i == termArr.length) f += 1
-        }
-        if (f > 0) Iterator.single((docId, f.toFloat, norm)) else Iterator.empty
-      }
+    val sorted = parts.sortBy(_._2)
+    slotFreqs(sorted.map(p => Seq(p._1)), sorted.map(_._2 - sorted.head._2), 0)
+  }
+
+  /** The phrase family's one matcher: per-slot alternatives at per-slot
+    * offsets, counted by [[Searcher.slotFreq]] over [[docPositions]]. */
+  private def slotFreqs(slots: Seq[Seq[String]], offsets: Seq[Int],
+                        slop: Int): Dataset[(Long, Float, Int)] = {
+    val freq = Searcher.slotFreq(slots.toIndexedSeq, offsets.toIndexedSeq, slop)
+    docPositions(slots.flatten, conjunction(slots)) { (docId, norm, posOf) =>
+      val f = freq(posOf)
+      if (f > 0f) Some((docId, f, norm)) else None
     }
   }
 
-  /** Phrase freqs straight from the positions sidecar — no content
-    * re-analysis: pruned scans of the aligned postings + positions blocks
-    * joined on (term, firstDocId), decoded to (docId, term, positions,
-    * norm) rows, one docId shuffle, then the same exact/sloppy matching
-    * the re-analysis path runs (bit-identical freqs — PositionsSpec).
-    * This is the plan for the re-analysis worst case: phrases of very
-    * common terms whose candidate set after conjunction is large. No
-    * dictionary lookup: an unindexed term fails every doc's conjunction,
-    * and the scoring caller has already checked its stats. */
-  def phraseFreqsFromIndex(terms: Seq[String], slop: Int): Dataset[(Long, Float, Int)] = {
-    val distinct = terms.distinct
-    val phraseArr = terms.toIndexedSeq
-    val nDistinct = distinct.length
-    val rows = termPositionRows(distinct)
-    rows.groupByKey(_._1).flatMapGroups { (docId, it) =>
-      val posBy = scala.collection.mutable.HashMap.empty[String, Array[Int]]
-      var norm = 0
-      it.foreach { case (_, term, ps, n) => posBy(term) = ps; norm = n }
-      if (posBy.size < nDistinct) Iterator.empty // conjunction fails
-      else {
-        val freq: Float =
-          if (slop == 0) {
-            var f = 0
-            posBy(phraseArr.head).foreach { p =>
-              var i = 1
-              while (i < phraseArr.length &&
-                java.util.Arrays.binarySearch(posBy(phraseArr(i)), p + i) >= 0) i += 1
-              if (i == phraseArr.length) f += 1
-            }
-            f.toFloat
-          } else SloppyPhrase.freq(phraseArr,
-            t => posBy.getOrElse(t, Array.empty), slop)
-        if (freq > 0f) Iterator.single((docId, freq, norm)) else Iterator.empty
+  /** DocIds holding at least one alternative of every slot. */
+  private def conjunction(slots: Seq[Seq[String]]): Dataset[Long] =
+    slots.distinct.map {
+      case Seq(t) => termDocIds(t)
+      case alts => alts.map(termDocIds).reduce(_ union _).distinct()
+    }.reduce(_ intersect _)
+
+  /** The positions source every positional matcher reads (≙ one
+    * DocsAndPositionsEnum): `matcher` sees each doc's docId, norm byte
+    * and the sorted positions of `terms` in it (empty for an absent
+    * term). With the positions sidecar: pruned scans of the aligned
+    * postings + positions blocks, one docId shuffle, no content read.
+    * Without it — the FilteredQuery QUERY_FIRST strategy (reference:
+    * Search/FilteredQuery.cs:536-575) — only the `candidates` docs (an
+    * index-pruned conjunction, usually a vanishing fraction of the
+    * corpus) have their stored content re-analyzed, with the same
+    * positions (PositionsSpec). */
+  private def docPositions[T: org.apache.spark.sql.Encoder](terms: Seq[String],
+      candidates: => Dataset[Long])(matcher: (Long, Int, String => Array[Int]) => Option[T])
+      : Dataset[T] =
+    if (reader.hasPositions)
+      termPositionRows(terms.distinct).groupByKey(_._1).flatMapGroups { (docId, it) =>
+        val posBy = scala.collection.mutable.HashMap.empty[String, Array[Int]]
+        var norm = 0
+        it.foreach { case (_, term, ps, n) => posBy(term) = ps; norm = n }
+        matcher(docId, norm, t => posBy.getOrElse(t, Array.emptyIntArray))
       }
+    else {
+      val termSet = terms.toSet
+      val analyzers = analyzerFor
+      reader.docsTable
+        .join(candidates.toDF("cDocId"), $"docId" === $"cDocId")
+        .join(reader.docstats.select($"docId".as("nDocId"), $"norm"), $"docId" === $"nDocId")
+        .select($"docId", $"lang", $"content", $"norm")
+        .as[(Long, String, String, Int)]
+        .mapPartitions { it =>
+          val analyzerCache = scala.collection.mutable.HashMap.empty[String, graft.analysis.Analyzer]
+          it.flatMap { case (docId, lang, content, norm) =>
+            val posBy = analyzerCache.getOrElseUpdate(lang, analyzers(lang)).analyze(content)
+              .tokens.filter(t => termSet.contains(t.term)).groupMap(_.term)(_.position)
+            matcher(docId, norm, t => posBy.getOrElse(t, Array.emptyIntArray))
+          }
+        }
     }
-  }
 
   /** (docId, term, positions, normByte) rows for a term set, decoded from
     * the aligned postings/positions blocks. */
@@ -757,8 +807,7 @@ final class Searcher(val reader: IndexReader, pruneMinBlocks: Int = 64,
     * Shape: two parquet-pruned sidecar scans (terms pushed into the
     * sorted `term` column), one (docId, term) equi-join to align
     * positions with their occurrence-ordered offsets, one docId shuffle,
-    * then the same binary-search phrase walk [[phraseFreqsFromIndex]]
-    * runs. */
+    * then the exact binary-search phrase walk. */
   def phraseHighlightSpans(terms: Seq[String]): Dataset[(Long, Int, Int)] = {
     val distinct = terms.distinct
     val stats = reader.termStats(distinct)
@@ -852,287 +901,35 @@ final class Searcher(val reader: IndexReader, pruneMinBlocks: Int = 64,
           .as("score"))
   }
 
-  /** (docId, sloppy phraseFreq, normByte) under the reference's
-    * SloppyPhraseScorer semantics — same QUERY_FIRST frame as
-    * [[phraseFreqs]], per-candidate matching delegated to
-    * [[SloppyPhrase.freq]]. */
-  def sloppyPhraseFreqs(terms: Seq[String], slop: Int): Dataset[(Long, Float, Int)] = {
-    val distinct = terms.distinct
-    val candidates = distinct.map(termDocIds).reduce(_.intersect(_))
-    val phraseArr = terms.toIndexedSeq
-    val termSet = distinct.toSet
-    val analyzers = analyzerFor
-    val docs = reader.docsTable
-      .join(candidates.toDF("cDocId"), $"docId" === $"cDocId")
-      .join(reader.docstats.select($"docId".as("nDocId"), $"norm"),
-        $"docId" === $"nDocId")
-      .select($"docId", $"lang", $"content", $"norm")
-      .as[(Long, String, String, Int)]
-    docs.mapPartitions { it =>
-      val analyzerCache = scala.collection.mutable.HashMap.empty[String, graft.analysis.Analyzer]
-      it.flatMap { case (docId, lang, content, norm) =>
-        val analyzer = analyzerCache.getOrElseUpdate(lang, analyzers(lang))
-        val toks = analyzer.analyze(content).tokens
-        val posByTerm = scala.collection.mutable.HashMap.empty[String, scala.collection.mutable.ArrayBuffer[Int]]
-        toks.foreach { t =>
-          if (termSet.contains(t.term))
-            posByTerm.getOrElseUpdate(t.term, scala.collection.mutable.ArrayBuffer.empty) += t.position
-        }
-        val posOf: String => Array[Int] =
-          t => posByTerm.get(t).map(_.toArray).getOrElse(Array.empty)
-        val freq = SloppyPhrase.freq(phraseArr, posOf, slop)
-        if (freq > 0f) Iterator.single((docId, freq, norm)) else Iterator.empty
-      }
-    }
-  }
-
-  /** (docId, exact phraseFreq, normByte) for docs containing the phrase
-    * verbatim — the verification surface of the exact-phrase machinery
-    * (sloppy matching lives in [[sloppyPhraseFreqs]]). Like
-    * [[phraseFreqsFromIndex]] it takes no dictionary lookup: an unindexed
-    * term empties the candidate conjunction. */
-  def phraseFreqs(terms: Seq[String]): Dataset[(Long, Int, Int)] = {
-    val distinct = terms.distinct
-    // index prune: docs containing every phrase term (conjunction)
-    val candidates = distinct.map(termDocIds).reduce(_.intersect(_))
-    val phraseArr = terms.toArray
-    val nTerms = phraseArr.length
-    val analyzers = analyzerFor
-    val docs = reader.docsTable
-      .join(candidates.toDF("cDocId"), $"docId" === $"cDocId")
-      .join(reader.docstats.select($"docId".as("nDocId"), $"norm"),
-        $"docId" === $"nDocId")
-      .select($"docId", $"lang", $"content", $"norm")
-      .as[(Long, String, String, Int)]
-    docs.mapPartitions { it =>
-      val analyzerCache = scala.collection.mutable.HashMap.empty[String, graft.analysis.Analyzer]
-      it.flatMap { case (docId, lang, content, norm) =>
-        val analyzer = analyzerCache.getOrElseUpdate(lang, analyzers(lang))
-        val toks = analyzer.analyze(content).tokens
-        // a position may hold several tokens (synonym injection, posIncr
-        // 0) — a phrase slot matches if ANY token at that position does
-        val byPos = new java.util.HashMap[Int, List[String]](toks.length * 2)
-        toks.foreach(t =>
-          byPos.merge(t.position, List(t.term), (a, b) => b ::: a))
-        var freq = 0
-        var anchorPos = -1
-        toks.foreach { t =>
-          if (t.term == phraseArr(0) && t.position != anchorPos) {
-            var i = 1
-            while (i < nTerms && {
-              val ts = byPos.get(t.position + i); ts != null && ts.contains(phraseArr(i))
-            }) i += 1
-            if (i == nTerms) { freq += 1; anchorPos = t.position }
-          }
-        }
-        if (freq > 0) Iterator.single((docId, freq, norm)) else Iterator.empty
-      }
-    }
-  }
-
-  /** Scored MultiPhraseQuery (reference: MultiPhraseQuery.cs
-    * MultiPhraseWeight): phrase freq plays tf; the weight's idf is the
-    * sum over EVERY term in every slot, unindexed alternatives included
-    * with df = 0 (the reference's TermContext behavior); the norm byte
-    * joins in from docstats (the multi-phrase freq paths don't carry
-    * it). */
-  private def scoredMultiPhrase(slots: Seq[Seq[String]], slop: Int, boost: Float,
-                                stats: Map[String, TermDictRow]): Dataset[ScoreDoc] = {
-    require(slots.nonEmpty && slots.forall(_.nonEmpty), "empty slot")
-    val flat = slots.flatten
-    val liveSlots = slots.map(_.filter(stats.contains))
-    if (liveSlots.exists(_.isEmpty)) return spark.emptyDataset[ScoreDoc]
-    val weight = BM25.weightValue(
-      flat.map(t => BM25.idf(stats.get(t).map(_.df).getOrElse(0L), cs.maxDoc)).sum,
-      boost)
-    val freqs: Dataset[(Long, Float)] =
-      if (slop == 0) multiPhraseFreqsWith(liveSlots, stats).map(t => (t._1, t._2.toFloat))
-      else multiPhraseFreqsSloppyWith(liveSlots, slop, stats)
-    val localCache = cache
-    freqs.toDF("docId", "freq")
-      .join(reader.docstats.select($"docId", $"norm"), Seq("docId"))
-      .as[(Long, Float, Int)]
-      .map { case (docId, freq, norm) =>
-        ScoreDoc(docId, BM25.score(freq, norm.toByte, weight, localCache))
-      }
-  }
-
-  /** MultiPhraseQuery analog (reference: Search/MultiPhraseQuery.cs):
-    * a phrase whose slot i accepts any of `slots(i)`. Candidates = docs
-    * containing >= 1 alternative of EVERY slot (intersection of per-slot
-    * unions); match = consecutive positions with per-slot membership.
-    * On a positions-enabled index the match runs over decoded position
-    * lists instead of re-analysis. */
-  def multiPhraseFreqs(slots: Seq[Seq[String]]): Dataset[(Long, Int)] =
-    multiPhraseFreqsWith(slots, reader.termStats(slots.flatten.distinct))
-
-  /** As [[multiPhraseFreqs]] with the dictionary stats already pulled —
-    * scoring paths that need the stats themselves pass them through
-    * instead of paying a second dictionary job. */
-  private[search] def multiPhraseFreqsWith(slots: Seq[Seq[String]],
-      stats: Map[String, graft.build.TermDictRow]): Dataset[(Long, Int)] = {
-    require(slots.nonEmpty && slots.forall(_.nonEmpty), "empty slot")
-    val liveSlots = slots.map(_.filter(stats.contains))
-    if (liveSlots.exists(_.isEmpty)) return spark.emptyDataset[(Long, Int)]
-    if (reader.hasPositions) {
-      val slotSets = liveSlots.map(_.toSet).toArray
-      val n = slotSets.length
-      val allTerms = liveSlots.flatten.distinct
-      return termPositionRows(allTerms).groupByKey(_._1).flatMapGroups { (docId, it) =>
-        val posBy = scala.collection.mutable.HashMap.empty[String, Array[Int]]
-        it.foreach { case (_, term, ps, _) => posBy(term) = ps }
-        // positions present per slot = union over its alternatives
-        val slotPos: Array[java.util.HashSet[Integer]] = slotSets.map { alts =>
-          val s = new java.util.HashSet[Integer]()
-          alts.foreach(t => posBy.get(t).foreach(_.foreach(p => s.add(p))))
-          s
-        }
-        if (slotPos.exists(_.isEmpty)) Iterator.empty
-        else {
-          var freq = 0
-          val it0 = slotPos(0).iterator()
-          while (it0.hasNext) {
-            val p = it0.next().intValue()
-            var i = 1
-            while (i < n && slotPos(i).contains(p + i)) i += 1
-            if (i == n) freq += 1
-          }
-          if (freq > 0) Iterator.single((docId, freq)) else Iterator.empty
-        }
-      }
-    }
-    val candidates = liveSlots
-      .map(alts => alts.map(termDocIds).reduce(_ union _).distinct())
-      .reduce(_.intersect(_))
-    val slotSets = liveSlots.map(_.toSet).toArray
-    val n = slotSets.length
-    val analyzers = analyzerFor
-    val docs = reader.docsTable
-      .join(candidates.toDF("cDocId"), $"docId" === $"cDocId")
-      .select($"docId", $"lang", $"content").as[(Long, String, String)]
-    docs.mapPartitions { it =>
-      val analyzerCache = scala.collection.mutable.HashMap.empty[String, graft.analysis.Analyzer]
-      it.flatMap { case (docId, lang, content) =>
-        val toks = analyzerCache.getOrElseUpdate(lang, analyzers(lang)).analyze(content).tokens
-        val byPos = new java.util.HashMap[Int, List[String]](toks.length * 2)
-        toks.foreach(t =>
-          byPos.merge(t.position, List(t.term), (a, b) => b ::: a))
-        var freq = 0
-        var anchorPos = -1
-        toks.foreach { t =>
-          if (slotSets(0).contains(t.term) && t.position != anchorPos) {
-            var i = 1
-            while (i < n && {
-              val s = byPos.get(t.position + i)
-              s != null && s.exists(slotSets(i).contains)
-            }) i += 1
-            if (i == n) { freq += 1; anchorPos = t.position }
-          }
-        }
-        if (freq > 0) Iterator.single((docId, freq)) else Iterator.empty
-      }
-    }
-  }
-
-  /** MultiPhraseQuery WITH slop (reference: Search/MultiPhraseQuery.cs
-    * SetSlop — the sloppy scorer runs over union postings,
-    * UnionDocsAndPositionsEnum): slot i's position list is the sorted
-    * union over its alternatives, then the reference-exact SloppyPhrase
-    * traversal runs with slots as phrase terms. Slots with identical
-    * alternative sets share a key and therefore form repeat groups,
-    * matching the reference's repeat handling for repeated union terms.
-    * Same QUERY_FIRST frame as the exact multi-phrase; positions-enabled
-    * indexes decode the sidecar instead of re-analyzing. */
-  def multiPhraseFreqsSloppy(slots: Seq[Seq[String]], slop: Int): Dataset[(Long, Float)] =
-    multiPhraseFreqsSloppyWith(slots, slop, reader.termStats(slots.flatten.distinct))
-
-  private[search] def multiPhraseFreqsSloppyWith(slots: Seq[Seq[String]], slop: Int,
-      stats: Map[String, graft.build.TermDictRow]): Dataset[(Long, Float)] = {
-    require(slots.nonEmpty && slots.forall(_.nonEmpty), "empty slot")
-    val liveSlots = slots.map(_.filter(stats.contains))
-    if (liveSlots.exists(_.isEmpty)) return spark.emptyDataset[(Long, Float)]
-    val slotKeys: IndexedSeq[String] =
-      liveSlots.map(_.distinct.sorted.mkString("|")).toIndexedSeq
-    val altsByKey: Map[String, Seq[String]] =
-      slotKeys.zip(liveSlots.map(_.distinct)).toMap
-    def unionFreq(posBy: scala.collection.Map[String, Array[Int]]): Float = {
-      val posOf: String => Array[Int] = key =>
-        altsByKey(key).iterator
-          .flatMap(t => posBy.getOrElse(t, Array.empty[Int]).iterator)
-          .toArray.distinct.sorted
-      SloppyPhrase.freq(slotKeys, posOf, slop)
-    }
-    if (reader.hasPositions) {
-      val allTerms = liveSlots.flatten.distinct
-      termPositionRows(allTerms).groupByKey(_._1).flatMapGroups { (docId, it) =>
-        val posBy = scala.collection.mutable.HashMap.empty[String, Array[Int]]
-        it.foreach { case (_, term, ps, _) => posBy(term) = ps }
-        val f = unionFreq(posBy)
-        if (f > 0f) Iterator.single((docId, f)) else Iterator.empty
-      }
-    } else {
-      val candidates = liveSlots
-        .map(alts => alts.map(termDocIds).reduce(_ union _).distinct())
-        .reduce(_.intersect(_))
-      val termSet = liveSlots.flatten.toSet
-      val analyzers = analyzerFor
-      val docs = reader.docsTable
-        .join(candidates.toDF("cDocId"), $"docId" === $"cDocId")
-        .select($"docId", $"lang", $"content").as[(Long, String, String)]
-      docs.mapPartitions { it =>
-        val analyzerCache = scala.collection.mutable.HashMap.empty[String, graft.analysis.Analyzer]
-        it.flatMap { case (docId, lang, content) =>
-          val toks = analyzerCache.getOrElseUpdate(lang, analyzers(lang)).analyze(content).tokens
-          val posBy = scala.collection.mutable.HashMap.empty[String, scala.collection.mutable.ArrayBuffer[Int]]
-          toks.foreach { t =>
-            if (termSet.contains(t.term))
-              posBy.getOrElseUpdate(t.term, scala.collection.mutable.ArrayBuffer.empty) += t.position
-          }
-          val f = unionFreq(posBy.view.mapValues(_.toArray).toMap)
-          if (f > 0f) Iterator.single((docId, f)) else Iterator.empty
-        }
-      }
-    }
-  }
-
   /** Proximity pair count (SpanNearQuery analog for two terms, reference:
     * Search/Spans/SpanNearQuery.cs semantics restated relationally):
     * number of occurrence pairs (pa, pb) with |pa - pb| <= maxGap
-    * (unordered) or 0 < pb - pa <= maxGap (ordered). Same QUERY_FIRST
-    * shape as phrases: index-pruned conjunction + re-analysis. */
+    * (unordered) or 0 < pb - pa <= maxGap (ordered), over
+    * [[docPositions]]. */
   def spanNearFreqs(termA: String, termB: String, maxGap: Int,
                     ordered: Boolean = false): Dataset[(Long, Int)] = {
     val stats = reader.termStats(Seq(termA, termB))
     if (!stats.contains(termA) || !stats.contains(termB))
       return spark.emptyDataset[(Long, Int)]
-    val candidates = termDocIds(termA).intersect(termDocIds(termB))
-    val analyzers = analyzerFor
-    val docs = reader.docsTable
-      .join(candidates.toDF("cDocId"), $"docId" === $"cDocId")
-      .select($"docId", $"lang", $"content").as[(Long, String, String)]
-    docs.mapPartitions { it =>
-      val analyzerCache = scala.collection.mutable.HashMap.empty[String, graft.analysis.Analyzer]
-      it.flatMap { case (docId, lang, content) =>
-        val toks = analyzerCache.getOrElseUpdate(lang, analyzers(lang)).analyze(content).tokens
-        val pa = toks.filter(_.term == termA).map(_.position)
-        val pb = toks.filter(_.term == termB).map(_.position)
-        var n = 0
-        pa.foreach(a => pb.foreach { b =>
-          val d = b - a
-          if (if (ordered) d > 0 && d <= maxGap else d != 0 && math.abs(d) <= maxGap)
-            n += 1
-        })
-        if (n > 0) Iterator.single((docId, n)) else Iterator.empty
-      }
+    val terms = Seq(termA, termB)
+    docPositions(terms, conjunction(terms.map(Seq(_)))) { (docId, _, posOf) =>
+      val pb = posOf(termB)
+      var n = 0
+      posOf(termA).foreach(a => pb.foreach { b =>
+        val d = b - a
+        if (if (ordered) d > 0 && d <= maxGap else d != 0 && math.abs(d) <= maxGap)
+          n += 1
+      })
+      if (n > 0) Some((docId, n)) else None
     }
   }
 
   /** Span-algebra evaluation (reference: Search/Spans/, SURVEY §2.3):
-    * per-doc span count of an arbitrary [[SpanQuery]] tree. Candidate
-    * pruning follows the tree's structure — OR unions its children's doc
-    * sets, NEAR intersects them, NOT/FIRST prune on the positive branch —
-    * then candidates are re-analyzed and [[Spans.eval]] runs the interval
-    * algebra per doc (the QUERY_FIRST frame phrases use). */
+    * per-doc span count of an arbitrary [[SpanQuery]] tree, [[Spans.eval]]
+    * running the interval algebra per doc over [[docPositions]]. The
+    * re-analysis candidates follow the tree's structure — OR unions its
+    * children's doc sets, NEAR intersects them, NOT/FIRST prune on the
+    * positive branch. */
   def spanCount(q0: SpanQuery): Dataset[(Long, Int)] = {
     // SpanMultiTermQueryWrapper analog: expand wildcard/prefix/fuzzy
     // nodes against the dictionary into a SpanOr of term spans BEFORE
@@ -1171,44 +968,12 @@ final class Searcher(val reader: IndexReader, pruneMinBlocks: Int = 64,
       case SpanPositionRangeQ(sub, _, _) => cands(sub)
       case SpanMultiTermQ(_) => None // unreachable after expandMulti
     }
-    val query = q
-    if (reader.hasPositions) {
-      // positions sidecar: skip re-analysis entirely — one docId grouping
-      // of the query terms' decoded position rows drives the algebra
-      // (structural candidate pruning is implicit: eval of a NEAR with a
-      // missing clause list is empty)
-      if (live.isEmpty) return spark.emptyDataset[(Long, Int)]
-      return termPositionRows(live.toSeq)
-        .groupByKey(_._1).flatMapGroups { (docId, it) =>
-          val posBy = scala.collection.mutable.HashMap.empty[String, Array[Int]]
-          it.foreach { case (_, term, ps, _) => posBy(term) = ps }
-          val posOf: String => Array[Int] = t => posBy.getOrElse(t, Array.empty)
-          val n = Spans.eval(query, posOf).length
-          if (n > 0) Iterator.single((docId, n)) else Iterator.empty
-        }
-    }
     cands(q) match {
       case None => spark.emptyDataset[(Long, Int)]
       case Some(candidates) =>
-        val analyzers = analyzerFor
-        val liveTerms = live
-        val docs = reader.docsTable
-          .join(candidates.toDF("cDocId"), $"docId" === $"cDocId")
-          .select($"docId", $"lang", $"content").as[(Long, String, String)]
-        docs.mapPartitions { it =>
-          val analyzerCache = scala.collection.mutable.HashMap.empty[String, graft.analysis.Analyzer]
-          it.flatMap { case (docId, lang, content) =>
-            val toks = analyzerCache.getOrElseUpdate(lang, analyzers(lang)).analyze(content).tokens
-            val posByTerm = scala.collection.mutable.HashMap.empty[String, scala.collection.mutable.ArrayBuffer[Int]]
-            toks.foreach { t =>
-              if (liveTerms.contains(t.term))
-                posByTerm.getOrElseUpdate(t.term, scala.collection.mutable.ArrayBuffer.empty) += t.position
-            }
-            val posOf: String => Array[Int] =
-              t => posByTerm.get(t).map(_.toArray).getOrElse(Array.empty)
-            val n = Spans.eval(query, posOf).length
-            if (n > 0) Iterator.single((docId, n)) else Iterator.empty
-          }
+        docPositions(live.toSeq, candidates) { (docId, _, posOf) =>
+          val n = Spans.eval(q, posOf).length
+          if (n > 0) Some((docId, n)) else None
         }
     }
   }
@@ -1354,7 +1119,7 @@ final class Searcher(val reader: IndexReader, pruneMinBlocks: Int = 64,
     val joined = pos.join(pay, Seq("docId", "term"))
       .select($"docId", $"term", $"ps", $"pays")
       .as[(Long, String, Array[Int], Array[Array[Byte]])]
-    liveOnly2(joined.groupByKey(_._1).flatMapGroups { (docId, it) =>
+    liveOnly(joined.groupByKey(_._1).flatMapGroups { (docId, it) =>
       val rows = it.toArray
       val posOf: String => Array[Int] = {
         val m = rows.map(r => r._2 -> r._3).toMap
@@ -1385,14 +1150,6 @@ final class Searcher(val reader: IndexReader, pruneMinBlocks: Int = 64,
       if (accepted > 0) Iterator.single((docId, accepted)) else Iterator.empty
     })
   }
-
-  /** Tombstone filter for non-ScoreDoc keyed-by-docId datasets. */
-  private def liveOnly2(ds: Dataset[(Long, Int)]): Dataset[(Long, Int)] =
-    tombstones match {
-      case None => ds
-      case Some(t) =>
-        ds.join(t, ds("_1") === t("exDocId"), "left_anti").as[(Long, Int)]
-    }
 
   /** DocIds of one term, decoded from the pruned postings scan. */
   private def termDocIds(t: String): Dataset[Long] =
@@ -1493,10 +1250,7 @@ final class Searcher(val reader: IndexReader, pruneMinBlocks: Int = 64,
     val phraseHits: Seq[Dataset[ClauseHit]] = clauses.zipWithIndex.collect {
       case (c, ci) if c.phrase && liveClause(c) =>
         val w = wts(ci)
-        val freqs: Dataset[(Long, Float, Int)] =
-          if (c.slop == 0) phraseFreqs(c.terms).map(t => (t._1, t._2.toFloat, t._3))
-          else sloppyPhraseFreqs(c.terms, c.slop)
-        freqs.map { case (docId, f, norm) =>
+        phraseFreqs(c.terms, c.slop).map { case (docId, f, norm) =>
           ClauseHit(docId, ci, bSim.score(f, norm.toByte, w))
         }
     }
@@ -1535,11 +1289,6 @@ final class Searcher(val reader: IndexReader, pruneMinBlocks: Int = 64,
       .select($"tokenCount".cast("float")).head().getFloat(0)
   private[search] def maxDocStat: Long = cs.maxDoc
   private[search] def normCacheStat: Array[Float] = cache
-
-  /** Norm byte of one doc — docstats point lookup (explain support). */
-  private[search] def docNorm(docId: Long): Option[Int] =
-    reader.docstats.where($"docId" === docId).select($"norm")
-      .as[Int].collect().headOption
 
   /** (tf, normByte) of one (term, doc) — block-pruned point lookup. */
   private[search] def termHit(t: String, docId: Long): Option[(Int, Int)] = {

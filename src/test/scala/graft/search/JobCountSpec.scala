@@ -91,6 +91,32 @@ class JobCountSpec extends AnyFunSuite with BeforeAndAfterAll {
     }
   }
 
+  /** A positions index of generation 0's docs, and an adjacent term pair
+    * of its first doc, so every phrase below has at least one match
+    * (driver-side, uncounted). */
+  private lazy val (posDir, Seq(p0, p1)) = {
+    import spark.implicits._
+    val d = s"$root/positions"
+    IndexBuilder.build(spark, spark.createDataset((0L until 300L).map(CorpusGen.doc)),
+      d, numPartitions = 2, indexPositions = true)
+    val doc = CorpusGen.doc(0L)
+    val toks = graft.analysis.Analyzer.forLang(doc.lang).analyze(doc.content).tokens
+    val i = toks.indices.find(i => toks(i + 1).position == toks(i).position + 1).get
+    (d, Seq(toks(i).term, toks(i + 1).term))
+  }
+
+  test("positions index: exact, sloppy and multi-phrase search job floors") {
+    val s = new Searcher(new IndexReader(spark, posDir))
+    for ((q, floor) <- Seq(
+        PhraseQ(Seq(p0, p1)) -> 4,
+        PhraseQ(Seq(p0, p1), slop = 2) -> 4,
+        MultiPhraseQ(Seq(Seq(p0, a), Seq(p1, b))) -> 4)) { // was 5: a docstats join for the norm
+      assert(s.search(q, 5).nonEmpty, s"$q matched nothing") // warm
+      val n = jobsOf(s.search(q, 5))
+      assert(n <= floor, s"$q ran $n jobs")
+    }
+  }
+
   test("a reader with open table handles still serializes, without the handles") {
     def serializedSize(o: AnyRef): Int = {
       val bytes = new java.io.ByteArrayOutputStream

@@ -83,7 +83,7 @@ class PayloadSpec extends AnyFunSuite {
 
   test("phrase matching still works through the payload-bearing positions") {
     // positions are real (payloads imply positions): "alpha beta" adjacency
-    val freqs = searcher.phraseFreqsFromIndex(Seq("alpha", "beta"), 0)
+    val freqs = searcher.phraseFreqs(Seq("alpha", "beta"), 0)
       .collect().map(t => t._1 -> t._2).toMap
     assert(freqs.keySet === Set(0L, 1L, 3L)) // doc1: alpha@1 beta@2 adjacent
   }

@@ -41,7 +41,7 @@ class PhraseSpec extends AnyFunSuite {
   }
 
   test("sloppy phrase: out-of-order within slop, slop-factored freq (SloppyPhraseScorer)") {
-    val s1 = searcher.sloppyPhraseFreqs(Seq("state", "machine"), 1)
+    val s1 = searcher.phraseFreqs(Seq("state", "machine"), 1)
       .collect().map(t => t._1 -> t._2).toMap
     assert(s1.keySet === Set(0L, 2L, 3L, 4L))
     assert(s1(0L) === 1f)     // exact: slop factor 1/(1+0)
@@ -51,7 +51,7 @@ class PhraseSpec extends AnyFunSuite {
     // doc1 "machine state runs" matches REVERSED at distance 2 (adjusted
     // window m@-1..s@1) — the reorder semantics the old ordered-window
     // simplification missed
-    val s2 = searcher.sloppyPhraseFreqs(Seq("state", "machine"), 2)
+    val s2 = searcher.phraseFreqs(Seq("state", "machine"), 2)
       .collect().map(t => t._1 -> t._2).toMap
     assert(s2.keySet === Set(0L, 1L, 2L, 3L, 4L))
     assert(s2(1L) === 1f / 3f)
@@ -128,7 +128,7 @@ class PhraseSpec extends AnyFunSuite {
       analyzerFor = noStop)
     val s = new Searcher(new IndexReader(spark, d), analyzerFor = noStop)
     def freqs(terms: Seq[String], slop: Int): Map[Long, Float] =
-      s.sloppyPhraseFreqs(terms, slop).collect().map(t => t._1 -> t._2).toMap
+      s.phraseFreqs(terms, slop).collect().map(t => t._1 -> t._2).toMap
 
     // DOC_4 × QUERY_4 "x a a": no match at slop 0, match at every slop ≥ 1
     assert(!freqs(Seq("x", "a", "a"), 0).contains(0L))
@@ -181,9 +181,9 @@ class PhraseSpec extends AnyFunSuite {
 
   test("sloppy multi-phrase: singleton slots == sloppy phrase (MultiPhraseQuery.SetSlop)") {
     for (slop <- Seq(0, 1, 2)) {
-      val mp = searcher.multiPhraseFreqsSloppy(Seq(Seq("state"), Seq("machine")), slop)
+      val mp = searcher.multiPhraseFreqs(Seq(Seq("state"), Seq("machine")), slop)
         .collect().map(t => t._1 -> t._2).toMap
-      val sp = searcher.sloppyPhraseFreqs(Seq("state", "machine"), slop)
+      val sp = searcher.phraseFreqs(Seq("state", "machine"), slop)
         .collect().map(t => t._1 -> t._2).toMap
       assert(mp === sp, s"slop=$slop")
     }
@@ -192,7 +192,7 @@ class PhraseSpec extends AnyFunSuite {
   test("sloppy multi-phrase: union alternatives pick the best-positioned one") {
     // doc4 "state alpha machine": slot (state|alpha) offers alpha@1 which
     // sits adjacent to machine@2 — exact match despite state@0 being 1 away
-    val mp = searcher.multiPhraseFreqsSloppy(
+    val mp = searcher.multiPhraseFreqs(
       Seq(Seq("state", "alpha"), Seq("machine")), 0)
       .collect().map(t => t._1 -> t._2).toMap
     assert(mp(4L) === 1f)
@@ -202,7 +202,7 @@ class PhraseSpec extends AnyFunSuite {
   test("sloppy multi-phrase: identical slots form repeat groups (LUCENE-3412 analog)") {
     // both slots = (state|machine): union positions act as a repeated
     // term; two distinct union occurrences must anchor each match
-    val mp = searcher.multiPhraseFreqsSloppy(
+    val mp = searcher.multiPhraseFreqs(
       Seq(Seq("state", "machine"), Seq("state", "machine")), 0)
       .collect().map(t => t._1 -> t._2).toMap
     // doc0/doc1: one adjacent pair of union hits regardless of order;

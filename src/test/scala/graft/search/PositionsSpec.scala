@@ -43,19 +43,19 @@ class PositionsSpec extends AnyFunSuite {
 
   test("exact + sloppy phrase freqs from the index == re-analysis, bit-identical") {
     for (slop <- Seq(0, 1, 2)) {
-      val fromIndex = posSearcher.phraseFreqsFromIndex(Seq("state", "machine"), slop)
+      val fromIndex = posSearcher.phraseFreqs(Seq("state", "machine"), slop)
         .collect().sortBy(_._1).toSeq
       val reRef: Seq[(Long, Float, Int)] =
         if (slop == 0) reSearcher.phraseFreqs(Seq("state", "machine"))
           .collect().map(t => (t._1, t._2.toFloat, t._3)).sortBy(_._1).toSeq
-        else reSearcher.sloppyPhraseFreqs(Seq("state", "machine"), slop)
+        else reSearcher.phraseFreqs(Seq("state", "machine"), slop)
           .collect().sortBy(_._1).toSeq
       assert(fromIndex === reRef, s"slop=$slop")
     }
     // repeats go through SloppyPhrase identically
-    val a = posSearcher.phraseFreqsFromIndex(Seq("state", "machine", "state"), 3)
+    val a = posSearcher.phraseFreqs(Seq("state", "machine", "state"), 3)
       .collect().sortBy(_._1).toSeq
-    val b = reSearcher.sloppyPhraseFreqs(Seq("state", "machine", "state"), 3)
+    val b = reSearcher.phraseFreqs(Seq("state", "machine", "state"), 3)
       .collect().sortBy(_._1).toSeq
     assert(a === b)
   }
@@ -64,6 +64,33 @@ class PositionsSpec extends AnyFunSuite {
     val slots = Seq(Seq("state", "machine"), Seq("machine", "runs"))
     assert(posSearcher.multiPhraseFreqs(slots).collect().sortBy(_._1).toSeq ===
       reSearcher.multiPhraseFreqs(slots).collect().sortBy(_._1).toSeq)
+  }
+
+  test("every positional matcher: positions sidecar == re-analysis, row for row") {
+    val sm = Seq("state", "machine")
+    val slots = Seq(Seq("state", "machine"), Seq("machine", "runs"))
+    val cases: Seq[(String, Searcher => org.apache.spark.sql.Dataset[_ <: Product])] = Seq(
+      "exact phrase" -> (_.phraseFreqs(sm)),
+      "exact phrase, repeats" -> (_.phraseFreqs(Seq("state", "machine", "state"))),
+      "sloppy phrase" -> (_.phraseFreqs(sm, 2)),
+      "sloppy phrase, repeats" -> (_.phraseFreqs(Seq("state", "machine", "state"), 3)),
+      "exact multi-phrase" -> (_.multiPhraseFreqs(slots)),
+      "sloppy multi-phrase" -> (_.multiPhraseFreqs(slots, 1)),
+      "sloppy multi-phrase, repeat slots" -> (_.multiPhraseFreqs(Seq(sm, sm), 1)),
+      "sparse phrase over a stop gap" -> (_.sparsePhraseFreqs(Seq(("state", 0), ("machine", 2)))),
+      "spanNear unordered" -> (_.spanNearFreqs("state", "machine", maxGap = 2)),
+      "spanNear ordered" -> (_.spanNearFreqs("state", "machine", maxGap = 2, ordered = true)),
+      "spanCount near" -> (_.spanCount(
+        SpanNearQ(Seq(SpanTermQ("state"), SpanTermQ("machine")), 1, inOrder = false))),
+      "spanCount or-in-first" -> (_.spanCount(
+        SpanFirstQ(SpanOrQ(Seq(SpanTermQ("machine"), SpanTermQ("runs"))), 2))))
+    for ((name, run) <- cases) {
+      def rows(s: Searcher): Seq[Any] = run(s).collect().toSeq
+        .sortBy(_.productElement(0).asInstanceOf[Long])
+      val fromIndex = rows(posSearcher)
+      assert(fromIndex.nonEmpty, name)
+      assert(fromIndex === rows(reSearcher), name)
+    }
   }
 
   test("search() scores identically through either phrase plan") {
@@ -85,7 +112,7 @@ class PositionsSpec extends AnyFunSuite {
     assert(report.ok, report.problems.mkString("; "))
     val s = new Searcher(new IndexReader(spark, out))
     // doc0 deleted; remaining exact matches: old doc3 (now doc2), freq 2
-    val freqs = s.phraseFreqsFromIndex(Seq("state", "machine"), 0)
+    val freqs = s.phraseFreqs(Seq("state", "machine"), 0)
       .collect().map(t => t._1 -> t._2).toMap
     assert(freqs === Map(2L -> 2f))
   }

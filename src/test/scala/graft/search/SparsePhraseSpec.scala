@@ -48,7 +48,7 @@ class SparsePhraseSpec extends AnyFunSuite {
     val sparse = searcher.sparsePhraseFreqs(
       NGramPhraseQ(2, grams).optimized.asInstanceOf[SparsePhraseQ].parts)
       .collect().map(t => (t._1, t._2)).sortBy(_._1).toSeq
-    val dense = searcher.phraseFreqsFromIndex(grams, 0)
+    val dense = searcher.phraseFreqs(grams, 0)
       .collect().map(t => (t._1, t._2)).sortBy(_._1).toSeq
     assert(dense === Seq((0L, 1f), (1L, 1f), (3L, 2f)))
     assert(sparse === dense) // doc 2 has both kept grams but NOT at gap 2
