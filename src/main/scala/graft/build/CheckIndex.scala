@@ -22,10 +22,10 @@ object CheckIndex {
     import spark.implicits._
     val problems = scala.collection.mutable.ArrayBuffer.empty[String]
 
-    val docstats = spark.read.parquet(IndexPaths.docstats(dir))
-    val postings = spark.read.parquet(IndexPaths.postings(dir)).as[PostingRow]
-    val dict = spark.read.parquet(IndexPaths.termDict(dir)).as[TermDictRow]
-    val cs = spark.read.parquet(IndexPaths.collectionStats(dir))
+    val docstats = Tables.read[DocStatRow](spark, IndexPaths.docstats(dir))
+    val postings = Tables.read[PostingRow](spark, IndexPaths.postings(dir)).as[PostingRow]
+    val dict = Tables.read[TermDictRow](spark, IndexPaths.termDict(dir)).as[TermDictRow]
+    val cs = Tables.read[CollectionStatsRow](spark, IndexPaths.collectionStats(dir))
       .as[CollectionStatsRow].head()
 
     // 1. doc space dense: a contiguous run of maxDoc ids starting at a
@@ -100,7 +100,7 @@ object CheckIndex {
       if (scPath.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(scPath)) {
         val t = postings.toDF().select($"term", $"firstDocId", $"numDocs", $"bytes")
           .toDF("term", "firstDocId", "tn", "tbytes")
-        val p = spark.read.parquet(pathStr)
+        val p = Tables.read[PositionsRow](spark, pathStr)
           .select($"term", $"firstDocId", $"bytes").toDF("term", "firstDocId", "scbytes")
         val joined = t.join(p, Seq("term", "firstDocId"), "full_outer")
         val counted = entryCounts

@@ -5,7 +5,6 @@ import graft.bm25.BM25
 import graft.corpus.SourceFile
 import graft.postings.PostingsCodec
 import org.apache.spark.TaskContext
-import org.apache.spark.util.AccumulatorV2
 import org.apache.spark.sql.{DataFrame, Dataset, Encoders, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -68,11 +67,10 @@ import scala.jdk.CollectionConverters._
   *   - postings (7, plus 4 per sidecar): per table, the offsets
   *     broadcast, sample, shuffle and write; the manifest's per-partition
   *     stats (shuffle, collect); the manifest commit.
-  *   - stats (10, plus a sample when term_dict has more than one
+  *   - stats (9, plus a sample when term_dict has more than one
   *     partition): docstats (broadcast, sample, shuffle, write); term_dict
   *     (aggregate shuffle, range shuffle, write); one single-partition
-  *     write each for term_firstchars, collection_stats and the manifest
-  *     commit.
+  *     write each for collection_stats and the manifest commit.
   * Each stage labels its jobs ([[labelled]]) with its layer, `build.flush`,
   * `build.postings` or `build.stats`.
   */
@@ -291,10 +289,10 @@ object IndexBuilder {
     (counting(docstats) { r => docs.add(1); ttf.add(r.getInt(tc)) }, () => (docs.sum, ttf.sum))
   }
 
-  /** Writes term_dict (aggregated from the postings in `dir`), its
-    * first-character alphabet and collection_stats, given the doc
-    * totals of `dir`'s docstats. The dictionary write counts sumDocFreq
-    * and the alphabet on the way. Returns the collection stats. */
+  /** Writes term_dict (aggregated from the postings in `dir`) and
+    * collection_stats, given the doc totals of `dir`'s docstats. The
+    * dictionary write counts sumDocFreq on the way. Returns the
+    * collection stats. */
   private[graft] def writeDictAndStats(spark: SparkSession, dir: String, numPartitions: Int,
                                        maxDoc: Long, sumTtf: Long): CollectionStatsRow = {
     import spark.implicits._
@@ -305,32 +303,13 @@ object IndexBuilder {
       .repartitionByRange(math.max(1, numPartitions / 8), $"term")
       .sortWithinPartitions($"term")
     val sumDocFreq = spark.sparkContext.longAccumulator("sumDocFreq")
-    val firstChars = new DistinctStrings
-    spark.sparkContext.register(firstChars, "firstChars")
-    counting(dict) { r =>
-      sumDocFreq.add(r.getLong(1))
-      val t = r.getString(0)
-      // the first code point, as substring(term, 1, 1) in SQL
-      if (t.nonEmpty) firstChars.add(t.substring(0, t.offsetByCodePoints(0, 1)))
-    }.write.mode(SaveMode.Overwrite).parquet(IndexPaths.termDict(dir))
-    writeFirstChars(spark, dir, firstChars.value.asScala.toSeq)
+    counting(dict)(r => sumDocFreq.add(r.getLong(1)))
+      .write.mode(SaveMode.Overwrite).parquet(IndexPaths.termDict(dir))
     val cs = CollectionStatsRow(maxDoc = maxDoc, docCount = maxDoc,
       sumTotalTermFreq = sumTtf, sumDocFreq = sumDocFreq.sum)
     spark.createDataset(Seq(cs)).coalesce(1)
       .write.mode(SaveMode.Overwrite).parquet(IndexPaths.collectionStats(dir))
     cs
-  }
-
-  /** Alphabet sidecar: the dictionary's distinct first characters — the
-    * fuzzy range banding (graft.search.DictSeek) expands its depth-1
-    * prefixes over the ACTUAL alphabet instead of all of Unicode. The
-    * dictionary write collects the set, and the collected set is written
-    * as one row per character in code point order, amortized at build
-    * time so fuzzy queries seek instead of scanning. */
-  private def writeFirstChars(spark: SparkSession, dir: String, chars: Seq[String]): Unit = {
-    import spark.implicits._
-    chars.sortBy(_.codePointAt(0)).toDF("c").coalesce(1)
-      .write.mode(SaveMode.Overwrite).parquet(IndexPaths.termFirstChars(dir))
   }
 
   /** Full build. `resume = true` skips stages already committed to the
@@ -363,18 +342,6 @@ object IndexBuilder {
     if (!resume || !stageDone(spark, dir, "stats"))
       timed("stats")(buildStats(spark, dir, numPartitions))
   }
-}
-
-/** The distinct strings added across a job's tasks. */
-private final class DistinctStrings extends AccumulatorV2[String, java.util.Set[String]] {
-  private val set = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-  override def isZero: Boolean = set.isEmpty
-  override def copy(): DistinctStrings = { val c = new DistinctStrings; c.set.addAll(set); c }
-  override def reset(): Unit = set.clear()
-  override def add(v: String): Unit = set.add(v)
-  override def merge(other: AccumulatorV2[String, java.util.Set[String]]): Unit =
-    set.addAll(other.value)
-  override def value: java.util.Set[String] = set
 }
 
 /** The per-partition segment builder: streaming DWPT analog. Consumes

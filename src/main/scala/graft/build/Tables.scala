@@ -164,9 +164,6 @@ object IndexPaths {
   def payloads(dir: String) = s"$dir/payloads"
   def docstats(dir: String) = s"$dir/docstats"
   def termDict(dir: String) = s"$dir/term_dict"
-  /** Distinct first characters of the dictionary (alphabet-sized) —
-    * drives the fuzzy-query range banding ([[graft.search.DictSeek]]). */
-  def termFirstChars(dir: String) = s"$dir/term_firstchars"
   /** Optional reversed-term dictionary sidecar (rterm, term, df) sorted
     * by rterm — turns a leading wildcard into a prefix SEEK
     * ([[ReversedDict]], the ReverseStringFilter leading-wildcard idea). */

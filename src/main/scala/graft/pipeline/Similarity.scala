@@ -32,16 +32,24 @@ object Similarity {
     * bucket pair joins. Same summation order as the old HOF form
     * (ascending element index, left fold), so values are IEEE-identical
     * and every DuckDB oracle is unchanged. Contract: both arrays are
-    * exactly [[Dims]] long (the embeddings table shape). */
+    * exactly [[Dims]] long (the embeddings table shape); a non-null
+    * array of another size raises an error instead of a NULL or
+    * truncated score. */
   def dot(a: Column, b: Column): Column =
-    (1 to Dims).map(i =>
+    dimsChecked(Seq(a, b), (1 to Dims).map(i =>
       element_at(a, i).cast("double") * element_at(b, i).cast("double"))
-      .reduce(_ + _)
+      .reduce(_ + _))
 
   def l2norm(a: Column): Column =
-    sqrt((1 to Dims).map { i =>
+    dimsChecked(Seq(a), sqrt((1 to Dims).map { i =>
       val v = element_at(a, i).cast("double"); v * v
-    }.reduce(_ + _))
+    }.reduce(_ + _)))
+
+  /** `value`, after asserting every non-null vector in `vs` has [[Dims]]
+    * elements (`assert_true` is NULL when it holds, and throws otherwise). */
+  private def dimsChecked(vs: Seq[Column], value: Column): Column =
+    coalesce(assert_true(vs.map(v => v.isNull || size(v) === Dims).reduce(_ && _),
+      lit(s"embedding must have $Dims elements")).cast("double"), value)
 
   def cosine(a: Column, b: Column): Column = dot(a, b) / (l2norm(a) * l2norm(b))
 

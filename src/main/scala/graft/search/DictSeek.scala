@@ -2,35 +2,39 @@ package graft.search
 
 import scala.collection.mutable.ArrayBuffer
 
-/** Dictionary SEEK predicates for multi-term queries — the relational
-  * restatement of the reference's automaton ∩ term-dictionary
-  * intersection (reference: Index/AutomatonTermsEnum.cs,
-  * Search/FuzzyTermsEnum.cs — a Levenshtein/wildcard automaton walks the
-  * BlockTree term index and skips whole subtrees no accepted string can
-  * live in).
+/** Dictionary SEEKS for multi-term queries — the restatement of the
+  * reference's automaton ∩ term-dictionary intersection (reference:
+  * Index/AutomatonTermsEnum.cs, Search/FuzzyTermsEnum.cs — a
+  * Levenshtein/wildcard automaton walks the BlockTree term index and
+  * skips whole subtrees no accepted string can live in).
   *
-  * Here the term dictionary is term-sorted parquet, so "skip a subtree"
-  * means "a pushed `term >= lo AND term < hi` range predicate parquet
-  * min/max stats can prune". This object turns each multi-term query into
-  * a sound SUPERSET of its match set expressed as such ranges; the exact
-  * residual predicate (rlike / levenshtein) still filters the survivors,
-  * so results are bit-identical to a full scan — only the I/O changes
-  * (seek vs scan at a 10^8-term dictionary).
+  * Here the term dictionary is a sorted driver-side array
+  * ([[TermDictionary]]), so "skip a subtree" means "binary-search a term
+  * span". This object turns each multi-term query into a sound SUPERSET
+  * of its match set expressed as such spans; the exact residual test
+  * (regex / Levenshtein) still filters the survivors, so results equal a
+  * full scan — only the number of terms tested changes.
   *
   *  - wildcard `foo*bar` / anchored regexp `ve.tor`: the leading literal
-  *    run is a term prefix → one range [lit, succ(lit));
+  *    run is a term prefix → one [[Prefix]] span;
   *  - fuzzy `merge~1`: a breadth-first walk of candidate-term prefixes,
   *    pruned by the classic Levenshtein-automaton bound — the minimum of
   *    the DP row between a prefix p and all prefixes of q lower-bounds
   *    dist(p·rest, q) for EVERY continuation — emitting a range per
   *    surviving prefix subtree. Depth-1 expansion enumerates the
-  *    dictionary's actual first characters (the tiny `term_firstchars`
-  *    sidecar written at build time), because an edit spent at the front
-  *    makes the first character arbitrary; deeper levels expand the
+  *    dictionary's actual first characters, because an edit spent at the
+  *    front makes the first character arbitrary; deeper levels expand the
   *    query's own characters explicitly and keep whole subtrees for the
   *    "any other character" class only while it stays viable.
   */
 object DictSeek {
+
+  /** A span of the sorted dictionary a multi-term match reads. */
+  sealed trait Seek
+  /** Every term starting with `p` (the whole dictionary for ""). */
+  final case class Prefix(p: String) extends Seek
+  /** Terms in [lo, hi); hi == null means unbounded above. */
+  final case class Range(lo: String, hi: String) extends Seek
 
   /** Least string strictly greater than every string with prefix `p`,
     * or null when no such bound exists (all chars ￿). An increment that

@@ -219,7 +219,7 @@ final class MemoryIndex private (
 
   /** Expand a multi-term node against this document's term set — the
     * reference's automaton walk over MemoryIndexReader.Terms. Matchers
-    * mirror [[Searcher.multiTermPred]] exactly (same wildcard→regex
+    * mirror [[Searcher.multiTermMatch]] exactly (same wildcard→regex
     * translation, same Levenshtein band). */
   private[search] def expandLocal(q: Query): Seq[String] = q match {
     case TermQ(t, _) => if (contains(t)) Seq(t) else Nil
@@ -271,7 +271,7 @@ object MemoryIndex {
   def fromText(text: String, analyzer: Analyzer): MemoryIndex =
     fromDoc(analyzer.analyze(text))
 
-  /** Same wildcard→regex translation as Searcher.multiTermPred. */
+  /** The wildcard→regex translation Searcher.multiTermMatch uses too. */
   private[search] def wildcardRegex(pat: String): java.util.regex.Pattern =
     java.util.regex.Pattern.compile("^" + pat.flatMap {
       case '*' => ".*"

@@ -22,9 +22,9 @@ import org.apache.spark.sql.functions._
   * The primary index supplies collection stats, doc stats (norms/doc
   * lengths of the SCORED text field), stored fields and the
   * positions/offsets/payloads sidecars; term dictionary and postings are
-  * plain unions (disjoint term spaces need no re-aggregation); the
-  * first-chars alphabet sidecar unions so dictionary seeks prune
-  * correctly across all parallel term spaces. */
+  * plain unions (disjoint term spaces need no re-aggregation), and the
+  * driver-held dictionary loads every side, so stats lookups and
+  * dictionary seeks cover all parallel term spaces. */
 final class ParallelIndexReader(spark: SparkSession, primary: String,
                                 secondaries: Seq[String])
     extends IndexReader(spark, primary) {
@@ -35,7 +35,7 @@ final class ParallelIndexReader(spark: SparkSession, primary: String,
   @transient override lazy val postings: DataFrame = unionOf(IndexPaths.postings)
   @transient override lazy val termDict: DataFrame = unionOf(IndexPaths.termDict)
 
-  override lazy val termFirstChars: Seq[Char] = firstCharsAcross(all)
+  override protected def termDictDirs: Seq[String] = all
 
   // leading-wildcard seeks must expand through EVERY parallel term
   // space: available only when all sides carry the reversed-dict

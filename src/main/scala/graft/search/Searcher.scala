@@ -5,6 +5,7 @@ import graft.build.{CollectionStatsRow, DocStatRow, IndexPaths, PositionsRow, Po
 import graft.postings.PostingsCodec
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.unsafe.types.UTF8String
 
 /** Point-in-time view over the index tables (≙ IndexReader/MultiFields,
   * reference: /root/reference/src/Lucene.Net/Index/IndexReader.cs). Pulls
@@ -36,7 +37,8 @@ class IndexReader(val spark: SparkSession, val dir: String) extends Serializable
 
   /** [[open]] with the schema of the table's one row type `T`, so the
     * open runs no schema-inference job. term_dict is not opened this way:
-    * a pulsed dictionary carries extra inline-postings columns. */
+    * a pulsed dictionary carries extra inline-postings columns, which
+    * [[termDict]] keeps. */
   protected def openAs[T <: Product : scala.reflect.runtime.universe.TypeTag](
       path: String => String): DataFrame =
     Tables.read[T](spark, dataDirs.map(path): _*)
@@ -44,10 +46,19 @@ class IndexReader(val spark: SparkSession, val dir: String) extends Serializable
   @transient lazy val postings: DataFrame = openAs[PostingRow](IndexPaths.postings)
   @transient lazy val docstats: DataFrame = openAs[DocStatRow](IndexPaths.docstats)
   @transient lazy val termDict: DataFrame = open(IndexPaths.termDict)
-  /** The dictionary rows as stored, one per term per data dir — what
-    * [[termStats]] reads; a multi-generation [[termDict]] re-aggregates
-    * them relationally. */
-  @transient protected lazy val storedTermDict: DataFrame = termDict
+
+  /** Directories whose term_dict tables make up this view's dictionary. */
+  protected def termDictDirs: Seq[String] = dataDirs
+
+  /** The dictionary on the driver, loaded on first use by one job over
+    * the five [[TermDictRow]] columns of every [[termDictDirs]] table
+    * (a pulsed dictionary's inline postings are not read); rows of one
+    * term merge, so generations sum and parallel term spaces union. */
+  @transient private lazy val dictionary: TermDictionary =
+    graft.build.IndexBuilder.labelled(spark, "search.dict", dir) {
+      TermDictionary(Tables.read[TermDictRow](spark, termDictDirs.map(IndexPaths.termDict): _*)
+        .as[TermDictRow].collect())
+    }
   /** Stored fields (≙ the compressed row store) — phrase verification
     * re-reads candidate docs' content from here. */
   @transient lazy val docsTable: DataFrame =
@@ -134,53 +145,31 @@ class IndexReader(val spark: SparkSession, val dir: String) extends Serializable
         ids.indices.iterator.map(i => (ids(i), term, offs(i)))
       }
 
-  /** True when the optional bloom sidecar exists for this index
-    * (graft.build.BloomFilter.build — the BloomFilteringPostingsFormat
-    * analog). Checked once per reader. Probed on [[tombstoneDirs]], not
-    * [[dataDirs]]: [[termStats]] consults the filter of every dir whose
-    * terms the dictionary holds, and a [[ParallelIndexReader]]'s dataDirs
-    * is its primary alone while its dictionary unions every side. */
-  private lazy val hasBloom: Boolean =
-    allHave(tombstoneDirs, graft.build.BloomFilter.path)
+  /** Stats of the query terms that are in the dictionary (≙ the
+    * terms-index seek, reference: Codecs/BlockTreeTermsReader.cs): a
+    * binary search per term on the driver-held dictionary, no Spark job.
+    * A multi-generation term's stats are the merged sums and maxes
+    * [[MultiIndexReader.termDict]] computes. */
+  def termStats(terms: Seq[String]): Map[String, TermDictRow] =
+    terms.distinct.flatMap(t => dictionary.get(t).map(t -> _)).toMap
 
-  /** Stats pull for query terms — one tiny dictionary lookup job,
-    * parquet-pruned by the sorted term column (≙ the FST term-index seek,
-    * reference: Codecs/BlockTreeTermsReader.cs). A term's rows from
-    * several generations merge on the driver ([[TermDictRow.merge]], the
-    * same sums and maxes [[MultiIndexReader.termDict]] computes), so the
-    * lookup never needs a shuffle. When the bloom sidecar
-    * is present, definitely-absent terms are dropped FIRST (k point reads
-    * each) so a miss never touches the dictionary — the
-    * BloomFilteringPostingsFormat short circuit; at cross-shard fan-out
-    * scale most shards lack most terms and this is the common case. */
-  def termStats(terms: Seq[String]): Map[String, TermDictRow] = {
-    val distinct = terms.distinct
-    val candidates =
-      if (hasBloom)
-        distinct.filter(t => tombstoneDirs.exists(d =>
-          graft.build.BloomFilter.mightContain(spark, d, t)))
-      else distinct
-    if (candidates.isEmpty) Map.empty
-    else storedTermDict.where($"term".isin(candidates: _*)).as[TermDictRow]
-      .collect().groupBy(_.term).map { case (t, rows) => t -> rows.reduce(TermDictRow.merge) }
-  }
+  /** The dictionary terms a multi-term node matches, in seek order. */
+  private[search] def matchingTerms(m: TermMatch): Iterator[String] = dictionary.matching(m)
 
   /** Term-dictionary expansion for multi-term queries (MultiTermQuery
-    * rewrite, reference: Search/MultiTermQuery.cs:69-160). Returns None
-    * past maxExpansions (≙ BooleanQuery.MaxClauseCount, BooleanQuery.cs:
-    * 71) — the caller then takes the CONSTANT_SCORE_AUTO fallback
-    * (reference: ConstantScoreAutoRewrite.cs): a constant-score postings
-    * semi-join against the matched dictionary range, instead of the
+    * rewrite, reference: Search/MultiTermQuery.cs:69-160), on the driver.
+    * Returns None past maxExpansions (≙ BooleanQuery.MaxClauseCount,
+    * BooleanQuery.cs:71) — the caller then takes the CONSTANT_SCORE_AUTO
+    * fallback (reference: ConstantScoreAutoRewrite.cs): a constant-score
+    * postings semi-join against the matched terms, instead of the
     * reference 4.8 throw or a 10^5-clause scoring union. */
-  def expandTermsOpt(pred: org.apache.spark.sql.Column,
-                     maxExpansions: Int = 1024): Option[Seq[String]] = {
-    val ts = termDict.where(pred).select($"term").as[String]
-      .limit(maxExpansions + 1).collect()
-    if (ts.length > maxExpansions) None else Some(ts.toSeq)
+  def expandTermsOpt(m: TermMatch, maxExpansions: Int = 1024): Option[Seq[String]] = {
+    val ts = matchingTerms(m).take(maxExpansions + 1).toSeq
+    if (ts.length > maxExpansions) None else Some(ts)
   }
 
-  def expandTerms(pred: org.apache.spark.sql.Column, maxExpansions: Int = 1024): Seq[String] =
-    expandTermsOpt(pred, maxExpansions).getOrElse(
+  def expandTerms(m: TermMatch, maxExpansions: Int = 1024): Seq[String] =
+    expandTermsOpt(m, maxExpansions).getOrElse(
       throw new IllegalArgumentException(
         s"multi-term query expands to more than $maxExpansions terms"))
 
@@ -192,21 +181,6 @@ class IndexReader(val spark: SparkSession, val dir: String) extends Serializable
       val p = new org.apache.hadoop.fs.Path(path(d))
       p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
     }
-
-  /** The dictionary alphabet across `ds`: union of the build-time
-    * first-chars sidecars when all present, else derived once from this
-    * reader's (possibly unioned/re-aggregated) termDict. */
-  protected def firstCharsAcross(ds: Seq[String]): Seq[Char] = {
-    import spark.implicits._
-    if (allHave(ds, graft.build.IndexPaths.termFirstChars))
-      spark.read.parquet(ds.map(graft.build.IndexPaths.termFirstChars): _*)
-        .distinct().as[String]
-        .collect().toSeq.filter(_.nonEmpty).map(_.charAt(0)).distinct.sorted
-    else
-      termDict.select(substring($"term", 1, 1).as("c"))
-        .where(length($"c") > 0).distinct().as[String]
-        .collect().toSeq.filter(_.nonEmpty).map(_.charAt(0)).sorted
-  }
 
   /** True when the reversed-dictionary sidecar exists
     * ([[graft.build.ReversedDict]]) — leading wildcards then SEEK a
@@ -234,10 +208,10 @@ class IndexReader(val spark: SparkSession, val dir: String) extends Serializable
     if (ts.length > maxExpansions) None else Some(ts.toSeq)
   }
 
-  /** The dictionary's alphabet (distinct first characters) — read from the
-    * tiny build-time sidecar when present, else derived once per reader.
-    * Feeds the fuzzy range banding ([[DictSeek.fuzzyRanges]]). */
-  lazy val termFirstChars: Seq[Char] = firstCharsAcross(dataDirs)
+  /** The dictionary's alphabet (distinct first characters), from the
+    * driver-held dictionary. Feeds the fuzzy range banding
+    * ([[DictSeek.fuzzyRanges]]). */
+  lazy val termFirstChars: Seq[Char] = dictionary.firstChars
 
   /** Directories whose tombstone tables apply to this view. */
   def tombstoneDirs: Seq[String] = Seq(dir)
@@ -289,13 +263,10 @@ final class MultiIndexReader(spark0: SparkSession, dirs: Seq[String])
       sumDocFreq = all.map(_.sumDocFreq).sum)
   }
 
-  @transient override protected lazy val storedTermDict: DataFrame =
-    open(IndexPaths.termDict)
-
   /** Per-term stats re-aggregate across generations (df/ttf sum, bounds
     * max) — the MultiFields.Terms merge, done relationally. */
   @transient override lazy val termDict: DataFrame =
-    storedTermDict
+    open(IndexPaths.termDict)
       .groupBy($"term")
       .agg(sum($"df").as("df"), sum($"totalTf").as("totalTf"),
         max($"maxTf").as("maxTf"), max($"maxNorm").as("maxNorm"))
@@ -314,6 +285,18 @@ object Searcher {
   /** FuzzyQuery's TOP_TERMS budget (reference: FuzzyQuery
     * defaultMaxExpansions = 50). */
   val FuzzyMaxExpansions = 50
+
+  /** Fuzzy candidates (term, edits, edits / min length) in TOP_TERMS
+    * order: the ratio ascending, then the term in dictionary order. */
+  private val FuzzyRank: Ordering[(String, Int, Double)] =
+    Ordering.by[(String, Int, Double), Double](_._3)(Ordering.Double.TotalOrdering)
+      .orElse(Ordering.by[(String, Int, Double), String](_._1)(TermDictionary.Order))
+
+  /** Spark's `rlike` test for a compiled pattern: a match found from the
+    * start of the term (`find(0)`, so `$` also matches before a final
+    * line terminator). */
+  private def rlike(rx: java.util.regex.Pattern): String => Boolean =
+    term => rx.matcher(term).find(0)
 
   /** One doc's phrase freq over its term positions, for slot i accepting
     * any of `slots(i)` at `offsets(i)` past slot 0 (`offsets(0) == 0`).
@@ -354,7 +337,8 @@ object Searcher {
   * Search/IndexSearcher.cs:282-500, restated in SURVEY.md §3.2).
   *
   * Physical shape per query:
-  *   - dictionary stats lookup (tiny job) → weights computed driver-side;
+  *   - dictionary stats lookup (a binary search of the reader's
+  *     driver-held dictionary, no job) → weights computed driver-side;
   *   - postings scan filtered to the query terms (parquet min/max pruning
   *     on the sorted term column), block decode behind block-max WAND
   *     pruning (public literature: Broder et al.; Ding & Suel BMW — the
@@ -404,47 +388,38 @@ final class Searcher(val reader: IndexReader, pruneMinBlocks: Int = 64,
 
   // ------------------------------------------------------------- rewrite
 
-  /** Term range [lo, hi) as a parquet-prunable predicate. */
-  private def rangePred(lo: String, hi: String): org.apache.spark.sql.Column =
-    if (hi == null) $"term" >= lo else $"term" >= lo && $"term" < hi
-
-  /** SEEK-shaped conjunct for a literal prefix: empty prefix → no
-    * narrowing (full scan unavoidable). */
-  private def prefixRangePred(p: String): org.apache.spark.sql.Column =
-    if (p.isEmpty) lit(true) else rangePred(p, DictSeek.succ(p))
-
-  /** Dictionary predicate of a multi-term query node, or None. Every
-    * branch leads with a term-RANGE conjunct parquet min/max stats can
-    * prune on the sorted dictionary (the seek), then the exact residual
-    * match (rlike/levenshtein) — the relational restatement of the
-    * reference's automaton ∩ term dictionary walk
-    * (Index/AutomatonTermsEnum.cs, Search/FuzzyTermsEnum.cs). */
-  private[search] def multiTermPred(q: Query): Option[org.apache.spark.sql.Column] = q match {
-    case PrefixQ(p, _) => Some($"term".startsWith(p))
+  /** Dictionary match of a multi-term query node, or None. Every branch
+    * seeks term spans of the sorted dictionary ([[DictSeek]]), then runs
+    * the exact residual test with the code Spark's `rlike`, `levenshtein`
+    * and `length` run — the driver-side restatement of the reference's
+    * automaton ∩ term dictionary walk (Index/AutomatonTermsEnum.cs,
+    * Search/FuzzyTermsEnum.cs). */
+  private[search] def multiTermMatch(q: Query): Option[TermMatch] = q match {
+    case PrefixQ(p, _) => Some(TermMatch(Seq(DictSeek.Prefix(p)), _ => true))
     case WildcardQ(pat, _) =>
-      val rx = "^" + pat.flatMap {
-        case '*' => ".*"
-        case '?' => "."
-        case c if "\\.[]{}()+-^$|".contains(c) => "\\" + c
-        case c => c.toString
-      } + "$"
-      Some(prefixRangePred(DictSeek.wildcardPrefix(pat)) && $"term".rlike(rx))
+      Some(TermMatch(Seq(DictSeek.Prefix(DictSeek.wildcardPrefix(pat))),
+        Searcher.rlike(MemoryIndex.wildcardRegex(pat))))
     case RegexpQ(rx, _) =>
-      Some(prefixRangePred(DictSeek.regexpPrefix(rx)) &&
-        $"term".rlike("^(?:" + rx + ")$"))
+      Some(TermMatch(Seq(DictSeek.Prefix(DictSeek.regexpPrefix(rx))),
+        Searcher.rlike(java.util.regex.Pattern.compile("^(?:" + rx + ")$"))))
     case FuzzyQ(t, maxEdits, _) =>
-      val exact = levenshtein($"term", lit(t)) <= maxEdits &&
-        abs(length($"term") - lit(t.length)) <= maxEdits
-      Some(DictSeek.fuzzyRanges(t, maxEdits, reader.termFirstChars) match {
-        case Some(ranges) if ranges.nonEmpty =>
-          ranges.map(r => rangePred(r._1, r._2)).reduce(_ || _) && exact
-        case Some(_) => lit(false) // empty alphabet → nothing can match
-        case None => exact // banding not applicable: full scan
-      })
+      // levenshtein(term, t) <= maxEdits && abs(length(term) - t.length)
+      // <= maxEdits: code points on the term side, UTF-16 units for t.length
+      val qu = UTF8String.fromString(t)
+      val accept = (term: String) => {
+        val u = UTF8String.fromString(term)
+        math.abs(u.numChars - t.length) <= maxEdits && u.levenshteinDistance(qu) <= maxEdits
+      }
+      val seeks = DictSeek.fuzzyRanges(t, maxEdits, reader.termFirstChars) match {
+        case Some(ranges) => ranges.map { case (lo, hi) => DictSeek.Range(lo, hi) }
+        case None => Seq(DictSeek.Prefix("")) // banding not applicable: full scan
+      }
+      Some(TermMatch(seeks, accept))
     case TermRangeQ(lo, hi, inclLo, inclHi, _) =>
-      val loP = if (lo == null) lit(true) else if (inclLo) $"term" >= lo else $"term" > lo
-      val hiP = if (hi == null) lit(true) else if (inclHi) $"term" <= hi else $"term" < hi
-      Some(loP && hiP)
+      // "\u0000" appended: the least string above the bound
+      val from = if (lo == null) "" else if (inclLo) lo else lo + "\u0000"
+      val until = if (hi == null) null else if (inclHi) hi + "\u0000" else hi
+      Some(TermMatch(Seq(DictSeek.Range(from, until)), _ => true))
     case _ => None
   }
 
@@ -463,29 +438,26 @@ final class Searcher(val reader: IndexReader, pruneMinBlocks: Int = 64,
     * reference: MultiTermQuery.cs:69, ConstantScoreAutoRewrite.cs) +
     * boolean simplification. */
   def rewrite(q: Query): Query = q match {
-    case FuzzyQ(t, maxEdits, b) =>
+    case fq @ FuzzyQ(t, _, b) =>
       // reference FuzzyQuery default rewrite: TOP_TERMS(50) with per-term
       // boost = similarity = 1 - edits/min(|candidate|, |query|)
       // (FuzzyQuery.cs:108, FuzzyTermsEnum.cs:436,
-      // TopTermsRewrite ranking: boost desc, then term). Ranking and
-      // truncation happen INSIDE the Spark job (TakeOrdered over the
-      // banded dictionary scan) — only the surviving 50 rows reach the
-      // driver. Sort key d/min(len,|q|) asc is order-equivalent to the
-      // float similarity desc (distinct small-integer ratios are spaced
-      // far wider than float epsilon), with the same term-asc tie-break.
-      // `length` here counts CODEPOINTS, same as the boost's
-      // codePointCount below: Spark strings are UTF8String and
-      // Length → UTF8String.numChars() walks UTF-8 lead bytes, so a
-      // supplementary-plane char is 1 — asserted by SearchSpec
-      // ("fuzzy ranking key counts codepoints").
+      // TopTermsRewrite ranking: boost desc, then term). Candidates rank by
+      // d/min(len,|q|) asc, then term in dictionary order, and the first 50
+      // survive; the key is order-equivalent to the float similarity desc
+      // (distinct small-integer ratios are spaced far wider than float
+      // epsilon), with the same term-asc tie-break. Lengths count CODE
+      // POINTS (UTF8String.numChars, as Spark's `length`), the same as the
+      // boost's codePointCount below — asserted by SearchSpec ("fuzzy
+      // ranking key counts codepoints").
       val qLen = t.codePointCount(0, t.length)
-      val cand = reader.termDict
-        .where(multiTermPred(q).get)
-        .select($"term", levenshtein($"term", lit(t)).as("d"))
-        .orderBy((col("d").cast("double") /
-          least(length($"term"), lit(qLen)).cast("double")).asc, $"term".asc)
-        .limit(Searcher.FuzzyMaxExpansions)
-        .collect().map(r => (r.getString(0), r.getInt(1)))
+      val qu = UTF8String.fromString(t)
+      val cand = reader.matchingTerms(multiTermMatch(fq).get).map { term =>
+        val u = UTF8String.fromString(term)
+        val d = u.levenshteinDistance(qu)
+        (term, d, d.toDouble / math.min(u.numChars, qLen).toDouble)
+      }.toArray.sorted(Searcher.FuzzyRank).take(Searcher.FuzzyMaxExpansions)
+        .map(c => (c._1, c._2))
       val scored = cand.map { case (term, d) =>
         val sim = 1f - d.toFloat /
           math.min(term.codePointCount(0, term.length), qLen).toFloat
@@ -508,8 +480,8 @@ final class Searcher(val reader: IndexReader, pruneMinBlocks: Int = 64,
         case Some(ts) => orOf(ts, b)
         case None => WildcardQ(pat, b) // wide: semi-join in scoredRaw
       }
-    case mt if multiTermPred(mt).isDefined =>
-      reader.expandTermsOpt(multiTermPred(mt).get, maxClauseCount) match {
+    case mt if multiTermMatch(mt).isDefined =>
+      reader.expandTermsOpt(multiTermMatch(mt).get, maxClauseCount) match {
         case Some(ts) => orOf(ts, multiTermBoost(mt))
         case None => mt // wide: constant-score semi-join in scoredRaw
       }
@@ -520,8 +492,8 @@ final class Searcher(val reader: IndexReader, pruneMinBlocks: Int = 64,
       val slots = parts.map {
         case TermQ(t, _) => Seq(t)
         case PhraseQ(Seq(t), _, _, _) => Seq(t)
-        case mt if multiTermPred(mt).isDefined =>
-          reader.expandTerms(multiTermPred(mt).get, maxClauseCount)
+        case mt if multiTermMatch(mt).isDefined =>
+          reader.expandTerms(multiTermMatch(mt).get, maxClauseCount)
         case other => throw new IllegalArgumentException(
           s"complex-phrase part must be a term or multi-term query: $other")
       }
@@ -626,18 +598,17 @@ final class Searcher(val reader: IndexReader, pruneMinBlocks: Int = 64,
     case PhraseQ(terms, slop, boost, _) => scoredPhrase(terms, slop, boost, stats)
     case SparsePhraseQ(parts, boost) => scoredSparsePhrase(parts, boost, stats)
     case MultiPhraseQ(slots, slop, boost) => scoredMultiPhrase(slots, slop, boost, stats)
-    case mt if multiTermPred(mt).isDefined =>
+    case mt if multiTermMatch(mt).isDefined =>
       // CONSTANT_SCORE_AUTO fallback: a wide multi-term query (dictionary
       // match past the clause budget) scores constant over the docs of
-      // ANY matched term — postings ⋈ dict-range semi-join, block decode,
-      // per-doc dedup; no driver-side term enumeration at all
-      constantScoreMultiTerm(multiTermPred(mt).get, multiTermBoost(mt))
+      // ANY matched term — postings ⋈ matched-terms semi-join, block
+      // decode, per-doc dedup
+      constantScoreMultiTerm(multiTermMatch(mt).get, multiTermBoost(mt))
     case other => throw new IllegalStateException(s"unrewritten query: $other")
   }
 
-  private def constantScoreMultiTerm(pred: org.apache.spark.sql.Column,
-                                     boost: Float): Dataset[ScoreDoc] = {
-    val matchedTerms = reader.termDict.where(pred).select($"term")
+  private def constantScoreMultiTerm(m: TermMatch, boost: Float): Dataset[ScoreDoc] = {
+    val matchedTerms = reader.matchingTerms(m).toSeq.toDF("term")
     reader.allPostingRows
       .join(matchedTerms, Seq("term"), "left_semi").as[PostingRow]
       .flatMap(r => PostingsCodec.decodeBlock(r.firstDocId, r.numDocs, r.bytes)._1)
@@ -936,9 +907,9 @@ final class Searcher(val reader: IndexReader, pruneMinBlocks: Int = 64,
     // evaluation (reference: Spans/SpanMultiTermQueryWrapper.cs — the
     // wrapped query's rewrite feeds the span algebra)
     def expandMulti(sq: SpanQuery): SpanQuery = sq match {
-      case SpanMultiTermQ(mq) => multiTermPred(mq) match {
-        case Some(pred) =>
-          SpanOrQ(reader.expandTerms(pred, maxClauseCount).map(SpanTermQ))
+      case SpanMultiTermQ(mq) => multiTermMatch(mq) match {
+        case Some(m) =>
+          SpanOrQ(reader.expandTerms(m, maxClauseCount).map(SpanTermQ))
         case None =>
           throw new IllegalArgumentException(s"not a multi-term query: $mq")
       }
@@ -1443,7 +1414,10 @@ final class Searcher(val reader: IndexReader, pruneMinBlocks: Int = 64,
   /** Pagination (≙ IndexSearcher.SearchAfter, reference:
     * Search/IndexSearcher.cs:255-273): only hits strictly after `after` in
     * (score desc, docId asc) order compete. */
-  def searchAfter(after: ScoreDoc, q: Query, k: Int): Array[ScoreDoc] = {
+  def searchAfter(after: ScoreDoc, q: Query, k: Int): Array[ScoreDoc] =
+    graft.build.IndexBuilder.labelled(spark, "search.scan", reader.dir)(topK(after, q, k))
+
+  private def topK(after: ScoreDoc, q: Query, k: Int): Array[ScoreDoc] = {
     val rq = rewrite(q)
     val stats = reader.termStats(leafTerms(rq))
     val base: Dataset[ScoreDoc] = rq match {

@@ -164,6 +164,23 @@ class PipelineSpec extends AnyFunSuite {
     assert(math.abs(top(0).getAs[Double]("cos") - 1.0) < 1e-9)
   }
 
+  test("dot, l2norm and cosine raise an error for a vector whose size is not Dims") {
+    val ok = (1 to Similarity.Dims).map(_.toFloat)
+    val df = Seq((ok, ok)).toDF("a", "b")
+    assert(df.select(Similarity.dot($"a", $"b")).head().getDouble(0) ===
+      ok.map(x => x.toDouble * x).sum)
+    assert(df.select(Similarity.dot($"a", lit(null).cast("array<float>"))).head().isNullAt(0))
+    for (bad <- Seq(ok.take(Similarity.Dims - 1), ok :+ 1f, Seq.empty[Float])) {
+      val d = Seq((ok, bad)).toDF("a", "b")
+      for (c <- Seq(Similarity.dot($"a", $"b"), Similarity.dot($"b", $"a"),
+          Similarity.l2norm($"b"), Similarity.cosine($"a", $"b"))) {
+        val e = intercept[Exception](d.select(c).collect())
+        assert(e.getMessage.contains(s"embedding must have ${Similarity.Dims} elements"),
+          s"size ${bad.size}: ${e.getMessage}")
+      }
+    }
+  }
+
   test("LSH bucket assignment is scale-invariant and query's bucket contains its copy") {
     val b = vecs.select($"vec_id", Similarity.lshBucket($"embedding").as("bucket"))
       .as[(Long, Long)].collect().toMap

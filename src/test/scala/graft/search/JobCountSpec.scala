@@ -11,12 +11,13 @@ import org.scalatest.funsuite.AnyFunSuite
 import scala.jdk.CollectionConverters._
 
 /** The Spark-job floors of the serving and write paths. Serving, on a warm
-  * searcher: a reader opens each table once, and a query looks its terms
-  * up in the dictionary once. Writing: a build reads back no schema it
-  * already knows and probes nothing a directory listing answers. Jobs are
-  * counted by a listener filtered to the measured call's job group, so a
-  * regression (a table re-opened per call, a second `termStats`, a
-  * re-inferred schema, a re-added probe) raises the count and fails here. */
+  * searcher: a reader opens each table once and holds its term dictionary
+  * on the driver, so term stats and multi-term expansion run no job.
+  * Writing: a build reads back no schema it already knows and probes
+  * nothing a directory listing answers. Jobs are counted by a listener
+  * filtered to the measured call's job group, so a regression (a table
+  * re-opened per call, a dictionary lookup back in Spark, a re-inferred
+  * schema, a re-added probe) raises the count and fails here. */
 class JobCountSpec extends AnyFunSuite with BeforeAndAfterAll {
   private lazy val spark = SparkTestSession.spark
   private lazy val root = SparkTestSession.tmpDir("graft-jobs-")
@@ -74,10 +75,11 @@ class JobCountSpec extends AnyFunSuite with BeforeAndAfterAll {
       val plain = new Searcher(mk())
       // pruneMinBlocks = 1: bootstrapTheta decodes the best block even on this small index
       val pruning = new Searcher(mk(), pruneMinBlocks = 1)
-      for (s <- Seq(plain, pruning)) {
+      // was 2 and 3: the termStats collect ran before the scan
+      for ((s, floor) <- Seq(plain -> 1, pruning -> 2)) {
         s.search(TermQ(a), k) // warm: open the reader's tables, collection stats
         val n = jobsOf(s.search(TermQ(a), k))
-        assert(n <= 3, s"TermQ ran $n jobs")
+        assert(n <= floor, s"TermQ ran $n jobs")
       }
       assert(plain.search(TermQ(a), k).toSeq === pruning.search(TermQ(a), k).toSeq)
     }
@@ -87,7 +89,33 @@ class JobCountSpec extends AnyFunSuite with BeforeAndAfterAll {
       val q = BoolQ(must = Seq(TermQ(a), TermQ(b)))
       s.search(q, 5)
       val n = jobsOf(s.search(q, 5))
-      assert(n <= 4, s"+a +b ran $n jobs")
+      assert(n <= 2, s"+a +b ran $n jobs") // was 3
+    }
+
+    test(s"$name reader: termStats and multi-term rewrites run no job once the dictionary is loaded") {
+      val s = new Searcher(mk())
+      assert(jobLayersOf(s.reader.termStats(Seq(a))) === Seq("search.dict"))
+      assert(jobsOf(s.reader.termStats(Seq(a, b, "zz_absent"))) === 0) // was 1
+      // the rewrite was 1 job on the single reader, 2 on the multi reader
+      for (q <- Seq(PrefixQ(a.take(2)), WildcardQ(a.take(1) + "?" + a.slice(2, 3) + "*"),
+          FuzzyQ(a, 1))) {
+        assert(jobsOf(s.rewrite(q)) === 0, q)
+        assert(s.search(q, 5).nonEmpty, q) // warm
+        val n = jobsOf(s.search(q, 5))
+        assert(n <= 1, s"$q ran $n jobs") // was 3 (single) and 4 (multi)
+      }
+    }
+
+    test(s"$name reader: the first query loads the dictionary in one job, and every serving job is labelled") {
+      val s = new Searcher(mk())
+      val first = jobLayersOf(s.search(TermQ(a), 5))
+      assert(first.count(_ == "search.dict") === 1, first)
+      assert(first.forall(Set("search.dict", "search.scan")), first)
+      for (q <- Seq(TermQ(b), BoolQ(should = Seq(TermQ(a), PrefixQ(b.take(2)))),
+          FuzzyQ(a, 2))) {
+        val layers = jobLayersOf(s.search(q, 5))
+        assert(layers.nonEmpty && layers.forall(_ == "search.scan"), s"$q: $layers")
+      }
     }
   }
 
@@ -128,7 +156,8 @@ class JobCountSpec extends AnyFunSuite with BeforeAndAfterAll {
     val r = IndexReader.multi(spark, Seq(gen(0), gen(1)))
     val closed = serializedSize(r)
     Seq(r.postings, r.termDict, r.docstats, r.docsTable).foreach(t => assert(t.columns.nonEmpty))
-    assert(serializedSize(r) === closed, "an open table handle was serialized")
+    assert(r.termStats(Seq(a)).contains(a)) // loads the driver-held dictionary
+    assert(serializedSize(r) === closed, "an open table handle or the dictionary was serialized")
     val s = new Searcher(r)
     s.search(TermQ(a), 5)
     assert(serializedSize(s) > 0)
@@ -146,12 +175,18 @@ class JobCountSpec extends AnyFunSuite with BeforeAndAfterAll {
       spark.createDataset((0L until 200L).map(CorpusGen.doc)), dir,
       numPartitions = 2, indexPositions = true))
     val byLayer = layers.groupBy(identity).map { case (l, v) => l -> v.size }
-    assert(layers.size <= 28, s"build ran ${layers.size} jobs: $byLayer") // was 58
+    assert(layers.size <= 27, s"build ran ${layers.size} jobs: $byLayer") // was 58, then 28
     assert(byLayer.keySet === Set("build.flush", "build.postings", "build.stats"), byLayer)
     assert(byLayer("build.flush") <= 7, byLayer) // was 10
     assert(byLayer("build.postings") <= 11, byLayer) // was 24
-    assert(byLayer("build.stats") <= 10, byLayer) // was 24
+    assert(byLayer("build.stats") <= 9, byLayer) // was 24, then 10 with the first-chars write
     assert(CheckIndex.check(spark, dir).ok)
+  }
+
+  test("CheckIndex.check: job floor") {
+    // was 19: every table's schema was inferred on open
+    val n = jobsOf(assert(CheckIndex.check(spark, gen(0)).ok))
+    assert(n <= 15, s"CheckIndex.check ran $n jobs")
   }
 
   /** An NRT root with two committed generations (uncounted set-up). */

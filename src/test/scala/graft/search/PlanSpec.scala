@@ -67,54 +67,42 @@ class PlanSpec extends AnyFunSuite {
   }
 
   test("multi-term dictionary scans carry pushed term ranges (seek, not scan)") {
-    // the relational AutomatonTermsEnum: wildcard/regexp push their
-    // literal prefix as a range, fuzzy pushes a union of banded ranges —
-    // parquet min/max on the sorted dictionary prunes row groups
+    // the AutomatonTermsEnum analog on the driver-held dictionary:
+    // wildcard/regexp seek their literal prefix, fuzzy a union of banded
+    // ranges — never the whole dictionary
     val reader = new IndexReader(spark, dir)
     val searcher = new Searcher(reader)
-    def dictPlan(q: Query): String =
-      planOf(spark.read.parquet(IndexPaths.termDict(dir))
-        .where(searcher.multiTermPred(q).get))
-    val wild = dictPlan(WildcardQ("ana*"))
-    assert(wild.contains("GreaterThanOrEqual(term,ana)") &&
-      wild.contains("LessThan(term,anb)"),
-      s"wildcard literal prefix must reach the scan:\n$wild")
-    val re = dictPlan(RegexpQ("ve.tor"))
-    assert(re.contains("GreaterThanOrEqual(term,ve)") &&
-      re.contains("LessThan(term,vf)"),
-      s"regexp literal prefix must reach the scan:\n$re")
-    // fuzzy: the banded range UNION must be pushed (an Or of term ranges
-    // right after IsNotNull); the exact ranges depend on the dictionary's
-    // alphabet, so assert the shape, not the literals
-    val fz = dictPlan(FuzzyQ("merge", 1))
-    assert(fz.contains("PushedFilters: [IsNotNull(term), Or("),
-      s"fuzzy banded range union must reach the scan:\n$fz")
+    def seeks(q: Query): Seq[DictSeek.Seek] = searcher.multiTermMatch(q).get.seeks
+    assert(seeks(WildcardQ("ana*")) === Seq(DictSeek.Prefix("ana")))
+    assert(seeks(RegexpQ("ve.tor")) === Seq(DictSeek.Prefix("ve")))
+    // fuzzy: the exact ranges depend on the dictionary's alphabet, so
+    // assert the shape, not the literals
+    val fz = seeks(FuzzyQ("merge", 1))
+    assert(fz.nonEmpty && fz.forall(_.isInstanceOf[DictSeek.Range]), fz)
   }
 
+  /** Terms the driver-side matcher of `q` returns, sorted. */
+  private def matched(searcher: Searcher, q: Query): Seq[String] =
+    searcher.reader.matchingTerms(searcher.multiTermMatch(q).get).toSeq.sorted
+
+  /** Terms a Spark predicate selects from the stored dictionary, sorted. */
+  private def scanned(pred: org.apache.spark.sql.Column): Seq[String] =
+    spark.read.parquet(IndexPaths.termDict(dir)).where(pred)
+      .select("term").collect().map(_.getString(0)).sorted.toSeq
+
   test("fuzzy banding returns exactly the full-scan match set") {
-    val reader = new IndexReader(spark, dir)
-    val searcher = new Searcher(reader)
+    val searcher = new Searcher(new IndexReader(spark, dir))
     for ((t, e) <- Seq(("merge", 1), ("def", 1), ("intt", 2), ("qzqzq", 1))) {
-      val banded = spark.read.parquet(IndexPaths.termDict(dir))
-        .where(searcher.multiTermPred(FuzzyQ(t, e)).get)
-        .select("term").collect().map(_.getString(0)).sorted.toSeq
-      val full = spark.read.parquet(IndexPaths.termDict(dir))
-        .where(levenshtein(col("term"), lit(t)) <= e &&
-          abs(length(col("term")) - lit(t.length)) <= e)
-        .select("term").collect().map(_.getString(0)).sorted.toSeq
-      assert(banded === full, s"banded != full for $t~$e")
+      val full = scanned(levenshtein(col("term"), lit(t)) <= e &&
+        abs(length(col("term")) - lit(t.length)) <= e)
+      assert(matched(searcher, FuzzyQ(t, e)) === full, s"banded != full for $t~$e")
     }
   }
 
   test("regexp alternation keeps both branches (no unsound prefix range)") {
-    val reader = new IndexReader(spark, dir)
-    val searcher = new Searcher(reader)
-    def terms(pred: org.apache.spark.sql.Column): Seq[String] =
-      spark.read.parquet(IndexPaths.termDict(dir)).where(pred)
-        .select("term").collect().map(_.getString(0)).sorted.toSeq
-    val banded = terms(searcher.multiTermPred(RegexpQ("def|int")).get)
-    val full = terms(col("term").rlike("^(?:def|int)$"))
-    assert(banded === full)
+    val searcher = new Searcher(new IndexReader(spark, dir))
+    val banded = matched(searcher, RegexpQ("def|int"))
+    assert(banded === scanned(col("term").rlike("^(?:def|int)$")))
     assert(banded.nonEmpty)
   }
 
