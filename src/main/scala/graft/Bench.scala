@@ -1,8 +1,8 @@
 package graft
 
-import graft.build.IndexBuilder
-import graft.corpus.CorpusGen
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
+
+import scala.util.control.NonFatal
 
 /** Per-round benchmark main. Emits ONE JSON line:
   *
@@ -17,21 +17,32 @@ import org.apache.spark.sql.SparkSession
   *      and local[32] (4N); efficiency = thru4N / (4 × thruN).
   *   2. '''Query timings''': every SparkEntry query once at local[32] over
   *      SPARK_GRAFT_SF_DIR.
+  *
+  * A failed index build or query is named on stderr; the run still
+  * prints its JSON line and writes BENCH_LAST.json, then exits 1.
   */
 object Bench {
 
-  private def session(cores: Int): SparkSession = {
-    val s = SparkSession.builder()
-      .master(s"local[$cores]")
-      .appName(s"graft-bench-$cores")
-      .config("spark.sql.shuffle.partitions", cores)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.driver.host", "localhost")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
+  /** Runs `body`; a non-fatal failure is named on stderr and gives false. */
+  private def attempt(what: String)(body: => Unit): Boolean =
+    try { body; true }
+    catch { case NonFatal(e) =>
+      System.err.println(s"[bench] $what failed: $e")
+      false
+    }
+
+  /** Times each query's full evaluation (`count()`), in order. A query
+    * that throws times as -1 and the run goes on; the names of the failed
+    * queries are returned with the timings. */
+  def timeQueries(spark: SparkSession, sfDir: String,
+      queries: Seq[(String, (SparkSession, String) => DataFrame)])
+      : (Seq[(String, Double)], Seq[String]) = {
+    val timed = queries.map { case (name, fn) =>
+      val t0 = System.nanoTime()
+      val ok = attempt(name)(fn(spark, sfDir).count())
+      (name, if (ok) (System.nanoTime() - t0) / 1e9 else -1.0, ok)
+    }
+    (timed.map(t => t._1 -> t._2), timed.collect { case (name, _, false) => name })
   }
 
   /** Runs `graft.BuildBench progArgs` in a child JVM pinned to exactly
@@ -160,23 +171,24 @@ object Bench {
     val eff28VsWall = if (bwEff28 > 0) eff28 / bwEff28 else eff28
 
     // ---- query timings at 4N over the driver's sf dir ----
-    val spark = session(n4Cores)
+    val spark = MainSupport.session(s"graft-bench-$n4Cores", n4Cores, Seq(
+      "spark.sql.session.timeZone" -> "UTC",
+      "spark.ui.enabled" -> "false",
+      "spark.driver.host" -> "localhost"))
+    spark.sparkContext.setLogLevel("WARN")
     // pre-build the engine indexes so the first index query isn't charged
     // for the one-time builds
-    try ops.DocIndex.ensure(spark, sfDir) catch { case _: Throwable => }
-    try ops.DocIndex.ensureWide(spark, sfDir) catch { case _: Throwable => }
-    try ops.DocIndex.ensureFielded(spark, sfDir) catch { case _: Throwable => }
-    try ops.DocIndex.ensurePositions(spark, sfDir) catch { case _: Throwable => }
-    try ops.DocIndex.ensureOffsets(spark, sfDir) catch { case _: Throwable => }
-    try ops.DocIndex.ensureNrt(spark, sfDir) catch { case _: Throwable => }
+    val ensureFailed = Seq[(String, (SparkSession, String) => Any)](
+      "DocIndex.ensure" -> ops.DocIndex.ensure _,
+      "DocIndex.ensureWide" -> ops.DocIndex.ensureWide _,
+      "DocIndex.ensureFielded" -> ops.DocIndex.ensureFielded _,
+      "DocIndex.ensurePositions" -> ops.DocIndex.ensurePositions _,
+      "DocIndex.ensureOffsets" -> ops.DocIndex.ensureOffsets _,
+      "DocIndex.ensureNrt" -> ops.DocIndex.ensureNrt _)
+      .collect { case (name, f) if !attempt(name)(f(spark, sfDir)) => name }
     val skipQueries = sys.env.get("SPARK_GRAFT_BENCH_SKIP_QUERIES").contains("1")
     val queryList = if (skipQueries) Nil else SparkEntry.queries.toSeq.sortBy(_._1)
-    val results = queryList.map { case (name, fn) =>
-      val t0 = System.nanoTime()
-      val ok = try { fn(spark, sfDir).count(); true }
-      catch { case _: Throwable => false }
-      name -> (if (ok) (System.nanoTime() - t0) / 1e9 else -1.0)
-    }
+    val (results, queryFailed) = timeQueries(spark, sfDir, queryList)
     val qs = results.map { case (k, v) => "\"" + k + "\":" + f"$v%.3f" }
       .mkString("{", ",", "}")
     val totalSec = results.collect { case (_, v) if v >= 0 => v }.sum
@@ -214,5 +226,10 @@ object Bench {
     java.nio.file.Files.write(java.nio.file.Paths.get("BENCH_LAST.json"),
       (json + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
     spark.stop()
+    val failed = ensureFailed ++ queryFailed
+    if (failed.nonEmpty) {
+      System.err.println(s"[bench] ${failed.size} FAILED: ${failed.mkString(", ")}")
+      sys.exit(1)
+    }
   }
 }

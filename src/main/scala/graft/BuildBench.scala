@@ -2,7 +2,6 @@ package graft
 
 import graft.build.IndexBuilder
 import graft.corpus.CorpusGen
-import org.apache.spark.sql.SparkSession
 
 /** Single build-throughput measurement, meant to run in its own JVM
   * pinned to N cores (`taskset -c 0..N-1`) — the honest emulation of an
@@ -40,20 +39,14 @@ object BuildBench {
     println(f"hashes_per_sec=${counts.get() / sec}%.1f")
   }
 
-  /** Memory-bandwidth calibration (STREAM-triad shape): `cores` threads
-    * each stream a(i) = b(i) + s·c(i) over private 16 MiB double arrays
-    * (way past L3 per thread) for ~3 s; prints aggregate GB/s of array
-    * traffic (24 B per element nominal). Run pinned at two cluster
-    * sizes, the ratio measures how much of the socket's bandwidth is
-    * already saturated at the smaller size — the ceiling that binds a
-    * shuffle-heavy build long before the pure-CPU (cache-resident
-    * SHA-256) ceiling does. */
-  def calibrateBandwidth(cores: Int): Unit =
-    println(f"gb_per_sec=${triadGbps(cores)}%.2f")
-
-  /** STREAM-triad aggregate GB/s at `cores` pinned threads (the
-    * measurement behind [[calibrateBandwidth]], callable in-process so a
-    * build leg can probe the wall in its OWN window). */
+  /** Memory-bandwidth probe (STREAM-triad shape): `cores` threads each
+    * stream a(i) = b(i) + s·c(i) over private 16 MiB double arrays (way
+    * past L3 per thread) for ~3 s; returns aggregate GB/s of array
+    * traffic (24 B per element nominal). A build leg probes in its OWN
+    * pinned window; the ratio at two cluster sizes measures how much of
+    * the socket's bandwidth is already saturated at the smaller size —
+    * the ceiling that binds a shuffle-heavy build long before the
+    * pure-CPU (cache-resident SHA-256) ceiling does. */
   def triadGbps(cores: Int): Double = {
     val elems = (16 << 20) / 8 // 16 MiB per array, 3 arrays per thread
     val stop = new java.util.concurrent.atomic.AtomicBoolean(false)
@@ -83,7 +76,6 @@ object BuildBench {
 
   def main(args: Array[String]): Unit = {
     if (args(0) == "calibrate") { calibrate(args(1).toInt); return }
-    if (args(0) == "calibrate-bw") { calibrateBandwidth(args(1).toInt); return }
     val Array(nDocsS, coresS, workDir) = args
     val nDocs = nDocsS.toLong
     val cores = coresS.toInt
@@ -92,29 +84,21 @@ object BuildBench {
     // noisy-neighbor window is self-documenting instead of inferred from
     // probes taken minutes apart
     val bwPre = triadGbps(cores)
-    val spark = SparkSession.builder()
-      .master(s"local[$cores]")
-      .appName(s"graft-buildbench-$cores")
-      .config("spark.sql.shuffle.partitions", cores)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .config("spark.driver.host", "localhost")
-      .config("spark.io.compression.codec",
-        sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_CODEC", "lz4"))
-      .config("spark.sql.parquet.compression.codec",
-        sys.env.getOrElse("SPARK_GRAFT_PARQUET_CODEC", "snappy"))
+    val spark = MainSupport.session(s"graft-buildbench-$cores", cores, Seq(
+      "spark.ui.enabled" -> "false",
+      "spark.driver.host" -> "localhost",
+      "spark.io.compression.codec" -> "lz4",
+      "spark.sql.parquet.compression.codec" -> "snappy",
       // the flush write is dynamic-partitioned by `kind` (2-4 values);
       // without concurrent writers Spark SORTS each task's whole output
       // by the partition column first — an extra serialize+spill of the
       // corpus payload per task. Concurrent writers keep one open file
       // per kind and stream rows straight through.
-      .config("spark.sql.maxConcurrentOutputFileWriters",
-        sys.env.getOrElse("SPARK_GRAFT_CONCURRENT_WRITERS", "8"))
+      "spark.sql.maxConcurrentOutputFileWriters" -> "8",
       // shuffle/spill on tmpfs: the measurement targets compute scaling,
       // not this container's single virtual disk (a real cluster has a
       // disk per executor; here 32 tasks would share one /dev/vda)
-      .config("spark.local.dir", s"$workDir/spark-local")
-      .getOrCreate()
+      "spark.local.dir" -> s"$workDir/spark-local"))
     spark.sparkContext.setLogLevel("WARN")
     // JIT warmup on a small slice, then the timed build
     IndexBuilder.build(spark, CorpusGen.dataset(spark, math.max(2000, nDocs / 20),

@@ -15,11 +15,17 @@ import org.apache.spark.sql.functions._
   * Under spark-submit the session inherits the cluster master/conf; the
   * local[] fallback only applies when launched bare (tests, sandbox). */
 object MainSupport {
-  def session(app: String): SparkSession = {
+  /** The session of every main: adaptive execution on, then the main's
+    * own `conf`. An existing master (spark-submit's `spark.master`, or
+    * `MASTER`) is kept; launched bare, the session runs `local[cores]`
+    * with `cores` shuffle partitions. */
+  def session(app: String, cores: Int = 32,
+      conf: Seq[(String, String)] = Nil): SparkSession = {
     val b = SparkSession.builder().appName(app)
       .config("spark.sql.adaptive.enabled", "true")
     if (!sys.props.contains("spark.master") && sys.env.get("MASTER").isEmpty)
-      b.master("local[32]").config("spark.sql.shuffle.partitions", 32)
+      b.master(s"local[$cores]").config("spark.sql.shuffle.partitions", cores)
+    conf.foreach { case (k, v) => b.config(k, v) }
     b.getOrCreate()
   }
 }

@@ -27,12 +27,8 @@ object MakeScale {
     val src = args(0)
     val dst = args(1)
     val docsMult = if (args.length > 2) args(2).toInt else 100
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8").toInt
+    val spark = MainSupport.session("graft-makescale", cpus, Seq("spark.ui.enabled" -> "false"))
     spark.sparkContext.setLogLevel("WARN")
     scale(spark, src, dst, docsMult)
     spark.stop()

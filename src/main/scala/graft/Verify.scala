@@ -11,13 +11,9 @@ object Verify {
     // optional 3rd arg: comma-list of query names to run (local iteration)
     val only: Option[Set[String]] =
       if (args.length > 2) Some(args(2).split(",").toSet) else None
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
+    val spark = MainSupport.session("graft-verify", cpus,
+      Seq("spark.sql.session.timeZone" -> "UTC", "spark.ui.enabled" -> "false"))
     spark.sparkContext.setLogLevel("WARN")
     val failed = dump(spark, sfDir, outDir, SparkEntry.queries.toSeq
       .filter { case (name, _) => only.forall(_.contains(name)) })

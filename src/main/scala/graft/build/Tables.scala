@@ -164,10 +164,6 @@ object IndexPaths {
   def payloads(dir: String) = s"$dir/payloads"
   def docstats(dir: String) = s"$dir/docstats"
   def termDict(dir: String) = s"$dir/term_dict"
-  /** Optional reversed-term dictionary sidecar (rterm, term, df) sorted
-    * by rterm — turns a leading wildcard into a prefix SEEK
-    * ([[ReversedDict]], the ReverseStringFilter leading-wildcard idea). */
-  def termDictRev(dir: String) = s"$dir/term_dict_rev"
   def collectionStats(dir: String) = s"$dir/collection_stats"
   def manifest(dir: String) = s"$dir/manifest"
 }

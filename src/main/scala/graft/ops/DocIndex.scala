@@ -222,17 +222,6 @@ object DocIndex {
       numShards = 3, numPartitions = 4)
   }
 
-  /** Documents index with the reversed-dictionary sidecar built
-    * (leading-wildcard seek). Idempotent; the sidecar is
-    * dictionary-sized. */
-  def ensureReversed(spark: SparkSession, sfDir: String): String = synchronized {
-    val dir = ensure(spark, sfDir)
-    val p = new org.apache.hadoop.fs.Path(IndexPaths.termDictRev(dir))
-    if (!p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p))
-      graft.build.ReversedDict.build(spark, dir, numPartitions = 4)
-    dir
-  }
-
   /** PK split of the documents index (PKIndexSplitter analog): docs with
     * lang == 'en' → shard 0, the rest → shard 1. Returns (en, rest). */
   def ensureSplitPk(spark: SparkSession, sfDir: String): (String, String) = synchronized {

@@ -1251,16 +1251,12 @@ object VerifyQueries {
        |  UNION ALL SELECT 'r4_all', count(*) FILTER (n >= 0 AND n <= 1000) FROM v
        |) ORDER BY label""".stripMargin
 
-  /** Leading wildcard `*ble` through the reversed-dictionary SEEK
-    * (reference idea: Analysis/Reverse/ReverseStringFilter.cs — index
-    * reversed terms so a leading wildcard becomes a prefix automaton;
-    * here only the DICTIONARY is mirrored, postings shared): the rewrite
-    * expands on the rterm prefix range and the doc set must equal the
-    * oracle's suffix LIKE — ReversedDictSpec separately proves seek ==
-    * scan bit-for-bit. */
+  /** Leading wildcard `*ble`: the rewrite scans the whole span of the
+    * reader's driver-held dictionary with the wildcard regex as the
+    * residual, and the doc set must equal the oracle's suffix LIKE. */
   def qWildcardLeading(spark: SparkSession, sf: String): DataFrame = {
     import spark.implicits._
-    val dir = DocIndex.ensureReversed(spark, sf)
+    val dir = DocIndex.ensure(spark, sf)
     val searcher = new graft.search.Searcher(new graft.search.IndexReader(spark, dir),
       analyzerFor = _ => graft.analysis.Analyzer.sqlParity)
     searcher.scored(graft.search.WildcardQ("*ble")).map(_.docId).distinct()

@@ -18,9 +18,8 @@ import org.apache.spark.sql.functions._
   * cell table: broadcastable by construction, or driver-collectable.
   *
   * Hashing: Kirsch–Mitzenmacher double hashing h_d = (h1 + d·h2) mod
-  * width over two seeded xxhash64 columns — the same construction (and
-  * the same driver-side XXH64 twin) as the bloom term-dictionary sidecar
-  * (graft.build.BloomFilter). Engine-internal: the gate-facing
+  * width over two seeded xxhash64 columns, with a driver-side XXH64 twin
+  * of the Column hashes. Engine-internal: the gate-facing
   * heavy-hitter query stays the exact census; the sketch is the
   * documented scale path, spec-verified against the exact counts
   * (never-undercount + εN bound + candidate-superset). */
@@ -31,7 +30,7 @@ object Sketches {
     /** Point estimate — min over rows; ≥ true count, ≤ true + εN w.h.p. */
     def estimate(key: String): Long = {
       val (h1r, h2r) = Cms.hashes(key)
-      // reduce BEFORE combining (BloomFilter-style) so d·h2 never
+      // reduce BEFORE combining so d·h2 never
       // overflows int64 under ANSI arithmetic; h2 forced nonzero
       val h1 = math.floorMod(h1r, width.toLong)
       val h2 = math.floorMod(h2r, width.toLong - 1) + 1
@@ -42,9 +41,9 @@ object Sketches {
   }
 
   object Cms {
-    /** Driver-side twin of the Column hashes (see BloomFilter.probes:
-      * xxhash64(lit(seed), key) chains seed 42 → hashLong(lit) → string
-      * bytes — exactly what XxHash64's codegen emits). */
+    /** Driver-side twin of the Column hashes (xxhash64(lit(seed), key)
+      * chains seed 42 → hashLong(lit) → string bytes — exactly what
+      * XxHash64's codegen emits). */
     private[Sketches] def hashes(key: String): (Long, Long) = {
       def xx(litSeed: Long, s: String): Long = {
         val bytes = s.getBytes("UTF-8")
@@ -101,8 +100,8 @@ object Sketches {
     * key). Registers are a ≤ m-row table: broadcastable, driver-tiny,
     * and MERGEABLE by element-wise max ([[hllMerge]]) — the property that
     * makes per-partition/per-day sketches unionable without re-scanning.
-    * Engine-internal hashing (the same seeded-xxhash64 family as the CMS
-    * and bloom sidecar, with a driver twin spec-proven equal); accuracy
+    * Engine-internal hashing (the same seeded-xxhash64 family as the CMS,
+    * with a driver twin spec-proven equal); accuracy
     * σ ≈ 1.04/√m is SketchSpec-verified against exact counts. */
   def hllRegisters(keys: DataFrame, keyCol: String, p: Int): DataFrame = {
     require(p >= 4 && p <= 18, s"p in [4, 18] (got $p)")

@@ -1,7 +1,6 @@
 package graft.search
 
 import graft.analysis.Analyzer
-import org.apache.spark.sql.functions._
 
 /** FuzzyLikeThisQuery (reference: /root/reference/src/Lucene.Net.Sandbox/
   * Queries/FuzzyLikeThisQuery.cs): "fuzzy MoreLikeThis" — analyze free
@@ -29,31 +28,24 @@ object FuzzyLikeThis {
   /** The reference construction, pre-rewritten against the dictionary.
     * Variant similarity = 1 − editDist/min(|source|,|variant|) (the
     * FuzzyTermsEnum boost); each surviving variant becomes a TermQ whose
-    * boost is `sim² × (ln(numDocs/(df+1)) + 1)`; expansion scans are
-    * banded dictionary SEEKs with the ranking inside the job — only the
-    * ≤ maxVariantsPerTerm winners per source term reach the driver. */
+    * boost is `sim² × (ln(numDocs/(df+1)) + 1)`; the variants are the
+    * source term's fuzzy matches in the reader's driver-held dictionary,
+    * so the expansion runs no Spark job. */
   def rewrittenQuery(reader: IndexReader, text: String, analyzer: Analyzer,
       maxEdits: Int = 1, maxNumTerms: Int = 50,
       maxVariantsPerTerm: Int = 50): Query = {
-    val spark = reader.spark
-    import spark.implicits._
     val numDocs = reader.collectionStats.maxDoc
     val source = analyzer.analyzeTerms(text).distinct.toSeq
     final case class Variant(src: String, term: String, df: Long, sim: Double)
+    // ranked sim desc, df desc, term
+    val bySimThenDf: Ordering[Variant] = Ordering.by((v: Variant) => (v.sim, v.df, v.term))(
+      Ordering.Tuple3(Ordering.Double.TotalOrdering.reverse, Ordering.Long.reverse,
+        TermDictionary.Order))
     val variants: Seq[Variant] = source.flatMap { t =>
-      reader.termDict
-        .where(Suggest.fuzzyBand(reader, t, maxEdits) &&
-          abs(length(col("term")) - lit(t.length)) <= maxEdits)
-        .select(col("term"), col("df"),
-          (lit(1.0) - levenshtein(col("term"), lit(t)).cast("double") /
-            least(length(col("term")), lit(t.length))).as("sim"),
-          levenshtein(col("term"), lit(t)).as("d"))
-        .where(col("d") <= maxEdits)
-        .orderBy(col("sim").desc, col("df").desc, col("term"))
-        .limit(maxVariantsPerTerm)
-        .select(col("term"), col("df"), col("sim"))
-        .as[(String, Long, Double)].collect()
-        .map { case (v, df, sim) => Variant(t, v, df, sim) }
+      reader.fuzzyTerms(t, maxEdits).map { case (r, d) =>
+        val len = math.min(r.term.codePointCount(0, r.term.length), t.length)
+        Variant(t, r.term, r.df, 1.0 - d.toDouble / len)
+      }.sorted(bySimThenDf).take(maxVariantsPerTerm)
     }
     // df for the idf factor: the source term's own df, else the avg
     // variant df (FuzzyLikeThisQuery.cs:245-250, integer division as there)

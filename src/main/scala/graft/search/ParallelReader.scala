@@ -37,13 +37,5 @@ final class ParallelIndexReader(spark: SparkSession, primary: String,
 
   override protected def termDictDirs: Seq[String] = all
 
-  // leading-wildcard seeks must expand through EVERY parallel term
-  // space: available only when all sides carry the reversed-dict
-  // sidecar (else fall back to scanning the unioned dictionary — a
-  // primary-only expansion would silently miss secondary keyword terms)
-  override lazy val hasReversedDict: Boolean =
-    allHave(all, IndexPaths.termDictRev)
-  @transient override lazy val termDictRev: DataFrame = unionOf(IndexPaths.termDictRev)
-
   override def tombstoneDirs: Seq[String] = all
 }

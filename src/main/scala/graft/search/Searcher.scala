@@ -5,7 +5,6 @@ import graft.build.{CollectionStatsRow, DocStatRow, IndexPaths, PositionsRow, Po
 import graft.postings.PostingsCodec
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.unsafe.types.UTF8String
 
 /** Point-in-time view over the index tables (≙ IndexReader/MultiFields,
   * reference: /root/reference/src/Lucene.Net/Index/IndexReader.cs). Pulls
@@ -182,36 +181,20 @@ class IndexReader(val spark: SparkSession, val dir: String) extends Serializable
       p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
     }
 
-  /** True when the reversed-dictionary sidecar exists
-    * ([[graft.build.ReversedDict]]) — leading wildcards then SEEK a
-    * reversed-prefix range instead of scanning the whole dictionary. On a
-    * multi-generation view EVERY generation must carry it: a head-only
-    * check would silently drop matches living in newer generations, so
-    * otherwise the multi-term path scans the dictionary (correct, slower). */
-  lazy val hasReversedDict: Boolean = allHave(dataDirs, IndexPaths.termDictRev)
-  @transient lazy val termDictRev: DataFrame = open(IndexPaths.termDictRev)
-
-  /** Expand a pure-suffix pattern (`*literal`) on the reversed
-    * dictionary: a prefix range on rterm, parquet min/max-pruned like
-    * any forward prefix seek; terms come back in their forward form. */
-  def expandSuffixOpt(suffix: String,
-      maxExpansions: Int = 1024): Option[Seq[String]] = {
-    val rp = graft.analysis.TokenFilters.reverse(suffix)
-    val pred =
-      if (rp.isEmpty) lit(true)
-      else DictSeek.succ(rp) match {
-        case hi if hi == null => $"rterm" >= rp
-        case hi => $"rterm" >= rp && $"rterm" < hi
-      }
-    val ts = termDictRev.where(pred).select($"term").as[String]
-      .limit(maxExpansions + 1).collect()
-    if (ts.length > maxExpansions) None else Some(ts.toSeq)
-  }
-
   /** The dictionary's alphabet (distinct first characters), from the
     * driver-held dictionary. Feeds the fuzzy range banding
     * ([[DictSeek.fuzzyRanges]]). */
   lazy val termFirstChars: Seq[Char] = dictionary.firstChars
+
+  /** The dictionary rows within `maxEdits` edits of `q`, each with its
+    * edit distance ([[FuzzyMatch]]), in seek order: the one candidate
+    * source of the fuzzy rewrite, the spell checkers, fuzzy completion
+    * and FuzzyLikeThis. */
+  private[search] def fuzzyTerms(q: String, maxEdits: Int,
+      prefixMode: Boolean = false): Seq[(TermDictRow, Int)] = {
+    val m = new FuzzyMatch(q, maxEdits, termFirstChars, prefixMode)
+    dictionary.rows(m.seeks).flatMap(r => m.distance(r.term).map(r -> _)).toSeq
+  }
 
   /** Directories whose tombstone tables apply to this view. */
   def tombstoneDirs: Seq[String] = Seq(dir)
@@ -270,11 +253,6 @@ final class MultiIndexReader(spark0: SparkSession, dirs: Seq[String])
       .groupBy($"term")
       .agg(sum($"df").as("df"), sum($"totalTf").as("totalTf"),
         max($"maxTf").as("maxTf"), max($"maxNorm").as("maxNorm"))
-
-  // distinct: the same (rterm, term) row can appear in several
-  // generations and would otherwise count against maxExpansions twice
-  @transient override lazy val termDictRev: DataFrame =
-    open(IndexPaths.termDictRev).distinct()
 
   override def tombstoneDirs: Seq[String] = dirs
 }
@@ -403,18 +381,7 @@ final class Searcher(val reader: IndexReader, pruneMinBlocks: Int = 64,
       Some(TermMatch(Seq(DictSeek.Prefix(DictSeek.regexpPrefix(rx))),
         Searcher.rlike(java.util.regex.Pattern.compile("^(?:" + rx + ")$"))))
     case FuzzyQ(t, maxEdits, _) =>
-      // levenshtein(term, t) <= maxEdits && abs(length(term) - t.length)
-      // <= maxEdits: code points on the term side, UTF-16 units for t.length
-      val qu = UTF8String.fromString(t)
-      val accept = (term: String) => {
-        val u = UTF8String.fromString(term)
-        math.abs(u.numChars - t.length) <= maxEdits && u.levenshteinDistance(qu) <= maxEdits
-      }
-      val seeks = DictSeek.fuzzyRanges(t, maxEdits, reader.termFirstChars) match {
-        case Some(ranges) => ranges.map { case (lo, hi) => DictSeek.Range(lo, hi) }
-        case None => Seq(DictSeek.Prefix("")) // banding not applicable: full scan
-      }
-      Some(TermMatch(seeks, accept))
+      Some(new FuzzyMatch(t, maxEdits, reader.termFirstChars).termMatch)
     case TermRangeQ(lo, hi, inclLo, inclHi, _) =>
       // "\u0000" appended: the least string above the bound
       val from = if (lo == null) "" else if (inclLo) lo else lo + "\u0000"
@@ -438,7 +405,7 @@ final class Searcher(val reader: IndexReader, pruneMinBlocks: Int = 64,
     * reference: MultiTermQuery.cs:69, ConstantScoreAutoRewrite.cs) +
     * boolean simplification. */
   def rewrite(q: Query): Query = q match {
-    case fq @ FuzzyQ(t, _, b) =>
+    case FuzzyQ(t, maxEdits, b) =>
       // reference FuzzyQuery default rewrite: TOP_TERMS(50) with per-term
       // boost = similarity = 1 - edits/min(|candidate|, |query|)
       // (FuzzyQuery.cs:108, FuzzyTermsEnum.cs:436,
@@ -447,16 +414,14 @@ final class Searcher(val reader: IndexReader, pruneMinBlocks: Int = 64,
       // survive; the key is order-equivalent to the float similarity desc
       // (distinct small-integer ratios are spaced far wider than float
       // epsilon), with the same term-asc tie-break. Lengths count CODE
-      // POINTS (UTF8String.numChars, as Spark's `length`), the same as the
-      // boost's codePointCount below — asserted by SearchSpec ("fuzzy
-      // ranking key counts codepoints").
+      // POINTS (as Spark's `length`), the same as the boost's
+      // codePointCount below — asserted by SearchSpec ("fuzzy ranking key
+      // counts codepoints").
       val qLen = t.codePointCount(0, t.length)
-      val qu = UTF8String.fromString(t)
-      val cand = reader.matchingTerms(multiTermMatch(fq).get).map { term =>
-        val u = UTF8String.fromString(term)
-        val d = u.levenshteinDistance(qu)
-        (term, d, d.toDouble / math.min(u.numChars, qLen).toDouble)
-      }.toArray.sorted(Searcher.FuzzyRank).take(Searcher.FuzzyMaxExpansions)
+      val cand = reader.fuzzyTerms(t, maxEdits).map { case (row, d) =>
+        val term = row.term
+        (term, d, d.toDouble / math.min(term.codePointCount(0, term.length), qLen).toDouble)
+      }.sorted(Searcher.FuzzyRank).take(Searcher.FuzzyMaxExpansions)
         .map(c => (c._1, c._2))
       val scored = cand.map { case (term, d) =>
         val sim = 1f - d.toFloat /
@@ -468,17 +433,6 @@ final class Searcher(val reader: IndexReader, pruneMinBlocks: Int = 64,
         case Seq((one, sim)) => TermQ(one, b * sim)
         case many => BoolQ(should = many.map { case (term, sim) =>
           TermQ(term, b * sim) })
-      }
-    // leading wildcard `*suffix` with the reversed-dictionary sidecar
-    // present: a PREFIX seek over rterm (ReverseStringFilter's
-    // documented purpose) replaces the full dictionary scan; wide
-    // expansions fall through to the generic constant-score path
-    case WildcardQ(pat, b) if pat.length > 1 && pat.head == '*' &&
-        !pat.substring(1).exists(c => c == '*' || c == '?') &&
-        reader.hasReversedDict =>
-      reader.expandSuffixOpt(pat.substring(1), maxClauseCount) match {
-        case Some(ts) => orOf(ts, b)
-        case None => WildcardQ(pat, b) // wide: semi-join in scoredRaw
       }
     case mt if multiTermMatch(mt).isDefined =>
       reader.expandTermsOpt(multiTermMatch(mt).get, maxClauseCount) match {

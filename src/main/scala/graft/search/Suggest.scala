@@ -1,5 +1,6 @@
 package graft.search
 
+import graft.build.TermDictRow
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -37,28 +38,23 @@ object Suggest {
     * ranked by (prefix edit distance, df desc, term). A prefix p of term
     * t with lev(p, input) <= e must have |p| within e of |input|, so the
     * candidate distance is the least over the 2e+1 prefix lengths —
-    * expressible identically in SQL for the oracle. The dictionary scan
-    * is banded by [[DictSeek.fuzzyRanges]] in prefix mode (the
-    * FuzzySuggester automaton walk as pushed term ranges). */
+    * expressible identically in SQL for the oracle. The candidates come
+    * from the driver-held dictionary, banded by [[DictSeek.fuzzyRanges]]
+    * in prefix mode (the FuzzySuggester automaton walk as term ranges). */
   def completeFuzzy(reader: IndexReader, input: String, maxEdits: Int = 1,
-                    k: Int = 8): DataFrame = {
-    val l = input.length
-    val dist = (math.max(1, l - maxEdits) to (l + maxEdits))
-      .map(n => levenshtein(substring(col("term"), 1, n), lit(input)))
-      .reduce(least(_, _))
-    val band = DictSeek.fuzzyRanges(input, maxEdits, reader.termFirstChars,
-      prefixMode = true) match {
-      case Some(rs) if rs.nonEmpty => rs.map { case (lo, hi) =>
-        if (hi == null) col("term") >= lo else col("term") >= lo && col("term") < hi
-      }.reduce(_ || _)
-      case Some(_) => lit(false)
-      case None => lit(true)
-    }
-    reader.termDict
-      .where(band)
-      .select(col("term"), col("df"), dist.as("dist"))
-      .where(col("dist") <= maxEdits)
-      .orderBy(col("dist"), col("df").desc, col("term")).limit(k)
+                    k: Int = 8): DataFrame =
+    nearest(reader, reader.fuzzyTerms(input, maxEdits, prefixMode = true), k)
+
+  /** The first `k` candidates by (distance, df desc, term) as a
+    * (term, df, dist) table. */
+  private def nearest(reader: IndexReader, cands: Seq[(TermDictRow, Int)],
+      k: Int): DataFrame = {
+    val spark = reader.spark
+    import spark.implicits._
+    cands.map { case (r, d) => (r.term, r.df, d) }
+      .sortBy { case (t, df, d) => (d, df, t) }(
+        Ordering.Tuple3(Ordering.Int, Ordering.Long.reverse, TermDictionary.Order))
+      .take(k).toDF("term", "df", "dist")
   }
 
   /** Infix completion (reference:
@@ -114,40 +110,34 @@ object Suggest {
 
   /** "Did you mean": nearest dictionary terms by edit distance, ties by
     * higher df then term (SpellChecker's distance-then-popularity
-    * ranking). The candidate scan is length-banded (|len(t)-len(q)| <=
+    * ranking). The candidates are length-banded (|len(t)-len(q)| <=
     * maxEdits) — the dictionary analog of the reference's n-gram
-    * candidate pre-filter. */
+    * candidate pre-filter — and exclude the term itself. */
   def didYouMean(reader: IndexReader, term: String, maxEdits: Int = 2,
                  k: Int = 5): DataFrame =
-    reader.termDict
-      .where(fuzzyBand(reader, term, maxEdits) &&
-        abs(length(col("term")) - lit(term.length)) <= maxEdits)
-      .select(col("term"), col("df"),
-        levenshtein(col("term"), lit(term)).as("dist"))
-      .where(col("dist") <= maxEdits && col("dist") > 0)
-      .orderBy(col("dist"), col("df").desc, col("term")).limit(k)
+    nearest(reader, spellCandidates(reader, term, maxEdits), k)
+
+  /** The spell checkers' candidates: the fuzzy matches of `term` other
+    * than the term itself, each with its edit distance. */
+  private def spellCandidates(reader: IndexReader, term: String,
+      maxEdits: Int): Seq[(TermDictRow, Int)] =
+    reader.fuzzyTerms(term, maxEdits).filter(_._2 > 0)
 
   /** [[didYouMean]] with a pluggable string distance — the
     * `SpellChecker.StringDistance` property (reference:
     * `Suggest/Spell/SpellChecker.cs`, ranked via `SuggestWordQueue` by
     * (score desc, freq desc, term)): the SAME banded candidate
     * generation, re-ranked by a [[StringDistances]] similarity instead
-    * of the raw edit distance. The distance runs per candidate inside a
-    * typed map over the already-seek-bounded band (maxEdits² + alphabet
-    * pruning), so the Scala closure never sees corpus-sized data. */
+    * of the raw edit distance. The distance runs on the driver, per
+    * candidate of the seek-bounded band (maxEdits² + alphabet pruning). */
   def didYouMeanRanked(reader: IndexReader, term: String, maxEdits: Int = 2,
                        k: Int = 5,
                        dist: (String, String) => Double =
                          StringDistances.levenshteinSim): DataFrame = {
-    val spark = reader.termDict.sparkSession
+    val spark = reader.spark
     import spark.implicits._
-    reader.termDict
-      .where(fuzzyBand(reader, term, maxEdits) &&
-        abs(length(col("term")) - lit(term.length)) <= maxEdits &&
-        levenshtein(col("term"), lit(term)).between(1, maxEdits))
-      .select(col("term"), col("df"))
-      .as[(String, Long)]
-      .map { case (t, df) => (t, df, dist(term, t)) }
+    spellCandidates(reader, term, maxEdits)
+      .map { case (r, _) => (r.term, r.df, dist(term, r.term)) }
       .toDF("term", "df", "sim")
       .select(col("term"), col("df"), round(col("sim"), 6).as("sim"))
       .orderBy(col("sim").desc, col("df").desc, col("term")).limit(k)
@@ -292,20 +282,6 @@ object Suggest {
       .orderBy(col("end_idx") - col("start_idx"), col("freq").desc, col("start_idx"))
       .limit(maxSuggestions)
   }
-
-  /** Range-banding conjunct for a fuzzy dictionary probe — a sound
-    * superset of the match set as parquet-prunable term ranges
-    * ([[DictSeek.fuzzyRanges]]); true (full scan) when banding does not
-    * apply. */
-  private[search] def fuzzyBand(reader: IndexReader, term: String,
-                                maxEdits: Int): org.apache.spark.sql.Column =
-    DictSeek.fuzzyRanges(term, maxEdits, reader.termFirstChars) match {
-      case Some(rs) if rs.nonEmpty => rs.map { case (lo, hi) =>
-        if (hi == null) col("term") >= lo else col("term") >= lo && col("term") < hi
-      }.reduce(_ || _)
-      case Some(_) => lit(false) // empty alphabet: nothing can match
-      case None => lit(true)
-    }
 
 
   // --- dictionary adapters (the reference's IDictionary family) --------

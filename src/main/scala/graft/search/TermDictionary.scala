@@ -28,11 +28,17 @@ final class TermDictionary private (terms: Array[String], df: Array[Long],
 
   /** Terms in the seeks' spans that pass `accept`, in seek order and,
     * within a seek, in dictionary order. */
-  def matching(m: TermMatch): Iterator[String] =
-    m.seeks.iterator.flatMap { s =>
+  def matching(m: TermMatch): Iterator[String] = indices(m.seeks).map(terms).filter(m.accept)
+
+  /** The rows in the seeks' spans, in the order of [[matching]]. */
+  def rows(seeks: Seq[DictSeek.Seek]): Iterator[TermDictRow] =
+    indices(seeks).map(i => TermDictRow(terms(i), df(i), totalTf(i), maxTf(i), maxNorm(i)))
+
+  private def indices(seeks: Seq[DictSeek.Seek]): Iterator[Int] =
+    seeks.iterator.flatMap { s =>
       val (lo, hi) = span(s)
-      Iterator.range(lo, hi).map(terms)
-    }.filter(m.accept)
+      Iterator.range(lo, hi)
+    }
 
   /** Index span [from, until) of the terms a seek covers. Bounds go
     * through the UTF-8 conversion Spark applies to a string literal. */
@@ -110,3 +116,37 @@ object TermDictionary {
   * walk, reference: Index/AutomatonTermsEnum.cs): the terms inside
   * `seeks` that pass the residual test `accept`. */
 final case class TermMatch(seeks: Seq[DictSeek.Seek], accept: String => Boolean)
+
+/** The terms within `maxEdits` edits of `q` (≙ FuzzyTermsEnum, reference:
+  * Search/FuzzyTermsEnum.cs) in a dictionary whose terms start with one
+  * of `firstChars`: the [[DictSeek.fuzzyRanges]] seeks (the whole
+  * dictionary where banding does not apply), then the residual edit
+  * distance, computed as Spark's `levenshtein` computes it.
+  *
+  * A whole-term match also keeps the length band |length(term) −
+  * q.length| <= maxEdits (code points on the term side, UTF-16 units for
+  * `q`). A `prefixMode` match (the FuzzySuggester candidate set) has no
+  * band; its distance is the least over the term's prefixes
+  * `substring(term, 1, n)` for n in q.length ± maxEdits, n >= 1. */
+final class FuzzyMatch(q: String, maxEdits: Int, firstChars: Seq[Char],
+    prefixMode: Boolean = false) {
+  val seeks: Seq[DictSeek.Seek] =
+    DictSeek.fuzzyRanges(q, maxEdits, firstChars, prefixMode = prefixMode) match {
+      case Some(ranges) => ranges.map { case (lo, hi) => DictSeek.Range(lo, hi) }
+      case None => Seq(DictSeek.Prefix(""))
+    }
+  private val qu = UTF8String.fromString(q)
+  private val prefixLengths = math.max(1, q.length - maxEdits) to (q.length + maxEdits)
+
+  /** The term's edit distance, or None when the term is not a match. */
+  def distance(term: String): Option[Int] = {
+    val u = UTF8String.fromString(term)
+    val d =
+      if (prefixMode) prefixLengths.iterator.map(n => u.substringSQL(1, n).levenshteinDistance(qu)).min
+      else if (math.abs(u.numChars - q.length) > maxEdits) maxEdits + 1
+      else u.levenshteinDistance(qu)
+    if (d <= maxEdits) Some(d) else None
+  }
+
+  def termMatch: TermMatch = TermMatch(seeks, distance(_).isDefined)
+}

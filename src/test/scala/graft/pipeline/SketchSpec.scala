@@ -7,7 +7,7 @@ import org.scalatest.funsuite.AnyFunSuite
 /** Count-min sketch: the CMS invariants against exact counts — never an
   * under-count, εN-bounded over-count at fixture scale, heavy-hitter
   * candidates a superset of the true heavy hitters, and the driver-side
-  * hash twin equal to the Column hashes (same BloomFilter-style check). */
+  * hash twin equal to the Column hashes. */
 class SketchSpec extends AnyFunSuite {
   private lazy val spark = SparkTestSession.spark
   import spark.implicits._

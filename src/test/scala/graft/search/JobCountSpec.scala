@@ -96,9 +96,10 @@ class JobCountSpec extends AnyFunSuite with BeforeAndAfterAll {
       val s = new Searcher(mk())
       assert(jobLayersOf(s.reader.termStats(Seq(a))) === Seq("search.dict"))
       assert(jobsOf(s.reader.termStats(Seq(a, b, "zz_absent"))) === 0) // was 1
-      // the rewrite was 1 job on the single reader, 2 on the multi reader
+      // the rewrite was 1 job on the single reader, 2 on the multi reader;
+      // a leading wildcard was 2 with the reversed-dictionary sidecar
       for (q <- Seq(PrefixQ(a.take(2)), WildcardQ(a.take(1) + "?" + a.slice(2, 3) + "*"),
-          FuzzyQ(a, 1))) {
+          FuzzyQ(a, 1), WildcardQ("*" + a.takeRight(2)))) {
         assert(jobsOf(s.rewrite(q)) === 0, q)
         assert(s.search(q, 5).nonEmpty, q) // warm
         val n = jobsOf(s.search(q, 5))
@@ -117,6 +118,16 @@ class JobCountSpec extends AnyFunSuite with BeforeAndAfterAll {
         assert(layers.nonEmpty && layers.forall(_ == "search.scan"), s"$q: $layers")
       }
     }
+  }
+
+  test("FuzzyLikeThis.rewrittenQuery runs no job once the dictionary is loaded") {
+    val r = new IndexReader(spark, gen(0))
+    val an = graft.analysis.Analyzer.forLang("en")
+    val text = s"$a $b"
+    assert(an.analyzeTerms(text).distinct.length === 2)
+    FuzzyLikeThis.rewrittenQuery(r, text, an) // warm
+    // was 2: one ranking collect per source term
+    assert(jobsOf(FuzzyLikeThis.rewrittenQuery(r, text, an)) === 0)
   }
 
   /** A positions index of generation 0's docs, and an adjacent term pair

@@ -4,7 +4,7 @@ import graft.SparkTestSession
 import graft.build.{IndexBuilder, IndexPaths, TermDictRow}
 import graft.corpus.CorpusGen
 import graft.postings.Pulsing
-import org.apache.spark.sql.Column
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.unsafe.types.UTF8String
 import org.scalatest.funsuite.AnyFunSuite
@@ -133,6 +133,107 @@ class TermDictionarySpec extends AnyFunSuite {
     }
   }
 
+  // The spell, suggest and FuzzyLikeThis candidate scans as they ran in
+  // Spark over `reader.termDict`, before they took their candidates from
+  // the driver-held dictionary.
+
+  private def refFuzzyBand(reader: IndexReader, term: String,
+                           maxEdits: Int): org.apache.spark.sql.Column =
+    DictSeek.fuzzyRanges(term, maxEdits, reader.termFirstChars) match {
+      case Some(rs) if rs.nonEmpty => rs.map { case (lo, hi) =>
+        if (hi == null) col("term") >= lo else col("term") >= lo && col("term") < hi
+      }.reduce(_ || _)
+      case Some(_) => lit(false) // empty alphabet: nothing can match
+      case None => lit(true)
+    }
+
+  private def refCompleteFuzzy(reader: IndexReader, input: String, maxEdits: Int,
+                               k: Int): DataFrame = {
+    val l = input.length
+    val dist = (math.max(1, l - maxEdits) to (l + maxEdits))
+      .map(n => levenshtein(substring(col("term"), 1, n), lit(input)))
+      .reduce(least(_, _))
+    val band = DictSeek.fuzzyRanges(input, maxEdits, reader.termFirstChars,
+      prefixMode = true) match {
+      case Some(rs) if rs.nonEmpty => rs.map { case (lo, hi) =>
+        if (hi == null) col("term") >= lo else col("term") >= lo && col("term") < hi
+      }.reduce(_ || _)
+      case Some(_) => lit(false)
+      case None => lit(true)
+    }
+    reader.termDict
+      .where(band)
+      .select(col("term"), col("df"), dist.as("dist"))
+      .where(col("dist") <= maxEdits)
+      .orderBy(col("dist"), col("df").desc, col("term")).limit(k)
+  }
+
+  private def refDidYouMean(reader: IndexReader, term: String, maxEdits: Int,
+                            k: Int): DataFrame =
+    reader.termDict
+      .where(refFuzzyBand(reader, term, maxEdits) &&
+        abs(length(col("term")) - lit(term.length)) <= maxEdits)
+      .select(col("term"), col("df"),
+        levenshtein(col("term"), lit(term)).as("dist"))
+      .where(col("dist") <= maxEdits && col("dist") > 0)
+      .orderBy(col("dist"), col("df").desc, col("term")).limit(k)
+
+  private def refDidYouMeanRanked(reader: IndexReader, term: String, maxEdits: Int,
+      k: Int, dist: (String, String) => Double): DataFrame = {
+    val spark = reader.termDict.sparkSession
+    import spark.implicits._
+    reader.termDict
+      .where(refFuzzyBand(reader, term, maxEdits) &&
+        abs(length(col("term")) - lit(term.length)) <= maxEdits &&
+        levenshtein(col("term"), lit(term)).between(1, maxEdits))
+      .select(col("term"), col("df"))
+      .as[(String, Long)]
+      .map { case (t, df) => (t, df, dist(term, t)) }
+      .toDF("term", "df", "sim")
+      .select(col("term"), col("df"), round(col("sim"), 6).as("sim"))
+      .orderBy(col("sim").desc, col("df").desc, col("term")).limit(k)
+  }
+
+  private def refRewrittenQuery(reader: IndexReader, text: String,
+      analyzer: graft.analysis.Analyzer, maxEdits: Int, maxNumTerms: Int,
+      maxVariantsPerTerm: Int): Query = {
+    val spark = reader.spark
+    import spark.implicits._
+    val numDocs = reader.collectionStats.maxDoc
+    val source = analyzer.analyzeTerms(text).distinct.toSeq
+    final case class Variant(src: String, term: String, df: Long, sim: Double)
+    val variants: Seq[Variant] = source.flatMap { t =>
+      reader.termDict
+        .where(refFuzzyBand(reader, t, maxEdits) &&
+          abs(length(col("term")) - lit(t.length)) <= maxEdits)
+        .select(col("term"), col("df"),
+          (lit(1.0) - levenshtein(col("term"), lit(t)).cast("double") /
+            least(length(col("term")), lit(t.length))).as("sim"),
+          levenshtein(col("term"), lit(t)).as("d"))
+        .where(col("d") <= maxEdits)
+        .orderBy(col("sim").desc, col("df").desc, col("term"))
+        .limit(maxVariantsPerTerm)
+        .select(col("term"), col("df"), col("sim"))
+        .as[(String, Long, Double)].collect()
+        .map { case (v, df, sim) => Variant(t, v, df, sim) }
+    }
+    val bySrc = variants.groupBy(_.src)
+    val scored = variants.map { v =>
+      val group = bySrc(v.src)
+      val srcDf = group.find(_.term == v.src).map(_.df)
+        .getOrElse(group.map(_.df).sum / group.size)
+      val idf = math.log(numDocs.toDouble / (srcDf + 1.0)) + 1.0
+      (v, v.sim * v.sim * idf)
+    }
+    val kept = scored.sortBy { case (v, s) => (-s, v.term) }.take(maxNumTerms)
+    val groups = kept.groupBy(_._1.src).toSeq.sortBy(_._1).map { case (_, vs) =>
+      BoolQ(should = vs.sortBy(_._1.term).map { case (v, s) =>
+        TermQ(v.term, s.toFloat)
+      })
+    }
+    BoolQ(should = groups)
+  }
+
   // --------------------------------------------------------- the checks
 
   /** Queries over a term the dictionary holds, plus the special terms. */
@@ -188,5 +289,37 @@ class TermDictionarySpec extends AnyFunSuite {
       assert(refExpansion(r, FuzzyQ("abcd", 2)).size > Searcher.FuzzyMaxExpansions)
       assert(s.rewrite(FuzzyQ("abcd", 2)).asInstanceOf[BoolQ].should.size ===
         Searcher.FuzzyMaxExpansions)
+    }
+
+  /** Rows and column types of a result, in order. */
+  private def table(df: DataFrame) =
+    (df.schema.map(f => f.name -> f.dataType), df.collect().toSeq)
+
+  for (kind <- Seq("single", "2-generation multi", "parallel"))
+    test(s"$kind reader: spell, suggest and FuzzyLikeThis candidates equal the Spark scans") {
+      import spark.implicits._
+      val r = readers.toMap.apply(kind)
+      val t = r.termDict.where(length($"term") >= 5 && $"term".rlike("^[a-z]+$"))
+        .orderBy($"df".desc, $"term").select($"term").as[String].head()
+      // a supplementary-plane term ("a" + X) and words the banding skips
+      val words = Seq(t, t.take(3) + "x" + t.drop(3), "abcd", "abdc", "a" + X, Z + X, "a" + Z,
+        "zqzqzq")
+      for (w <- words; e <- Seq(1, 2); k <- Seq(3, 100)) {
+        val at = s"$w~$e k=$k"
+        assert(table(Suggest.didYouMean(r, w, e, k)) === table(refDidYouMean(r, w, e, k)), at)
+        for (d <- Seq[(String, String) => Double](StringDistances.levenshteinSim,
+            StringDistances.jaroWinkler(_, _)))
+          assert(table(Suggest.didYouMeanRanked(r, w, e, k, d)) ===
+            table(refDidYouMeanRanked(r, w, e, k, d)), at)
+      }
+      for (w <- Seq(t.take(3), "ab", "abx", "a" + X, Z, Z + Z + "q"); e <- Seq(1, 2); k <- Seq(3, 100))
+        assert(table(Suggest.completeFuzzy(r, w, e, k)) === table(refCompleteFuzzy(r, w, e, k)),
+          s"$w~$e k=$k")
+      val ws = new graft.analysis.Analyzer(Set.empty,
+        tokenizer = graft.analysis.Tokenizers.whitespaceTokenize, lowerCaser = identity)
+      for (text <- Seq(s"$t abcd", s"abdc a$X $Z$X zqzqzq", s"$t ${t.take(3)}x${t.drop(3)}");
+           (e, numTerms, perTerm) <- Seq((1, 50, 50), (2, 50, 50), (2, 20, 8)))
+        assert(FuzzyLikeThis.rewrittenQuery(r, text, ws, e, numTerms, perTerm) ===
+          refRewrittenQuery(r, text, ws, e, numTerms, perTerm), s"$text ~$e")
     }
 }
