@@ -10,7 +10,7 @@ import scala.collection.mutable.ArrayBuffer
   * map where `correct(o)` = o + diff of the LAST entry with offset <= o
   * (identity before the first entry), so token offsets computed over the
   * rewritten text map back to the ORIGINAL text for highlighting and the
-  * offsets sidecar. */
+  * indexed offsets. */
 final case class FilteredText(text: String, offsets: Array[Int],
                               diffs: Array[Int]) {
   def correct(off: Int): Int =

@@ -6,8 +6,8 @@ package graft.analysis
   * tokenizer wrapper): a token `term|x` splits at the LAST delimiter
   * into the plain term plus a payload byte array produced by the
   * encoder. Tokens without the delimiter carry no payload. The payload
-  * rides the token through the analyzer chain into the index's payloads
-  * sidecar, position-aligned. */
+  * rides the token through the analyzer chain into the payloads of the
+  * postings row, position-aligned. */
 object DelimitedPayload {
 
   /** Big-endian float bytes (reference: Analysis/Payloads/FloatEncoder.cs

@@ -8,12 +8,12 @@ import org.apache.spark.sql.SparkSession
   * index. Per input: tombstones are folded (survivors only), pending
   * docvalue updates are applied, and docIds renumber densely in input
   * order (index i's survivors keep their relative order, based past index
-  * i-1's live count). Postings and every sidecar re-encode aligned through
-  * the shared multi-source rewrite; dictionary + collection stats rebuild
-  * from the merged postings. Unlike the NRT generation union
-  * (IndexReader.multi — a read-time view over pre-aligned docId ranges),
-  * this produces a single physical index from inputs that never
-  * coordinated their ids.
+  * i-1's live count). Postings re-encode, with their positions, offsets
+  * and payloads, through the shared multi-source rewrite; dictionary +
+  * collection stats rebuild from the merged postings. Unlike the NRT
+  * generation union (IndexReader.multi — a read-time view over
+  * pre-aligned docId ranges), this produces a single physical index
+  * from inputs that never coordinated their ids.
   *
   * Shape at scale: each input contributes one decode scan + one remap
   * equi-join; the union takes ONE (term, newId) range shuffle into the

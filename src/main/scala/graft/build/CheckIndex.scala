@@ -23,7 +23,8 @@ object CheckIndex {
     val problems = scala.collection.mutable.ArrayBuffer.empty[String]
 
     val docstats = Tables.read[DocStatRow](spark, IndexPaths.docstats(dir))
-    val postings = Tables.read[PostingRow](spark, IndexPaths.postings(dir)).as[PostingRow]
+    val postings = Tables.read[PostingsTableRow](spark, IndexPaths.postings(dir))
+      .as[PostingsTableRow]
     val dict = Tables.read[TermDictRow](spark, IndexPaths.termDict(dir)).as[TermDictRow]
     val cs = Tables.read[CollectionStatsRow](spark, IndexPaths.collectionStats(dir))
       .as[CollectionStatsRow].head()
@@ -52,7 +53,21 @@ object CheckIndex {
       problems += s"sumTotalTermFreq ${cs.sumTotalTermFreq} != Σ tokenCount $sumTtf"
 
     // 4. every block decodes; docIds ascending, in range; per-term stats
-    //    re-aggregated from decoded postings == term_dict (df, totalTf)
+    //    re-aggregated from decoded postings == term_dict (df, totalTf).
+    // 4b. the blobs of each level the index records: per-posting entry
+    //    counts == tf. A term may legitimately have NO blobs at all —
+    //    keyword (StringField) terms are DOCS_ONLY even in a positions-
+    //    enabled index (reference: FieldInfo.IndexOptions per field). NOT
+    //    legal: counts != tf, or a term with blobs on SOME of its blocks
+    //    but not others (mixed).
+    val levels = Seq[(String, Boolean, (Int, Array[Byte]) => Array[Int])](
+      ("positions", cs.hasPositions,
+        (n, bytes) => PostingsCodec.decodePositionsBlock(n, bytes).map(_.length)),
+      ("offsets", cs.hasOffsets,
+        (n, bytes) => PostingsCodec.decodeOffsetsBlock(n, bytes).map(_.length / 2)),
+      ("payloads", cs.hasPayloads,
+        (n, bytes) => PostingsCodec.decodePayloadsBlock(n, bytes).map(_.length)))
+    val entryCounts = levels.map { case (_, recorded, f) => if (recorded) Some(f) else None }
     val idLo = docBase
     val idHi = docBase + cs.maxDoc
     val perTerm = postings.map { r =>
@@ -62,66 +77,44 @@ object CheckIndex {
       var i = 1
       while (i < docIds.length) { if (docIds(i) <= docIds(i - 1)) asc = false; i += 1 }
       docIds.foreach(id => if (id < idLo || id >= idHi) inRange = false)
+      // per level: 1 with blob, 2 without, 4 counts != tf (bit flags)
+      val blobs = Seq(r.posBytes, r.offBytes, r.payBytes).zip(entryCounts).map {
+        case (_, None) => 0
+        case (null, Some(_)) => 2
+        case (b, Some(f)) =>
+          val cts = f(r.numDocs, b)
+          if (cts.length == tfs.length && cts.indices.forall(i => cts(i) == tfs(i))) 1 else 4
+      }
       (r.term, docIds.length.toLong, tfs.map(_.toLong).sum,
         if (asc) 0L else 1L, if (inRange) 0L else 1L,
-        if (docIds.length == r.numDocs && docIds.last == r.lastDocId) 0L else 1L)
+        if (docIds.length == r.numDocs && docIds.last == r.lastDocId) 0L else 1L,
+        blobs(0), blobs(1), blobs(2))
     }.groupByKey(_._1).mapGroups { (term, it) =>
       var df = 0L; var ttf = 0L; var bad = 0L
-      it.foreach { t => df += t._2; ttf += t._3; bad += t._4 + t._5 + t._6 }
-      (term, df, ttf, bad)
-    }.toDF("term", "df2", "ttf2", "bad")
+      val seen = new Array[Int](3)
+      it.foreach { t =>
+        df += t._2; ttf += t._3; bad += t._4 + t._5 + t._6
+        seen(0) |= t._7; seen(1) |= t._8; seen(2) |= t._9
+      }
+      // a level is bad for the term when counts differ or blocks mix
+      def badLevel(s: Int): Int = if ((s & 4) != 0 || s == 3) 1 else 0
+      (term, df, ttf, bad, badLevel(seen(0)), badLevel(seen(1)), badLevel(seen(2)))
+    }.toDF("term", "df2", "ttf2", "bad", "badPos", "badOff", "badPay")
     val joined = perTerm.join(dict.toDF(), Seq("term"), "full_outer")
-      .select($"term", $"df2", $"ttf2", $"bad", $"df", $"totalTf")
-    val badTerms = joined.filter(
-      $"df2".isNull || $"df".isNull || $"df2" =!= $"df" ||
-      $"ttf2" =!= $"totalTf" || $"bad" > 0).count()
-    if (badTerms > 0) problems += s"$badTerms terms with postings/dict mismatch"
+    val counts = joined.agg(
+      count(when($"df2".isNull || $"df".isNull || $"df2" =!= $"df" ||
+        $"ttf2" =!= $"totalTf" || $"bad" > 0, 1)),
+      count(when($"badPos" > 0, 1)), count(when($"badOff" > 0, 1)),
+      count(when($"badPay" > 0, 1))).head()
+    if (counts.getLong(0) > 0) problems += s"${counts.getLong(0)} terms with postings/dict mismatch"
+    levels.indices.foreach { i =>
+      val bad = counts.getLong(i + 1)
+      if (bad > 0) problems += s"$bad terms with miscounted/mixed ${levels(i)._1} blobs"
+    }
 
     // 5. sumDocFreq cross-check
     val sumDf = dict.agg(coalesce(sum($"df"), lit(0L))).collect()(0).getLong(0)
     if (sumDf != cs.sumDocFreq) problems += s"sumDocFreq ${cs.sumDocFreq} != Σ df $sumDf"
-
-    // 6b. sidecars (positions / char offsets, when present): every blob
-    //     aligns with its posting block and per-posting entry counts ==
-    //     tf. A term may legitimately have NO sidecar at all — keyword
-    //     (StringField) terms are DOCS_ONLY even in a positions-enabled
-    //     index (reference: FieldInfo.IndexOptions per field). NOT legal:
-    //     a blob without its posting block (orphan), counts != tf, or a
-    //     term with blobs for SOME of its blocks but not others (mixed).
-    val sidecars: Seq[(String, String, (Int, Array[Byte]) => Array[Int])] = Seq(
-      (IndexPaths.positions(dir), "positions",
-        (n, bytes) => PostingsCodec.decodePositionsBlock(n, bytes).map(_.length)),
-      (IndexPaths.offsets(dir), "offsets",
-        (n, bytes) => PostingsCodec.decodeOffsetsBlock(n, bytes).map(_.length / 2)),
-      (IndexPaths.payloads(dir), "payloads",
-        (n, bytes) => PostingsCodec.decodePayloadsBlock(n, bytes).map(_.length)))
-    for ((pathStr, label, entryCounts) <- sidecars) {
-      val scPath = new org.apache.hadoop.fs.Path(pathStr)
-      if (scPath.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(scPath)) {
-        val t = postings.toDF().select($"term", $"firstDocId", $"numDocs", $"bytes")
-          .toDF("term", "firstDocId", "tn", "tbytes")
-        val p = Tables.read[PositionsRow](spark, pathStr)
-          .select($"term", $"firstDocId", $"bytes").toDF("term", "firstDocId", "scbytes")
-        val joined = t.join(p, Seq("term", "firstDocId"), "full_outer")
-        val counted = entryCounts
-        val perBlock = joined.select($"term", $"firstDocId", $"tn", $"tbytes", $"scbytes")
-          .as[(String, Option[Long], Option[Int], Array[Byte], Array[Byte])]
-          .map { case (term, first, tn, tbytes, scbytes) =>
-            if (first.isEmpty || tn.isEmpty || tbytes == null) (term, 0L, 0L, 1L) // orphan blob
-            else if (scbytes == null) (term, 0L, 1L, 0L) // block without sidecar
-            else {
-              val (_, tfs, _) = PostingsCodec.decodeBlock(first.get, tn.get, tbytes)
-              val cts = counted(tn.get, scbytes)
-              if (cts.indices.forall(i => cts(i) == tfs(i))) (term, 1L, 0L, 0L)
-              else (term, 0L, 0L, 1L) // counts != tf
-            }
-          }.toDF("term", "withSc", "noSc", "bad")
-        val bad = perBlock.groupBy($"term")
-          .agg(sum($"withSc").as("w"), sum($"noSc").as("n"), sum($"bad").as("b"))
-          .filter($"b" > 0 || ($"w" > 0 && $"n" > 0)).count()
-        if (bad > 0) problems += s"$bad terms with misaligned/mixed $label sidecars"
-      }
-    }
 
     // 6. sha256 per-row invariant vs the source corpus
     corpus.foreach { c =>

@@ -6,20 +6,18 @@ import org.apache.spark.sql.functions._
 
 /** Streaming re-encoder for (term, docId, tf, norm, positions, offsets,
   * payloads) rows sorted by (term, docId) within a partition: buffers one
-  * term's run in arrays and, on term change, emits self-contained posting
-  * blocks, each paired with its aligned sidecar blobs — one pass, so
-  * block boundaries (term, firstDocId) agree by construction (a budget
-  * flush mid-run would also be valid — blocks are independent — but a
+  * term's run in arrays and, on term change, emits self-contained
+  * postings table rows, each block with its blobs (a budget flush
+  * mid-run would also be valid — blocks are independent — but a
   * partition's run of one term is at most the partition size). Rows whose
-  * sidecar entry is null (keyword/DOCS_ONLY terms, or a sidecar level the
-  * index lacks) emit a null blob — the caller writes no sidecar row for
-  * them, preserving the per-term IndexOptions through the rewrite. */
-private final class PostingsSidecarReencoder(
+  * list is null (keyword/DOCS_ONLY terms, or a level the index lacks)
+  * emit a null blob, preserving the per-term IndexOptions through the
+  * rewrite. */
+private final class PostingsReencoder(
     it: Iterator[(String, Long, Int, Int, Array[Int], Array[Int], Array[Array[Byte]])],
     segId: Int)
-    extends Iterator[(PostingRow, Array[Byte], Array[Byte], Array[Byte])] {
-  private val out = scala.collection.mutable
-    .Queue.empty[(PostingRow, Array[Byte], Array[Byte], Array[Byte])]
+    extends Iterator[PostingsTableRow] {
+  private val out = scala.collection.mutable.Queue.empty[PostingsTableRow]
   private var curTerm: String = null
   private var n = 0
   private var ids = new Array[Long](128)
@@ -29,11 +27,11 @@ private final class PostingsSidecarReencoder(
   private var offs = new Array[Array[Int]](128)
   private var pays = new Array[Array[Array[Byte]]](128)
 
-  private def sidecarBytes[T <: AnyRef](slices: Array[T],
-                                        enc: Array[T] => Array[Byte]): Array[Byte] = {
+  private def blobBytes[T <: AnyRef](slices: Array[T],
+                                     enc: Array[T] => Array[Byte]): Array[Byte] = {
     val allNull = slices.forall(_ == null)
     require(allNull || slices.forall(_ != null),
-      s"term $curTerm mixes sidecar-carrying and sidecar-less postings")
+      s"term $curTerm mixes blob-carrying and blob-less postings")
     if (allNull) null else enc(slices)
   }
 
@@ -50,11 +48,11 @@ private final class PostingsSidecarReencoder(
         val pSlice = java.util.Arrays.copyOfRange(poss, from, from + b.numDocs)
         val oSlice = java.util.Arrays.copyOfRange(offs, from, from + b.numDocs)
         val ySlice = java.util.Arrays.copyOfRange(pays, from, from + b.numDocs)
-        out.enqueue((PostingRow(curTerm, b.firstDocId, b.lastDocId, b.numDocs,
-          b.maxTf, b.maxNorm, s, segId, b.bytes),
-          sidecarBytes(pSlice, PostingsCodec.encodePositionsBlock),
-          sidecarBytes(oSlice, PostingsCodec.encodeOffsetsBlock),
-          sidecarBytes(ySlice, PostingsCodec.encodePayloadsBlock)))
+        out.enqueue(PostingsTableRow(curTerm, b.firstDocId, b.lastDocId, b.numDocs,
+          b.maxTf, b.maxNorm, s, segId, b.bytes,
+          blobBytes(pSlice, PostingsCodec.encodePositionsBlock),
+          blobBytes(oSlice, PostingsCodec.encodeOffsetsBlock),
+          blobBytes(ySlice, PostingsCodec.encodePayloadsBlock)))
       }
     n = 0
   }
@@ -78,7 +76,7 @@ private final class PostingsSidecarReencoder(
     out.nonEmpty
   }
 
-  override def next(): (PostingRow, Array[Byte], Array[Byte], Array[Byte]) = {
+  override def next(): PostingsTableRow = {
     if (!hasNext) throw new NoSuchElementException
     out.dequeue()
   }
@@ -160,13 +158,20 @@ object Deletes {
   /** Multi-source generalization of [[rewriteWithRemap]]: each source
     * index contributes its rows under its own remap, the union re-encodes
     * into ONE standalone index (the SegmentMerger shape; also the
-    * [[AddIndexes]] engine). All sources must carry the same sidecar
-    * levels — mixing a positioned index with a positions-less one would
-    * silently demote terms, so it is rejected up front. */
+    * [[AddIndexes]] engine). All sources must carry the same levels
+    * (collection_stats) — mixing a positioned index with a positions-less
+    * one would silently demote terms, so it is rejected up front. */
   private[build] def rewriteMany(spark: SparkSession,
       sources: Seq[(String, DataFrame)], outDir: String,
       numPartitions: Int, blockPrune: Column = lit(true)): Unit = {
     import spark.implicits._
+    val levels = Tables.read[CollectionStatsRow](spark,
+        sources.map { case (d, _) => IndexPaths.collectionStats(d) }: _*)
+      .as[CollectionStatsRow].collect()
+      .map(cs => (cs.hasPositions, cs.hasOffsets, cs.hasPayloads)).distinct
+    require(levels.length == 1,
+      "rewriteMany: sources carry different levels (positions, offsets, payloads): " +
+        levels.mkString(", "))
     val outPath = new org.apache.hadoop.fs.Path(outDir)
     val fs = outPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (fs.exists(outPath)) fs.delete(outPath, true)
@@ -192,83 +197,42 @@ object Deletes {
     remapDocIdTable(sources.map { case (d, r) => (DocValues.readDocstats(spark, d), r) },
       IndexPaths.docstats(outDir))
 
-    // postings: decode the blocks that pass `blockPrune`, each with its
-    // aligned sidecar blobs -> equi-join the remap (inner join drops dead
-    // postings) -> range-shuffle by (term, newId) -> streaming re-encode
-    // per partition, postings AND sidecars in one pass so the rebuilt
-    // block boundaries stay aligned (ascending newIds per term within a
-    // partition; hot terms split across partitions at newId boundaries,
-    // blocks stay self-contained)
-    val sidecars = Seq[(String => String, String)](
-      (IndexPaths.positions, "posBytes"),
-      (IndexPaths.offsets, "offBytes"),
-      (IndexPaths.payloads, "payBytes"))
-    val flags = sources.map { case (d, _) =>
-      sidecars.map { case (path, _) => fs.exists(new org.apache.hadoop.fs.Path(path(d))) }
-    }
-    require(flags.distinct.size == 1,
-      s"rewriteMany: sources carry different sidecar levels: ${flags.mkString(", ")}")
-    val levels = sidecars.zip(flags.head)
-    val present = levels.collect { case (s, true) => s }
-
-    // LEFT joins: keyword (DOCS_ONLY) terms legitimately have no sidecar
-    // blobs — their postings pass through with null lists instead of
-    // being dropped; an absent level is an all-null column
-    def decodedFor(dir: String, remap: DataFrame): DataFrame = {
-      val t = spark.read.parquet(IndexPaths.postings(dir))
+    // postings: decode the blocks that pass `blockPrune`, each with the
+    // blobs of its row (null lists where a term or the index has none) ->
+    // equi-join the remap (inner join drops dead postings) ->
+    // range-shuffle by (term, newId) -> streaming re-encode per partition
+    // (ascending newIds per term within a partition; hot terms split
+    // across partitions at newId boundaries, blocks stay self-contained)
+    def decodedFor(dir: String, remap: DataFrame): DataFrame =
+      Tables.read[PostingsTableRow](spark, IndexPaths.postings(dir))
         .where(blockPrune)
-        .select($"term", $"firstDocId", $"numDocs", $"bytes")
-        .toDF("term", "firstDocId", "tn", "tbytes")
-      levels.foldLeft(t) { case (df, ((path, as), has)) =>
-        if (has)
-          df.join(spark.read.parquet(path(dir))
-            .select($"term", $"firstDocId", $"bytes").toDF("term", "firstDocId", as),
-            Seq("term", "firstDocId"), "left_outer")
-        else df.withColumn(as, lit(null).cast("binary"))
-      }
-        .select($"term", $"firstDocId", $"tn", $"tbytes", $"posBytes", $"offBytes", $"payBytes")
-        .as[(String, Long, Int, Array[Byte], Array[Byte], Array[Byte], Array[Byte])]
-        .flatMap { case (term, firstDocId, n, tbytes, pbytes, obytes, ybytes) =>
-          val (ids, tfs, norms) = PostingsCodec.decodeBlock(firstDocId, n, tbytes)
+        .as[PostingsTableRow]
+        .flatMap { r =>
+          val n = r.numDocs
+          val (ids, tfs, norms) = PostingsCodec.decodeBlock(r.firstDocId, n, r.bytes)
           val poss =
-            if (pbytes == null) new Array[Array[Int]](n)
-            else PostingsCodec.decodePositionsBlock(n, pbytes)
+            if (r.posBytes == null) new Array[Array[Int]](n)
+            else PostingsCodec.decodePositionsBlock(n, r.posBytes)
           val offs =
-            if (obytes == null) new Array[Array[Int]](n)
-            else PostingsCodec.decodeOffsetsBlock(n, obytes)
+            if (r.offBytes == null) new Array[Array[Int]](n)
+            else PostingsCodec.decodeOffsetsBlock(n, r.offBytes)
           val pays =
-            if (ybytes == null) new Array[Array[Array[Byte]]](n)
-            else PostingsCodec.decodePayloadsBlock(n, ybytes)
+            if (r.payBytes == null) new Array[Array[Array[Byte]]](n)
+            else PostingsCodec.decodePayloadsBlock(n, r.payBytes)
           ids.indices.iterator.map(i =>
-            (term, ids(i), tfs(i), norms(i), poss(i), offs(i), pays(i)))
+            (r.term, ids(i), tfs(i), norms(i), poss(i), offs(i), pays(i)))
         }.toDF("term", "oldId", "tf", "norm", "ps", "os", "ys")
         .join(remap, Seq("oldId"))
         .select($"term", $"newId", $"tf", $"norm", $"ps", $"os", $"ys")
-    }
-    val combined = sources.map { case (d, r) => decodedFor(d, r) }
+    sources.map { case (d, r) => decodedFor(d, r) }
       .reduce(_ union _)
       .repartitionByRange(numPartitions, $"term", $"newId")
       .sortWithinPartitions($"term", $"newId")
       .as[(String, Long, Int, Int, Array[Int], Array[Int], Array[Array[Byte]])]
       .mapPartitions { it =>
-        val segId = org.apache.spark.TaskContext.getPartitionId()
-        new PostingsSidecarReencoder(it, segId)
-      }.toDF("post", "posBytes", "offBytes", "payBytes")
-    // each sidecar write re-reads the re-encoded rows: keep them once
-    if (present.nonEmpty) combined.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    combined.select(col("post.*"))
+        new PostingsReencoder(it, org.apache.spark.TaskContext.getPartitionId())
+      }
       .write.mode(SaveMode.Overwrite).parquet(IndexPaths.postings(outDir))
-    present.foreach { case (path, byteCol) =>
-      combined.where(col(byteCol).isNotNull)
-        .select(col("post.term").as("term"),
-          col("post.firstDocId").as("firstDocId"),
-          col("post.lastDocId").as("lastDocId"),
-          col("post.numDocs").as("numDocs"),
-          col("post.segId").as("segId"),
-          col(byteCol).as("bytes"))
-        .write.mode(SaveMode.Overwrite).parquet(path(outDir))
-    }
-    combined.unpersist()
 
     // dictionary + collection stats recomputed from the rewritten tables
     IndexBuilder.buildDictAndStats(spark, outDir, numPartitions)

@@ -58,15 +58,15 @@ import scala.jdk.CollectionConverters._
   * Spark jobs per stage (adaptive execution runs each shuffle stage as
   * its own job; a range shuffle adds a sampling job, a broadcast join a
   * collect job). No job re-reads what the build knows: tables open with
-  * their row type's schema ([[Tables.read]]), the flush directory
-  * listing answers the sidecar probes, and the collection stats are
-  * counted while docstats and term_dict are written.
+  * their row type's schema ([[Tables.read]]), and the collection stats
+  * (with the levels the postings carry) are counted while docstats and
+  * term_dict are written.
   *   - flush (7): sample, shuffle and write of the flush; the per-
   *     partition doc counts (shuffle, collect); the docs_offsets write;
   *     the manifest commit.
-  *   - postings (7, plus 4 per sidecar): per table, the offsets
-  *     broadcast, sample, shuffle and write; the manifest's per-partition
-  *     stats (shuffle, collect); the manifest commit.
+  *   - postings (7): the offsets broadcast, sample, shuffle and write of
+  *     the one postings table (blobs in its rows); the manifest's per-
+  *     partition stats (shuffle, collect); the manifest commit.
   *   - stats (9, plus a sample when term_dict has more than one
   *     partition): docstats (broadcast, sample, shuffle, write); term_dict
   *     (aggregate shuffle, range shuffle, write); one single-partition
@@ -198,37 +198,17 @@ object IndexBuilder {
   def buildPostings(spark: SparkSession, dir: String, numPartitions: Int): Unit =
       labelled(spark, "build.postings", dir) {
     import spark.implicits._
-    val flush = Tables.read[FlushRow](spark, IndexPaths.flush(dir))
-    val blocks = flush
+    val blocks = Tables.read[FlushRow](spark, IndexPaths.flush(dir))
       .where($"kind" === "t")
       .join(broadcast(offsetsDf(spark, dir)), $"segId" === $"pid")
       .select($"term", ($"firstDocId" + $"offset").as("firstDocId"),
         ($"lastDocId" + $"offset").as("lastDocId"), $"numDocs", $"maxTf",
-        $"maxNorm", $"sumTf", $"segId", $"bytes").as[PostingRow]
+        $"maxNorm", $"sumTf", $"segId", $"bytes", $"posBytes", $"offBytes",
+        $"payBytes").as[PostingsTableRow]
     blocks
       .repartitionByRange(numPartitions, $"term", $"firstDocId")
       .sortWithinPartitions($"term", $"firstDocId")
       .write.mode(SaveMode.Overwrite).parquet(IndexPaths.postings(dir))
-    // optional sidecars (kind 'p' = positions, 'o' = char offsets),
-    // aligned 1:1 with the posting blocks: same rebase, same term-sorted
-    // layout. partitionBy("kind") creates flush/kind=<k> only when the
-    // flush wrote rows of that kind, so the directory answers the probe.
-    val fs = new org.apache.hadoop.fs.Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    for ((kind, path) <- Seq("p" -> IndexPaths.positions(dir),
-                             "o" -> IndexPaths.offsets(dir),
-                             "y" -> IndexPaths.payloads(dir))) {
-      if (fs.exists(new org.apache.hadoop.fs.Path(s"${IndexPaths.flush(dir)}/kind=$kind"))) {
-        flush
-          .where($"kind" === kind)
-          .join(broadcast(offsetsDf(spark, dir)), $"segId" === $"pid")
-          .select($"term", ($"firstDocId" + $"offset").as("firstDocId"),
-            ($"lastDocId" + $"offset").as("lastDocId"), $"numDocs", $"segId",
-            $"bytes").as[PositionsRow]
-          .repartitionByRange(numPartitions, $"term", $"firstDocId")
-          .sortWithinPartitions($"term", $"firstDocId")
-          .write.mode(SaveMode.Overwrite).parquet(path)
-      }
-    }
     val p = Tables.read[PostingRow](spark, IndexPaths.postings(dir))
     val stats = p.groupBy(spark_partition_id().as("pid"))
       .agg(min($"term").as("tmin"), max($"term").as("tmax"),
@@ -290,23 +270,33 @@ object IndexBuilder {
   }
 
   /** Writes term_dict (aggregated from the postings in `dir`) and
-    * collection_stats, given the doc totals of `dir`'s docstats. The
-    * dictionary write counts sumDocFreq on the way. Returns the
-    * collection stats. */
+    * collection_stats, given the doc totals of `dir`'s docstats — the one
+    * writer of collection_stats, for build, rewrite and compaction. The
+    * dictionary write counts sumDocFreq on the way, and the terms whose
+    * postings carry each blob: the index carries a level when any term
+    * does. Returns the collection stats. */
   private[graft] def writeDictAndStats(spark: SparkSession, dir: String, numPartitions: Int,
                                        maxDoc: Long, sumTtf: Long): CollectionStatsRow = {
     import spark.implicits._
-    val dict = Tables.read[PostingRow](spark, IndexPaths.postings(dir))
+    val blobs = PostingsTableRow.blobColumns
+    val dict = Tables.read[PostingsTableRow](spark, IndexPaths.postings(dir))
       .groupBy($"term")
-      .agg(sum($"numDocs").as("df"), sum($"sumTf").as("totalTf"),
-        max($"maxTf").as("maxTf"), max($"maxNorm").as("maxNorm"))
+      .agg(sum($"numDocs").as("df"), sum($"sumTf").as("totalTf") +:
+        max($"maxTf").as("maxTf") +: max($"maxNorm").as("maxNorm") +:
+        blobs.map(c => max(col(c).isNotNull).as(c)): _*)
       .repartitionByRange(math.max(1, numPartitions / 8), $"term")
       .sortWithinPartitions($"term")
     val sumDocFreq = spark.sparkContext.longAccumulator("sumDocFreq")
-    counting(dict)(r => sumDocFreq.add(r.getLong(1)))
+    val carried = blobs.map(c => spark.sparkContext.longAccumulator(c))
+    counting(dict) { r =>
+      sumDocFreq.add(r.getLong(1))
+      carried.indices.foreach(i => if (r.getBoolean(5 + i)) carried(i).add(1))
+    }.drop(blobs: _*)
       .write.mode(SaveMode.Overwrite).parquet(IndexPaths.termDict(dir))
+    val Seq(pos, off, pay) = carried.map(_.sum > 0)
     val cs = CollectionStatsRow(maxDoc = maxDoc, docCount = maxDoc,
-      sumTotalTermFreq = sumTtf, sumDocFreq = sumDocFreq.sum)
+      sumTotalTermFreq = sumTtf, sumDocFreq = sumDocFreq.sum,
+      hasPositions = pos, hasOffsets = off, hasPayloads = pay)
     spark.createDataset(Seq(cs)).coalesce(1)
       .write.mode(SaveMode.Overwrite).parquet(IndexPaths.collectionStats(dir))
     cs
@@ -328,19 +318,13 @@ object IndexBuilder {
       val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
       if (fs.exists(path)) fs.delete(path, true)
     }
-    def timed(stage: String)(f: => Unit): Unit = {
-      val t0 = System.nanoTime()
-      f
-      if (sys.env.contains("SPARK_GRAFT_STAGE_TIMES"))
-        System.err.println(f"[build] $stage%-9s ${(System.nanoTime() - t0) / 1e9}%.2fs")
-    }
     if (!resume || !stageDone(spark, dir, "flush"))
-      timed("flush")(buildFlush(spark, corpus, dir, numPartitions, analyzerFor,
-        docIdBase, keywordFields, indexPositions, indexOffsets, indexPayloads))
+      buildFlush(spark, corpus, dir, numPartitions, analyzerFor,
+        docIdBase, keywordFields, indexPositions, indexOffsets, indexPayloads)
     if (!resume || !stageDone(spark, dir, "postings"))
-      timed("postings")(buildPostings(spark, dir, numPartitions))
+      buildPostings(spark, dir, numPartitions)
     if (!resume || !stageDone(spark, dir, "stats"))
-      timed("stats")(buildStats(spark, dir, numPartitions))
+      buildStats(spark, dir, numPartitions)
   }
 }
 
@@ -417,15 +401,9 @@ private final class FlushIterator(docs: Iterator[SourceFile], segId: Int,
   private val out = mutable.Queue.empty[FlushRow]
 
   private def emptyT = FlushRow("t", null, -1L, -1L, -1, -1, -1, -1L, segId,
-    null, -1L, null, null, null, null, null, null, -1, -1)
+    null, null, null, null, -1L, null, null, null, null, null, null, -1, -1)
   private def emptyD = FlushRow("d", null, -1L, -1L, -1, -1, -1, -1L, segId,
-    null, -1L, null, null, null, null, null, null, -1, -1)
-  private def emptyP = FlushRow("p", null, -1L, -1L, -1, -1, -1, -1L, segId,
-    null, -1L, null, null, null, null, null, null, -1, -1)
-  private def emptyO = FlushRow("o", null, -1L, -1L, -1, -1, -1, -1L, segId,
-    null, -1L, null, null, null, null, null, null, -1, -1)
-  private def emptyY = FlushRow("y", null, -1L, -1L, -1, -1, -1, -1L, segId,
-    null, -1L, null, null, null, null, null, null, -1, -1)
+    null, null, null, null, -1L, null, null, null, null, null, null, -1, -1)
 
   private def flushSegment(): Unit = {
     // deterministic term order (≙ TermsHashPerField.SortPostings, reference:
@@ -443,30 +421,16 @@ private final class FlushIterator(docs: Iterator[SourceFile], segId: Int,
         var s = 0L
         var i = 0
         while (i < blk.numDocs) { s += tfArr(off + i); i += 1 }
+        // the block's blobs, sliced to its postings (keyword-field terms
+        // carry none)
+        def blob[T <: AnyRef](per: Array[T], enc: Array[T] => Array[Byte]): Array[Byte] =
+          if (per == null) null else enc(java.util.Arrays.copyOfRange[T](per, off, off + blk.numDocs))
         out.enqueue(emptyT.copy(term = t, firstDocId = blk.firstDocId,
           lastDocId = blk.lastDocId, numDocs = blk.numDocs, maxTf = blk.maxTf,
-          maxNorm = blk.maxNorm, sumTf = s, bytes = blk.bytes))
-        if (b.poss != null) {
-          // aligned positions block (keyword-field terms have no poss)
-          val slice = java.util.Arrays.copyOfRange(b.poss, off, off + blk.numDocs)
-          out.enqueue(emptyP.copy(term = t, firstDocId = blk.firstDocId,
-            lastDocId = blk.lastDocId, numDocs = blk.numDocs,
-            bytes = PostingsCodec.encodePositionsBlock(slice)))
-        }
-        if (b.offs != null) {
-          // aligned char-offset block (..._AND_OFFSETS level)
-          val slice = java.util.Arrays.copyOfRange(b.offs, off, off + blk.numDocs)
-          out.enqueue(emptyO.copy(term = t, firstDocId = blk.firstDocId,
-            lastDocId = blk.lastDocId, numDocs = blk.numDocs,
-            bytes = PostingsCodec.encodeOffsetsBlock(slice)))
-        }
-        if (b.pays != null) {
-          // aligned payloads block (the .pay stream analog)
-          val slice = java.util.Arrays.copyOfRange(b.pays, off, off + blk.numDocs)
-          out.enqueue(emptyY.copy(term = t, firstDocId = blk.firstDocId,
-            lastDocId = blk.lastDocId, numDocs = blk.numDocs,
-            bytes = PostingsCodec.encodePayloadsBlock(slice)))
-        }
+          maxNorm = blk.maxNorm, sumTf = s, bytes = blk.bytes,
+          posBytes = blob(b.poss, PostingsCodec.encodePositionsBlock),
+          offBytes = blob(b.offs, PostingsCodec.encodeOffsetsBlock),
+          payBytes = blob(b.pays, PostingsCodec.encodePayloadsBlock)))
         off += blk.numDocs
         // lineage (≙ what segments_N records per segment)
         if (mTermMin == null || t < mTermMin) mTermMin = t

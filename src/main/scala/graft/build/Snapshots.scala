@@ -7,7 +7,7 @@ import org.apache.spark.sql.functions._
   * Index/SnapshotDeletionPolicy.cs + PersistentSnapshotDeletionPolicy.cs):
   * pin the index's CURRENT commit point so later deletes and docvalue
   * updates don't change what a pinned reader sees. Because postings,
-  * sidecars and doc tables are immutable once committed and all mutation
+  * stats and doc tables are immutable once committed and all mutation
   * is append-only (tombstones, the updates stream), a snapshot is
   * metadata-sized: a copy of the live tombstone set plus the updates-
   * generation watermark — no data files are copied or locked, exactly the

@@ -9,14 +9,21 @@ import scala.reflect.runtime.universe.TypeTag
   * An index directory contains:
   *   flush/kind=d/      stored fields (≙ the reference's compressed row
   *                      store, Codecs/Compressing), partition-local ids
-  *   flush/kind=t/      raw per-partition posting blocks (pre-merge)
+  *   flush/kind=t/      raw per-partition posting blocks (pre-merge),
+  *                      each with its positions/offsets/payloads blobs
   *   docs_offsets/      per-partition docId offsets (local → global)
   *   docs/              only in REWRITTEN indexes (expunge/compact):
   *                      docId-materialized stored fields
   *   docstats/          per-doc stats sidecar (norm byte ≙ .nvd/.nvm)
-  *   postings/          term-sorted posting blocks (≙ .doc, Lucene41)
+  *   postings/          term-sorted posting blocks (≙ .doc, Lucene41),
+  *                      one [[PostingsTableRow]] per block: the block's
+  *                      positions, char offsets and payloads (≙ .pos and
+  *                      .pay) ride in nullable blob columns of its row, so
+  *                      a docs-and-freqs scan reads none of them
   *   term_dict/         per-term stats (≙ BlockTree .tim/.tip)
-  *   collection_stats/  one row (≙ per-segment FieldInfos/stats)
+  *   collection_stats/  one row (≙ per-segment FieldInfos/stats), with the
+  *                      levels (positions, offsets, payloads) the index
+  *                      carries
   *   manifest/          per-stage, per-partition lineage rows (≙ segments_N,
   *                      reference: Index/SegmentInfos.cs:49-69)
   */
@@ -71,8 +78,35 @@ object PostingRow {
   }
 }
 
+/** A postings table row: a [[PostingRow]] block plus its optional blobs,
+  * in the bytes [[PostingsCodec]] encodes per block — `posBytes`
+  * (per-posting positions), `offBytes` (per-posting (start, end) char
+  * offsets) and `payBytes` (per-position payloads). A blob is null where
+  * the index does not carry its level ([[CollectionStatsRow]]) and for
+  * keyword (DOCS_ONLY) terms. Read and write the whole table through this
+  * type; the scoring scans select [[PostingRow.columns]] only. */
+final case class PostingsTableRow(
+    term: String,
+    firstDocId: Long,
+    lastDocId: Long,
+    numDocs: Int,
+    maxTf: Int,
+    maxNorm: Int,
+    sumTf: Long,
+    segId: Int,
+    bytes: Array[Byte],
+    posBytes: Array[Byte],
+    offBytes: Array[Byte],
+    payBytes: Array[Byte])
+
+object PostingsTableRow {
+  /** The blob columns, in level order: positions, offsets, payloads. */
+  val blobColumns: Seq[String] = Seq("posBytes", "offBytes", "payBytes")
+}
+
 /** Union row emitted by the single fused sort+tokenize pass (segment
-  * flush): kind 't' carries a posting block, kind 'd' a stored doc (full
+  * flush): kind 't' carries a posting block with its blobs (as
+  * [[PostingsTableRow]]), kind 'd' a stored doc (full
   * content — the flush table's d-partition IS the stored-fields table)
   * plus its stats. Written once, partitioned by kind. docId and block
   * doc bounds are partition-LOCAL ordinals; the global doc space is
@@ -88,6 +122,9 @@ final case class FlushRow(
     sumTf: Long,
     segId: Int,
     bytes: Array[Byte],
+    posBytes: Array[Byte],
+    offBytes: Array[Byte],
+    payBytes: Array[Byte],
     docId: Long,
     repo: String,
     path: String,
@@ -97,17 +134,6 @@ final case class FlushRow(
     sha256: String,
     tokenCount: Int,
     norm: Int)
-
-/** One positions block (DOCS_AND_FREQS_AND_POSITIONS payload, opt-in):
-  * aligned 1:1 with the posting block of the same (term, firstDocId);
-  * bytes = per-posting VInt(count) + delta-coded positions. */
-final case class PositionsRow(
-    term: String,
-    firstDocId: Long,
-    lastDocId: Long,
-    numDocs: Int,
-    segId: Int,
-    bytes: Array[Byte])
 
 final case class TermDictRow(
     term: String,
@@ -125,11 +151,18 @@ object TermDictRow {
       math.max(a.maxTf, b.maxTf), math.max(a.maxNorm, b.maxNorm))
 }
 
+/** The collection's statistics and the levels its postings carry (the
+  * FieldInfos IndexOptions analog): `hasPositions`, `hasOffsets` and
+  * `hasPayloads` say whether the postings rows' `posBytes`, `offBytes`
+  * and `payBytes` blobs are present (for every non-keyword term). */
 final case class CollectionStatsRow(
     maxDoc: Long,
     docCount: Long,
     sumTotalTermFreq: Long,
-    sumDocFreq: Long)
+    sumDocFreq: Long,
+    hasPositions: Boolean,
+    hasOffsets: Boolean,
+    hasPayloads: Boolean)
 
 final case class ManifestRow(
     stage: String,
@@ -155,13 +188,6 @@ object IndexPaths {
   def docs(dir: String) = s"$dir/docs"
   def flush(dir: String) = s"$dir/flush"
   def postings(dir: String) = s"$dir/postings"
-  def positions(dir: String) = s"$dir/positions"
-  /** Character-offset sidecar (..._AND_OFFSETS level), aligned like
-    * positions; rows share the [[PositionsRow]] schema. */
-  def offsets(dir: String) = s"$dir/offsets"
-  /** Per-position payload sidecar (the .pay stream analog), aligned like
-    * positions; rows share the [[PositionsRow]] schema. */
-  def payloads(dir: String) = s"$dir/payloads"
   def docstats(dir: String) = s"$dir/docstats"
   def termDict(dir: String) = s"$dir/term_dict"
   def collectionStats(dir: String) = s"$dir/collection_stats"

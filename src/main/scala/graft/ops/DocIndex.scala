@@ -3,7 +3,7 @@ package graft.ops
 import graft.analysis.Analyzer
 import graft.build.{IndexBuilder, IndexPaths, PostingRow, CollectionStatsRow}
 import graft.corpus.SourceFile
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Engine index over the driver's `documents` testdata table, used by the
@@ -23,7 +23,7 @@ import org.apache.spark.sql.functions._
   */
 object DocIndex {
   /** bump when the on-disk index format changes (invalidates caches) */
-  private val FormatVersion = 6
+  private val FormatVersion = 7
 
   private def cacheDir(sfDir: String): String = {
     val key = sfDir.replaceAll("[^a-zA-Z0-9.]", "_")
@@ -43,15 +43,26 @@ object DocIndex {
       .as[SourceFile]
   }
 
-  /** Build (or reuse) the index for a scale-factor dir; returns index dir. */
-  def ensure(spark: SparkSession, sfDir: String): String = synchronized {
-    val dir = cacheDir(sfDir)
-    if (!IndexBuilder.stageDone(spark, dir, "stats")) {
-      IndexBuilder.build(spark, documentsAsCorpus(spark, sfDir), dir,
-        numPartitions = 8, resume = true, analyzerFor = _ => Analyzer.sqlParity)
-    }
+  /** The one gate-index builder: builds (resuming) the index at the
+    * cache dir plus `suffix` unless its stats stage is committed, and
+    * returns the dir. Every `ensure*` index is one of these. */
+  private def cached(spark: SparkSession, sfDir: String, suffix: String,
+                     corpus: => Dataset[SourceFile], numPartitions: Int = 8,
+                     analyzerFor: String => Analyzer = _ => Analyzer.sqlParity,
+                     keywordFields: Seq[String] = Nil,
+                     indexPositions: Boolean = false,
+                     indexOffsets: Boolean = false): String = synchronized {
+    val dir = cacheDir(sfDir) + suffix
+    if (!IndexBuilder.stageDone(spark, dir, "stats"))
+      IndexBuilder.build(spark, corpus, dir, numPartitions, resume = true,
+        analyzerFor = analyzerFor, keywordFields = keywordFields,
+        indexPositions = indexPositions, indexOffsets = indexOffsets)
     dir
   }
+
+  /** Build (or reuse) the index for a scale-factor dir; returns index dir. */
+  def ensure(spark: SparkSession, sfDir: String): String =
+    cached(spark, sfDir, "", documentsAsCorpus(spark, sfDir))
 
   /** High-cardinality corpus (customer names → ~1 distinct numeric term
     * per row) for exercising the wide-expansion CONSTANT_SCORE_AUTO
@@ -74,41 +85,22 @@ object DocIndex {
     * fields (exact `"field:value"` terms — the FieldInfos analog). Kept
     * separate from the default cache so the single-field oracle queries'
     * dictionaries and stats stay byte-identical. */
-  def ensureFielded(spark: SparkSession, sfDir: String): String = synchronized {
-    val dir = cacheDir(sfDir) + "-fielded"
-    if (!IndexBuilder.stageDone(spark, dir, "stats")) {
-      IndexBuilder.build(spark, documentsAsCorpus(spark, sfDir), dir,
-        numPartitions = 8, resume = true, analyzerFor = _ => Analyzer.sqlParity,
-        keywordFields = Seq("lang", "path"))
-    }
-    dir
-  }
+  def ensureFielded(spark: SparkSession, sfDir: String): String =
+    cached(spark, sfDir, "-fielded", documentsAsCorpus(spark, sfDir),
+      keywordFields = Seq("lang", "path"))
 
   /** Keyword-fields-ONLY index over the same corpus (no text tokens —
     * the secondary side of a ParallelIndexReader: bolting metadata
     * fields onto an existing text index without re-indexing it). */
-  def ensureKeywordOnly(spark: SparkSession, sfDir: String): String = synchronized {
-    val dir = cacheDir(sfDir) + "-kwonly"
-    if (!IndexBuilder.stageDone(spark, dir, "stats")) {
-      IndexBuilder.build(spark, documentsAsCorpus(spark, sfDir), dir,
-        numPartitions = 8, resume = true,
-        analyzerFor = _ => new Analyzer(Set.empty, tokenizer = _ => Array.empty),
-        keywordFields = Seq("lang", "path"))
-    }
-    dir
-  }
+  def ensureKeywordOnly(spark: SparkSession, sfDir: String): String =
+    cached(spark, sfDir, "-kwonly", documentsAsCorpus(spark, sfDir),
+      analyzerFor = _ => new Analyzer(Set.empty, tokenizer = _ => Array.empty),
+      keywordFields = Seq("lang", "path"))
 
-  /** Documents index with the positions sidecar (indexPositions = true):
-    * phrase/span queries on it read positions instead of re-analyzing. */
-  def ensurePositions(spark: SparkSession, sfDir: String): String = synchronized {
-    val dir = cacheDir(sfDir) + "-pos"
-    if (!IndexBuilder.stageDone(spark, dir, "stats")) {
-      IndexBuilder.build(spark, documentsAsCorpus(spark, sfDir), dir,
-        numPartitions = 8, resume = true, analyzerFor = _ => Analyzer.sqlParity,
-        indexPositions = true)
-    }
-    dir
-  }
+  /** Documents index with positions (indexPositions = true): phrase/span
+    * queries on it read positions instead of re-analyzing. */
+  def ensurePositions(spark: SparkSession, sfDir: String): String =
+    cached(spark, sfDir, "-pos", documentsAsCorpus(spark, sfDir), indexPositions = true)
 
   /** Synthetic CJK corpus over the documents table's doc_ids: content =
     * a deterministic digit string rendered as Han ideographs
@@ -137,28 +129,16 @@ object DocIndex {
   /** CJK-bigram positions index over [[cjkDocsAsCorpus]] (the
     * NGramPhraseQuery gate's index: gram terms at consecutive
     * positions). */
-  def ensureCjk(spark: SparkSession, sfDir: String): String = synchronized {
-    val dir = cacheDir(sfDir) + "-cjk"
-    if (!IndexBuilder.stageDone(spark, dir, "stats")) {
-      IndexBuilder.build(spark, cjkDocsAsCorpus(spark, sfDir), dir,
-        numPartitions = 4, resume = true, analyzerFor = _ => Analyzer.cjk,
-        indexPositions = true)
-    }
-    dir
-  }
+  def ensureCjk(spark: SparkSession, sfDir: String): String =
+    cached(spark, sfDir, "-cjk", cjkDocsAsCorpus(spark, sfDir), numPartitions = 4,
+      analyzerFor = _ => Analyzer.cjk, indexPositions = true)
 
   /** Documents index with positions AND char offsets (the full
     * ..._AND_OFFSETS IndexOptions level): highlighting reads offsets
     * from the index instead of re-analyzing stored content. */
-  def ensureOffsets(spark: SparkSession, sfDir: String): String = synchronized {
-    val dir = cacheDir(sfDir) + "-off"
-    if (!IndexBuilder.stageDone(spark, dir, "stats")) {
-      IndexBuilder.build(spark, documentsAsCorpus(spark, sfDir), dir,
-        numPartitions = 8, resume = true, analyzerFor = _ => Analyzer.sqlParity,
-        indexPositions = true, indexOffsets = true)
-    }
-    dir
-  }
+  def ensureOffsets(spark: SparkSession, sfDir: String): String =
+    cached(spark, sfDir, "-off", documentsAsCorpus(spark, sfDir),
+      indexPositions = true, indexOffsets = true)
 
   /** Two INDEPENDENTLY built half-corpus indexes (docIds both starting at
     * 0) merged into one standalone index via
@@ -235,8 +215,8 @@ object DocIndex {
 
   /** Pulsed rewrite of the documents index (Pulsing41PostingsFormat
     * analog, freqCutoff=1): hapax terms' postings inlined into the term
-    * dictionary, postings table holding only df>1 terms. Sidecars/stats
-    * stay in the base index by design. */
+    * dictionary, postings table holding only df>1 terms. Positions and
+    * stats stay in the base index by design. */
   def ensurePulsed(spark: SparkSession, sfDir: String): String = synchronized {
     val dir = cacheDir(sfDir) + "-pulsed"
     val done = new org.apache.hadoop.fs.Path(s"${IndexPaths.termDict(dir)}/_SUCCESS")
@@ -257,14 +237,8 @@ object DocIndex {
     dir
   }
 
-  def ensureWide(spark: SparkSession, sfDir: String): String = synchronized {
-    val dir = cacheDir(sfDir) + "-cust"
-    if (!IndexBuilder.stageDone(spark, dir, "stats")) {
-      IndexBuilder.build(spark, customersAsCorpus(spark, sfDir), dir,
-        numPartitions = 4, resume = true, analyzerFor = _ => Analyzer.sqlParity)
-    }
-    dir
-  }
+  def ensureWide(spark: SparkSession, sfDir: String): String =
+    cached(spark, sfDir, "-cust", customersAsCorpus(spark, sfDir), numPartitions = 4)
 
   def collectionStats(spark: SparkSession, dir: String): CollectionStatsRow = {
     import spark.implicits._

@@ -424,7 +424,7 @@ object VerifyQueries {
 
   /** Exact phrase over the POSITIONS-INDEXED variant of the documents
     * table (indexPositions = true): same answer as q_phrase, but the plan
-    * decodes the positions sidecar instead of re-analyzing stored content
+    * decodes the indexed positions instead of re-analyzing stored content
     * — the DOCS_AND_FREQS_AND_POSITIONS path, driver-gated against the
     * identical oracle. */
   def qPhrasePos(spark: SparkSession, sf: String): DataFrame = {
@@ -2966,8 +2966,8 @@ object VerifyQueries {
   /** Index-time highlighting over the OFFSETS-enabled index (the
     * PostingsHighlighter idea, reference:
     * PostingsHighlight/PostingsHighlighter.cs:74): the first whole-token
-    * occurrence of the query term comes straight from the char-offset
-    * sidecar — no re-analysis of stored content — and the snippet is cut
+    * occurrence of the query term comes straight from the indexed char
+    * offsets — no re-analysis of stored content — and the snippet is cut
     * from the stored text at that offset. The oracle reconstructs token
     * offsets relationally: non-token chars map 1:1 to spaces, so
     * strpos(' '||norm||' ', ' merge ') finds the first whole-token
@@ -3002,7 +3002,7 @@ object VerifyQueries {
 
   /** FastVectorHighlighter analog (reference: Highlighter/VectorHighlight/
     * FieldPhraseList.cs): phrase-aware highlight spans from the
-    * positions+offsets sidecars — only occurrences participating in the
+    * indexed positions+offsets — only occurrences participating in the
     * full exact phrase "table hash" are marked; the fragment is cut from
     * the stored text at the span. Oracle: the whole-token normalization
     * trick (non-token chars map 1:1 to spaces), so
@@ -3038,7 +3038,7 @@ object VerifyQueries {
   /** PostingsHighlighter passage ranking (reference: PostingsHighlight/
     * PostingsHighlighter.cs + PassageScorer.cs formulas): every
     * 10-token passage holding a hit for {merge, hash} is scored
-    * norm·Σ weight·tf straight from the positions sidecar, the best
+    * norm·Σ weight·tf straight from the indexed positions, the best
     * passage per doc survives, top-20 docs by passage score. The oracle
     * recomputes passages relationally: token positions from the zipped
     * unnest, passage = pos // 10, identical double expression shapes. */

@@ -1,6 +1,6 @@
 package graft.postings
 
-import graft.build.{IndexPaths, PostingRow}
+import graft.build.{IndexPaths, PostingRow, Tables}
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -23,9 +23,11 @@ import org.apache.spark.sql.functions._
   * FST-seek analog, see DictSeek) applies to them for free.
   *
   * Like the reference (a PostingsFormat wrapping only the docs+freqs
-  * stream), pulsing here rewrites ONLY term_dict + postings; positions /
-  * offsets / payloads sidecars and docstats remain in the base index —
-  * phrase/span queries read the base tables unchanged.
+  * stream), pulsing here rewrites ONLY term_dict + postings, and the
+  * pulsed postings keep only the docs+freqs columns
+  * ([[PostingRow.columns]]); positions / offsets / payloads blobs and
+  * docstats remain in the base index — phrase/span queries read the base
+  * tables unchanged.
   *
   * Scale shape: one equi-join of postings against the (term, df)
   * dictionary projection (both sides term-range partitioned — a
@@ -46,7 +48,7 @@ object Pulsing {
             freqCutoff: Int = 1, numPartitions: Int = 8): Unit = {
     import spark.implicits._
     val dict = spark.read.parquet(IndexPaths.termDict(indexDir))
-    val posts = spark.read.parquet(IndexPaths.postings(indexDir))
+    val posts = Tables.read[PostingRow](spark, IndexPaths.postings(indexDir))
     val dfByTerm = dict.select($"term", $"df")
 
     // Route blocks by the TERM-level df (a term's blocks can span

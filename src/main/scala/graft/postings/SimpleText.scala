@@ -1,6 +1,6 @@
 package graft.postings
 
-import graft.build.{IndexPaths, PostingRow}
+import graft.build.{CollectionStatsRow, IndexPaths, PostingsTableRow, Tables}
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -15,37 +15,25 @@ import org.apache.spark.sql.functions._
   *   term merge
   *     doc 0
   *       freq 2
-  *       pos 5        (positions level, when the sidecar exists)
+  *       pos 5        (positions level, when the index carries it)
   * END
   * }}}
   *
-  * Spark restatement: the body renders from the aligned postings ⋈
-  * positions block scan (the same equi-join every phrase query runs),
-  * term-sorted; like the reference, this codec trades everything for
+  * Spark restatement: the body renders from one postings scan (each
+  * block's positions ride in its row), term-sorted; like the reference,
+  * this codec trades everything for
   * inspectability — debugging and tests only, never production (their
   * own warning), so the single-file framing is deliberate.
   */
 object SimpleText {
 
-  /** Render the index's postings (and positions, when the sidecar
-    * exists) as SimpleText lines at `outDir`. Single `content` field —
+  /** Render the index's postings (and positions, when the index carries
+    * them) as SimpleText lines at `outDir`. Single `content` field —
     * this engine's positioned field. */
   def dump(spark: SparkSession, indexDir: String, outDir: String): Unit = {
     import spark.implicits._
-    val fs = new org.apache.hadoop.fs.Path(indexDir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val hasPos = fs.exists(new org.apache.hadoop.fs.Path(IndexPaths.positions(indexDir)))
-
-    val t = spark.read.parquet(IndexPaths.postings(indexDir))
-      .select($"term", $"firstDocId", $"numDocs", $"bytes")
-      .toDF("term", "firstDocId", "n", "tbytes")
-    val joined =
-      if (hasPos) {
-        val p = spark.read.parquet(IndexPaths.positions(indexDir))
-          .select($"term", $"firstDocId", $"bytes").toDF("term", "firstDocId", "pbytes")
-        t.join(p, Seq("term", "firstDocId"), "left_outer")
-      } else t.withColumn("pbytes", lit(null).cast("binary"))
-    val lines = joined
+    val lines = Tables.read[PostingsTableRow](spark, IndexPaths.postings(indexDir))
+      .select($"term", $"firstDocId", $"numDocs", $"bytes", $"posBytes")
       .as[(String, Long, Int, Array[Byte], Array[Byte])]
       .flatMap { case (term, first, n, tbytes, pbytes) =>
         val (ids, tfs, _) = PostingsCodec.decodeBlock(first, n, tbytes)
@@ -247,17 +235,15 @@ object SimpleText {
   /** SimpleTextFieldInfosWriter (reference:
     * Codecs/SimpleText/SimpleTextFieldInfosWriter.cs:47-140): the field
     * schema rendered with the engine's real per-field capabilities —
-    * `content` positioned/normed with its sidecar levels, keyword fields
-    * indexed-only with norms omitted (DOCS_ONLY). Driver-sized (a
+    * `content` positioned/normed with the index's recorded levels,
+    * keyword fields indexed-only with norms omitted (DOCS_ONLY). Driver-sized (a
     * handful of fields), written directly. */
   def dumpFieldInfos(spark: SparkSession, indexDir: String, outDir: String,
       keywordFields: Seq[String] = Seq("repo", "path", "commit", "lang")): Unit = {
-    val fs = new org.apache.hadoop.fs.Path(indexDir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    def has(p: String) = fs.exists(new org.apache.hadoop.fs.Path(p))
-    val hasPos = has(IndexPaths.positions(indexDir))
-    val hasOff = has(IndexPaths.offsets(indexDir))
-    val hasPay = has(IndexPaths.payloads(indexDir))
+    import spark.implicits._
+    val cs = Tables.read[CollectionStatsRow](spark, IndexPaths.collectionStats(indexDir))
+      .as[CollectionStatsRow].head()
+    val (hasPos, hasOff, hasPay) = (cs.hasPositions, cs.hasOffsets, cs.hasPayloads)
     val fields = ("content", true) +: keywordFields.map((_, false))
     val sb = new StringBuilder
     sb.append("number of fields ").append(fields.length).append('\n')

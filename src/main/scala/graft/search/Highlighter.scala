@@ -63,7 +63,7 @@ object Highlighter {
   /** Index-time highlighting (the PostingsHighlighter idea, reference:
     * Lucene.Net.Highlighter/PostingsHighlight/PostingsHighlighter.cs:74):
     * the query terms' (start,end) char offsets come straight from the
-    * offsets sidecar — NO re-analysis of the stored content. `hitOffsets`
+    * indexed offsets — NO re-analysis of the stored content. `hitOffsets`
     * is the union of the matched terms' flattened [s,e,…] pairs for one
     * doc; the best window is the char span of width <= windowChars
     * covering the most hits (ties → earliest), hits marked back-to-front.

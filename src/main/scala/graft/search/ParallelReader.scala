@@ -19,10 +19,11 @@ import org.apache.spark.sql.functions._
   * softly by unioning tombstones, so a delete on ANY side hides the doc
   * everywhere (the safe direction).
   *
-  * The primary index supplies collection stats, doc stats (norms/doc
-  * lengths of the SCORED text field), stored fields and the
-  * positions/offsets/payloads sidecars; term dictionary and postings are
-  * plain unions (disjoint term spaces need no re-aggregation), and the
+  * The primary index supplies collection stats (with the positions/
+  * offsets/payloads levels), doc stats (norms/doc lengths of the SCORED
+  * text field) and stored fields; term dictionary and postings (blobs
+  * included) are plain unions (disjoint term spaces need no
+  * re-aggregation), and the
   * driver-held dictionary loads every side, so stats lookups and
   * dictionary seeks cover all parallel term spaces. */
 final class ParallelIndexReader(spark: SparkSession, primary: String,

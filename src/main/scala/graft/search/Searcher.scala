@@ -1,7 +1,7 @@
 package graft.search
 
 import graft.bm25.BM25
-import graft.build.{CollectionStatsRow, DocStatRow, IndexPaths, PositionsRow, PostingRow, Tables, TermDictRow}
+import graft.build.{CollectionStatsRow, DocStatRow, IndexPaths, PostingRow, PostingsTableRow, Tables, TermDictRow}
 import graft.postings.PostingsCodec
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
@@ -26,8 +26,7 @@ class IndexReader(val spark: SparkSession, val dir: String) extends Serializable
     Tables.read[CollectionStatsRow](spark, IndexPaths.collectionStats(dir))
       .as[CollectionStatsRow].head()
 
-  /** Directories whose data tables this view spans — every optional-
-    * sidecar probe requires the sidecar in all of them. */
+  /** Directories whose data tables this view spans. */
   def dataDirs: Seq[String] = Seq(dir)
 
   /** Opens one data table across [[dataDirs]] (one relation, one listing). */
@@ -42,7 +41,9 @@ class IndexReader(val spark: SparkSession, val dir: String) extends Serializable
       path: String => String): DataFrame =
     Tables.read[T](spark, dataDirs.map(path): _*)
 
-  @transient lazy val postings: DataFrame = openAs[PostingRow](IndexPaths.postings)
+  /** The postings table, blob columns included; the scoring scans
+    * select [[PostingRow.columns]] ([[allPostingRows]]). */
+  @transient lazy val postings: DataFrame = openAs[PostingsTableRow](IndexPaths.postings)
   @transient lazy val docstats: DataFrame = openAs[DocStatRow](IndexPaths.docstats)
   @transient lazy val termDict: DataFrame = open(IndexPaths.termDict)
 
@@ -86,48 +87,38 @@ class IndexReader(val spark: SparkSession, val dir: String) extends Serializable
         if (i >= 0) Iterator.single((r.term, tfs(i))) else Iterator.empty
       }.toDF("term", "tf")
 
-  /** True when the index was built with `indexPositions = true` (the
-    * DOCS_AND_FREQS_AND_POSITIONS option): phrase queries then read the
-    * positions sidecar instead of re-analyzing stored content. */
-  lazy val hasPositions: Boolean = allHave(dataDirs, IndexPaths.positions)
-  @transient lazy val positions: DataFrame = openAs[PositionsRow](IndexPaths.positions)
+  /** True when the index carries positions (the
+    * DOCS_AND_FREQS_AND_POSITIONS option, recorded in collection_stats):
+    * phrase queries then read the postings rows' positions instead of
+    * re-analyzing stored content. */
+  lazy val hasPositions: Boolean = collectionStats.hasPositions
 
-  /** True when the index carries the char-offset sidecar (the
-    * ..._AND_OFFSETS level, reference: Index/FieldInfo.cs:373-397) —
-    * highlighting then reads offsets from the index instead of
-    * re-analyzing stored content (the PostingsHighlighter idea,
-    * reference: PostingsHighlight/PostingsHighlighter.cs:74). */
-  lazy val hasOffsets: Boolean = allHave(dataDirs, IndexPaths.offsets)
-  @transient lazy val offsets: DataFrame = openAs[PositionsRow](IndexPaths.offsets)
+  /** True when the index carries char offsets (the ..._AND_OFFSETS
+    * level, reference: Index/FieldInfo.cs:373-397) — highlighting then
+    * reads offsets from the index instead of re-analyzing stored content
+    * (the PostingsHighlighter idea, reference:
+    * PostingsHighlight/PostingsHighlighter.cs:74). */
+  lazy val hasOffsets: Boolean = collectionStats.hasOffsets
 
-  /** True when the index carries the per-position payload sidecar (the
-    * .pay stream analog — reference: Index/Payload semantics and the
-    * Search/Payloads query family). */
-  lazy val hasPayloads: Boolean = allHave(dataDirs, IndexPaths.payloads)
-  @transient lazy val payloads: DataFrame = openAs[PositionsRow](IndexPaths.payloads)
+  /** True when the index carries per-position payloads (the .pay stream
+    * analog — reference: Index/Payload semantics and the Search/Payloads
+    * query family). */
+  lazy val hasPayloads: Boolean = collectionStats.hasPayloads
 
-  /** The postings blocks of `terms` joined to their aligned blocks in a
-    * `sidecar` table (positions, offsets and payloads share the postings'
-    * block boundaries), both scans parquet-pruned by the sorted term
-    * column: (term, firstDocId, numDocs, postings bytes, sidecar bytes). */
-  private[search] def sidecarBlocks(sidecar: DataFrame, terms: Seq[String])
-      : Dataset[(String, Long, Int, Array[Byte], Array[Byte])] = {
-    val distinct = terms.distinct
-    val t = postings.where($"term".isin(distinct: _*))
-      .select($"term", $"firstDocId", $"numDocs", $"bytes")
-      .toDF("term", "firstDocId", "tn", "tbytes")
-    val s = sidecar.where($"term".isin(distinct: _*))
-      .select($"term", $"firstDocId", $"bytes").toDF("term", "firstDocId", "sbytes")
-    t.join(s, Seq("term", "firstDocId"))
-      .select($"term", $"firstDocId", $"tn", $"tbytes", $"sbytes")
-      .as[(String, Long, Int, Array[Byte], Array[Byte])]
-  }
+  /** The postings blocks of `terms` that carry every one of `blobs`
+    * ([[PostingsTableRow.blobColumns]]) — one scan, parquet-pruned by the
+    * sorted term column: (term, firstDocId, numDocs, postings bytes,
+    * then each blob). Keyword (DOCS_ONLY) terms carry no blobs and drop
+    * out. */
+  private[search] def blobBlocks(terms: Seq[String], blobs: String*): DataFrame =
+    postings.where($"term".isin(terms.distinct: _*) && blobs.map(col(_).isNotNull).reduce(_ && _))
+      .select(Seq($"term", $"firstDocId", $"numDocs", $"bytes") ++ blobs.map(col): _*)
 
   /** (docId, term, tf, normByte, per-position payloads) for a term set,
-    * decoded from the aligned postings/payloads blocks. */
+    * decoded from the postings rows' payloads. */
   def termPayloadRows(terms: Seq[String])
       : Dataset[(Long, String, Int, Int, Array[Array[Byte]])] =
-    sidecarBlocks(payloads, terms)
+    blobBlocks(terms, "payBytes").as[(String, Long, Int, Array[Byte], Array[Byte])]
       .flatMap { case (term, firstDocId, n, tbytes, ybytes) =>
         val (ids, tfs, norms) = PostingsCodec.decodeBlock(firstDocId, n, tbytes)
         val pays = PostingsCodec.decodePayloadsBlock(n, ybytes)
@@ -135,9 +126,9 @@ class IndexReader(val spark: SparkSession, val dir: String) extends Serializable
       }
 
   /** (docId, term, flattened [s0,e0,s1,e1,…] char offsets) for a term
-    * set, decoded from the aligned postings/offsets blocks. */
+    * set, decoded from the postings rows' char offsets. */
   def termOffsetRows(terms: Seq[String]): Dataset[(Long, String, Array[Int])] =
-    sidecarBlocks(offsets, terms)
+    blobBlocks(terms, "offBytes").as[(String, Long, Int, Array[Byte], Array[Byte])]
       .flatMap { case (term, firstDocId, n, tbytes, obytes) =>
         val (ids, _, _) = PostingsCodec.decodeBlock(firstDocId, n, tbytes)
         val offs = PostingsCodec.decodeOffsetsBlock(n, obytes)
@@ -171,15 +162,6 @@ class IndexReader(val spark: SparkSession, val dir: String) extends Serializable
     expandTermsOpt(m, maxExpansions).getOrElse(
       throw new IllegalArgumentException(
         s"multi-term query expands to more than $maxExpansions terms"))
-
-  /** True when every listed dir carries the sidecar at `path` — the
-    * presence gate every optional-sidecar feature shares (single,
-    * multi-generation and parallel readers alike). */
-  protected def allHave(ds: Seq[String], path: String => String): Boolean =
-    ds.forall { d =>
-      val p = new org.apache.hadoop.fs.Path(path(d))
-      p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
-    }
 
   /** The dictionary's alphabet (distinct first characters), from the
     * driver-held dictionary. Feeds the fuzzy range banding
@@ -223,7 +205,7 @@ object IndexReader {
 
 /** Union view over generation indexes: docId spaces are disjoint ascending
   * by construction (each generation built with `docIdBase` past its
-  * predecessors), so postings/docstats/sidecar tables simply union (one
+  * predecessors), so postings/docstats tables simply union (one
   * multi-path relation each, via [[dataDirs]]), while the dictionary and
   * collection stats re-aggregate on the fly — exactly what
   * [[graft.streaming.StreamingIndexer.compact]] materializes, read
@@ -236,14 +218,19 @@ final class MultiIndexReader(spark0: SparkSession, dirs: Seq[String])
 
   override def dataDirs: Seq[String] = dirs
 
-  /** One read over every generation's stats row, summed driver-side. */
+  /** One read over every generation's stats row, summed driver-side; a
+    * level is carried when every generation carries it (the FieldInfos
+    * downgrade to the lowest). */
   override lazy val collectionStats: CollectionStatsRow = {
     val all = openAs[CollectionStatsRow](IndexPaths.collectionStats).as[CollectionStatsRow].collect()
     CollectionStatsRow(
       maxDoc = all.map(_.maxDoc).sum,
       docCount = all.map(_.docCount).sum,
       sumTotalTermFreq = all.map(_.sumTotalTermFreq).sum,
-      sumDocFreq = all.map(_.sumDocFreq).sum)
+      sumDocFreq = all.map(_.sumDocFreq).sum,
+      hasPositions = all.forall(_.hasPositions),
+      hasOffsets = all.forall(_.hasOffsets),
+      hasPayloads = all.forall(_.hasPayloads))
   }
 
   /** Per-term stats re-aggregate across generations (df/ttf sum, bounds
@@ -477,9 +464,18 @@ final class Searcher(val reader: IndexReader, pruneMinBlocks: Int = 64,
 
   // ------------------------------------------------------------- scoring
 
+  /** Runs `f` with its Spark jobs labelled `search.scan`. */
+  private def scan[A](f: => A): A =
+    graft.build.IndexBuilder.labelled(spark, "search.scan", reader.dir)(f)
+
+  /** Runs a positional matcher with its Spark jobs labelled
+    * `search.positions`. */
+  private def positional[A](f: => A): A =
+    graft.build.IndexBuilder.labelled(spark, "search.positions", reader.dir)(f)
+
   /** Full scored Dataset for a query — the composable scorer tree. Exact
     * scores, no pruning (also the brute-force oracle path for tests). */
-  def scored(q: Query): Dataset[ScoreDoc] = {
+  def scored(q: Query): Dataset[ScoreDoc] = scan {
     val rq = rewrite(q)
     liveOnly(scoredRaw(rq, reader.termStats(leafTerms(rq))))
   }
@@ -576,7 +572,7 @@ final class Searcher(val reader: IndexReader, pruneMinBlocks: Int = 64,
     * phraseFreq plays tf in BM25, weight = Σ idf over phrase terms
     * (BM25Similarity.cs:210-225), same norm byte as term scoring.
     * Single-term phrases rewrite to TermQuery (PhraseQuery.cs:175). The
-    * freqs come from [[phraseFreqs]]: positions sidecar or re-analysis,
+    * freqs come from [[phraseFreqs]]: indexed positions or re-analysis,
     * exact walk or the reference-exact [[SloppyPhrase]] traversal. */
   private def scoredPhrase(terms: Seq[String], slop: Int, boost: Float,
                            stats: Map[String, TermDictRow]): Dataset[ScoreDoc] = {
@@ -632,14 +628,15 @@ final class Searcher(val reader: IndexReader, pruneMinBlocks: Int = 64,
     * groups). No dictionary lookup: an unindexed term fails every doc's
     * match. */
   def phraseFreqs(terms: Seq[String], slop: Int = 0): Dataset[(Long, Float, Int)] =
-    slotFreqs(terms.map(Seq(_)), terms.indices, slop)
+    positional(slotFreqs(terms.map(Seq(_)), terms.indices, slop))
 
   /** MultiPhraseQuery analog (reference: Search/MultiPhraseQuery.cs): a
     * phrase whose slot i accepts any of `slots(i)`; with slop, the sloppy
     * traversal runs over each slot's union positions
     * (UnionDocsAndPositionsEnum). Unindexed alternatives are dropped; a
     * slot left empty matches nothing. (docId, phraseFreq, normByte). */
-  def multiPhraseFreqs(slots: Seq[Seq[String]], slop: Int = 0): Dataset[(Long, Float, Int)] = {
+  def multiPhraseFreqs(slots: Seq[Seq[String]], slop: Int = 0): Dataset[(Long, Float, Int)] =
+      positional {
     require(slots.nonEmpty && slots.forall(_.nonEmpty), "empty slot")
     val stats = reader.termStats(slots.flatten.distinct)
     val liveSlots = slots.map(_.filter(stats.contains))
@@ -649,7 +646,7 @@ final class Searcher(val reader: IndexReader, pruneMinBlocks: Int = 64,
 
   /** (docId, anchorCount, normByte) for a sparse phrase: the exact walk
     * with each part at its explicit position relative to the first. */
-  def sparsePhraseFreqs(parts: Seq[(String, Int)]): Dataset[(Long, Float, Int)] = {
+  def sparsePhraseFreqs(parts: Seq[(String, Int)]): Dataset[(Long, Float, Int)] = positional {
     val sorted = parts.sortBy(_._2)
     slotFreqs(sorted.map(p => Seq(p._1)), sorted.map(_._2 - sorted.head._2), 0)
   }
@@ -675,8 +672,9 @@ final class Searcher(val reader: IndexReader, pruneMinBlocks: Int = 64,
   /** The positions source every positional matcher reads (≙ one
     * DocsAndPositionsEnum): `matcher` sees each doc's docId, norm byte
     * and the sorted positions of `terms` in it (empty for an absent
-    * term). With the positions sidecar: pruned scans of the aligned
-    * postings + positions blocks, one docId shuffle, no content read.
+    * term). With indexed positions: one pruned postings scan (each
+    * block's positions ride in its row), one docId shuffle, no content
+    * read.
     * Without it — the FilteredQuery QUERY_FIRST strategy (reference:
     * Search/FilteredQuery.cs:536-575) — only the `candidates` docs (an
     * index-pruned conjunction, usually a vanishing fraction of the
@@ -711,9 +709,9 @@ final class Searcher(val reader: IndexReader, pruneMinBlocks: Int = 64,
     }
 
   /** (docId, term, positions, normByte) rows for a term set, decoded from
-    * the aligned postings/positions blocks. */
+    * the postings rows' positions. */
   private def termPositionRows(distinct: Seq[String]): Dataset[(Long, String, Array[Int], Int)] =
-    reader.sidecarBlocks(reader.positions, distinct)
+    reader.blobBlocks(distinct, "posBytes").as[(String, Long, Int, Array[Byte], Array[Byte])]
       .flatMap { case (term, firstDocId, n, tbytes, pbytes) =>
         val (ids, _, norms) = PostingsCodec.decodeBlock(firstDocId, n, tbytes)
         val poss = PostingsCodec.decodePositionsBlock(n, pbytes)
@@ -722,66 +720,71 @@ final class Searcher(val reader: IndexReader, pruneMinBlocks: Int = 64,
 
   /** FastVectorHighlighter analog (reference: Highlighter/VectorHighlight/
     * FieldTermStack.cs + FieldPhraseList.cs): phrase-aware highlight spans
-    * straight from the positions + offsets sidecars — our term-vector-
+    * straight from the indexed positions + offsets — our term-vector-
     * with-positions-and-offsets — so ONLY term occurrences that
     * participate in a full exact-phrase match are marked, and nothing is
     * re-analyzed. Returns the FIRST match per doc as
     * (docId, startOffset of the head term's matched occurrence,
     * endOffset of the tail term's matched occurrence).
     *
-    * Shape: two parquet-pruned sidecar scans (terms pushed into the
-    * sorted `term` column), one (docId, term) equi-join to align
-    * positions with their occurrence-ordered offsets, one docId shuffle,
-    * then the exact binary-search phrase walk. */
-  def phraseHighlightSpans(terms: Seq[String]): Dataset[(Long, Int, Int)] = {
+    * Shape: one parquet-pruned postings scan (terms pushed into the
+    * sorted `term` column) decoding each block's positions with their
+    * occurrence-ordered offsets from its row, one docId shuffle, then the
+    * exact binary-search phrase walk. */
+  def phraseHighlightSpans(terms: Seq[String]): Dataset[(Long, Int, Int)] = positional {
     val distinct = terms.distinct
     val stats = reader.termStats(distinct)
-    if (!distinct.forall(stats.contains)) return spark.emptyDataset[(Long, Int, Int)]
-    val phraseArr = terms.toIndexedSeq
-    val n = phraseArr.length
-    val nDistinct = distinct.length
-    val pos = termPositionRows(distinct)
-      .map { case (d, t, ps, _) => (d, t, ps) }.toDF("docId", "term", "ps")
-    val off = reader.termOffsetRows(distinct).toDF("docId", "term", "offs")
-    pos.join(off, Seq("docId", "term"))
-      .as[(Long, String, Array[Int], Array[Int])]
-      .groupByKey(_._1).flatMapGroups { (docId, it) =>
-        val psBy = scala.collection.mutable.HashMap.empty[String, Array[Int]]
-        val offBy = scala.collection.mutable.HashMap.empty[String, Array[Int]]
-        it.foreach { case (_, t, ps, os) => psBy(t) = ps; offBy(t) = os }
-        if (psBy.size < nDistinct) Iterator.empty
-        else {
-          val head = psBy(phraseArr.head)
-          var out: Iterator[(Long, Int, Int)] = Iterator.empty
-          var hi = 0
-          while (out.isEmpty && hi < head.length) {
-            val p = head(hi)
-            var i = 1
-            var tailIdx = hi // occurrence index of the LAST phrase term
-            var ok = true
-            while (ok && i < n) {
-              val idx = java.util.Arrays.binarySearch(psBy(phraseArr(i)), p + i)
-              if (idx < 0) ok = false else tailIdx = idx
-              i += 1
-            }
-            if (ok) {
-              val s = offBy(phraseArr.head)(2 * hi)
-              val e = offBy(phraseArr(n - 1))(2 * tailIdx + 1)
-              out = Iterator.single((docId, s, e))
-            }
-            hi += 1
-          }
-          out
+    if (!distinct.forall(stats.contains)) spark.emptyDataset[(Long, Int, Int)]
+    else {
+      val phraseArr = terms.toIndexedSeq
+      val n = phraseArr.length
+      val nDistinct = distinct.length
+      reader.blobBlocks(distinct, "posBytes", "offBytes")
+        .as[(String, Long, Int, Array[Byte], Array[Byte], Array[Byte])]
+        .flatMap { case (t, firstDocId, nDocs, tbytes, pbytes, obytes) =>
+          val (ids, _, _) = PostingsCodec.decodeBlock(firstDocId, nDocs, tbytes)
+          val poss = PostingsCodec.decodePositionsBlock(nDocs, pbytes)
+          val offs = PostingsCodec.decodeOffsetsBlock(nDocs, obytes)
+          ids.indices.iterator.map(i => (ids(i), t, poss(i), offs(i)))
         }
-      }
+        .groupByKey(_._1).flatMapGroups { (docId, it) =>
+          val psBy = scala.collection.mutable.HashMap.empty[String, Array[Int]]
+          val offBy = scala.collection.mutable.HashMap.empty[String, Array[Int]]
+          it.foreach { case (_, t, ps, os) => psBy(t) = ps; offBy(t) = os }
+          if (psBy.size < nDistinct) Iterator.empty
+          else {
+            val head = psBy(phraseArr.head)
+            var out: Iterator[(Long, Int, Int)] = Iterator.empty
+            var hi = 0
+            while (out.isEmpty && hi < head.length) {
+              val p = head(hi)
+              var i = 1
+              var tailIdx = hi // occurrence index of the LAST phrase term
+              var ok = true
+              while (ok && i < n) {
+                val idx = java.util.Arrays.binarySearch(psBy(phraseArr(i)), p + i)
+                if (idx < 0) ok = false else tailIdx = idx
+                i += 1
+              }
+              if (ok) {
+                val s = offBy(phraseArr.head)(2 * hi)
+                val e = offBy(phraseArr(n - 1))(2 * tailIdx + 1)
+                out = Iterator.single((docId, s, e))
+              }
+              hi += 1
+            }
+            out
+          }
+        }
+    }
   }
 
   /** PostingsHighlighter passage RANKING analog (reference:
     * PostingsHighlight/PostingsHighlighter.cs:74 scoring loop +
     * PassageScorer.cs:79-117): passages are fixed `window`-token slices
     * of the doc — the BreakIterator sentence segmentation re-imagined in
-    * token space, because our passage geometry comes from the POSITIONS
-    * sidecar, not re-analysis — and each passage is scored as a
+    * token space, because our passage geometry comes from the indexed
+    * POSITIONS, not re-analysis — and each passage is scored as a
     * miniature document with the reference's exact formulas (k1=1.2,
     * b=0.75; the 87-char sentence pivot re-based to `pivot` tokens):
     *   weight(dl, ttf) = (k1+1) · ln(1 + (1 + dl/pivot + 0.5)/(ttf + 0.5))
@@ -798,7 +801,7 @@ final class Searcher(val reader: IndexReader, pruneMinBlocks: Int = 64,
     * Highlighters only ever touch retrieved top-k docs, and every step
     * here is an equi-join or combinable agg — the 100 TB plan. */
   def passageScores(terms: Seq[String], window: Int = 10,
-                    pivot: Double = 16.0): DataFrame = {
+                    pivot: Double = 16.0): DataFrame = positional {
     val distinct = terms.distinct
     val perPassage = termPositionRows(distinct)
       .flatMap { case (docId, term, ps, _) =>
@@ -832,12 +835,11 @@ final class Searcher(val reader: IndexReader, pruneMinBlocks: Int = 64,
     * (unordered) or 0 < pb - pa <= maxGap (ordered), over
     * [[docPositions]]. */
   def spanNearFreqs(termA: String, termB: String, maxGap: Int,
-                    ordered: Boolean = false): Dataset[(Long, Int)] = {
+                    ordered: Boolean = false): Dataset[(Long, Int)] = positional {
     val stats = reader.termStats(Seq(termA, termB))
-    if (!stats.contains(termA) || !stats.contains(termB))
-      return spark.emptyDataset[(Long, Int)]
     val terms = Seq(termA, termB)
-    docPositions(terms, conjunction(terms.map(Seq(_)))) { (docId, _, posOf) =>
+    if (!terms.forall(stats.contains)) spark.emptyDataset[(Long, Int)]
+    else docPositions(terms, conjunction(terms.map(Seq(_)))) { (docId, _, posOf) =>
       val pb = posOf(termB)
       var n = 0
       posOf(termA).foreach(a => pb.foreach { b =>
@@ -855,7 +857,7 @@ final class Searcher(val reader: IndexReader, pruneMinBlocks: Int = 64,
     * re-analysis candidates follow the tree's structure — OR unions its
     * children's doc sets, NEAR intersects them, NOT/FIRST prune on the
     * positive branch. */
-  def spanCount(q0: SpanQuery): Dataset[(Long, Int)] = {
+  def spanCount(q0: SpanQuery): Dataset[(Long, Int)] = positional {
     // SpanMultiTermQueryWrapper analog: expand wildcard/prefix/fuzzy
     // nodes against the dictionary into a SpanOr of term spans BEFORE
     // evaluation (reference: Spans/SpanMultiTermQueryWrapper.cs — the
@@ -911,84 +913,17 @@ final class Searcher(val reader: IndexReader, pruneMinBlocks: Int = 64,
     * doc (docs whose occurrences carry no payloads keep factor 1, the
     * reference's scorePayload-default behavior). */
   def payloadTermScores(t: String, agg: String = "avg",
-                        boost: Float = 1f): Dataset[ScoreDoc] = {
-    require(reader.hasPayloads, "index has no payloads sidecar")
+                        boost: Float = 1f): Dataset[ScoreDoc] = positional {
+    require(reader.hasPayloads, "index has no payloads")
     val stats = reader.termStats(Seq(t))
-    if (!stats.contains(t)) return spark.emptyDataset[ScoreDoc]
-    val w = BM25.weightValue(BM25.idf(stats(t).df, cs.maxDoc), boost)
-    val localCache = cache
-    val aggKind = agg
-    liveOnly(reader.termPayloadRows(Seq(t)).map { case (docId, _, tf, norm, pays) =>
-      val vals = pays.iterator.filter(p => p != null && p.length >= 4)
-        .map(graft.analysis.DelimitedPayload.decodeFloat).toArray
-      val pf =
-        if (vals.isEmpty) 1f
-        else aggKind match {
-          case "min" => vals.min
-          case "max" => vals.max
-          case _ => vals.sum / vals.length
-        }
-      ScoreDoc(docId, BM25.score(tf.toFloat, norm.toByte, w, localCache) * pf)
-    })
-  }
-
-  def payloadTermTopK(t: String, k: Int, agg: String = "avg",
-                      boost: Float = 1f): Array[ScoreDoc] =
-    TopK(payloadTermScores(t, agg, boost), k)
-
-  /** PayloadNearQuery analog (reference:
-    * Search/Payloads/PayloadNearQuery.cs, includeSpanScore = true):
-    * evaluate the span-near over the positions sidecar, collect the
-    * payloads of every term occurrence INSIDE a matching span
-    * (PayloadNearSpanScorer.ProcessPayloads), and score each doc as the
-    * span score — BM25 over (span freq, Σ idf of the near's terms), the
-    * engine's phrase-weight shape — times the payload aggregate
-    * (avg/min/max; docs whose in-span occurrences carry no payloads keep
-    * factor 1). One aligned positions⋈payloads scan; the span algebra and
-    * payload collection run per doc inside the group, no driver hop. */
-  def payloadNearScores(q: SpanNearQ, agg: String = "avg",
-                        boost: Float = 1f): Dataset[ScoreDoc] = {
-    require(reader.hasPositions, "index has no positions sidecar")
-    require(reader.hasPayloads, "index has no payloads sidecar")
-    val terms = Spans.terms(q).toSeq.sorted
-    val stats = reader.termStats(terms)
-    val live = terms.filter(stats.contains)
-    if (live.isEmpty) return spark.emptyDataset[ScoreDoc]
-    val idfSum = live.map(t => BM25.idf(stats(t).df, cs.maxDoc)).sum
-    val w = BM25.weightValue(idfSum, boost)
-    val localCache = cache
-    val aggKind = agg
-    val query = q
-    val pos = termPositionRows(live).toDF("docId", "term", "ps", "norm")
-    val pay = reader.termPayloadRows(live).toDF("docId", "term", "tf", "norm2", "pays")
-    val joined = pos.join(pay, Seq("docId", "term"))
-      .select($"docId", $"term", $"ps", $"norm", $"pays")
-      .as[(Long, String, Array[Int], Int, Array[Array[Byte]])]
-    liveOnly(joined.groupByKey(_._1).flatMapGroups { (docId, it) =>
-      val rows = it.toArray
-      val posOf: String => Array[Int] = {
-        val m = rows.map(r => r._2 -> r._3).toMap
-        t => m.getOrElse(t, Array.empty)
-      }
-      val spans = Spans.eval(query, posOf)
-      if (spans.isEmpty) Iterator.empty
-      else {
-        // collect payloads of occurrences inside ANY matching span, in
-        // (term asc, occurrence) order — a fixed order so the float avg
-        // is run-stable (the reference collects in span-walk order; the
-        // aggregate families used here are order-insensitive up to float
-        // association)
-        val vals = scala.collection.mutable.ArrayBuffer.empty[Float]
-        rows.sortBy(_._2).foreach { case (_, _, ps, _, pays) =>
-          var i = 0
-          while (i < ps.length) {
-            val p = ps(i)
-            if (i < pays.length && pays(i) != null && pays(i).length >= 4 &&
-                spans.exists(s => p >= s._1 && p < s._2))
-              vals += graft.analysis.DelimitedPayload.decodeFloat(pays(i))
-            i += 1
-          }
-        }
+    if (!stats.contains(t)) spark.emptyDataset[ScoreDoc]
+    else {
+      val w = BM25.weightValue(BM25.idf(stats(t).df, cs.maxDoc), boost)
+      val localCache = cache
+      val aggKind = agg
+      liveOnly(reader.termPayloadRows(Seq(t)).map { case (docId, _, tf, norm, pays) =>
+        val vals = pays.iterator.filter(p => p != null && p.length >= 4)
+          .map(graft.analysis.DelimitedPayload.decodeFloat).toArray
         val pf =
           if (vals.isEmpty) 1f
           else aggKind match {
@@ -996,12 +931,93 @@ final class Searcher(val reader: IndexReader, pruneMinBlocks: Int = 64,
             case "max" => vals.max
             case _ => vals.sum / vals.length
           }
-        val norm = rows.head._4
-        Iterator.single(ScoreDoc(docId,
-          BM25.score(spans.length.toFloat, norm.toByte, w, localCache) * pf))
-      }
-    })
+        ScoreDoc(docId, BM25.score(tf.toFloat, norm.toByte, w, localCache) * pf)
+      })
+    }
   }
+
+  def payloadTermTopK(t: String, k: Int, agg: String = "avg",
+                      boost: Float = 1f): Array[ScoreDoc] =
+    positional(TopK(payloadTermScores(t, agg, boost), k))
+
+  /** PayloadNearQuery analog (reference:
+    * Search/Payloads/PayloadNearQuery.cs, includeSpanScore = true):
+    * evaluate the span-near over the indexed positions, collect the
+    * payloads of every term occurrence INSIDE a matching span
+    * (PayloadNearSpanScorer.ProcessPayloads), and score each doc as the
+    * span score — BM25 over (span freq, Σ idf of the near's terms), the
+    * engine's phrase-weight shape — times the payload aggregate
+    * (avg/min/max; docs whose in-span occurrences carry no payloads keep
+    * factor 1). One postings scan reads each block's positions and
+    * payloads from its row; the span algebra and payload collection run
+    * per doc inside the group, no driver hop. */
+  def payloadNearScores(q: SpanNearQ, agg: String = "avg",
+                        boost: Float = 1f): Dataset[ScoreDoc] = positional {
+    require(reader.hasPositions, "index has no positions")
+    require(reader.hasPayloads, "index has no payloads")
+    val terms = Spans.terms(q).toSeq.sorted
+    val stats = reader.termStats(terms)
+    val live = terms.filter(stats.contains)
+    if (live.isEmpty) spark.emptyDataset[ScoreDoc]
+    else {
+      val idfSum = live.map(t => BM25.idf(stats(t).df, cs.maxDoc)).sum
+      val w = BM25.weightValue(idfSum, boost)
+      val localCache = cache
+      val aggKind = agg
+      val query = q
+      liveOnly(termPositionPayloadRows(live).groupByKey(_._1).flatMapGroups { (docId, it) =>
+        val rows = it.toArray
+        val posOf: String => Array[Int] = {
+          val m = rows.map(r => r._2 -> r._3).toMap
+          t => m.getOrElse(t, Array.empty)
+        }
+        val spans = Spans.eval(query, posOf)
+        if (spans.isEmpty) Iterator.empty
+        else {
+          // collect payloads of occurrences inside ANY matching span, in
+          // (term asc, occurrence) order — a fixed order so the float avg
+          // is run-stable (the reference collects in span-walk order; the
+          // aggregate families used here are order-insensitive up to float
+          // association)
+          val vals = scala.collection.mutable.ArrayBuffer.empty[Float]
+          rows.sortBy(_._2).foreach { case (_, _, ps, _, pays) =>
+            var i = 0
+            while (i < ps.length) {
+              val p = ps(i)
+              if (i < pays.length && pays(i) != null && pays(i).length >= 4 &&
+                  spans.exists(s => p >= s._1 && p < s._2))
+                vals += graft.analysis.DelimitedPayload.decodeFloat(pays(i))
+              i += 1
+            }
+          }
+          val pf =
+            if (vals.isEmpty) 1f
+            else aggKind match {
+              case "min" => vals.min
+              case "max" => vals.max
+              case _ => vals.sum / vals.length
+            }
+          val norm = rows.head._4
+          Iterator.single(ScoreDoc(docId,
+            BM25.score(spans.length.toFloat, norm.toByte, w, localCache) * pf))
+        }
+      })
+    }
+  }
+
+  /** (docId, term, positions, normByte, per-position payloads) rows for a
+    * term set, decoded from the positions and payloads of each postings
+    * row. */
+  private def termPositionPayloadRows(terms: Seq[String])
+      : Dataset[(Long, String, Array[Int], Int, Array[Array[Byte]])] =
+    reader.blobBlocks(terms, "posBytes", "payBytes")
+      .as[(String, Long, Int, Array[Byte], Array[Byte], Array[Byte])]
+      .flatMap { case (term, firstDocId, n, tbytes, pbytes, ybytes) =>
+        val (ids, _, norms) = PostingsCodec.decodeBlock(firstDocId, n, tbytes)
+        val poss = PostingsCodec.decodePositionsBlock(n, pbytes)
+        val pays = PostingsCodec.decodePayloadsBlock(n, ybytes)
+        ids.indices.iterator.map(i => (ids(i), term, poss(i), norms(i), pays(i)))
+      }
 
   /** SpanPayloadCheckQuery analog (reference:
     * Search/Spans/SpanPayloadCheckQuery.cs over SpanPositionCheckQuery):
@@ -1011,12 +1027,12 @@ final class Searcher(val reader: IndexReader, pruneMinBlocks: Int = 64,
     * accepted (the reference's IsPayloadAvailable==false → YES). SpanNear
     * sub-queries are rejected like the reference (its near variant
     * compares unordered). Returns (docId, accepted span count) for docs
-    * with ≥1 accepted span — the same aligned positions⋈payloads scan and
+    * with ≥1 accepted span — the same positions+payloads scan and
     * in-group span walk as [[payloadNearScores]]. */
   def spanPayloadCheckFreqs(q: SpanQuery,
                             toMatch: Seq[Array[Byte]]): Dataset[(Long, Int)] = {
     require(!q.isInstanceOf[SpanNearQ], "SpanNearQuery not allowed")
-    spanPayloadFreqs(q, toMatch, ordered = true)
+    positional(spanPayloadFreqs(q, toMatch, ordered = true))
   }
 
   /** SpanNearPayloadCheckQuery analog (reference:
@@ -1027,24 +1043,19 @@ final class Searcher(val reader: IndexReader, pruneMinBlocks: Int = 64,
     * payloads in arbitrary walk order, so order can't be required). */
   def spanNearPayloadCheckFreqs(q: SpanNearQ,
                                 toMatch: Seq[Array[Byte]]): Dataset[(Long, Int)] =
-    spanPayloadFreqs(q, toMatch, ordered = false)
+    positional(spanPayloadFreqs(q, toMatch, ordered = false))
 
   private def spanPayloadFreqs(q: SpanQuery, toMatch: Seq[Array[Byte]],
                                ordered: Boolean): Dataset[(Long, Int)] = {
-    require(reader.hasPositions, "index has no positions sidecar")
-    require(reader.hasPayloads, "index has no payloads sidecar")
+    require(reader.hasPositions, "index has no positions")
+    require(reader.hasPayloads, "index has no payloads")
     val terms = Spans.terms(q).toSeq.sorted
     val stats = reader.termStats(terms)
     val live = terms.filter(stats.contains)
     if (live.isEmpty) return spark.emptyDataset[(Long, Int)]
     val query = q
     val want = toMatch.map(_.clone())
-    val pos = termPositionRows(live).toDF("docId", "term", "ps", "norm")
-    val pay = reader.termPayloadRows(live).toDF("docId", "term", "tf", "norm2", "pays")
-    val joined = pos.join(pay, Seq("docId", "term"))
-      .select($"docId", $"term", $"ps", $"pays")
-      .as[(Long, String, Array[Int], Array[Array[Byte]])]
-    liveOnly(joined.groupByKey(_._1).flatMapGroups { (docId, it) =>
+    liveOnly(termPositionPayloadRows(live).groupByKey(_._1).flatMapGroups { (docId, it) =>
       val rows = it.toArray
       val posOf: String => Array[Int] = {
         val m = rows.map(r => r._2 -> r._3).toMap
@@ -1052,7 +1063,7 @@ final class Searcher(val reader: IndexReader, pruneMinBlocks: Int = 64,
       }
       // position -> payload for every live-term occurrence in the doc
       val payAt = scala.collection.mutable.HashMap.empty[Int, Array[Byte]]
-      rows.foreach { case (_, _, ps, pays) =>
+      rows.foreach { case (_, _, ps, _, pays) =>
         var i = 0
         while (i < ps.length) {
           // empty byte[] = occurrence carries no payload (same contract as
@@ -1109,7 +1120,7 @@ final class Searcher(val reader: IndexReader, pruneMinBlocks: Int = 64,
     searchAfterWith(sim, null, q, k)
 
   def searchAfterWith(sim: SimilarityLike, after: ScoreDoc, q: Query,
-                      k: Int): Array[ScoreDoc] = {
+                      k: Int): Array[ScoreDoc] = scan {
     val live = liveOnly(scoredWith(sim, q))
     val filtered = if (after == null) live else {
       val aScore = after.score
@@ -1368,8 +1379,7 @@ final class Searcher(val reader: IndexReader, pruneMinBlocks: Int = 64,
   /** Pagination (≙ IndexSearcher.SearchAfter, reference:
     * Search/IndexSearcher.cs:255-273): only hits strictly after `after` in
     * (score desc, docId asc) order compete. */
-  def searchAfter(after: ScoreDoc, q: Query, k: Int): Array[ScoreDoc] =
-    graft.build.IndexBuilder.labelled(spark, "search.scan", reader.dir)(topK(after, q, k))
+  def searchAfter(after: ScoreDoc, q: Query, k: Int): Array[ScoreDoc] = scan(topK(after, q, k))
 
   private def topK(after: ScoreDoc, q: Query, k: Int): Array[ScoreDoc] = {
     val rq = rewrite(q)
@@ -1438,5 +1448,5 @@ final class Searcher(val reader: IndexReader, pruneMinBlocks: Int = 64,
   /** Brute-force oracle: full sort (Catalyst TakeOrderedAndProject) —
     * correctness baseline for the heap/WAND path (SURVEY.md §5). */
   def searchOracle(q: Query, k: Int): Array[ScoreDoc] =
-    scored(q).orderBy($"score".desc, $"docId".asc).limit(k).collect()
+    scan(scored(q).orderBy($"score".desc, $"docId".asc).limit(k).collect())
 }

@@ -1,7 +1,7 @@
 package graft.streaming
 
 import graft.analysis.Analyzer
-import graft.build.{DocStatRow, DocsTable, IndexBuilder, IndexPaths, ManifestRow, PositionsRow, PostingRow, Tables}
+import graft.build.{CollectionStatsRow, DocStatRow, DocsTable, IndexBuilder, IndexPaths, ManifestRow, PostingsTableRow, Tables}
 import graft.corpus.SourceFile
 import org.apache.spark.sql.{DataFrame, Dataset, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
@@ -166,8 +166,9 @@ object StreamingIndexer {
   /** Merge policy: concatenate all committed generations into one
     * standard index at `outDir` (readable by IndexReader/Searcher).
     * Postings blocks are copied as-is — only re-range-partitioned and
-    * re-sorted by (term, firstDocId) so dictionary pruning works — and
-    * the global term_dict / collection_stats are re-aggregated. */
+    * re-sorted by (term, firstDocId) so dictionary pruning works, their
+    * blobs kept up to the lowest level of the generations — and the
+    * global term_dict / collection_stats are re-aggregated. */
   def compact(spark: SparkSession, root: String, outDir: String,
               numPartitions: Int = 8): Unit = {
     val gens = generations(spark, root)
@@ -194,23 +195,19 @@ object StreamingIndexer {
       Tables.read[DocStatRow](spark, dirs.map(IndexPaths.docstats): _*)
         .repartitionByRange(numPartitions, $"docId").sortWithinPartitions($"docId"))
     docstats.write.mode(SaveMode.Overwrite).parquet(IndexPaths.docstats(outDir))
-    Tables.read[PostingRow](spark, dirs.map(IndexPaths.postings): _*)
+    // the output's level is the lowest of its inputs' (the FieldInfos
+    // downgrade): a blob column above it is written null
+    val inputs = Tables.read[CollectionStatsRow](spark, dirs.map(IndexPaths.collectionStats): _*)
+      .as[CollectionStatsRow].collect()
+    val kept = PostingsTableRow.blobColumns.zip(
+      Seq[CollectionStatsRow => Boolean](_.hasPositions, _.hasOffsets, _.hasPayloads)
+        .map(level => inputs.forall(level))).toMap
+    val postings = Tables.read[PostingsTableRow](spark, dirs.map(IndexPaths.postings): _*)
+    postings.select(postings.columns.toIndexedSeq.map(c =>
+        if (kept.getOrElse(c, true)) col(c) else lit(null).cast("binary").as(c)): _*)
       .repartitionByRange(numPartitions, $"term", $"firstDocId")
       .sortWithinPartitions($"term", $"firstDocId")
       .write.mode(SaveMode.Overwrite).parquet(IndexPaths.postings(outDir))
-    // sidecars (positions / offsets) concatenate like postings (blocks
-    // self-contained, global docIds) — only when every generation
-    // carries them
-    for (side <- Seq(IndexPaths.positions _, IndexPaths.offsets _,
-                     IndexPaths.payloads _)) {
-      val sideDirs = dirs.map(side)
-      if (sideDirs.forall(d => fs.exists(new org.apache.hadoop.fs.Path(d)))) {
-        Tables.read[PositionsRow](spark, sideDirs: _*)
-          .repartitionByRange(numPartitions, $"term", $"firstDocId")
-          .sortWithinPartitions($"term", $"firstDocId")
-          .write.mode(SaveMode.Overwrite).parquet(side(outDir))
-      }
-    }
 
     val (maxDoc, sumTtf) = docTotals()
     val cs = IndexBuilder.writeDictAndStats(spark, outDir, numPartitions, maxDoc, sumTtf)

@@ -97,10 +97,15 @@ class FieldSpec extends AnyFunSuite {
       keywordFields = Seq("lang"), indexPositions = true)
     val report = graft.build.CheckIndex.check(spark, d)
     assert(report.ok, report.problems.mkString("; "))
-    // keyword terms are DOCS_ONLY — no positions blobs; content terms have them
-    val pos = spark.read.parquet(IndexPaths.positions(d))
-    assert(pos.where(col("term").startsWith("lang:")).count() === 0)
-    assert(pos.count() > 0)
+    // keyword terms are DOCS_ONLY — null positions blobs; content terms have them
+    def blobsOfKeywords(dir: String) = {
+      val kw = spark.read.parquet(IndexPaths.postings(dir)).where(col("term").startsWith("lang:"))
+      assert(kw.count() > 0)
+      kw.where(col("posBytes").isNotNull).count()
+    }
+    assert(new IndexReader(spark, d).hasPositions)
+    assert(blobsOfKeywords(d) === 0)
+    assert(spark.read.parquet(IndexPaths.postings(d)).where(col("posBytes").isNotNull).count() > 0)
     // expunge must NOT drop keyword postings via the positions join
     graft.build.Deletes.deleteDocs(spark, d, spark.createDataset(Seq(0L)))
     val exp = SparkTestSession.tmpDir("graft-field-pos-exp-")
@@ -109,9 +114,9 @@ class FieldSpec extends AnyFunSuite {
     assert(repExp.ok, repExp.problems.mkString("; "))
     val dict = spark.read.parquet(IndexPaths.termDict(exp))
     assert(dict.where(col("term").startsWith("lang:")).count() > 0)
-    // rewritten sidecar still has no keyword blobs
-    val posExp = spark.read.parquet(IndexPaths.positions(exp))
-    assert(posExp.where(col("term").startsWith("lang:")).count() === 0)
+    // the rewrite keeps the level and still has no keyword blobs
+    assert(new IndexReader(spark, exp).hasPositions)
+    assert(blobsOfKeywords(exp) === 0)
   }
 
   test("parser routes keyword fields to exact terms, content to analysis") {

@@ -117,6 +117,13 @@ class JobCountSpec extends AnyFunSuite with BeforeAndAfterAll {
         val layers = jobLayersOf(s.search(q, 5))
         assert(layers.nonEmpty && layers.forall(_ == "search.scan"), s"$q: $layers")
       }
+      // the generic-similarity path and the brute-force oracle (unlabelled before)
+      for ((name, call) <- Seq[(String, () => Any)](
+          "searchWith(TfIdf)" -> (() => s.searchWith(new TfIdfSimilarity(), TermQ(a), 5)),
+          "searchOracle" -> (() => s.searchOracle(TermQ(b), 5)))) {
+        val layers = jobLayersOf(call())
+        assert(layers.nonEmpty && layers.forall(_ == "search.scan"), s"$name: $layers")
+      }
     }
   }
 
@@ -147,13 +154,24 @@ class JobCountSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("positions index: exact, sloppy and multi-phrase search job floors") {
     val s = new Searcher(new IndexReader(spark, posDir))
     for ((q, floor) <- Seq(
-        PhraseQ(Seq(p0, p1)) -> 4,
-        PhraseQ(Seq(p0, p1), slop = 2) -> 4,
-        MultiPhraseQ(Seq(Seq(p0, a), Seq(p1, b))) -> 4)) { // was 5: a docstats join for the norm
+        // each was 3 while positions were a sidecar joined to the postings
+        // (and multi-phrase 5 before that: a docstats join for the norm)
+        PhraseQ(Seq(p0, p1)) -> 2,
+        PhraseQ(Seq(p0, p1), slop = 2) -> 2,
+        MultiPhraseQ(Seq(Seq(p0, a), Seq(p1, b))) -> 2)) {
       assert(s.search(q, 5).nonEmpty, s"$q matched nothing") // warm
       val n = jobsOf(s.search(q, 5))
       assert(n <= floor, s"$q ran $n jobs")
     }
+  }
+
+  test("positions index: a direct phraseFreqs labels the jobs it runs") {
+    // on a fresh reader, reading the recorded level is the call's one job
+    // (before, the level was a file-system probe and no job was labelled)
+    val s = new Searcher(new IndexReader(spark, posDir))
+    val layers = jobLayersOf(s.phraseFreqs(Seq(p0, p1)))
+    assert(layers.nonEmpty && layers.forall(_ == "search.positions"), layers)
+    assert(s.phraseFreqs(Seq(p0, p1)).collect().nonEmpty)
   }
 
   test("a reader with open table handles still serializes, without the handles") {
@@ -186,10 +204,11 @@ class JobCountSpec extends AnyFunSuite with BeforeAndAfterAll {
       spark.createDataset((0L until 200L).map(CorpusGen.doc)), dir,
       numPartitions = 2, indexPositions = true))
     val byLayer = layers.groupBy(identity).map { case (l, v) => l -> v.size }
-    assert(layers.size <= 27, s"build ran ${layers.size} jobs: $byLayer") // was 58, then 28
+    assert(layers.size <= 23, s"build ran ${layers.size} jobs: $byLayer") // was 58, 28, then 27
     assert(byLayer.keySet === Set("build.flush", "build.postings", "build.stats"), byLayer)
     assert(byLayer("build.flush") <= 7, byLayer) // was 10
-    assert(byLayer("build.postings") <= 11, byLayer) // was 24
+    // was 24, then 11: 4 more jobs wrote the positions sidecar
+    assert(byLayer("build.postings") <= 7, byLayer)
     assert(byLayer("build.stats") <= 9, byLayer) // was 24, then 10 with the first-chars write
     assert(CheckIndex.check(spark, dir).ok)
   }
@@ -198,6 +217,9 @@ class JobCountSpec extends AnyFunSuite with BeforeAndAfterAll {
     // was 19: every table's schema was inferred on open
     val n = jobsOf(assert(CheckIndex.check(spark, gen(0)).ok))
     assert(n <= 15, s"CheckIndex.check ran $n jobs")
+    // was 20: the positions sidecar was checked in passes of its own
+    val p = jobsOf(assert(CheckIndex.check(spark, posDir).ok))
+    assert(p <= 15, s"CheckIndex.check of a positions index ran $p jobs")
   }
 
   /** An NRT root with two committed generations (uncounted set-up). */
@@ -219,6 +241,20 @@ class JobCountSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(n <= 25, s"appendBatch ran $n jobs") // was 61
     assert(StreamingIndexer.generations(spark, r) === Seq(0L, 1L, 2L))
     assert(StreamingIndexer.totalDocs(spark, r) === 200L)
+  }
+
+  test("appendBatch with positions onto a 2-generation root: job floor") {
+    import spark.implicits._
+    val r = s"$root/nrt-append-pos"
+    for ((g, ids) <- Seq(0L -> (0L until 100L), 1L -> (100L until 150L)))
+      StreamingIndexer.appendBatch(spark, spark.createDataset(ids.map(CorpusGen.doc)), r, g,
+        numPartitions = 2, indexPositions = true)
+    val n = jobsOf(StreamingIndexer.appendBatch(spark,
+      spark.createDataset((150L until 200L).map(CorpusGen.doc)), r, 2, numPartitions = 2,
+      indexPositions = true))
+    assert(n <= 24, s"appendBatch with positions ran $n jobs") // was 28
+    assert(IndexReader.multi(spark, StreamingIndexer.generations(spark, r)
+      .map(StreamingIndexer.genDir(r, _))).hasPositions)
   }
 
   test("updateDocuments on a 2-generation root: job floor") {

@@ -7,9 +7,9 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** The ..._AND_OFFSETS index level (reference: Index/FieldInfo.cs:373-397)
   * + index-time highlighting (PostingsHighlighter idea): char offsets
-  * decoded from the sidecar must equal re-analysis offsets exactly, the
+  * decoded from the index must equal re-analysis offsets exactly, the
   * offsets-driven highlighter must mark the same characters, and the
-  * sidecar must survive expunge aligned. */
+  * offsets must survive expunge. */
 class OffsetsSpec extends AnyFunSuite {
   private lazy val spark = SparkTestSession.spark
 

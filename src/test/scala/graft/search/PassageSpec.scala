@@ -7,7 +7,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** PostingsHighlighter passage ranking analog (reference:
   * PostingsHighlight/PassageScorer.cs formulas over fixed token-window
-  * passages from the positions sidecar): scores must match a closed-form
+  * passages from the indexed positions): scores must match a closed-form
   * recomputation from the raw token lists, only hit-bearing passages
   * appear, and the window bucketing is exact. */
 class PassageSpec extends AnyFunSuite {

@@ -9,9 +9,9 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** Payload queries (reference: Search/Payloads/PayloadTermQuery.cs +
   * Analysis/Payloads/DelimitedPayloadTokenFilter.cs): `term|x` tokens
-  * carry float payloads into a per-position sidecar; payload term
-  * queries multiply the BM25 score by the payload aggregate; the sidecar
-  * survives CheckIndex and expunge. */
+  * carry float payloads into the index, per position; payload term
+  * queries multiply the BM25 score by the payload aggregate; the payloads
+  * survive CheckIndex and expunge. */
 class PayloadSpec extends AnyFunSuite {
   private lazy val spark = SparkTestSession.spark
 

@@ -49,6 +49,41 @@ class PlanSpec extends AnyFunSuite {
       s"column pruning must reach the scan:\n$plan")
   }
 
+  test("scoring scans read no blob column of a positions+offsets+payloads index") {
+    import scala.jdk.CollectionConverters._
+    import spark.implicits._
+    val d = SparkTestSession.tmpDir("graft-plan-blobs-")
+    IndexBuilder.build(spark, spark.createDataset(CorpusGen.local(100)), d, numPartitions = 2,
+      indexPositions = true, indexOffsets = true, indexPayloads = true)
+    val reader = new IndexReader(spark, d)
+    assert(reader.hasPositions && reader.hasOffsets && reader.hasPayloads)
+    // the columns each postings scan of a query reads
+    def postingsReads(qe: org.apache.spark.sql.execution.QueryExecution): Seq[Seq[String]] =
+      qe.sparkPlan.collect {
+        case f: org.apache.spark.sql.execution.FileSourceScanExec
+            if f.relation.location.rootPaths.exists(_.getName == "postings") =>
+          f.requiredSchema.fieldNames.toSeq
+      }
+    def blobFree(reads: Seq[Seq[String]]): Boolean = reads.nonEmpty && reads.forall(r =>
+      r.contains("bytes") && graft.build.PostingsTableRow.blobColumns.forall(b => !r.contains(b)))
+    val direct = postingsReads(reader.postingRows(Seq("def", "int")).queryExecution)
+    assert(blobFree(direct), direct)
+    // every query a TermQ search executes
+    val reads = new java.util.concurrent.ConcurrentLinkedQueue[Seq[String]]
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      def onSuccess(f: String, qe: org.apache.spark.sql.execution.QueryExecution, ns: Long): Unit =
+        postingsReads(qe).foreach(reads.add)
+      def onFailure(f: String, qe: org.apache.spark.sql.execution.QueryExecution,
+                    e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      assert(new Searcher(reader).search(TermQ("def"), 10).nonEmpty)
+      org.apache.spark.ListenerBusDrain(spark.sparkContext)
+    } finally spark.listenerManager.unregister(listener)
+    assert(blobFree(reads.asScala.toSeq), reads)
+  }
+
   test("searcher's postings scan stays whole-stage-codegen'd up to the decode") {
     val reader = new IndexReader(spark, dir)
     val df = reader.postings.where(col("term").isin("def", "int"))

@@ -6,9 +6,9 @@ import graft.corpus.{CorpusGen, SourceFile}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The optional positions index (DOCS_AND_FREQS_AND_POSITIONS analog):
-  * phrase queries read the aligned positions sidecar instead of
-  * re-analyzing stored content, with bit-identical freqs; the sidecar
-  * survives expunge, and CheckIndex cross-verifies counts against tfs. */
+  * phrase queries read the positions of the postings rows instead of
+  * re-analyzing stored content, with bit-identical freqs; the positions
+  * survive expunge, and CheckIndex cross-verifies counts against tfs. */
 class PositionsSpec extends AnyFunSuite {
   private lazy val spark = SparkTestSession.spark
 
@@ -36,7 +36,9 @@ class PositionsSpec extends AnyFunSuite {
 
   test("positions sidecar exists only when requested; CheckIndex verifies it") {
     posSearcher // force builds
-    assert(new java.io.File(IndexPaths.positions(dir)).exists())
+    assert(posSearcher.reader.hasPositions && !reSearcher.reader.hasPositions)
+    assert(spark.read.parquet(IndexPaths.postings(reSearcher.reader.dir))
+      .where(org.apache.spark.sql.functions.col("posBytes").isNotNull).count() === 0)
     val report = CheckIndex.check(spark, dir)
     assert(report.ok, report.problems.mkString("; "))
   }
@@ -107,7 +109,7 @@ class PositionsSpec extends AnyFunSuite {
     Deletes.deleteDocs(spark, dir, spark.createDataset(Seq(0L)))
     val out = SparkTestSession.tmpDir("graft-pos-exp-")
     Deletes.expunge(spark, dir, out, numPartitions = 2)
-    assert(new java.io.File(IndexPaths.positions(out)).exists())
+    assert(new IndexReader(spark, out).hasPositions)
     val report = CheckIndex.check(spark, out)
     assert(report.ok, report.problems.mkString("; "))
     val s = new Searcher(new IndexReader(spark, out))
