@@ -85,8 +85,9 @@ private final class PostingsReencoder(
 /** Deletes as tombstones (reference model: buffered term/query deletes
   * applied through a liveDocs bitset — Index/BufferedUpdatesStream.cs,
   * Codecs/LiveDocsFormat.cs — restated relationally): an append-only
-  * `tombstones/` table of docIds next to the index. Search anti-joins
-  * against it; global statistics (df, ttf, maxDoc) intentionally DON'T
+  * `tombstones/` table of docIds next to the index. A searcher loads it
+  * once into a sorted driver-side array and leaves those docs out of
+  * every result; global statistics (df, ttf, maxDoc) intentionally DON'T
   * change until a merge, exactly like the reference (deleted docs still
   * count in idf until expunge).
   *

@@ -272,34 +272,54 @@ object IndexBuilder {
   /** Writes term_dict (aggregated from the postings in `dir`) and
     * collection_stats, given the doc totals of `dir`'s docstats — the one
     * writer of collection_stats, for build, rewrite and compaction. The
-    * dictionary write counts sumDocFreq on the way, and the terms whose
-    * postings carry each blob: the index carries a level when any term
-    * does. Returns the collection stats. */
+    * dictionary write counts sumDocFreq on the way; the levels come from
+    * the postings footers ([[carriedBlobs]]). Returns the collection
+    * stats. */
   private[graft] def writeDictAndStats(spark: SparkSession, dir: String, numPartitions: Int,
                                        maxDoc: Long, sumTtf: Long): CollectionStatsRow = {
     import spark.implicits._
-    val blobs = PostingsTableRow.blobColumns
-    val dict = Tables.read[PostingsTableRow](spark, IndexPaths.postings(dir))
+    val dict = Tables.read[PostingRow](spark, IndexPaths.postings(dir))
       .groupBy($"term")
-      .agg(sum($"numDocs").as("df"), sum($"sumTf").as("totalTf") +:
-        max($"maxTf").as("maxTf") +: max($"maxNorm").as("maxNorm") +:
-        blobs.map(c => max(col(c).isNotNull).as(c)): _*)
+      .agg(sum($"numDocs").as("df"), sum($"sumTf").as("totalTf"),
+        max($"maxTf").as("maxTf"), max($"maxNorm").as("maxNorm"))
       .repartitionByRange(math.max(1, numPartitions / 8), $"term")
       .sortWithinPartitions($"term")
     val sumDocFreq = spark.sparkContext.longAccumulator("sumDocFreq")
-    val carried = blobs.map(c => spark.sparkContext.longAccumulator(c))
-    counting(dict) { r =>
-      sumDocFreq.add(r.getLong(1))
-      carried.indices.foreach(i => if (r.getBoolean(5 + i)) carried(i).add(1))
-    }.drop(blobs: _*)
+    counting(dict)(r => sumDocFreq.add(r.getLong(1)))
       .write.mode(SaveMode.Overwrite).parquet(IndexPaths.termDict(dir))
-    val Seq(pos, off, pay) = carried.map(_.sum > 0)
+    val Seq(pos, off, pay) = carriedBlobs(spark, dir)
     val cs = CollectionStatsRow(maxDoc = maxDoc, docCount = maxDoc,
       sumTotalTermFreq = sumTtf, sumDocFreq = sumDocFreq.sum,
       hasPositions = pos, hasOffsets = off, hasPayloads = pay)
     spark.createDataset(Seq(cs)).coalesce(1)
       .write.mode(SaveMode.Overwrite).parquet(IndexPaths.collectionStats(dir))
     cs
+  }
+
+  /** Per blob column ([[PostingsTableRow.blobColumns]], level order),
+    * whether `dir`'s postings carry it: whether some parquet column chunk
+    * of it holds a value (fewer nulls than rows). The index carries a
+    * level when any term does. Read from the file footers on the driver:
+    * no Spark job, no blob byte. */
+  private def carriedBlobs(spark: SparkSession, dir: String): Seq[Boolean] = {
+    import org.apache.hadoop.fs.Path
+    import org.apache.parquet.hadoop.ParquetFileReader
+    import org.apache.parquet.hadoop.util.HadoopInputFile
+    val conf = spark.sparkContext.hadoopConfiguration
+    val root = new Path(IndexPaths.postings(dir))
+    val files = root.getFileSystem(conf).listStatus(root).filter(_.getPath.getName.endsWith(".parquet"))
+    val chunks = files.toSeq.flatMap { f =>
+      val reader = ParquetFileReader.open(HadoopInputFile.fromStatus(f, conf))
+      try reader.getFooter.getBlocks.asScala.toSeq.flatMap(b =>
+        b.getColumns.asScala.map(c => (c.getPath.toDotString, c.getStatistics, b.getRowCount)))
+      finally reader.close()
+    }
+    PostingsTableRow.blobColumns.map(c => chunks.exists { case (name, st, rows) =>
+      name == c && {
+        require(st.isNumNullsSet, s"a postings footer of $dir has no null count for $c")
+        st.getNumNulls < rows
+      }
+    })
   }
 
   /** Full build. `resume = true` skips stages already committed to the

@@ -3,6 +3,7 @@ package graft.search
 import graft.bm25.BM25
 import graft.build.{CollectionStatsRow, DocStatRow, IndexPaths, PostingRow, PostingsTableRow, Tables, TermDictRow}
 import graft.postings.PostingsCodec
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -180,6 +181,24 @@ class IndexReader(val spark: SparkSession, val dir: String) extends Serializable
 
   /** Directories whose tombstone tables apply to this view. */
   def tombstoneDirs: Seq[String] = Seq(dir)
+
+  /** The docIds tombstoned in any of [[tombstoneDirs]], sorted ascending
+    * and distinct (the liveDocs bits, inverted): one job, labelled
+    * `search.tombstones`, over the tombstone tables that exist, and none
+    * when no table does. */
+  private[search] def deletedDocIds(): Array[Long] = {
+    val hconf = spark.sparkContext.hadoopConfiguration
+    val paths = tombstoneDirs.map(graft.build.Deletes.tombstonesPath).filter { s =>
+      val p = new org.apache.hadoop.fs.Path(s)
+      p.getFileSystem(hconf).exists(p)
+    }
+    if (paths.isEmpty) Array.emptyLongArray
+    else graft.build.IndexBuilder.labelled(spark, "search.tombstones", dir) {
+      val ids = spark.read.schema("docId LONG").parquet(paths: _*).as[Long].collect()
+      java.util.Arrays.sort(ids)
+      ids.distinct
+    }
+  }
 }
 
 object IndexReader {
@@ -302,22 +321,30 @@ object Searcher {
   * Search/IndexSearcher.cs:282-500, restated in SURVEY.md §3.2).
   *
   * Physical shape per query:
-  *   - dictionary stats lookup (a binary search of the reader's
+  *   - rewrite and dictionary stats (binary searches of the reader's
   *     driver-held dictionary, no job) → weights computed driver-side;
-  *   - postings scan filtered to the query terms (parquet min/max pruning
-  *     on the sorted term column), block decode behind block-max WAND
-  *     pruning (public literature: Broder et al.; Ding & Suel BMW — the
-  *     reference predates WAND, SURVEY.md §2.4 note);
-  *   - conjunction candidates pre-pruned by the rarest term's block
-  *     intervals (≙ leapfrog skipping, ConjunctionScorer.cs:84-124);
-  *   - per-partition bounded HitQueue heaps, merged on the driver in
-  *     the same job ([[TopK]] ≙ TopDocs.Merge).
+  *   - a flat query (a TermQ, or a BoolQ of TermQ clauses only, any
+  *     minShouldMatch and boost) runs ONE job of ONE task with no
+  *     shuffle: the postings blocks of its scoring and excluded terms
+  *     (parquet min/max pruning on the sorted term column), gathered by
+  *     `coalesce(1)`, scored document-at-a-time by [[FlatScorer]] behind
+  *     a block-max WAND threshold kept live from its own top-k heap
+  *     (public literature: Broder et al.; Ding & Suel BMW — the
+  *     reference predates WAND, SURVEY.md §2.4 note), tombstoned docs
+  *     skipped in the task. One task per query gives up intra-query read
+  *     parallelism: a query's postings are small next to a job's cost;
+  *   - every other tree (phrases, nested bools, DisMax, function and
+  *     boosting queries, the constant-score wide expansion) composes
+  *     Dataset scorers joined by docId shuffles ([[scoredRaw]]), drops
+  *     tombstoned docs ([[liveOnly]]) and merges per-partition bounded
+  *     HitQueue heaps on the driver in the same job ([[TopK]] ≙
+  *     TopDocs.Merge).
   *
   * Float determinism: clause scores are summed in clause-declaration order
   * per doc (the reference's in-order sum, DisjunctionSumScorer.cs:59-85);
   * coord = queryNorm = 1 under BM25 (Similarity.cs:122-143).
   */
-final class Searcher(val reader: IndexReader, pruneMinBlocks: Int = 64,
+final class Searcher(val reader: IndexReader,
     analyzerFor: String => graft.analysis.Analyzer = graft.analysis.Analyzer.forLang,
     maxClauseCount: Int = 1024)
     extends Serializable with Explains {
@@ -328,28 +355,26 @@ final class Searcher(val reader: IndexReader, pruneMinBlocks: Int = 64,
   private lazy val cache: Array[Float] =
     BM25.normCache(BM25.avgFieldLength(cs.sumTotalTermFreq, cs.maxDoc))
 
-  /** liveDocs analog: tombstoned docIds are filtered out of every result
-    * (stats intentionally unchanged until Deletes.expunge, like the
-    * reference's deleted-docs-still-count-in-idf behavior). A multi-
-    * generation reader unions every generation's tombstones. */
-  private lazy val tombstones: Option[DataFrame] = {
-    val hconf = spark.sparkContext.hadoopConfiguration
-    val paths = reader.tombstoneDirs.map(graft.build.Deletes.tombstonesPath)
-      .filter { s =>
-        val p = new org.apache.hadoop.fs.Path(s)
-        p.getFileSystem(hconf).exists(p)
-      }
-    if (paths.isEmpty) None
-    else Some(spark.read.parquet(paths: _*)
-      .select($"docId".as("exDocId")).distinct())
-  }
+  /** liveDocs analog: the tombstoned docIds, loaded once per Searcher
+    * into a sorted driver-side array (8 B per deleted doc) and broadcast.
+    * Every result leaves them out (stats intentionally unchanged until
+    * Deletes.expunge, like the reference's deleted-docs-still-count-in-idf
+    * behavior): the flat scorer skips them inside its task, every other
+    * plan through [[liveOnly]]. A multi-generation reader unions every
+    * generation's tombstones. */
+  @transient private lazy val deleted: Broadcast[Array[Long]] =
+    spark.sparkContext.broadcast(reader.deletedDocIds())
 
-  /** The one tombstone filter: drops the rows of a docId-keyed dataset
-    * (its first column is the docId) whose doc is deleted. */
-  private def liveOnly[T](ds: Dataset[T]): Dataset[T] = tombstones match {
-    case None => ds
-    case Some(t) => ds.join(t, ds(ds.columns.head) === t("exDocId"), "left_anti").as(ds.encoder)
-  }
+  /** The one tombstone filter of the Dataset plans: drops the rows of a
+    * docId-keyed dataset (its first column is the docId) whose doc is
+    * deleted, by a binary search of the broadcast array; no join. */
+  private def liveOnly[T](ds: Dataset[T]): Dataset[T] =
+    if (deleted.value.isEmpty) ds
+    else {
+      val dead = deleted
+      val live = udf((docId: Long) => java.util.Arrays.binarySearch(dead.value, docId) < 0)
+      ds.where(live(ds(ds.columns.head)))
+    }
 
   // ------------------------------------------------------------- rewrite
 
@@ -504,7 +529,7 @@ final class Searcher(val reader: IndexReader, pruneMinBlocks: Int = 64,
     * [[leafTerms]] of the whole tree. */
   private def scoredRaw(q: Query, stats: Map[String, TermDictRow]): Dataset[ScoreDoc] = q match {
     case TermQ(t, boost) =>
-      scoredTerms(Seq(t -> boost), theta = 0f, stats).map(h => ScoreDoc(h.docId, h.score))
+      scoredTerms(Seq((t, boost, 0)), stats).map(h => ScoreDoc(h.docId, h.score))
     case MatchAllQ(boost) =>
       reader.docstats.select($"docId").as[Long].map(ScoreDoc(_, boost))
     case ConstantScoreQ(sub, boost) =>
@@ -1121,13 +1146,7 @@ final class Searcher(val reader: IndexReader, pruneMinBlocks: Int = 64,
 
   def searchAfterWith(sim: SimilarityLike, after: ScoreDoc, q: Query,
                       k: Int): Array[ScoreDoc] = scan {
-    val live = liveOnly(scoredWith(sim, q))
-    val filtered = if (after == null) live else {
-      val aScore = after.score
-      val aDoc = after.docId
-      live.filter(sd => sd.score < aScore || (sd.score == aScore && sd.docId > aDoc))
-    }
-    TopK(filtered, k)
+    TopK(pageAfter(liveOnly(scoredWith(sim, q)), after), k)
   }
 
   /** One scoring clause of the generic path: a term (`terms.size == 1`,
@@ -1245,7 +1264,7 @@ final class Searcher(val reader: IndexReader, pruneMinBlocks: Int = 64,
     val complex = indexed.filterNot(_._1.isInstanceOf[TermQ])
     val parts =
       (if (termLeaves.nonEmpty)
-        Seq(scoredTermsIndexed(termLeaves.map(t => (t._1, t._2, t._3)), 0f, stats))
+        Seq(scoredTerms(termLeaves, stats))
       else Nil) ++
       complex.map { case (q, i) =>
         scoredRaw(q, stats).map(sd => ClauseHit(sd.docId, i, sd.score))
@@ -1294,17 +1313,9 @@ final class Searcher(val reader: IndexReader, pruneMinBlocks: Int = 64,
 
   // ---------------------------------------------------- term-leaf scanning
 
-  /** Score a batch of terms in one postings scan. `theta` is the block-max
-    * WAND threshold: blocks whose own upper bound plus every OTHER term's
-    * whole-list upper bound stays below theta cannot contain a top-k doc
-    * and are skipped before decoding. */
-  private def scoredTerms(terms: Seq[(String, Float)], theta: Float,
-                          stats: Map[String, TermDictRow]): Dataset[ClauseHit] =
-    scoredTermsIndexed(terms.zipWithIndex.map { case ((t, b), i) => (t, b, i) }, theta, stats)
-
-  private def scoredTermsIndexed(terms: Seq[(String, Float, Int)], theta: Float,
-                                 stats: Map[String, TermDictRow]): Dataset[ClauseHit] = {
-    if (terms.isEmpty) return spark.emptyDataset[ClauseHit]
+  /** Score a batch of (term, boost, clause index) in one postings scan. */
+  private def scoredTerms(terms: Seq[(String, Float, Int)],
+                          stats: Map[String, TermDictRow]): Dataset[ClauseHit] = {
     val live = terms.filter(t => stats.contains(t._1)) // df=0 → no hits, no NaN
     if (live.isEmpty) return spark.emptyDataset[ClauseHit]
     // per-term ARRAY of (weightValue, clauseIdx): a term shared by several
@@ -1317,41 +1328,25 @@ final class Searcher(val reader: IndexReader, pruneMinBlocks: Int = 64,
           (BM25.weightValue(BM25.idf(stats(t).df, cs.maxDoc), b), i)
         }.toArray
       }
-    val termUB: Map[String, Float] = weights.map { case (t, entries) =>
-      val s = stats(t)
-      // duplicate clauses each contribute; the union's UB for this term
-      // is the sum over its clause entries
-      t -> entries.map(e => BM25.blockMaxScore(s.maxTf, cache(s.maxNorm & 0xff), e._1)).sum
-    }
-    val sumUB = termUB.values.sum
     val localCache = cache
-    reader.postingRows(live.map(_._1)).mapPartitions { it =>
-      it.flatMap { r =>
-        val entries = weights(r.term)
-        var blockUB = 0f
-        entries.foreach(e =>
-          blockUB += BM25.blockMaxScore(r.maxTf, localCache(r.maxNorm & 0xff), e._1))
-        val othersUB = sumUB - termUB(r.term)
-        if (theta > 0f && blockUB + othersUB < theta) Iterator.empty
-        else {
-          val (docIds, tfs, norms) = PostingsCodec.decodeBlock(r.firstDocId, r.numDocs, r.bytes)
-          val out = new Array[ClauseHit](docIds.length * entries.length)
-          var i = 0
-          var o = 0
-          while (i < docIds.length) {
-            var e = 0
-            while (e < entries.length) {
-              val (w, idx) = entries(e)
-              out(o) = ClauseHit(docIds(i),
-                idx, BM25.score(tfs(i).toFloat, norms(i).toByte, w, localCache))
-              o += 1
-              e += 1
-            }
-            i += 1
-          }
-          out.iterator
+    reader.postingRows(live.map(_._1)).flatMap { r =>
+      val entries = weights(r.term)
+      val (docIds, tfs, norms) = PostingsCodec.decodeBlock(r.firstDocId, r.numDocs, r.bytes)
+      val out = new Array[ClauseHit](docIds.length * entries.length)
+      var i = 0
+      var o = 0
+      while (i < docIds.length) {
+        var e = 0
+        while (e < entries.length) {
+          val (w, idx) = entries(e)
+          out(o) = ClauseHit(docIds(i),
+            idx, BM25.score(tfs(i).toFloat, norms(i).toByte, w, localCache))
+          o += 1
+          e += 1
         }
+        i += 1
       }
+      out.iterator
     }
   }
 
@@ -1384,65 +1379,57 @@ final class Searcher(val reader: IndexReader, pruneMinBlocks: Int = 64,
   private def topK(after: ScoreDoc, q: Query, k: Int): Array[ScoreDoc] = {
     val rq = rewrite(q)
     val stats = reader.termStats(leafTerms(rq))
-    val base: Dataset[ScoreDoc] = rq match {
-      // WAND fast path: single term / pure disjunction of terms, msm<=1
-      case TermQ(t, b) =>
-        scoredTerms(Seq(t -> b), bootstrapTheta(Seq(t -> b), k, after, stats), stats)
-          .map(h => ScoreDoc(h.docId, h.score))
-      case BoolQ(Nil, should, Nil, msm, boost)
-          if msm <= 1 && boost == 1f && should.forall(_.isInstanceOf[TermQ]) =>
-        val ts = should.map { case TermQ(t, b) => (t, b) }
-        val theta = bootstrapTheta(ts, k, after, stats)
-        scoredTerms(ts, theta, stats).groupByKey(_.docId).mapGroups { (docId, it) =>
-          val buf = it.toArray.sortBy(_.idx)
-          var sum = 0f
-          buf.foreach(h => sum += h.score)
-          ScoreDoc(docId, sum)
-        }
-      case other => scoredRaw(other, stats)
+    flatSpec(rq, stats) match {
+      case Some(spec) => flatTopK(spec, stats, after, k)
+      case None => TopK(pageAfter(liveOnly(scoredRaw(rq, stats)), after), k)
     }
-    val live = liveOnly(base)
-    val filtered = if (after == null) live else {
-      val aScore = after.score
-      val aDoc = after.docId
-      live.filter(sd => sd.score < aScore || (sd.score == aScore && sd.docId > aDoc))
-    }
-    TopK(filtered, k)
   }
 
-  /** Exact-but-cheap WAND threshold bootstrap: decode the single best block
-    * of the highest-upper-bound term; its hits' single-term scores are
-    * lower bounds of their true scores, so the kth best is a sound
-    * threshold. Returns 0 (no pruning) when the index is too small to
-    * bother. */
-  private def bootstrapTheta(terms: Seq[(String, Float)], k: Int, after: ScoreDoc,
-                             stats: Map[String, TermDictRow]): Float = {
-    if (after != null) return 0f // pagination: correctness over speed
-    val live = terms.filter(t => stats.contains(t._1))
-    if (live.isEmpty) return 0f
-    val totalBlocks = live.map(t => (stats(t._1).df / PostingsCodec.BlockSize) + 1).sum
-    if (totalBlocks < pruneMinBlocks) return 0f // pruning overhead not worth it
-    val best = live.maxBy { case (t, b) =>
-      val s = stats(t)
-      BM25.blockMaxScore(s.maxTf, cache(s.maxNorm & 0xff),
-        BM25.weightValue(BM25.idf(s.df, cs.maxDoc), b))
-    }
-    val (t, b) = best
-    val w = BM25.weightValue(BM25.idf(stats(t).df, cs.maxDoc), b)
-    val localCache = cache
-    val bestBlock = reader.postingRows(Seq(t))
-      .map(r => (BM25.blockMaxScore(r.maxTf, localCache(r.maxNorm & 0xff), w), r))
-      .orderBy($"_1".desc).limit(1).collect()
-    if (bestBlock.isEmpty) return 0f
-    val r = bestBlock(0)._2
-    val (_, tfs, norms) = PostingsCodec.decodeBlock(r.firstDocId, r.numDocs, r.bytes)
-    val scores = Array.tabulate(tfs.length)(i =>
-      BM25.score(tfs(i).toFloat, norms(i).toByte, w, localCache))
-    if (scores.length < k) 0f
+  /** The hits strictly after `after` in (score desc, docId asc) order
+    * (all of them when `after` is null). */
+  private def pageAfter(hits: Dataset[ScoreDoc], after: ScoreDoc): Dataset[ScoreDoc] =
+    if (after == null) hits
     else {
-      java.util.Arrays.sort(scores)
-      scores(scores.length - k) // kth best single-term score
+      val aScore = after.score
+      val aDoc = after.docId
+      hits.filter(sd => sd.score < aScore || (sd.score == aScore && sd.docId > aDoc))
     }
+
+  /** A rewritten query as a [[FlatScorer.Spec]] when it is flat: a TermQ,
+    * or a BoolQ whose must, should and mustNot clauses are all TermQs.
+    * A clause on a term the dictionary lacks keeps its slot, weight 0,
+    * and is never present. */
+  private def flatSpec(q: Query, stats: Map[String, TermDictRow]): Option[FlatScorer.Spec] = {
+    def clause(t: TermQ) = FlatScorer.Clause(t.term,
+      stats.get(t.term).fold(0f)(s => BM25.weightValue(BM25.idf(s.df, cs.maxDoc), t.boost)))
+    def terms(qs: Seq[Query]) = {
+      val ts = qs.collect { case t: TermQ => t }
+      if (ts.size == qs.size) Some(ts) else None
+    }
+    q match {
+      case t: TermQ => Some(FlatScorer.Spec(IndexedSeq(clause(t)), 0, 0, 1f, Set.empty))
+      case BoolQ(must, should, mustNot, msm, boost) =>
+        for (m <- terms(must); s <- terms(should); n <- terms(mustNot))
+          yield FlatScorer.Spec((m ++ s).map(clause).toIndexedSeq, m.size, msm, boost,
+            n.map(_.term).toSet)
+      case _ => None
+    }
+  }
+
+  /** Top-k of a flat query in one Spark job of one task, with no shuffle:
+    * the postings blocks of its scoring and excluded terms, gathered by
+    * `coalesce(1)`, go through [[FlatScorer.topK]], which returns at
+    * most k hits. */
+  private def flatTopK(spec: FlatScorer.Spec, stats: Map[String, TermDictRow],
+                       after: ScoreDoc, k: Int): Array[ScoreDoc] = {
+    val mustLive = spec.clauses.take(spec.nMust).forall(c => stats.contains(c.term))
+    if (k <= 0 || !mustLive || !spec.clauses.exists(c => stats.contains(c.term)))
+      return Array.empty
+    val localCache = cache
+    val dead = deleted
+    reader.postingRows(spec.terms.filter(stats.contains)).coalesce(1).mapPartitions { rows =>
+      FlatScorer.topK(rows, spec, localCache, dead.value, after, k).hits.iterator
+    }.collect()
   }
 
   /** Brute-force oracle: full sort (Catalyst TakeOrderedAndProject) —

@@ -12,7 +12,8 @@ import scala.jdk.CollectionConverters._
 
 /** The Spark-job floors of the serving and write paths. Serving, on a warm
   * searcher: a reader opens each table once and holds its term dictionary
-  * on the driver, so term stats and multi-term expansion run no job.
+  * on the driver, so term stats and multi-term expansion run no job, and
+  * a flat query is scored in one job of one task.
   * Writing: a build reads back no schema it already knows and probes
   * nothing a directory listing answers. Jobs are counted by a listener
   * filtered to the measured call's job group, so a regression (a table
@@ -23,18 +24,24 @@ class JobCountSpec extends AnyFunSuite with BeforeAndAfterAll {
   private lazy val root = SparkTestSession.tmpDir("graft-jobs-")
   private def gen(i: Int) = s"$root/gen$i"
 
-  /** The `graft.layer` label of each job launched in `group`, in order. */
+  /** The `graft.layer` label of each job launched in `group`, in order,
+    * and the tasks of their stages. */
   private final class GroupJobs(group: String) extends SparkListener {
     val layers = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val tasks = new java.util.concurrent.atomic.AtomicInteger
     override def onJobStart(e: SparkListenerJobStart): Unit =
       Option(e.properties).filter(_.getProperty("spark.jobGroup.id") == group).foreach { p =>
         layers.add(Option(p.getProperty(IndexBuilder.LayerProperty)).getOrElse("-"))
+        tasks.addAndGet(e.stageInfos.map(_.numTasks).sum)
       }
   }
 
   /** The layer label of every Spark job `f` launches (its own and those
     * of threads it spawns). */
-  private def jobLayersOf(f: => Any): Seq[String] = {
+  private def jobLayersOf(f: => Any): Seq[String] = jobsAndTasksOf(f)._1
+
+  /** The layer labels of `f`'s jobs and the number of their tasks. */
+  private def jobsAndTasksOf(f: => Any): (Seq[String], Int) = {
     val sc = spark.sparkContext
     val group = s"jobcount-${System.nanoTime()}"
     val l = new GroupJobs(group)
@@ -43,7 +50,7 @@ class JobCountSpec extends AnyFunSuite with BeforeAndAfterAll {
       sc.setJobGroup(group, "JobCountSpec")
       try f finally sc.clearJobGroup()
       org.apache.spark.ListenerBusDrain(sc)
-      l.layers.asScala.toSeq
+      (l.layers.asScala.toSeq, l.tasks.get)
     } finally sc.removeSparkListener(l)
   }
 
@@ -72,16 +79,13 @@ class JobCountSpec extends AnyFunSuite with BeforeAndAfterAll {
   for ((name, mk) <- readers) {
     test(s"$name reader: TermQ <= 3 jobs, with and without WAND pruning") {
       val k = 5
-      val plain = new Searcher(mk())
-      // pruneMinBlocks = 1: bootstrapTheta decodes the best block even on this small index
-      val pruning = new Searcher(mk(), pruneMinBlocks = 1)
-      // was 2 and 3: the termStats collect ran before the scan
-      for ((s, floor) <- Seq(plain -> 1, pruning -> 2)) {
-        s.search(TermQ(a), k) // warm: open the reader's tables, collection stats
-        val n = jobsOf(s.search(TermQ(a), k))
-        assert(n <= floor, s"TermQ ran $n jobs")
-      }
-      assert(plain.search(TermQ(a), k).toSeq === pruning.search(TermQ(a), k).toSeq)
+      val s = new Searcher(mk())
+      s.search(TermQ(a), k) // warm: open the reader's tables, collection stats
+      // was 1 unpruned and 2 when the bootstrapTheta job set the pruning
+      // threshold; the in-task scorer always prunes
+      val n = jobsOf(s.search(TermQ(a), k))
+      assert(n <= 1, s"TermQ ran $n jobs")
+      assert(s.search(TermQ(a), k).toSeq === s.searchOracle(TermQ(a), k).toSeq)
     }
 
     test(s"$name reader: +a +b <= 4 jobs") {
@@ -89,7 +93,25 @@ class JobCountSpec extends AnyFunSuite with BeforeAndAfterAll {
       val q = BoolQ(must = Seq(TermQ(a), TermQ(b)))
       s.search(q, 5)
       val n = jobsOf(s.search(q, 5))
-      assert(n <= 2, s"+a +b ran $n jobs") // was 3
+      assert(n <= 1, s"+a +b ran $n jobs") // was 2 (a groupByKey shuffle, run as two jobs)
+    }
+
+    test(s"$name reader: every flat query runs one job of one task") {
+      val s = new Searcher(mk())
+      for ((q, parent) <- Seq(
+          TermQ(a) -> 1, // 2 with bootstrapTheta's pruning
+          BoolQ(must = Seq(TermQ(a), TermQ(b))) -> 2,
+          BoolQ(should = Seq(TermQ(a)), mustNot = Seq(TermQ(b))) -> 4, // a -b
+          BoolQ(should = Seq(TermQ(a), TermQ(b))) -> 2, // pure OR
+          BoolQ(should = Seq(TermQ(a), TermQ(b), TermQ("zz_absent")),
+            minShouldMatch = 2, boost = 2f) -> 2,
+          FuzzyQ(a, 1) -> 1)) {
+        s.search(q, 5) // warm
+        val (layers, tasks) = jobsAndTasksOf(s.search(q, 5))
+        assert(layers === Seq("search.scan") && tasks === 1,
+          s"$q ran ${layers.size} jobs of $tasks tasks (the parent ran $parent jobs)")
+        assert(s.search(q, 5).toSeq === s.searchOracle(q, 5).toSeq, q)
+      }
     }
 
     test(s"$name reader: termStats and multi-term rewrites run no job once the dictionary is loaded") {
@@ -124,6 +146,33 @@ class JobCountSpec extends AnyFunSuite with BeforeAndAfterAll {
         val layers = jobLayersOf(call())
         assert(layers.nonEmpty && layers.forall(_ == "search.scan"), s"$name: $layers")
       }
+    }
+  }
+
+  test("tombstoned reader: tombstones load once in one job, and flat queries stay at one job") {
+    import spark.implicits._
+    val dir = s"$root/deleted"
+    IndexBuilder.build(spark, spark.createDataset((0L until 300L).map(CorpusGen.doc)),
+      dir, numPartitions = 2)
+    val gone = Seq(0L, 5L, 77L, 150L, 299L)
+    graft.build.Deletes.deleteDocs(spark, dir, spark.createDataset(gone))
+    // a term some docs lack, so that `a -rare` keeps hits (uncounted)
+    val rare = spark.read.parquet(graft.build.IndexPaths.termDict(dir))
+      .orderBy($"df", $"term").select($"term").as[String].first()
+    val s = new Searcher(new IndexReader(spark, dir))
+    // first query: the dictionary, the collection stats (a search.scan
+    // read), the tombstones and the scan; the parent re-read the
+    // tombstones and anti-joined them in every query
+    val first = jobLayersOf(s.search(TermQ(a), 5))
+    assert(first.count(_ == "search.dict") === 1 && first.count(_ == "search.tombstones") === 1 &&
+      first.forall(Set("search.dict", "search.tombstones", "search.scan")), first)
+    for (q <- Seq(TermQ(a), BoolQ(should = Seq(TermQ(a)), mustNot = Seq(TermQ(rare))))) {
+      val n = jobsOf(s.search(q, 5))
+      // 3 and 6 on the parent: the tombstone read and the anti-join's shuffle
+      assert(n === 1, s"$q ran $n jobs")
+      val all = s.search(q, 300)
+      assert(all.nonEmpty && !all.exists(h => gone.contains(h.docId)), q)
+      assert(all.toSeq === s.searchOracle(q, 300).toSeq, q)
     }
   }
 

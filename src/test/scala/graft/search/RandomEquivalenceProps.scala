@@ -95,6 +95,27 @@ class RandomEquivalenceProps extends AnyFunSuite {
     }
   }
 
+  /** Heap ≡ oracle for random flat bools (TermQ clauses only) with
+    * mustNot clauses and minShouldMatch > 1, and for the searchAfter page
+    * that follows each first page. */
+  private def flatHeapEqualsOracle(s: Searcher, r: scala.util.Random, n: Int,
+                                   where: String): Unit =
+    (1 to 4).foreach { i =>
+      def terms(m: Int) = Seq.fill(m)(TermQ(vocab(r.nextInt(vocab.size)), 0.5f + r.nextFloat()))
+      val should = terms(2 + r.nextInt(3))
+      val q = BoolQ(terms(r.nextInt(2)), should, terms(1 + r.nextInt(2)),
+        minShouldMatch = 2 + r.nextInt(should.size - 1), boost = 0.5f + r.nextFloat())
+      val k = 1 + r.nextInt(n)
+      val page = s.search(q, k)
+      assert(page.toSeq === s.searchOracle(q, k).toSeq, s"FLAT HEAP≠ORACLE $where case=$i k=$k q=$q")
+      page.lastOption.foreach { after =>
+        val rest = s.searchOracle(q, n + 1).filter(h =>
+          h.score < after.score || (h.score == after.score && h.docId > after.docId))
+        assert(s.searchAfter(after, q, k).toSeq === rest.take(k).toSeq,
+          s"FLAT PAGE≠ORACLE $where case=$i k=$k after=$after q=$q")
+      }
+    }
+
   for (cfg <- configs; seed <- Seq(11, 42)) {
     test(s"random equivalence: config=${cfg.name} seed=$seed") {
       import spark.implicits._
@@ -182,6 +203,8 @@ class RandomEquivalenceProps extends AnyFunSuite {
         assert(searcher.search(q, k).toSeq === searcher.searchOracle(q, k).toSeq,
           s"NRT HEAP≠ORACLE seed=$seed case=$i k=$k q=$q")
       }
+      flatHeapEqualsOracle(searcher, new scala.util.Random(seed + 1000), docs.size,
+        s"NRT seed=$seed")
     }
 
     test(s"random equivalence: deletes applied, seed=$seed") {
@@ -209,6 +232,8 @@ class RandomEquivalenceProps extends AnyFunSuite {
         assert(got === memSet(q),
           s"DELETES DIVERGENCE seed=$seed deleted=$deleted case=$i q=$q")
       }
+      flatHeapEqualsOracle(searcher, new scala.util.Random(seed + 2000), docs.size,
+        s"deletes seed=$seed")
     }
   }
 

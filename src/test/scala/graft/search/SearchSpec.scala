@@ -202,7 +202,7 @@ class CorpusSearchSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("top-10 'def': WAND fast path == brute-force oracle (rank identical)") {
-    val pruned = new Searcher(new IndexReader(spark, dir), pruneMinBlocks = 1)
+    val pruned = new Searcher(new IndexReader(spark, dir))
     val fast = pruned.search(TermQ("def"), 10)
     val oracle = searcher.searchOracle(TermQ("def"), 10)
     assert(fast.map(h => (h.docId, h.score)).toSeq ==
@@ -211,7 +211,7 @@ class CorpusSearchSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("top-10 disjunction with pruning == oracle") {
     val q = BoolQ(should = Seq(TermQ("def"), TermQ("int"), TermQ("one")))
-    val pruned = new Searcher(new IndexReader(spark, dir), pruneMinBlocks = 1)
+    val pruned = new Searcher(new IndexReader(spark, dir))
     val fast = pruned.search(q, 10)
     val oracle = searcher.searchOracle(q, 10)
     assert(fast.map(h => (h.docId, h.score)).toSeq ==
