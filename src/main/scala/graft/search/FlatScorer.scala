@@ -1,6 +1,5 @@
 package graft.search
 
-import graft.bm25.BM25
 import graft.build.PostingRow
 import graft.postings.PostingsCodec
 
@@ -9,7 +8,8 @@ import graft.postings.PostingsCodec
   * Search/TopScoreDocCollector.cs): every posting block of the query's
   * terms in, at most k hits out, with no Spark in between, so that
   * [[Searcher]] can run it as the one task of a query and tests can run
-  * it on plain rows.
+  * it on plain rows. The similarity scores each posting and gives the
+  * coord factor and the block bounds.
   *
   * Block-max WAND (Ding & Suel; the reference predates it, SURVEY.md
   * §2.4): once the heap holds k hits, theta is the k-th best full score
@@ -17,12 +17,13 @@ import graft.postings.PostingsCodec
   * clause's bound stays below theta is skipped without being decoded.
   * A doc of a skipped block scores below theta with all its clauses, so
   * with some left out (it may still surface through another term) it
-  * scores lower still and never enters the heap. That holds while every
-  * clause weight and the boost are ≥ 0, and pruning is off otherwise.
+  * scores lower still and never enters the heap. That holds while the
+  * boost is ≥ 0, and pruning is off otherwise; a similarity with no
+  * bound ([[SimilarityLike.blockMaxScore]] +∞) skips nothing.
   * Excluded (mustNot) blocks are always decoded. */
 object FlatScorer {
-  /** One scoring clause: its term and BM25 weight value. */
-  final case class Clause(term: String, weight: Float)
+  /** One scoring clause: its term and its similarity weight vector. */
+  final case class Clause(term: String, weight: Array[Float])
 
   /** A flat query: the must clauses then the should clauses, in clause
     * order, the query's minShouldMatch and boost, and the mustNot terms. */
@@ -43,9 +44,10 @@ object FlatScorer {
     * when every must clause and at least max(minShouldMatch, 1 if there
     * are no musts) should clauses are present and no excluded term
     * matches it. Its score is the float sum of its present clauses'
-    * scores in clause order, times the boost: [[Searcher]]'s `scoredBool`
-    * arithmetic, so the hits equal `searchOracle`'s bit for bit. */
-  def topK(rows: Iterator[PostingRow], q: Spec, cache: Array[Float], deleted: Array[Long],
+    * scores in clause order, times `sim.coord(present, clauses)`, times
+    * the boost: [[Searcher]]'s `scoredBool` arithmetic, so the hits equal
+    * the Dataset scorers' bit for bit. */
+  def topK(rows: Iterator[PostingRow], q: Spec, sim: SimilarityLike, deleted: Array[Long],
            after: ScoreDoc, k: Int): Result = {
     val hits = new HitQueue(k)
     val n = q.clauses.length
@@ -75,11 +77,11 @@ object FlatScorer {
       new Cursor(blocks, termOf.indices.filter(termOf(_) == j).toArray)
     }.toArray
     def blockBound(i: Int, r: PostingRow): Float =
-      BM25.blockMaxScore(r.maxTf, cache(r.maxNorm & 0xff), weight(i))
+      sim.blockMaxScore(r.maxTf, r.maxNorm, weight(i))
     // each clause's bound over its term's every block (0 for an absent term)
     val clauseBound = Array.tabulate(n)(i =>
       cursors(termOf(i)).blocks.foldLeft(0f)((m, r) => math.max(m, blockBound(i, r))))
-    val prunable = q.boost >= 0f && weight.forall(_ >= 0f)
+    val prunable = q.boost >= 0f
     val boost = q.boost
     // the query's bound on the docs of c's block r: r's bound for c's
     // clauses, the whole-term bound for every other, summed in clause
@@ -129,7 +131,7 @@ object FlatScorer {
           var e = 0
           while (e < c.entries.length) {
             val i = c.entries(e)
-            scores(i) = BM25.score(tf, norm, weight(i), cache)
+            scores(i) = sim.score(tf, norm, weight(i))
             present(p) = i
             p += 1
             if (i < q.nMust) musts += 1
@@ -149,7 +151,7 @@ object FlatScorer {
             sum += scores(present(i))
             i += 1
           }
-          val score = sum * boost
+          val score = sum * sim.coord(p, n) * boost
           if (after == null || score < after.score ||
               (score == after.score && d > after.docId))
             hits.insertWithOverflow(ScoreDoc(d, score))

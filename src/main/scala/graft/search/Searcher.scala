@@ -265,6 +265,17 @@ final class MultiIndexReader(spark0: SparkSession, dirs: Seq[String])
 
 private final case class ClauseHit(docId: Long, idx: Int, score: Float)
 
+/** What scoring one rewritten tree reads: the similarity, the dictionary
+  * stats of its leaf terms, and each scoring leaf's weight vector from
+  * the one [[SimilarityLike.clauseWeights]] call over its leaf clauses.
+  * A leaf's weight depends only on its terms, its boost and that list,
+  * so equal leaves share an entry; the boost is keyed by its bits. */
+private final case class Scoring(sim: SimilarityLike, stats: Map[String, TermDictRow],
+    weights: Map[(Seq[String], Int), Array[Float]]) {
+  def weight(terms: Seq[String], boost: Float): Array[Float] =
+    weights((terms, java.lang.Float.floatToRawIntBits(boost)))
+}
+
 object Searcher {
   /** FuzzyQuery's TOP_TERMS budget (reference: FuzzyQuery
     * defaultMaxExpansions = 50). */
@@ -317,12 +328,14 @@ object Searcher {
     else alts.iterator.flatMap(posOf(_).iterator).toArray.distinct.sorted
 }
 
-/** BM25 top-k search over the index tables (≙ IndexSearcher, reference:
-  * Search/IndexSearcher.cs:282-500, restated in SURVEY.md §3.2).
+/** Top-k search over the index tables (≙ IndexSearcher, reference:
+  * Search/IndexSearcher.cs:282-500, restated in SURVEY.md §3.2), under
+  * the index's BM25 or a caller's [[SimilarityLike]].
   *
-  * Physical shape per query:
+  * Physical shape per query, the same for every similarity:
   *   - rewrite and dictionary stats (binary searches of the reader's
   *     driver-held dictionary, no job) → weights computed driver-side;
+  *     the similarity weighs every clause in one call over the query;
   *   - a flat query (a TermQ, or a BoolQ of TermQ clauses only, any
   *     minShouldMatch and boost) runs ONE job of ONE task with no
   *     shuffle: the postings blocks of its scoring and excluded terms
@@ -331,8 +344,10 @@ object Searcher {
   *     a block-max WAND threshold kept live from its own top-k heap
   *     (public literature: Broder et al.; Ding & Suel BMW — the
   *     reference predates WAND, SURVEY.md §2.4 note), tombstoned docs
-  *     skipped in the task. One task per query gives up intra-query read
-  *     parallelism: a query's postings are small next to a job's cost;
+  *     skipped in the task. Only a similarity that bounds its block
+  *     scores (BM25) skips blocks. One task per query gives up
+  *     intra-query read parallelism: a query's postings are small next
+  *     to a job's cost;
   *   - every other tree (phrases, nested bools, DisMax, function and
   *     boosting queries, the constant-score wide expansion) composes
   *     Dataset scorers joined by docId shuffles ([[scoredRaw]]), drops
@@ -340,9 +355,14 @@ object Searcher {
   *     HitQueue heaps on the driver in the same job ([[TopK]] ≙
   *     TopDocs.Merge).
   *
+  * A similarity that does not score every tree
+  * ([[SimilarityLike.scoresAnyTree]]) takes a term, a phrase, or a bool
+  * of those with minShouldMatch ≤ 1 and no mustNot.
+  *
   * Float determinism: clause scores are summed in clause-declaration order
-  * per doc (the reference's in-order sum, DisjunctionSumScorer.cs:59-85);
-  * coord = queryNorm = 1 under BM25 (Similarity.cs:122-143).
+  * per doc (the reference's in-order sum, DisjunctionSumScorer.cs:59-85),
+  * times coord per bool; coord = queryNorm = 1 under BM25
+  * (Similarity.cs:122-143).
   */
 final class Searcher(val reader: IndexReader,
     analyzerFor: String => graft.analysis.Analyzer = graft.analysis.Analyzer.forLang,
@@ -352,8 +372,11 @@ final class Searcher(val reader: IndexReader,
   import spark.implicits._
 
   private lazy val cs = reader.collectionStats
-  private lazy val cache: Array[Float] =
-    BM25.normCache(BM25.avgFieldLength(cs.sumTotalTermFreq, cs.maxDoc))
+
+  /** The default engine similarity: BM25 over this index's stats. */
+  lazy val defaultSimilarity: BM25Similarity =
+    new BM25Similarity(BM25.avgFieldLength(cs.sumTotalTermFreq, cs.maxDoc))
+  private lazy val cache: Array[Float] = defaultSimilarity.cache
 
   /** liveDocs analog: the tombstoned docIds, loaded once per Searcher
     * into a sorted driver-side array (8 B per deleted doc) and broadcast.
@@ -498,44 +521,56 @@ final class Searcher(val reader: IndexReader,
   private def positional[A](f: => A): A =
     graft.build.IndexBuilder.labelled(spark, "search.positions", reader.dir)(f)
 
-  /** Full scored Dataset for a query — the composable scorer tree. Exact
-    * scores, no pruning (also the brute-force oracle path for tests). */
+  /** Full BM25-scored Dataset for a query — the composable scorer tree.
+    * Exact scores, no pruning (also the brute-force oracle path for
+    * tests). */
   def scored(q: Query): Dataset[ScoreDoc] = scan {
     val rq = rewrite(q)
-    liveOnly(scoredRaw(rq, reader.termStats(leafTerms(rq))))
+    liveOnly(scoredRaw(rq, scoring(rq, defaultSimilarity)))
   }
 
-  /** Every term whose dictionary stats scoring a rewritten tree reads —
-    * term, phrase and multi-phrase leaves under any composite. Entry
-    * points look them all up in ONE [[IndexReader.termStats]] call and
-    * thread the map through every scorer (absent terms are absent keys). */
-  private def leafTerms(q: Query): Seq[String] = q match {
-    case TermQ(t, _) => Seq(t)
-    case PhraseQ(ts, _, _, _) => ts
-    case SparsePhraseQ(parts, _) => parts.map(_._1)
-    case MultiPhraseQ(slots, _, _) => slots.flatten
-    case BoolQ(must, should, mustNot, _, _) => (must ++ should ++ mustNot).flatMap(leafTerms)
-    case DisMaxQ(qs, _) => qs.flatMap(leafTerms)
-    case ConstantScoreQ(sub, _) => leafTerms(sub)
-    case FunctionScoreQ(sub, _) => leafTerms(sub)
-    case BoostingQ(pos, ctx, _) => leafTerms(pos) ++ leafTerms(ctx)
+  /** The (terms, boost) of every scoring leaf of a rewritten tree — term,
+    * phrase and multi-phrase leaves under any composite, must then should
+    * then mustNot clauses, in clause order, duplicates included. A flat
+    * bool's list is its clause list, which TF-IDF's queryNorm sums. */
+  private def leafClauses(q: Query): Seq[(Seq[String], Float)] = q match {
+    case TermQ(t, b) => Seq((Seq(t), b))
+    case PhraseQ(ts, _, b, _) => Seq((ts, b))
+    case SparsePhraseQ(parts, b) => Seq((parts.map(_._1), b))
+    case MultiPhraseQ(slots, _, b) => Seq((slots.flatten, b))
+    case BoolQ(must, should, mustNot, _, _) => (must ++ should ++ mustNot).flatMap(leafClauses)
+    case DisMaxQ(qs, _) => qs.flatMap(leafClauses)
+    case ConstantScoreQ(sub, _) => leafClauses(sub)
+    case FunctionScoreQ(sub, _) => leafClauses(sub)
+    case BoostingQ(pos, ctx, _) => leafClauses(pos) ++ leafClauses(ctx)
     case _ => Nil
+  }
+
+  /** The [[Scoring]] of a rewritten tree under `sim`: ONE
+    * [[IndexReader.termStats]] call over its leaf terms (absent terms are
+    * absent keys) and one clause-weights call over [[leafClauses]]. */
+  private def scoring(q: Query, sim: SimilarityLike): Scoring = {
+    val clauses = leafClauses(q)
+    val stats = reader.termStats(clauses.flatMap(_._1))
+    val ws = sim.clauseWeights(clauses, stats, cs.maxDoc, cs.sumTotalTermFreq)
+    Scoring(sim, stats, clauses.map { case (ts, b) =>
+      (ts, java.lang.Float.floatToRawIntBits(b)) }.zip(ws).toMap)
   }
 
   /** Scores an ALREADY-REWRITTEN tree — every entry point calls
     * [[rewrite]] exactly once, so the dictionary probes a multi-term
     * rewrite needs are never repeated (the reference caches its rewrite
-    * the same way, IndexSearcher.cs:667-670); `stats` covers the
-    * [[leafTerms]] of the whole tree. */
-  private def scoredRaw(q: Query, stats: Map[String, TermDictRow]): Dataset[ScoreDoc] = q match {
+    * the same way, IndexSearcher.cs:667-670); `ctx` is the whole tree's
+    * [[scoring]]. */
+  private def scoredRaw(q: Query, ctx: Scoring): Dataset[ScoreDoc] = q match {
     case TermQ(t, boost) =>
-      scoredTerms(Seq((t, boost, 0)), stats).map(h => ScoreDoc(h.docId, h.score))
+      scoredTerms(Seq((t, boost, 0)), ctx).map(h => ScoreDoc(h.docId, h.score))
     case MatchAllQ(boost) =>
       reader.docstats.select($"docId").as[Long].map(ScoreDoc(_, boost))
     case ConstantScoreQ(sub, boost) =>
-      scoredRaw(sub, stats).map(sd => ScoreDoc(sd.docId, boost))
+      scoredRaw(sub, ctx).map(sd => ScoreDoc(sd.docId, boost))
     case dm @ DisMaxQ(qs, tieBreak) =>
-      val hits = unionClauses(qs, stats)
+      val hits = unionClauses(qs, ctx)
       hits.groupByKey(_.docId).mapGroups { (docId, it) =>
         // the reference sums sub-scorer scores in clause order
         // (DisjunctionMaxScorer.cs) — buffer and sort by clause idx so the
@@ -554,25 +589,25 @@ final class Searcher(val reader: IndexReader,
       // lossy norm byte; evaluated per hit inside the join, no driver hop.
       val dl = reader.docstats
         .select($"docId", $"tokenCount".cast("float").as("dl")).as[(Long, Float)]
-      val subScores = scoredRaw(subQ, stats)
+      val subScores = scoredRaw(subQ, ctx)
       subScores.joinWith(dl, subScores("docId") === dl("docId"))
         .map { case (sd, (_, len)) =>
           ScoreDoc(sd.docId, ScoreExpr.eval(expr, sd.score, len)) }
-    case BoostingQ(pos, ctx, b) =>
+    case BoostingQ(pos, boostCtx, b) =>
       // reference BoostingQuery: context matches multiply the positive
       // score by contextBoost; context alone never matches — a left outer
       // join against the context's docId set (tuple-typed so an unmatched
       // row decodes as a null tuple, not a primitive default)
-      val posScores = scoredRaw(pos, stats)
-      val ctxDocs = scoredRaw(ctx, stats).map(_.docId).distinct().map(id => (id, true))
+      val posScores = scoredRaw(pos, ctx)
+      val ctxDocs = scoredRaw(boostCtx, ctx).map(_.docId).distinct().map(id => (id, true))
       posScores.joinWith(ctxDocs, posScores("docId") === ctxDocs("_1"), "left_outer")
         .map { case (sd, matched) =>
           if (matched == null) sd else ScoreDoc(sd.docId, sd.score * b)
         }
-    case bq: BoolQ => scoredBool(bq, stats)
-    case PhraseQ(terms, slop, boost, _) => scoredPhrase(terms, slop, boost, stats)
-    case SparsePhraseQ(parts, boost) => scoredSparsePhrase(parts, boost, stats)
-    case MultiPhraseQ(slots, slop, boost) => scoredMultiPhrase(slots, slop, boost, stats)
+    case bq: BoolQ => scoredBool(bq, ctx)
+    case PhraseQ(terms, slop, boost, _) => scoredPhrase(terms, slop, boost, ctx)
+    case SparsePhraseQ(parts, boost) => scoredSparsePhrase(parts, boost, ctx)
+    case MultiPhraseQ(slots, slop, boost) => scoredMultiPhrase(slots, slop, boost, ctx)
     case mt if multiTermMatch(mt).isDefined =>
       // CONSTANT_SCORE_AUTO fallback: a wide multi-term query (dictionary
       // match past the clause budget) scores constant over the docs of
@@ -594,64 +629,58 @@ final class Searcher(val reader: IndexReader,
   // ------------------------------------------------------------- phrase
 
   /** Phrase scoring (reference: ExactPhraseScorer / SloppyPhraseScorer):
-    * phraseFreq plays tf in BM25, weight = Σ idf over phrase terms
-    * (BM25Similarity.cs:210-225), same norm byte as term scoring.
-    * Single-term phrases rewrite to TermQuery (PhraseQuery.cs:175). The
-    * freqs come from [[phraseFreqs]]: indexed positions or re-analysis,
-    * exact walk or the reference-exact [[SloppyPhrase]] traversal. */
+    * phraseFreq plays tf, the clause weight is over every phrase term
+    * (BM25: Σ idf, BM25Similarity.cs:210-225), same norm byte as term
+    * scoring. Single-term phrases rewrite to TermQuery (PhraseQuery.cs:175).
+    * The freqs come from [[phraseFreqs]]: indexed positions or
+    * re-analysis, exact walk or the reference-exact [[SloppyPhrase]]
+    * traversal. */
   private def scoredPhrase(terms: Seq[String], slop: Int, boost: Float,
-                           stats: Map[String, TermDictRow]): Dataset[ScoreDoc] = {
+                           ctx: Scoring): Dataset[ScoreDoc] = {
     require(terms.nonEmpty, "empty phrase")
-    if (terms.size == 1) return scoredRaw(TermQ(terms.head, boost), stats)
-    if (!terms.forall(stats.contains)) return spark.emptyDataset[ScoreDoc]
-    // idf sum over phrase terms in query order, duplicates included
-    phraseScored(phraseFreqs(terms, slop),
-      terms.map(t => BM25.idf(stats(t).df, cs.maxDoc)).sum, boost)
+    if (terms.size == 1) return scoredRaw(TermQ(terms.head, boost), ctx)
+    if (!terms.forall(ctx.stats.contains)) return spark.emptyDataset[ScoreDoc]
+    phraseScored(phraseFreqs(terms, slop), ctx.sim, ctx.weight(terms, boost))
   }
 
   /** Exact phrase at EXPLICIT positions (PhraseQuery.Add(term, position)
-    * / the NGramPhraseQuery rewrite target). Same BM25 framing as the
-    * dense exact phrase (weight = Σ idf over the parts actually queried —
-    * the reference's optimized PhraseQuery carries only the kept terms,
-    * so its weight drops the skipped grams' idf the same way). */
+    * / the NGramPhraseQuery rewrite target). Same framing as the dense
+    * exact phrase (weight over the parts actually queried — the
+    * reference's optimized PhraseQuery carries only the kept terms, so
+    * its weight drops the skipped grams' idf the same way). */
   private def scoredSparsePhrase(parts: Seq[(String, Int)], boost: Float,
-                                 stats: Map[String, TermDictRow]): Dataset[ScoreDoc] = {
+                                 ctx: Scoring): Dataset[ScoreDoc] = {
     require(parts.nonEmpty, "empty sparse phrase")
-    if (parts.size == 1) return scoredRaw(TermQ(parts.head._1, boost), stats)
-    if (!parts.forall(p => stats.contains(p._1))) return spark.emptyDataset[ScoreDoc]
-    phraseScored(sparsePhraseFreqs(parts),
-      parts.map(p => BM25.idf(stats(p._1).df, cs.maxDoc)).sum, boost)
+    if (parts.size == 1) return scoredRaw(TermQ(parts.head._1, boost), ctx)
+    if (!parts.forall(p => ctx.stats.contains(p._1))) return spark.emptyDataset[ScoreDoc]
+    phraseScored(sparsePhraseFreqs(parts), ctx.sim, ctx.weight(parts.map(_._1), boost))
   }
 
   /** Scored MultiPhraseQuery (reference: MultiPhraseQuery.cs
-    * MultiPhraseWeight): the weight's idf is the sum over EVERY term in
-    * every slot, unindexed alternatives included with df = 0 (the
-    * reference's TermContext behavior). */
+    * MultiPhraseWeight): the weight is over EVERY term in every slot,
+    * unindexed alternatives included with df = 0 (the reference's
+    * TermContext behavior). */
   private def scoredMultiPhrase(slots: Seq[Seq[String]], slop: Int, boost: Float,
-                                stats: Map[String, TermDictRow]): Dataset[ScoreDoc] = {
+                                ctx: Scoring): Dataset[ScoreDoc] = {
     require(slots.nonEmpty && slots.forall(_.nonEmpty), "empty slot")
-    val liveSlots = slots.map(_.filter(stats.contains))
+    val liveSlots = slots.map(_.filter(ctx.stats.contains))
     if (liveSlots.exists(_.isEmpty)) return spark.emptyDataset[ScoreDoc]
-    phraseScored(slotFreqs(liveSlots, liveSlots.indices, slop),
-      slots.flatten.map(t => BM25.idf(stats.get(t).map(_.df).getOrElse(0L), cs.maxDoc)).sum,
-      boost)
+    phraseScored(slotFreqs(liveSlots, liveSlots.indices, slop), ctx.sim,
+      ctx.weight(slots.flatten, boost))
   }
 
-  /** BM25 over (docId, phraseFreq, normByte) rows. */
-  private def phraseScored(freqs: Dataset[(Long, Float, Int)], idfSum: Float,
-                           boost: Float): Dataset[ScoreDoc] = {
-    val weight = BM25.weightValue(idfSum, boost)
-    val localCache = cache
-    freqs.map { case (docId, freq, norm) =>
-      ScoreDoc(docId, BM25.score(freq, norm.toByte, weight, localCache))
-    }
-  }
+  /** The similarity's score over (docId, phraseFreq, normByte) rows. */
+  private def phraseScored(freqs: Dataset[(Long, Float, Int)], sim: SimilarityLike,
+                           weight: Array[Float]): Dataset[ScoreDoc] =
+    freqs.map { case (docId, freq, norm) => ScoreDoc(docId, sim.score(freq, norm.toByte, weight)) }
 
   /** (docId, phraseFreq, normByte) for docs containing the phrase: exact
     * occurrences at slop 0, else the SloppyPhraseScorer freq
     * (out-of-order matches within slop, slop-factor-weighted, repeat
     * groups). No dictionary lookup: an unindexed term fails every doc's
-    * match. */
+    * match. Like the other public positional matchers, it returns a lazy
+    * Dataset: the jobs that evaluate it run under the caller's job label,
+    * not `search.positions`. */
   def phraseFreqs(terms: Seq[String], slop: Int = 0): Dataset[(Long, Float, Int)] =
     positional(slotFreqs(terms.map(Seq(_)), terms.indices, slop))
 
@@ -659,7 +688,8 @@ final class Searcher(val reader: IndexReader,
     * phrase whose slot i accepts any of `slots(i)`; with slop, the sloppy
     * traversal runs over each slot's union positions
     * (UnionDocsAndPositionsEnum). Unindexed alternatives are dropped; a
-    * slot left empty matches nothing. (docId, phraseFreq, normByte). */
+    * slot left empty matches nothing. (docId, phraseFreq, normByte), as a
+    * lazy Dataset whose evaluating jobs run under the caller's job label. */
   def multiPhraseFreqs(slots: Seq[Seq[String]], slop: Int = 0): Dataset[(Long, Float, Int)] =
       positional {
     require(slots.nonEmpty && slots.forall(_.nonEmpty), "empty slot")
@@ -670,7 +700,8 @@ final class Searcher(val reader: IndexReader,
   }
 
   /** (docId, anchorCount, normByte) for a sparse phrase: the exact walk
-    * with each part at its explicit position relative to the first. */
+    * with each part at its explicit position relative to the first, as a
+    * lazy Dataset whose evaluating jobs run under the caller's job label. */
   def sparsePhraseFreqs(parts: Seq[(String, Int)]): Dataset[(Long, Float, Int)] = positional {
     val sorted = parts.sortBy(_._2)
     slotFreqs(sorted.map(p => Seq(p._1)), sorted.map(_._2 - sorted.head._2), 0)
@@ -858,7 +889,8 @@ final class Searcher(val reader: IndexReader,
     * Search/Spans/SpanNearQuery.cs semantics restated relationally):
     * number of occurrence pairs (pa, pb) with |pa - pb| <= maxGap
     * (unordered) or 0 < pb - pa <= maxGap (ordered), over
-    * [[docPositions]]. */
+    * [[docPositions]]. A lazy Dataset: the jobs that evaluate it run
+    * under the caller's job label, not `search.positions`. */
   def spanNearFreqs(termA: String, termB: String, maxGap: Int,
                     ordered: Boolean = false): Dataset[(Long, Int)] = positional {
     val stats = reader.termStats(Seq(termA, termB))
@@ -881,7 +913,8 @@ final class Searcher(val reader: IndexReader,
     * running the interval algebra per doc over [[docPositions]]. The
     * re-analysis candidates follow the tree's structure — OR unions its
     * children's doc sets, NEAR intersects them, NOT/FIRST prune on the
-    * positive branch. */
+    * positive branch. A lazy Dataset: the jobs that evaluate it run under
+    * the caller's job label, not `search.positions`. */
   def spanCount(q0: SpanQuery): Dataset[(Long, Int)] = positional {
     // SpanMultiTermQueryWrapper analog: expand wildcard/prefix/fuzzy
     // nodes against the dictionary into a SpanOr of term spans BEFORE
@@ -1117,122 +1150,6 @@ final class Searcher(val reader: IndexReader,
     reader.postingRows(Seq(t))
       .flatMap(r => PostingsCodec.decodeBlock(r.firstDocId, r.numDocs, r.bytes)._1)
 
-  // ------------------------------------------- pluggable-similarity path
-
-  /** The default engine similarity: BM25 over this index's stats. */
-  lazy val defaultSimilarity: SimilarityLike =
-    new BM25Similarity(BM25.avgFieldLength(cs.sumTotalTermFreq, cs.maxDoc))
-
-  /** Top-k under a caller-chosen similarity: BM25 keeps the specialized
-    * WAND path (proven bit-equal to the generic path in SimilaritySpec);
-    * every other family rides [[searchWith]]. */
-  def search(q: Query, k: Int, sim: SimilarityLike): Array[ScoreDoc] =
-    searchAfter(null, q, k, sim)
-
-  def searchAfter(after: ScoreDoc, q: Query, k: Int, sim: SimilarityLike): Array[ScoreDoc] =
-    sim match {
-      case _: BM25Similarity => searchAfter(after, q, k)
-      case s => searchAfterWith(s, after, q, k)
-    }
-
-  /** Generic top-k under any [[SimilarityLike]] — term, phrase (exact and
-    * sloppy) and flat boolean queries: the reference's
-    * CreateNormalizedWeight pipeline — weights from ALL clauses jointly
-    * (queryNorm coupling), per-hit scores, clause-order sum × coord. The
-    * BM25-specialized WAND path remains [[search]]; this path trades
-    * pruning for total generality. */
-  def searchWith(sim: SimilarityLike, q: Query, k: Int): Array[ScoreDoc] =
-    searchAfterWith(sim, null, q, k)
-
-  def searchAfterWith(sim: SimilarityLike, after: ScoreDoc, q: Query,
-                      k: Int): Array[ScoreDoc] = scan {
-    TopK(pageAfter(liveOnly(scoredWith(sim, q)), after), k)
-  }
-
-  /** One scoring clause of the generic path: a term (`terms.size == 1`,
-    * `phrase = false`) or a phrase with slop. */
-  private case class SimClause(terms: Seq[String], slop: Int, boost: Float,
-                               phrase: Boolean)
-
-  private def toSimClause(q: Query): SimClause = q match {
-    case TermQ(t, b) => SimClause(Seq(t), 0, b, phrase = false)
-    case PhraseQ(Seq(t), _, b, _) => SimClause(Seq(t), 0, b, phrase = false)
-    case PhraseQ(ts, slop, b, _) => SimClause(ts, slop, b, phrase = true)
-    case other => throw new UnsupportedOperationException(
-      s"searchWith clause must be a term or phrase, got $other")
-  }
-
-  /** Full scored Dataset under an arbitrary similarity. */
-  def scoredWith(sim: SimilarityLike, q: Query): Dataset[ScoreDoc] = {
-    val (mustC, shouldC, boost) = rewrite(q) match {
-      case BoolQ(m, s, Nil, msm, b) if msm <= 1 =>
-        (m.map(toSimClause), s.map(toSimClause), b)
-      case leaf => (Nil, Seq(toSimClause(leaf)), 1f)
-    }
-    val clauses = (mustC ++ shouldC).toIndexedSeq
-    if (clauses.isEmpty) return spark.emptyDataset[ScoreDoc]
-    val stats = reader.termStats(clauses.flatMap(_.terms).distinct)
-    val wts = sim.clauseWeights(clauses.map(c => (c.terms, c.boost)),
-      stats, cs.maxDoc, cs.sumTotalTermFreq).toArray
-    val nMust = mustC.length
-    val total = clauses.length
-    def liveClause(c: SimClause): Boolean = c.terms.forall(stats.contains)
-    // a MUST clause on an unindexed term can never be satisfied
-    if (mustC.exists(c => !liveClause(c))) return spark.emptyDataset[ScoreDoc]
-
-    // every clause scores independently (reference: one Weight per
-    // BooleanClause) — term clauses batch into ONE postings scan, a term
-    // shared by several clauses fans each decoded posting out to every
-    // clause index, so duplicates keep their own boost, slot in
-    // present[], and coord contribution
-    val liveByTerm: Map[String, Array[(Int, Array[Float])]] = clauses.zipWithIndex
-      .collect { case (c, i) if !c.phrase && liveClause(c) => (c.terms.head, i) }
-      .groupBy(_._1)
-      .map { case (t, xs) => t -> xs.map(x => (x._2, wts(x._2))).toArray }
-    val bSim = sim
-    val termHits: Seq[Dataset[ClauseHit]] =
-      if (liveByTerm.isEmpty) Nil
-      else Seq(reader.postingRows(liveByTerm.keys.toSeq)
-        .flatMap { r =>
-          val entries = liveByTerm(r.term)
-          val (ids, tfs, norms) = PostingsCodec.decodeBlock(r.firstDocId, r.numDocs, r.bytes)
-          ids.indices.iterator.flatMap(i => entries.iterator.map { case (ci, w) =>
-            ClauseHit(ids(i), ci, bSim.score(tfs(i).toFloat, norms(i).toByte, w))
-          })
-        })
-    // phrase clauses: phraseFreq plugs in where tf does (reference:
-    // PhraseWeight → SimScorer.Score(doc, phraseFreq))
-    val phraseHits: Seq[Dataset[ClauseHit]] = clauses.zipWithIndex.collect {
-      case (c, ci) if c.phrase && liveClause(c) =>
-        val w = wts(ci)
-        phraseFreqs(c.terms, c.slop).map { case (docId, f, norm) =>
-          ClauseHit(docId, ci, bSim.score(f, norm.toByte, w))
-        }
-    }
-    val all = termHits ++ phraseHits
-    if (all.isEmpty) return spark.emptyDataset[ScoreDoc]
-    val hits = all.reduce(_ union _)
-    hits.groupByKey(_.docId).flatMapGroups { (docId, it) =>
-      val scores = new Array[Float](total)
-      val present = new Array[Boolean](total)
-      it.foreach { h => scores(h.idx) = h.score; present(h.idx) = true }
-      var mustOk = true
-      var i = 0
-      while (i < nMust) { if (!present(i)) mustOk = false; i += 1 }
-      if (!mustOk) Iterator.empty
-      else {
-        var sum = 0f
-        var matched = 0
-        i = 0
-        while (i < total) {
-          if (present(i)) { sum += scores(i); matched += 1 }
-          i += 1
-        }
-        Iterator.single(ScoreDoc(docId, sum * bSim.coord(matched, total) * boost))
-      }
-    }
-  }
-
   // ------------------------------------------------------ explain support
 
   private[search] def readerTermStats(ts: Seq[String]) = reader.termStats(ts)
@@ -1256,18 +1173,17 @@ final class Searcher(val reader: IndexReader,
     }.nextOption()
   }
 
-  private def unionClauses(qs: Seq[Query],
-                           stats: Map[String, TermDictRow]): Dataset[ClauseHit] = {
+  private def unionClauses(qs: Seq[Query], ctx: Scoring): Dataset[ClauseHit] = {
     // batch TermQ leaves into ONE postings scan; recurse for the rest
     val indexed = qs.zipWithIndex
     val termLeaves = indexed.collect { case (TermQ(t, b), i) => (t, b, i) }
     val complex = indexed.filterNot(_._1.isInstanceOf[TermQ])
     val parts =
       (if (termLeaves.nonEmpty)
-        Seq(scoredTerms(termLeaves, stats))
+        Seq(scoredTerms(termLeaves, ctx))
       else Nil) ++
       complex.map { case (q, i) =>
-        scoredRaw(q, stats).map(sd => ClauseHit(sd.docId, i, sd.score))
+        scoredRaw(q, ctx).map(sd => ClauseHit(sd.docId, i, sd.score))
       }
     if (parts.isEmpty) spark.emptyDataset[ClauseHit]
     else parts.reduce(_ union _)
@@ -1275,15 +1191,17 @@ final class Searcher(val reader: IndexReader,
 
   /** Boolean composition: one shuffle by docId; musts enforced by presence
     * bitmask, minShouldMatch by count, score = in-clause-order float sum
-    * (BooleanScorer2 semantics under BM25). */
-  private def scoredBool(q: BoolQ, stats: Map[String, TermDictRow]): Dataset[ScoreDoc] = {
-    val scoring = q.must ++ q.should
-    if (scoring.isEmpty) return spark.emptyDataset[ScoreDoc]
+    * times coord(present, clauses) times the boost (BooleanScorer2
+    * semantics). */
+  private def scoredBool(q: BoolQ, ctx: Scoring): Dataset[ScoreDoc] = {
+    val clauses = q.must ++ q.should
+    if (clauses.isEmpty) return spark.emptyDataset[ScoreDoc]
     val nMust = q.must.size
-    val n = scoring.size
+    val n = clauses.size
     val msm = math.max(q.minShouldMatch, if (nMust == 0) 1 else 0)
     val boost = q.boost
-    val hits = unionClauses(scoring, stats)
+    val sim = ctx.sim
+    val hits = unionClauses(clauses, ctx)
     val combined = hits.groupByKey(_.docId).flatMapGroups { (docId, it) =>
       val scores = new Array[Float](n)
       val present = new Array[Boolean](n)
@@ -1296,14 +1214,15 @@ final class Searcher(val reader: IndexReader,
       while (i < n) { if (present(i)) shouldCount += 1; i += 1 }
       if (mustOk && shouldCount >= msm) {
         var sum = 0f // fixed clause order — float-exact vs the reference
+        var matched = 0
         i = 0
-        while (i < n) { if (present(i)) sum += scores(i); i += 1 }
-        Iterator.single(ScoreDoc(docId, sum * boost))
+        while (i < n) { if (present(i)) { sum += scores(i); matched += 1 }; i += 1 }
+        Iterator.single(ScoreDoc(docId, sum * sim.coord(matched, n) * boost))
       } else Iterator.empty
     }
     if (q.mustNot.isEmpty) combined
     else {
-      val excluded = q.mustNot.map(mq => scoredRaw(mq, stats).map(_.docId))
+      val excluded = q.mustNot.map(mq => scoredRaw(mq, ctx).map(_.docId))
         .reduce(_ union _).distinct().toDF("docId_ex")
       // ReqExclScorer ≙ anti-join (reference: ReqExclScorer.cs)
       combined.join(excluded, combined("docId") === excluded("docId_ex"), "left_anti")
@@ -1314,21 +1233,18 @@ final class Searcher(val reader: IndexReader,
   // ---------------------------------------------------- term-leaf scanning
 
   /** Score a batch of (term, boost, clause index) in one postings scan. */
-  private def scoredTerms(terms: Seq[(String, Float, Int)],
-                          stats: Map[String, TermDictRow]): Dataset[ClauseHit] = {
-    val live = terms.filter(t => stats.contains(t._1)) // df=0 → no hits, no NaN
+  private def scoredTerms(terms: Seq[(String, Float, Int)], ctx: Scoring): Dataset[ClauseHit] = {
+    val live = terms.filter(t => ctx.stats.contains(t._1)) // df=0 → no hits, no NaN
     if (live.isEmpty) return spark.emptyDataset[ClauseHit]
-    // per-term ARRAY of (weightValue, clauseIdx): a term shared by several
+    // per-term ARRAY of (weight, clauseIdx): a term shared by several
     // clauses fans each decoded posting out to every clause entry, so
-    // duplicates keep their own boost and slot (same rule as scoredBool's
-    // liveByTerm — one Weight per BooleanClause in the reference)
-    val weights: Map[String, Array[(Float, Int)]] =
+    // duplicates keep their own boost and slot (one Weight per
+    // BooleanClause in the reference)
+    val weights: Map[String, Array[(Array[Float], Int)]] =
       live.groupBy(_._1).map { case (t, xs) =>
-        t -> xs.map { case (_, b, i) =>
-          (BM25.weightValue(BM25.idf(stats(t).df, cs.maxDoc), b), i)
-        }.toArray
+        t -> xs.map { case (_, b, i) => (ctx.weight(Seq(t), b), i) }.toArray
       }
-    val localCache = cache
+    val sim = ctx.sim
     reader.postingRows(live.map(_._1)).flatMap { r =>
       val entries = weights(r.term)
       val (docIds, tfs, norms) = PostingsCodec.decodeBlock(r.firstDocId, r.numDocs, r.bytes)
@@ -1339,8 +1255,7 @@ final class Searcher(val reader: IndexReader,
         var e = 0
         while (e < entries.length) {
           val (w, idx) = entries(e)
-          out(o) = ClauseHit(docIds(i),
-            idx, BM25.score(tfs(i).toFloat, norms(i).toByte, w, localCache))
+          out(o) = ClauseHit(docIds(i), idx, sim.score(tfs(i).toFloat, norms(i).toByte, w))
           o += 1
           e += 1
         }
@@ -1368,20 +1283,56 @@ final class Searcher(val reader: IndexReader,
     graft.build.Deletes.deleteDocs(spark, reader.dir, ids)
   }
 
-  /** Top-k search: score desc, docId asc (≙ IndexSearcher.Search(q, n)). */
+  /** Top-k search under the index's BM25: score desc, docId asc
+    * (≙ IndexSearcher.Search(q, n)). */
   def search(q: Query, k: Int): Array[ScoreDoc] = searchAfter(null, q, k)
 
   /** Pagination (≙ IndexSearcher.SearchAfter, reference:
     * Search/IndexSearcher.cs:255-273): only hits strictly after `after` in
     * (score desc, docId asc) order compete. */
-  def searchAfter(after: ScoreDoc, q: Query, k: Int): Array[ScoreDoc] = scan(topK(after, q, k))
+  def searchAfter(after: ScoreDoc, q: Query, k: Int): Array[ScoreDoc] =
+    topK(after, q, k, defaultSimilarity)
 
-  private def topK(after: ScoreDoc, q: Query, k: Int): Array[ScoreDoc] = {
+  /** Top-k under a caller-chosen similarity. */
+  def search(q: Query, k: Int, sim: SimilarityLike): Array[ScoreDoc] = topK(null, q, k, sim)
+
+  def searchAfter(after: ScoreDoc, q: Query, k: Int, sim: SimilarityLike): Array[ScoreDoc] =
+    topK(after, q, k, sim)
+
+  def searchWith(sim: SimilarityLike, q: Query, k: Int): Array[ScoreDoc] = topK(null, q, k, sim)
+
+  def searchAfterWith(sim: SimilarityLike, after: ScoreDoc, q: Query,
+                      k: Int): Array[ScoreDoc] = topK(after, q, k, sim)
+
+  /** The one top-k path: the rewritten query's clause weights under
+    * `sim`, then the flat scorer or the Dataset scorer tree. `sim` is
+    * evaluated under the scan label: the default similarity's first use
+    * reads the collection stats. */
+  private def topK(after: ScoreDoc, q: Query, k: Int, sim: => SimilarityLike): Array[ScoreDoc] =
+      scan {
+    val s = sim
     val rq = rewrite(q)
-    val stats = reader.termStats(leafTerms(rq))
-    flatSpec(rq, stats) match {
-      case Some(spec) => flatTopK(spec, stats, after, k)
-      case None => TopK(pageAfter(liveOnly(scoredRaw(rq, stats)), after), k)
+    if (!s.scoresAnyTree) requireFlat(rq)
+    val ctx = scoring(rq, s)
+    flatSpec(rq, ctx) match {
+      case Some(spec) => flatTopK(spec, ctx, after, k)
+      case None => TopK(pageAfter(liveOnly(scoredRaw(rq, ctx)), after), k)
+    }
+  }
+
+  /** The shapes a similarity that does not score every tree takes: a
+    * term, a phrase, or a bool of those with minShouldMatch ≤ 1 and no
+    * mustNot — one clause list holds every weight its normalization
+    * sees. */
+  private def requireFlat(q: Query): Unit = {
+    def leaf(c: Query): Unit = c match {
+      case _: TermQ | _: PhraseQ =>
+      case other => throw new UnsupportedOperationException(
+        s"searchWith clause must be a term or phrase, got $other")
+    }
+    q match {
+      case BoolQ(m, s, Nil, msm, _) if msm <= 1 => (m ++ s).foreach(leaf)
+      case other => leaf(other)
     }
   }
 
@@ -1397,11 +1348,10 @@ final class Searcher(val reader: IndexReader,
 
   /** A rewritten query as a [[FlatScorer.Spec]] when it is flat: a TermQ,
     * or a BoolQ whose must, should and mustNot clauses are all TermQs.
-    * A clause on a term the dictionary lacks keeps its slot, weight 0,
+    * A clause on a term the dictionary lacks keeps its slot and weight
     * and is never present. */
-  private def flatSpec(q: Query, stats: Map[String, TermDictRow]): Option[FlatScorer.Spec] = {
-    def clause(t: TermQ) = FlatScorer.Clause(t.term,
-      stats.get(t.term).fold(0f)(s => BM25.weightValue(BM25.idf(s.df, cs.maxDoc), t.boost)))
+  private def flatSpec(q: Query, ctx: Scoring): Option[FlatScorer.Spec] = {
+    def clause(t: TermQ) = FlatScorer.Clause(t.term, ctx.weight(Seq(t.term), t.boost))
     def terms(qs: Seq[Query]) = {
       val ts = qs.collect { case t: TermQ => t }
       if (ts.size == qs.size) Some(ts) else None
@@ -1420,15 +1370,16 @@ final class Searcher(val reader: IndexReader,
     * the postings blocks of its scoring and excluded terms, gathered by
     * `coalesce(1)`, go through [[FlatScorer.topK]], which returns at
     * most k hits. */
-  private def flatTopK(spec: FlatScorer.Spec, stats: Map[String, TermDictRow],
+  private def flatTopK(spec: FlatScorer.Spec, ctx: Scoring,
                        after: ScoreDoc, k: Int): Array[ScoreDoc] = {
+    val stats = ctx.stats
     val mustLive = spec.clauses.take(spec.nMust).forall(c => stats.contains(c.term))
     if (k <= 0 || !mustLive || !spec.clauses.exists(c => stats.contains(c.term)))
       return Array.empty
-    val localCache = cache
+    val sim = ctx.sim
     val dead = deleted
     reader.postingRows(spec.terms.filter(stats.contains)).coalesce(1).mapPartitions { rows =>
-      FlatScorer.topK(rows, spec, localCache, dead.value, after, k).hits.iterator
+      FlatScorer.topK(rows, spec, sim, dead.value, after, k).hits.iterator
     }.collect()
   }
 

@@ -8,10 +8,10 @@ import graft.build.TermDictRow
   * term statistics into per-clause weights, then per-(doc,clause) scores,
   * plus the boolean combination factors coord and queryNorm).
   *
-  * The BM25 fast path (WAND, Aggregator top-k) stays specialized in
-  * [[Searcher]]; [[Searcher.searchWith]] is the generic path any
-  * Similarity can ride (term, phrase, and flat boolean queries), scoring
-  * exactly like the reference's CreateNormalizedWeight pipeline:
+  * A similarity is a parameter of [[Searcher]]'s one scoring pipeline,
+  * as it is of the reference's CreateNormalizedWeight → GetScorer:
+  * [[FlatScorer]] and the Dataset scorer tree both take it, and
+  * [[Searcher.search]] without one uses the index's BM25. Scoring:
   *
   *   1. weights are created from ALL query clauses jointly (TF-IDF's
   *      queryNorm couples them: 1/sqrt(Σ (idfSum·boost)²)); unindexed
@@ -21,6 +21,10 @@ import graft.build.TermDictRow
   *      one term (TermQ) or a term sequence (PhraseQ, scored on its
   *      phrase freq);
   *   3. clause scores sum in clause order, times coord(matched, total).
+  *
+  * Block-max WAND skips a block only under a similarity that bounds its
+  * scores ([[SimilarityLike.blockMaxScore]]): BM25 does, every other
+  * family scores each posting.
   *
   * A clause weight is an opaque `Array[Float]` whose layout each
   * similarity defines for itself (a single normalized value for
@@ -39,6 +43,18 @@ trait SimilarityLike extends Serializable {
   /** coord(matched, total) — 1 for BM25, matched/total for TF-IDF
     * (reference: Similarity.cs:122-143 vs TFIDFSimilarity.Coord). */
   def coord(matched: Int, total: Int): Float
+  /** An upper bound of `score(tf, norm, w)` over a posting block whose
+    * largest tf is `maxTf` and whose largest norm byte is `maxNorm`, for
+    * block-max WAND. +∞, the default, skips no block. A finite bound
+    * presumes coord ≤ 1. */
+  def blockMaxScore(maxTf: Int, maxNorm: Int, w: Array[Float]): Float =
+    Float.PositiveInfinity
+  /** Whether [[Searcher]] scores any query tree under this similarity.
+    * Only one whose weights couple no clauses and whose coord is 1 may
+    * say so, since nesting then changes no score. The default, false,
+    * limits it to a term, a phrase, or a bool of those with
+    * minShouldMatch ≤ 1 and no mustNot. */
+  def scoresAnyTree: Boolean = false
 
   protected final def dfOf(stats: Map[String, TermDictRow], t: String): Long =
     stats.get(t).map(_.df).getOrElse(0L)
@@ -47,11 +63,10 @@ trait SimilarityLike extends Serializable {
 }
 
 /** BM25 (k1=1.2, b=0.75): queryNorm = coord = 1; a phrase clause's
-  * weight is weightValue(Σ idf) (BM25Similarity.cs:210-225), and the
-  * score is linear in the weight so the sum matches the specialized
-  * phrase path bit-for-bit. Layout: w = [weightValue]. */
+  * weight is weightValue(Σ idf) (BM25Similarity.cs:210-225).
+  * Layout: w = [weightValue]. */
 final class BM25Similarity(avgdl: Float) extends SimilarityLike {
-  private val cache = BM25.normCache(avgdl)
+  private[search] val cache = BM25.normCache(avgdl)
   def clauseWeights(clauses: Seq[(Seq[String], Float)],
                     stats: Map[String, TermDictRow],
                     maxDoc: Long, sumTotalTermFreq: Long): Seq[Array[Float]] =
@@ -61,6 +76,13 @@ final class BM25Similarity(avgdl: Float) extends SimilarityLike {
   def score(tf: Float, normByte: Byte, w: Array[Float]): Float =
     BM25.score(tf, normByte, w(0), cache)
   def coord(matched: Int, total: Int): Float = 1f
+  /** [[BM25.blockMaxScore]] at the block's smallest cache entry; a
+    * negative weight makes the score fall as tf rises, so it has no
+    * bound there. */
+  override def blockMaxScore(maxTf: Int, maxNorm: Int, w: Array[Float]): Float =
+    if (w(0) < 0f) Float.PositiveInfinity
+    else BM25.blockMaxScore(maxTf, cache(maxNorm & 0xff), w(0))
+  override def scoresAnyTree: Boolean = true
 }
 
 /** Classic TF-IDF (DefaultSimilarity): shared queryNorm across clauses,

@@ -114,6 +114,19 @@ class JobCountSpec extends AnyFunSuite with BeforeAndAfterAll {
       }
     }
 
+    test(s"$name reader: a flat query under TF-IDF runs one job of one task") {
+      val s = new Searcher(mk())
+      val sim = new TfIdfSimilarity
+      // each ran 2 jobs on the parent, a postings scan and a groupByKey
+      // shuffle: 5 tasks on the single reader, 9 on the multi reader
+      for (q <- Seq(TermQ(a), BoolQ(should = Seq(TermQ(a), TermQ(b))))) {
+        s.searchWith(sim, q, 5) // warm
+        val (layers, tasks) = jobsAndTasksOf(s.searchWith(sim, q, 5))
+        assert(layers === Seq("search.scan") && tasks === 1,
+          s"$q ran ${layers.size} jobs of $tasks tasks")
+      }
+    }
+
     test(s"$name reader: termStats and multi-term rewrites run no job once the dictionary is loaded") {
       val s = new Searcher(mk())
       assert(jobLayersOf(s.reader.termStats(Seq(a))) === Seq("search.dict"))
@@ -212,6 +225,15 @@ class JobCountSpec extends AnyFunSuite with BeforeAndAfterAll {
       val n = jobsOf(s.search(q, 5))
       assert(n <= floor, s"$q ran $n jobs")
     }
+  }
+
+  test("positions index: a TF-IDF bool with a phrase clause runs no more jobs than before") {
+    val s = new Searcher(new IndexReader(spark, posDir))
+    val sim = new TfIdfSimilarity
+    val q = BoolQ(should = Seq(TermQ(p0), PhraseQ(Seq(p0, p1))))
+    assert(s.searchWith(sim, q, 5).nonEmpty) // warm
+    val n = jobsOf(s.searchWith(sim, q, 5))
+    assert(n <= 3, s"$q ran $n jobs") // 3 jobs of 13 tasks on the parent
   }
 
   test("positions index: a direct phraseFreqs labels the jobs it runs") {

@@ -90,10 +90,18 @@ class SimilaritySpec extends AnyFunSuite {
     // phrase inside a boolean, mixed with a term clause
     val bq = BoolQ(should = Seq(TermQ("all"), PhraseQ(Seq("dogs", "dogs"))))
     assert(searcher.searchWith(sim, bq, 10).toSeq === searcher.search(bq, 10).toSeq)
-    // sim-parametric search() dispatches BM25 to the WAND path
+    // sim-parametric search() under the index's BM25 equals search()
     assert(searcher.search(bq, 10, sim).toSeq === searcher.search(bq, 10).toSeq)
     assert(searcher.search(TermQ("dogs"), 10, new TfIdfSimilarity).toSeq ===
       searcher.searchWith(new TfIdfSimilarity, TermQ("dogs"), 10).toSeq)
+  }
+
+  test("search(q, k, sim) scores with the caller's BM25Similarity") {
+    // twice the index's avgdl: a different length norm for every doc
+    val sim = new BM25Similarity(2 * avgdl)
+    val q = BoolQ(should = Seq(TermQ("all"), TermQ("dogs")))
+    assert(searcher.search(q, 10, sim).toSeq === searcher.searchWith(sim, q, 10).toSeq)
+    assert(searcher.search(q, 10, sim).toSeq !== searcher.search(q, 10).toSeq)
   }
 
   test("duplicate clauses score independently (per-BooleanClause weights)") {

@@ -7,9 +7,19 @@ Exports the parent ref into a temporary directory (`git archive`, under
 --workdir if given; removed at the end) and, for each seed, runs
 perfbench/run.py there and in this working tree, alternating which side
 goes first. Prints, per end-to-end metric of BENCHMARK.json, the parent
-and change medians, the parent's interquartile range and in how many
-pairs the change was better. Exits non-zero when any run fails or is not
-`correct`.
+and change medians, the parent's interquartile range, in how many pairs
+the change was better, and a no-regression verdict against the metric's
+`bound`, a fraction of the parent median:
+
+  ok          the change median is no worse than the parent's by more
+              than the bound;
+  worse       it is worse by more than the bound;
+  unresolved  the parent's IQR exceeds the bound times its median, so the
+              runs spread too widely to tell, unless every change run
+              beats every parent run (then ok).
+
+Exits non-zero when any run fails or is not `correct`; the verdicts do
+not change the exit status.
 """
 
 import argparse, json, os, shutil, statistics, subprocess, sys, tempfile
@@ -29,6 +39,18 @@ def run(tree, workload, seed, seconds):
     return ok, {k: v["value"] for k, v in (result or {}).get("metrics", {}).items()}
 
 
+def verdict(ps, cs, better, bound):
+    """ok, worse or unresolved: the change's median against the parent's,
+    within `bound` times the parent median (see the module doc)."""
+    sign = 1 if better == "lower" else -1  # sign * (c - p) > 0: c is worse
+    mp, mc = statistics.median(ps), statistics.median(cs)
+    q = statistics.quantiles(ps, n=4)
+    if q[2] - q[0] > bound * abs(mp):
+        beats_all = all(sign * (c - p) < 0 for p in ps for c in cs)
+        return "ok" if beats_all else "unresolved"
+    return "worse" if sign * (mc - mp) > bound * abs(mp) else "ok"
+
+
 def main():
     ap = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
     ap.add_argument("--parent", required=True, help="git ref of the parent commit")
@@ -42,7 +64,7 @@ def main():
     subprocess.run(f"git archive {a.parent} | tar -x -C {parent}", shell=True, cwd=ROOT,
                    check=True)
     with open(os.path.join(ROOT, "BENCHMARK.json")) as fh:
-        spec = {m["name"]: m["better"] for m in json.load(fh)["end_to_end"]}
+        spec = {m["name"]: (m["better"], m["bound"]) for m in json.load(fh)["end_to_end"]}
     runs, bad = {"parent": [], "change": []}, 0
     try:
         for i, seed in enumerate(range(lo, hi + 1)):
@@ -56,8 +78,9 @@ def main():
     finally:
         shutil.rmtree(parent, ignore_errors=True)
     pairs = [(p, c) for p, c in zip(runs["parent"], runs["change"]) if p and c]
-    print(f"{'metric':28} {'parent':>12} {'change':>12} {'delta':>8} {'parent IQR':>11} wins")
-    for name, better in spec.items():
+    print(f"{'metric':28} {'parent':>12} {'change':>12} {'delta':>8} {'parent IQR':>11} "
+          f"{'wins':>5} verdict")
+    for name, (better, bound) in spec.items():
         ps = [p[name] for p, _ in pairs if name in p]
         cs = [c[name] for _, c in pairs if name in c]
         if len(ps) < 2 or len(cs) < 2:
@@ -67,7 +90,7 @@ def main():
         mp, mc = statistics.median(ps), statistics.median(cs)
         delta = f"{100 * (mc - mp) / mp:+.1f}%" if mp else "-"
         print(f"{name:28} {mp:12.4f} {mc:12.4f} {delta:>8} {q[2] - q[0]:11.4f} "
-              f"{wins}/{len(ps)}")
+              f"{wins:>2}/{len(ps):<2} {verdict(ps, cs, better, bound)}")
     if bad:
         print(f"{bad} run(s) failed or were not correct", file=sys.stderr)
     sys.exit(1 if bad else 0)
