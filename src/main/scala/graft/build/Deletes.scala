@@ -4,18 +4,15 @@ import graft.postings.PostingsCodec
 import org.apache.spark.sql.{Column, DataFrame, Dataset, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** Streaming re-encoder for (term, docId, tf, norm, positions, offsets,
-  * payloads) rows sorted by (term, docId) within a partition: buffers one
-  * term's run in arrays and, on term change, emits self-contained
-  * postings table rows, each block with its blobs (a budget flush
-  * mid-run would also be valid — blocks are independent — but a
-  * partition's run of one term is at most the partition size). Rows whose
-  * list is null (keyword/DOCS_ONLY terms, or a level the index lacks)
-  * emit a null blob, preserving the per-term IndexOptions through the
-  * rewrite. */
-private final class PostingsReencoder(
-    it: Iterator[(String, Long, Int, Int, Array[Int], Array[Int], Array[Array[Byte]])],
-    segId: Int)
+/** Streaming re-encoder for [[Posting]] rows sorted by (term, docId)
+  * within a partition: buffers one term's run in arrays and, on term
+  * change, emits self-contained postings table rows, each block with its
+  * blobs (a budget flush mid-run would also be valid — blocks are
+  * independent — but a partition's run of one term is at most the
+  * partition size). Rows whose list is null (keyword/DOCS_ONLY terms, or
+  * a level the index lacks) emit a null blob, preserving the per-term
+  * IndexOptions through the rewrite. */
+private final class PostingsReencoder(it: Iterator[Posting], segId: Int)
     extends Iterator[PostingsTableRow] {
   private val out = scala.collection.mutable.Queue.empty[PostingsTableRow]
   private var curTerm: String = null
@@ -59,8 +56,8 @@ private final class PostingsReencoder(
 
   override def hasNext: Boolean = {
     while (out.isEmpty && it.hasNext) {
-      val (t, id, tf, norm, ps, os, ys) = it.next()
-      if (t != curTerm) { flush(); curTerm = t }
+      val p = it.next()
+      if (p.term != curTerm) { flush(); curTerm = p.term }
       if (n == ids.length) {
         ids = java.util.Arrays.copyOf(ids, n * 2)
         tfs = java.util.Arrays.copyOf(tfs, n * 2)
@@ -69,8 +66,8 @@ private final class PostingsReencoder(
         offs = java.util.Arrays.copyOf(offs, n * 2)
         pays = java.util.Arrays.copyOf(pays, n * 2)
       }
-      ids(n) = id; tfs(n) = tf; norms(n) = norm
-      poss(n) = ps; offs(n) = os; pays(n) = ys; n += 1
+      ids(n) = p.docId; tfs(n) = p.tf; norms(n) = p.norm
+      poss(n) = p.positions; offs(n) = p.offsets; pays(n) = p.payloads; n += 1
     }
     if (out.isEmpty) flush()
     out.nonEmpty
@@ -117,7 +114,7 @@ object Deletes {
     * currently containing the term. */
   def deleteByTerm(spark: SparkSession, dir: String, term: String): Unit = {
     import spark.implicits._
-    val ids = PostingRow.decoded(spark.read.parquet(IndexPaths.postings(dir))
+    val ids = Posting.decode(spark.read.parquet(IndexPaths.postings(dir))
       .where($"term" === term))
       .select($"docId").as[Long]
     deleteDocs(spark, dir, ids)
@@ -204,32 +201,15 @@ object Deletes {
     // range-shuffle by (term, newId) -> streaming re-encode per partition
     // (ascending newIds per term within a partition; hot terms split
     // across partitions at newId boundaries, blocks stay self-contained)
-    def decodedFor(dir: String, remap: DataFrame): DataFrame =
-      Tables.read[PostingsTableRow](spark, IndexPaths.postings(dir))
-        .where(blockPrune)
-        .as[PostingsTableRow]
-        .flatMap { r =>
-          val n = r.numDocs
-          val (ids, tfs, norms) = PostingsCodec.decodeBlock(r.firstDocId, n, r.bytes)
-          val poss =
-            if (r.posBytes == null) new Array[Array[Int]](n)
-            else PostingsCodec.decodePositionsBlock(n, r.posBytes)
-          val offs =
-            if (r.offBytes == null) new Array[Array[Int]](n)
-            else PostingsCodec.decodeOffsetsBlock(n, r.offBytes)
-          val pays =
-            if (r.payBytes == null) new Array[Array[Array[Byte]]](n)
-            else PostingsCodec.decodePayloadsBlock(n, r.payBytes)
-          ids.indices.iterator.map(i =>
-            (r.term, ids(i), tfs(i), norms(i), poss(i), offs(i), pays(i)))
-        }.toDF("term", "oldId", "tf", "norm", "ps", "os", "ys")
-        .join(remap, Seq("oldId"))
-        .select($"term", $"newId", $"tf", $"norm", $"ps", $"os", $"ys")
-    sources.map { case (d, r) => decodedFor(d, r) }
-      .reduce(_ union _)
-      .repartitionByRange(numPartitions, $"term", $"newId")
-      .sortWithinPartitions($"term", $"newId")
-      .as[(String, Long, Int, Int, Array[Int], Array[Int], Array[Array[Byte]])]
+    sources.map { case (d, remap) =>
+      val blocks = Tables.read[PostingsTableRow](spark, IndexPaths.postings(d)).where(blockPrune)
+      Posting.decode(blocks, PostingsTableRow.blobColumns)
+        .join(remap, $"docId" === $"oldId")
+        .select($"term", $"newId".as("docId"), $"tf", $"norm", $"positions", $"offsets", $"payloads")
+    }.reduce(_ union _)
+      .repartitionByRange(numPartitions, $"term", $"docId")
+      .sortWithinPartitions($"term", $"docId")
+      .as[Posting]
       .mapPartitions { it =>
         new PostingsReencoder(it, org.apache.spark.TaskContext.getPartitionId())
       }

@@ -68,7 +68,7 @@ object IndexSorter {
       val keep = meta.takeWhile { case (_, n) =>
         val take = need > 0; need -= n; take
       }
-      val live = PostingRow.decoded(spark.read.parquet(IndexPaths.postings(dir))
+      val live = Posting.decode(spark.read.parquet(IndexPaths.postings(dir))
         .where($"term" === term && $"firstDocId".isin(keep.map(_._1).toIndexedSeq: _*)))
         .select($"docId", $"tf")
         .join(dead, Seq("docId"), "left_anti")

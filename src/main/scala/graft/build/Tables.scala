@@ -2,6 +2,7 @@ package graft.build
 
 import graft.postings.PostingsCodec
 import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SparkSession}
+import org.apache.spark.sql.functions.{col, lit}
 
 import scala.reflect.runtime.universe.TypeTag
 
@@ -46,6 +47,10 @@ final case class DocStatRow(
     tokenCount: Int, // BM25 doc length (post-stop tokens, = Length - NumOverlap)
     norm: Int)       // unsigned byte315(1/sqrt(tokenCount)), 0..255
 
+/** A posting block without its blobs: the block metadata and its
+  * docs-and-freqs bytes, the columns the scoring scans read and decode
+  * in-task ([[graft.search.FlatScorer]]). Every other read turns blocks
+  * into [[Posting]] rows through [[Posting.decode]]. */
 final case class PostingRow(
     term: String,
     firstDocId: Long,
@@ -62,20 +67,7 @@ object PostingRow {
     * projection every typed postings scan selects before `.as[PostingRow]`. */
   val columns: Seq[org.apache.spark.sql.Column] =
     Seq("term", "firstDocId", "lastDocId", "numDocs", "maxTf", "maxNorm",
-      "sumTf", "segId", "bytes").map(org.apache.spark.sql.functions.col)
-
-  /** One (term, docId, tf, norm) row per posting of `blocks` (postings
-    * table rows, narrowed by the caller) — the decode of the cold paths
-    * (deletes, sorted early termination, pulsing, the gate's relational
-    * BM25); the serving path fuses decode with scoring in
-    * [[graft.search.Searcher]] instead. */
-  def decoded(blocks: Dataset[_]): DataFrame = {
-    import blocks.sparkSession.implicits._
-    blocks.select(columns: _*).as[PostingRow].flatMap { r =>
-      val (ids, tfs, norms) = PostingsCodec.decodeBlock(r.firstDocId, r.numDocs, r.bytes)
-      ids.indices.iterator.map(i => (r.term, ids(i), tfs(i), norms(i)))
-    }.toDF("term", "docId", "tf", "norm")
-  }
+      "sumTf", "segId", "bytes").map(col)
 }
 
 /** A postings table row: a [[PostingRow]] block plus its optional blobs,
@@ -83,8 +75,10 @@ object PostingRow {
   * (per-posting positions), `offBytes` (per-posting (start, end) char
   * offsets) and `payBytes` (per-position payloads). A blob is null where
   * the index does not carry its level ([[CollectionStatsRow]]) and for
-  * keyword (DOCS_ONLY) terms. Read and write the whole table through this
-  * type; the scoring scans select [[PostingRow.columns]] only. */
+  * keyword (DOCS_ONLY) terms. Write the whole table through this type;
+  * the scoring scans select [[PostingRow.columns]] only, and every other
+  * read decodes through [[Posting.decode]], which reads the blobs it is
+  * asked for. */
 final case class PostingsTableRow(
     term: String,
     firstDocId: Long,
@@ -102,6 +96,60 @@ final case class PostingsTableRow(
 object PostingsTableRow {
   /** The blob columns, in level order: positions, offsets, payloads. */
   val blobColumns: Seq[String] = Seq("posBytes", "offBytes", "payBytes")
+}
+
+/** One decoded posting (SURVEY §1's `Dataset[Posting]`): a term's entry
+  * for one doc, its tf and norm byte, and the lists of the blobs the
+  * reader asked for — the sorted positions, the flattened
+  * [s0,e0,s1,e1,…] char offsets (one pair per position) and the
+  * per-position payloads (≙ one DocsAndPositionsEnum step). A list is null
+  * when its blob was not asked for or the block carries none. Every
+  * cold-path postings read (deletes and rewrites, pulsing, the positional
+  * and payload matchers, highlighting, the gate's relational BM25) reads
+  * these rows; the scoring scans decode [[PostingRow]] blocks in-task. */
+final case class Posting(
+    term: String,
+    docId: Long,
+    tf: Int,
+    norm: Int,
+    positions: Array[Int],
+    offsets: Array[Int],
+    payloads: Array[Array[Byte]])
+
+object Posting {
+  /** The postings of one block, decoding each blob that is non-null; a
+    * null blob leaves its list null in every posting. */
+  def block(term: String, firstDocId: Long, numDocs: Int, bytes: Array[Byte],
+      posBytes: Array[Byte], offBytes: Array[Byte], payBytes: Array[Byte]): Iterator[Posting] = {
+    val (ids, tfs, norms) = PostingsCodec.decodeBlock(firstDocId, numDocs, bytes)
+    val poss = if (posBytes == null) null else PostingsCodec.decodePositionsBlock(numDocs, posBytes)
+    val offs = if (offBytes == null) null else PostingsCodec.decodeOffsetsBlock(numDocs, offBytes)
+    val pays = if (payBytes == null) null else PostingsCodec.decodePayloadsBlock(numDocs, payBytes)
+    ids.indices.iterator.map(i => Posting(term, ids(i), tfs(i), norms(i),
+      if (poss == null) null else poss(i),
+      if (offs == null) null else offs(i),
+      if (pays == null) null else pays(i)))
+  }
+
+  /** The one postings decoder: the postings of `blocks` (postings table
+    * rows, narrowed by the caller's `where`s, which push into the parquet
+    * scan), with the lists of `blobs` ([[PostingsTableRow.blobColumns]]).
+    * The scan reads the block columns and the requested blobs only. A
+    * block whose requested blob is null — a keyword (DOCS_ONLY) term, or
+    * an index without the level — decodes with null lists; a reader that
+    * needs the lists filters `isNotNull` on the blob first, in the same
+    * scan ([[graft.search.IndexReader.decoded]]). */
+  def decode(blocks: Dataset[_], blobs: Seq[String] = Nil): Dataset[Posting] = {
+    import blocks.sparkSession.implicits._
+    require(blobs.forall(PostingsTableRow.blobColumns.contains), s"unknown blob column in $blobs")
+    val blobCols = PostingsTableRow.blobColumns.map(b =>
+      if (blobs.contains(b)) col(b) else lit(null).cast("binary").as(b))
+    blocks.select(Seq(col("term"), col("firstDocId"), col("numDocs"), col("bytes")) ++ blobCols: _*)
+      .as[(String, Long, Int, Array[Byte], Array[Byte], Array[Byte], Array[Byte])]
+      .flatMap { case (term, first, n, bytes, pos, off, pay) =>
+        block(term, first, n, bytes, pos, off, pay)
+      }
+  }
 }
 
 /** Union row emitted by the single fused sort+tokenize pass (segment

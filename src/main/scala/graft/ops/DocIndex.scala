@@ -1,7 +1,7 @@
 package graft.ops
 
 import graft.analysis.Analyzer
-import graft.build.{IndexBuilder, IndexPaths, PostingRow, CollectionStatsRow}
+import graft.build.{IndexBuilder, IndexPaths, Posting, CollectionStatsRow}
 import graft.corpus.SourceFile
 import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
@@ -249,7 +249,7 @@ object DocIndex {
     * postings scan + block decode. */
   def hits(spark: SparkSession, dir: String, terms: Seq[String]): DataFrame = {
     import spark.implicits._
-    PostingRow.decoded(spark.read.parquet(IndexPaths.postings(dir))
+    Posting.decode(spark.read.parquet(IndexPaths.postings(dir))
       .where($"term".isin(terms.distinct: _*)))
       .select($"docId".as("doc_id"), $"term", $"tf".cast("long").as("tf"))
   }

@@ -38,7 +38,7 @@ object VerifyQueries {
   private def mergeTopk(reader: graft.search.IndexReader): DataFrame = {
     val cs = reader.collectionStats
     val avgdl = cs.sumTotalTermFreq * 1.0 / cs.maxDoc
-    val h = graft.build.PostingRow.decoded(reader.postingRows(Seq("merge")))
+    val h = reader.decoded(Seq("merge"))
       .select(col("docId").as("doc_id"), col("tf").cast("long").as("tf"))
     val df0 = reader.termDict.where(col("term") === "merge")
       .select(col("df")).head().getLong(0)
@@ -2857,19 +2857,10 @@ object VerifyQueries {
   def qMltTerms(spark: SparkSession, sf: String): DataFrame = {
     val dir = ensure(spark, sf)
     val cs = collectionStats(spark, dir)
-    // decode this doc's tf vector from flush-partition postings via docstats?
-    // postings are term-major; per-doc tf comes from an index scan filtered
-    // by docId range — cheap here because block metadata prunes.
-    import spark.implicits._
-    val docId = 7L
-    val p = spark.read.parquet(IndexPaths.postings(dir))
-      .where(col("firstDocId") <= docId && col("lastDocId") >= docId)
-      .as[graft.build.PostingRow]
-      .flatMap { r =>
-        val (ids, tfs, _) = graft.postings.PostingsCodec.decodeBlock(r.firstDocId, r.numDocs, r.bytes)
-        val i = java.util.Arrays.binarySearch(ids, docId)
-        if (i >= 0) Iterator.single((r.term, tfs(i).toLong)) else Iterator.empty
-      }.toDF("term", "tf")
+    // postings are term-major; the doc's tf vector comes from the blocks
+    // whose docId range holds it — cheap because block metadata prunes
+    val p = new graft.search.IndexReader(spark, dir).termVector(7L)
+      .select(col("term"), col("tf").cast("long").as("tf"))
     val dict = spark.read.parquet(IndexPaths.termDict(dir)).select(col("term"), col("df"))
     p.join(broadcast(dict), Seq("term"))
       .withColumn("w", round(col("tf") * log(lit(cs.maxDoc.toDouble) / col("df")), 6))
@@ -2976,8 +2967,8 @@ object VerifyQueries {
     import spark.implicits._
     val dir = DocIndex.ensureOffsets(spark, sf)
     val reader = new graft.search.IndexReader(spark, dir)
-    val firstOff = reader.termOffsetRows(Seq("merge"))
-      .map { case (docId, _, offs) => (docId, offs(0).toLong) }
+    val firstOff = reader.decoded(Seq("merge"), "offBytes")
+      .map(p => (p.docId, p.offsets(0).toLong))
       .toDF("doc_id", "off")
     val docs = spark.read.parquet(s"$sf/documents.parquet")
       .select(col("doc_id"), col("text"))

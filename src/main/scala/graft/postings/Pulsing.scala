@@ -1,6 +1,6 @@
 package graft.postings
 
-import graft.build.{IndexPaths, PostingRow, Tables}
+import graft.build.{IndexPaths, Posting, PostingRow, Tables}
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -62,7 +62,7 @@ object Pulsing {
 
     // Pulsed terms: decode their (<= cutoff) postings and fold them into
     // per-term arrays, docId-ascending — the dictionary's inline payload.
-    val inlined = PostingRow.decoded(routed.where($"df" <= freqCutoff))
+    val inlined = Posting.decode(routed.where($"df" <= freqCutoff))
       .select($"term", $"docId".as("doc_id"), $"tf")
       .groupBy($"term")
       .agg(sort_array(collect_list(struct($"doc_id", $"tf"))).as("ps"))
@@ -88,7 +88,7 @@ object Pulsing {
         explode(arrays_zip($"inlineDocIds", $"inlineTfs")).as("p"))
       .select($"p.inlineDocIds".as("doc_id"), $"term",
         $"p.inlineTfs".cast("long").as("tf"))
-    val blocks = PostingRow.decoded(spark.read.parquet(IndexPaths.postings(pulsedDir))
+    val blocks = Posting.decode(spark.read.parquet(IndexPaths.postings(pulsedDir))
       .where($"term".isin(t: _*)))
       .select($"docId".as("doc_id"), $"term", $"tf".cast("long").as("tf"))
     inline.unionByName(blocks)

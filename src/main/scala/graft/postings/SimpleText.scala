@@ -1,6 +1,6 @@
 package graft.postings
 
-import graft.build.{CollectionStatsRow, IndexPaths, PostingsTableRow, Tables}
+import graft.build.{CollectionStatsRow, IndexPaths, Posting, PostingsTableRow, Tables}
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -32,21 +32,15 @@ object SimpleText {
     * this engine's positioned field. */
   def dump(spark: SparkSession, indexDir: String, outDir: String): Unit = {
     import spark.implicits._
-    val lines = Tables.read[PostingsTableRow](spark, IndexPaths.postings(indexDir))
-      .select($"term", $"firstDocId", $"numDocs", $"bytes", $"posBytes")
-      .as[(String, Long, Int, Array[Byte], Array[Byte])]
-      .flatMap { case (term, first, n, tbytes, pbytes) =>
-        val (ids, tfs, _) = PostingsCodec.decodeBlock(first, n, tbytes)
-        val poss: Array[Array[Int]] =
-          if (pbytes == null) null else PostingsCodec.decodePositionsBlock(n, pbytes)
-        ids.indices.map { i =>
-          val sb = new StringBuilder
-          sb.append("    doc ").append(ids(i)).append('\n')
-          sb.append("      freq ").append(tfs(i))
-          if (poss != null)
-            poss(i).foreach(p => sb.append('\n').append("      pos ").append(p))
-          (term, ids(i), sb.toString)
-        }
+    val blocks = Tables.read[PostingsTableRow](spark, IndexPaths.postings(indexDir))
+    val lines = Posting.decode(blocks, Seq("posBytes"))
+      .map { p =>
+        val sb = new StringBuilder
+        sb.append("    doc ").append(p.docId).append('\n')
+        sb.append("      freq ").append(p.tf)
+        if (p.positions != null)
+          p.positions.foreach(pos => sb.append('\n').append("      pos ").append(pos))
+        (p.term, p.docId, sb.toString)
       }.toDF("term", "docId", "body")
       // range-partition by TERM ALONE: with docId in the partitioning key
       // a high-df term could straddle a partition boundary and the

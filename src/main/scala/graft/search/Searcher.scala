@@ -1,7 +1,7 @@
 package graft.search
 
 import graft.bm25.BM25
-import graft.build.{CollectionStatsRow, DocStatRow, IndexPaths, PostingRow, PostingsTableRow, Tables, TermDictRow}
+import graft.build.{CollectionStatsRow, DocStatRow, IndexPaths, Posting, PostingRow, PostingsTableRow, Tables, TermDictRow}
 import graft.postings.PostingsCodec
 import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
@@ -43,7 +43,8 @@ class IndexReader(val spark: SparkSession, val dir: String) extends Serializable
     Tables.read[T](spark, dataDirs.map(path): _*)
 
   /** The postings table, blob columns included; the scoring scans
-    * select [[PostingRow.columns]] ([[allPostingRows]]). */
+    * select [[PostingRow.columns]] ([[allPostingRows]]), every other read
+    * decodes through [[Posting.decode]] ([[decoded]], [[docPostings]]). */
   @transient lazy val postings: DataFrame = openAs[PostingsTableRow](IndexPaths.postings)
   @transient lazy val docstats: DataFrame = openAs[DocStatRow](IndexPaths.docstats)
   @transient lazy val termDict: DataFrame = open(IndexPaths.termDict)
@@ -75,18 +76,34 @@ class IndexReader(val spark: SparkSession, val dir: String) extends Serializable
   private[search] def allPostingRows: Dataset[PostingRow] =
     postings.select(PostingRow.columns: _*).as[PostingRow]
 
+  /** The decoded postings of `terms` with the lists of `blobs`
+    * ([[Posting.decode]]) — one scan: the term filter prunes parquet row
+    * groups on the sorted term column, and the blocks lacking a requested
+    * blob (keyword, DOCS_ONLY, terms) drop out in it. */
+  def decoded(terms: Seq[String], blobs: String*): Dataset[Posting] =
+    Posting.decode(postings.where(blobs.map(col(_).isNotNull)
+      .foldLeft($"term".isin(terms.distinct: _*))(_ && _)), blobs)
+
+  /** One doc's postings, of `terms` or of every term when `terms` is
+    * empty, without blob lists: the point lookup of term vectors, MLT and
+    * explain. Block metadata prunes the scan to the blocks whose
+    * [firstDocId, lastDocId] straddle the doc; each decodes and a binary
+    * search finds the doc. */
+  def docPostings(docId: Long, terms: Seq[String] = Nil): Dataset[Posting] = {
+    val straddling = allPostingRows.where($"firstDocId" <= docId && $"lastDocId" >= docId)
+    (if (terms.isEmpty) straddling else straddling.where($"term".isin(terms.distinct: _*)))
+      .flatMap { r =>
+        val (ids, tfs, norms) = PostingsCodec.decodeBlock(r.firstDocId, r.numDocs, r.bytes)
+        val i = java.util.Arrays.binarySearch(ids, docId)
+        if (i < 0) Iterator.empty
+        else Iterator.single(Posting(r.term, docId, tfs(i), norms(i), null, null, null))
+      }
+  }
+
   /** Per-doc term vector (reference: term vectors are a per-doc mini
     * inverted index, Codecs/Compressing/CompressingTermVectorsWriter.cs;
-    * here recovered from the postings via block-metadata docId pruning —
-    * only blocks whose [firstDocId, lastDocId] straddle the doc decode). */
-  def termVector(docId: Long): DataFrame =
-    allPostingRows
-      .where($"firstDocId" <= docId && $"lastDocId" >= docId)
-      .flatMap { r =>
-        val (ids, tfs, _) = PostingsCodec.decodeBlock(r.firstDocId, r.numDocs, r.bytes)
-        val i = java.util.Arrays.binarySearch(ids, docId)
-        if (i >= 0) Iterator.single((r.term, tfs(i))) else Iterator.empty
-      }.toDF("term", "tf")
+    * here recovered from the postings by [[docPostings]]): (term, tf). */
+  def termVector(docId: Long): DataFrame = docPostings(docId).select($"term", $"tf")
 
   /** True when the index carries positions (the
     * DOCS_AND_FREQS_AND_POSITIONS option, recorded in collection_stats):
@@ -105,36 +122,6 @@ class IndexReader(val spark: SparkSession, val dir: String) extends Serializable
     * analog — reference: Index/Payload semantics and the Search/Payloads
     * query family). */
   lazy val hasPayloads: Boolean = collectionStats.hasPayloads
-
-  /** The postings blocks of `terms` that carry every one of `blobs`
-    * ([[PostingsTableRow.blobColumns]]) — one scan, parquet-pruned by the
-    * sorted term column: (term, firstDocId, numDocs, postings bytes,
-    * then each blob). Keyword (DOCS_ONLY) terms carry no blobs and drop
-    * out. */
-  private[search] def blobBlocks(terms: Seq[String], blobs: String*): DataFrame =
-    postings.where($"term".isin(terms.distinct: _*) && blobs.map(col(_).isNotNull).reduce(_ && _))
-      .select(Seq($"term", $"firstDocId", $"numDocs", $"bytes") ++ blobs.map(col): _*)
-
-  /** (docId, term, tf, normByte, per-position payloads) for a term set,
-    * decoded from the postings rows' payloads. */
-  def termPayloadRows(terms: Seq[String])
-      : Dataset[(Long, String, Int, Int, Array[Array[Byte]])] =
-    blobBlocks(terms, "payBytes").as[(String, Long, Int, Array[Byte], Array[Byte])]
-      .flatMap { case (term, firstDocId, n, tbytes, ybytes) =>
-        val (ids, tfs, norms) = PostingsCodec.decodeBlock(firstDocId, n, tbytes)
-        val pays = PostingsCodec.decodePayloadsBlock(n, ybytes)
-        ids.indices.iterator.map(i => (ids(i), term, tfs(i), norms(i), pays(i)))
-      }
-
-  /** (docId, term, flattened [s0,e0,s1,e1,…] char offsets) for a term
-    * set, decoded from the postings rows' char offsets. */
-  def termOffsetRows(terms: Seq[String]): Dataset[(Long, String, Array[Int])] =
-    blobBlocks(terms, "offBytes").as[(String, Long, Int, Array[Byte], Array[Byte])]
-      .flatMap { case (term, firstDocId, n, tbytes, obytes) =>
-        val (ids, _, _) = PostingsCodec.decodeBlock(firstDocId, n, tbytes)
-        val offs = PostingsCodec.decodeOffsetsBlock(n, obytes)
-        ids.indices.iterator.map(i => (ids(i), term, offs(i)))
-      }
 
   /** Stats of the query terms that are in the dictionary (≙ the
     * terms-index seek, reference: Codecs/BlockTreeTermsReader.cs): a
@@ -265,6 +252,15 @@ final class MultiIndexReader(spark0: SparkSession, dirs: Seq[String])
 
 private final case class ClauseHit(docId: Long, idx: Int, score: Float)
 
+/** One doc as a positional matcher sees it ([[Searcher.docPositions]],
+  * [[Searcher.indexedDocs]]): its docId, norm byte and the [[Posting]] of
+  * each query term it holds. */
+private final case class DocPostings(docId: Long, norm: Int, byTerm: Map[String, Posting]) {
+  /** The sorted positions of `t` in the doc, empty when it is absent. */
+  def positions(t: String): Array[Int] =
+    byTerm.get(t).fold(Array.emptyIntArray)(_.positions)
+}
+
 /** What scoring one rewritten tree reads: the similarity, the dictionary
   * stats of its leaf terms, and each scoring leaf's weight vector from
   * the one [[SimilarityLike.clauseWeights]] call over its leaf clauses.
@@ -320,6 +316,26 @@ object Searcher {
       val altsOf = keys.zip(slots).toMap
       posOf => SloppyPhrase.freq(keys, k => slotPositions(altsOf(k), posOf), slop)
     }
+
+  /** The PayloadFunction `agg` ("avg", "min" or "max", reference:
+    * Search/Payloads/AveragePayloadFunction.cs and siblings) as the factor
+    * a payload query multiplies its score by: the aggregate of the floats
+    * (PayloadHelper decoding) of the given payloads that carry one (at
+    * least 4 bytes), 1 when none does. Any other `agg` throws. */
+  private[search] def payloadFactor(agg: String): Iterator[Array[Byte]] => Float = {
+    val pick: Array[Float] => Float = agg match {
+      case "avg" => vs => vs.sum / vs.length
+      case "min" => _.min
+      case "max" => _.max
+      case other => throw new IllegalArgumentException(
+        s"unknown payload function '$other': expected avg, min or max")
+    }
+    pays => {
+      val vs = pays.filter(p => p != null && p.length >= 4)
+        .map(graft.analysis.DelimitedPayload.decodeFloat).toArray
+      if (vs.isEmpty) 1f else pick(vs)
+    }
+  }
 
   /** A slot's sorted positions: its one term's, or the distinct union of
     * its alternatives' (UnionDocsAndPositionsEnum). */
@@ -395,7 +411,7 @@ final class Searcher(val reader: IndexReader,
     if (deleted.value.isEmpty) ds
     else {
       val dead = deleted
-      val live = udf((docId: Long) => java.util.Arrays.binarySearch(dead.value, docId) < 0)
+      val live = udf((id: Long) => java.util.Arrays.binarySearch(dead.value, id) < 0)
       ds.where(live(ds(ds.columns.head)))
     }
 
@@ -619,9 +635,8 @@ final class Searcher(val reader: IndexReader,
 
   private def constantScoreMultiTerm(m: TermMatch, boost: Float): Dataset[ScoreDoc] = {
     val matchedTerms = reader.matchingTerms(m).toSeq.toDF("term")
-    reader.allPostingRows
-      .join(matchedTerms, Seq("term"), "left_semi").as[PostingRow]
-      .flatMap(r => PostingsCodec.decodeBlock(r.firstDocId, r.numDocs, r.bytes)._1)
+    Posting.decode(reader.allPostingRows.join(matchedTerms, Seq("term"), "left_semi"))
+      .map(_.docId)
       .distinct()
       .map(ScoreDoc(_, boost))
   }
@@ -712,9 +727,9 @@ final class Searcher(val reader: IndexReader,
   private def slotFreqs(slots: Seq[Seq[String]], offsets: Seq[Int],
                         slop: Int): Dataset[(Long, Float, Int)] = {
     val freq = Searcher.slotFreq(slots.toIndexedSeq, offsets.toIndexedSeq, slop)
-    docPositions(slots.flatten, conjunction(slots)) { (docId, norm, posOf) =>
-      val f = freq(posOf)
-      if (f > 0f) Some((docId, f, norm)) else None
+    docPositions(slots.flatten, conjunction(slots)) { d =>
+      val f = freq(d.positions)
+      if (f > 0f) Some((d.docId, f, d.norm)) else None
     }
   }
 
@@ -725,54 +740,52 @@ final class Searcher(val reader: IndexReader,
       case alts => alts.map(termDocIds).reduce(_ union _).distinct()
     }.reduce(_ intersect _)
 
-  /** The positions source every positional matcher reads (≙ one
-    * DocsAndPositionsEnum): `matcher` sees each doc's docId, norm byte
-    * and the sorted positions of `terms` in it (empty for an absent
-    * term). With indexed positions: one pruned postings scan (each
-    * block's positions ride in its row), one docId shuffle, no content
-    * read.
-    * Without it — the FilteredQuery QUERY_FIRST strategy (reference:
-    * Search/FilteredQuery.cs:536-575) — only the `candidates` docs (an
-    * index-pruned conjunction, usually a vanishing fraction of the
-    * corpus) have their stored content re-analyzed, with the same
-    * positions (PositionsSpec). */
+  /** The one positions source of every positional matcher: `matcher`
+    * sees each live doc's [[DocPostings]] — its docId, norm byte and the
+    * posting of each of `terms` it holds, with positions — and returns a
+    * row keyed by that docId. With indexed positions this is
+    * [[indexedDocs]]. Without them — the FilteredQuery QUERY_FIRST
+    * strategy (reference: Search/FilteredQuery.cs:536-575) — only the
+    * live `candidates` docs (an index-pruned conjunction, usually a
+    * vanishing fraction of the corpus) have their stored content
+    * re-analyzed, with the same positions (PositionsSpec). */
   private def docPositions[T: org.apache.spark.sql.Encoder](terms: Seq[String],
-      candidates: => Dataset[Long])(matcher: (Long, Int, String => Array[Int]) => Option[T])
-      : Dataset[T] =
-    if (reader.hasPositions)
-      termPositionRows(terms.distinct).groupByKey(_._1).flatMapGroups { (docId, it) =>
-        val posBy = scala.collection.mutable.HashMap.empty[String, Array[Int]]
-        var norm = 0
-        it.foreach { case (_, term, ps, n) => posBy(term) = ps; norm = n }
-        matcher(docId, norm, t => posBy.getOrElse(t, Array.emptyIntArray))
-      }
+      candidates: => Dataset[Long])(matcher: DocPostings => Option[T]): Dataset[T] =
+    if (reader.hasPositions) indexedDocs(terms)(matcher)
     else {
       val termSet = terms.toSet
       val analyzers = analyzerFor
       reader.docsTable
-        .join(candidates.toDF("cDocId"), $"docId" === $"cDocId")
+        .join(liveOnly(candidates).toDF("cDocId"), $"docId" === $"cDocId")
         .join(reader.docstats.select($"docId".as("nDocId"), $"norm"), $"docId" === $"nDocId")
         .select($"docId", $"lang", $"content", $"norm")
         .as[(Long, String, String, Int)]
         .mapPartitions { it =>
           val analyzerCache = scala.collection.mutable.HashMap.empty[String, graft.analysis.Analyzer]
           it.flatMap { case (docId, lang, content, norm) =>
-            val posBy = analyzerCache.getOrElseUpdate(lang, analyzers(lang)).analyze(content)
+            val byTerm = analyzerCache.getOrElseUpdate(lang, analyzers(lang)).analyze(content)
               .tokens.filter(t => termSet.contains(t.term)).groupMap(_.term)(_.position)
-            matcher(docId, norm, t => posBy.getOrElse(t, Array.emptyIntArray))
+              .map { case (t, ps) => t -> Posting(t, docId, ps.length, norm, ps, null, null) }
+            matcher(DocPostings(docId, norm, byTerm))
           }
         }
     }
 
-  /** (docId, term, positions, normByte) rows for a term set, decoded from
-    * the postings rows' positions. */
-  private def termPositionRows(distinct: Seq[String]): Dataset[(Long, String, Array[Int], Int)] =
-    reader.blobBlocks(distinct, "posBytes").as[(String, Long, Int, Array[Byte], Array[Byte])]
-      .flatMap { case (term, firstDocId, n, tbytes, pbytes) =>
-        val (ids, _, norms) = PostingsCodec.decodeBlock(firstDocId, n, tbytes)
-        val poss = PostingsCodec.decodePositionsBlock(n, pbytes)
-        ids.indices.iterator.map(i => (ids(i), term, poss(i), norms(i)))
-      }
+  /** The one per-doc grouping of the indexed postings (≙ one
+    * DocsAndPositionsEnum per term, advanced doc by doc): one pruned
+    * postings scan through [[IndexReader.decoded]] reading positions and
+    * the lists of `blobs` (each block's blobs ride in its row; blocks
+    * lacking a requested blob drop out), one docId shuffle, no content
+    * read. The matcher's rows are keyed by docId, and [[liveOnly]] drops
+    * the tombstoned ones. Payload and highlight matchers call it
+    * directly: re-analysis recovers positions only. */
+  private def indexedDocs[T: org.apache.spark.sql.Encoder](terms: Seq[String], blobs: String*)(
+      matcher: DocPostings => Option[T]): Dataset[T] =
+    liveOnly(reader.decoded(terms, "posBytes" +: blobs: _*)
+      .groupByKey(_.docId).flatMapGroups { (docId, it) =>
+        val byTerm = it.map(p => p.term -> p).toMap
+        matcher(DocPostings(docId, byTerm.head._2.norm, byTerm))
+      })
 
   /** FastVectorHighlighter analog (reference: Highlighter/VectorHighlight/
     * FieldTermStack.cs + FieldPhraseList.cs): phrase-aware highlight spans
@@ -790,48 +803,37 @@ final class Searcher(val reader: IndexReader,
   def phraseHighlightSpans(terms: Seq[String]): Dataset[(Long, Int, Int)] = positional {
     val distinct = terms.distinct
     val stats = reader.termStats(distinct)
-    if (!distinct.forall(stats.contains)) spark.emptyDataset[(Long, Int, Int)]
+    if (!reader.hasPositions || !distinct.forall(stats.contains)) spark.emptyDataset[(Long, Int, Int)]
     else {
       val phraseArr = terms.toIndexedSeq
       val n = phraseArr.length
       val nDistinct = distinct.length
-      reader.blobBlocks(distinct, "posBytes", "offBytes")
-        .as[(String, Long, Int, Array[Byte], Array[Byte], Array[Byte])]
-        .flatMap { case (t, firstDocId, nDocs, tbytes, pbytes, obytes) =>
-          val (ids, _, _) = PostingsCodec.decodeBlock(firstDocId, nDocs, tbytes)
-          val poss = PostingsCodec.decodePositionsBlock(nDocs, pbytes)
-          val offs = PostingsCodec.decodeOffsetsBlock(nDocs, obytes)
-          ids.indices.iterator.map(i => (ids(i), t, poss(i), offs(i)))
-        }
-        .groupByKey(_._1).flatMapGroups { (docId, it) =>
-          val psBy = scala.collection.mutable.HashMap.empty[String, Array[Int]]
-          val offBy = scala.collection.mutable.HashMap.empty[String, Array[Int]]
-          it.foreach { case (_, t, ps, os) => psBy(t) = ps; offBy(t) = os }
-          if (psBy.size < nDistinct) Iterator.empty
-          else {
-            val head = psBy(phraseArr.head)
-            var out: Iterator[(Long, Int, Int)] = Iterator.empty
-            var hi = 0
-            while (out.isEmpty && hi < head.length) {
-              val p = head(hi)
-              var i = 1
-              var tailIdx = hi // occurrence index of the LAST phrase term
-              var ok = true
-              while (ok && i < n) {
-                val idx = java.util.Arrays.binarySearch(psBy(phraseArr(i)), p + i)
-                if (idx < 0) ok = false else tailIdx = idx
-                i += 1
-              }
-              if (ok) {
-                val s = offBy(phraseArr.head)(2 * hi)
-                val e = offBy(phraseArr(n - 1))(2 * tailIdx + 1)
-                out = Iterator.single((docId, s, e))
-              }
-              hi += 1
+      indexedDocs(distinct, "offBytes") { d =>
+        if (d.byTerm.size < nDistinct) None
+        else {
+          val head = d.positions(phraseArr.head)
+          var out: Option[(Long, Int, Int)] = None
+          var hi = 0
+          while (out.isEmpty && hi < head.length) {
+            val p = head(hi)
+            var i = 1
+            var tailIdx = hi // occurrence index of the LAST phrase term
+            var ok = true
+            while (ok && i < n) {
+              val idx = java.util.Arrays.binarySearch(d.positions(phraseArr(i)), p + i)
+              if (idx < 0) ok = false else tailIdx = idx
+              i += 1
             }
-            out
+            if (ok) {
+              val s = d.byTerm(phraseArr.head).offsets(2 * hi)
+              val e = d.byTerm(phraseArr(n - 1)).offsets(2 * tailIdx + 1)
+              out = Some((d.docId, s, e))
+            }
+            hi += 1
           }
+          out
         }
+      }
     }
   }
 
@@ -859,11 +861,11 @@ final class Searcher(val reader: IndexReader,
   def passageScores(terms: Seq[String], window: Int = 10,
                     pivot: Double = 16.0): DataFrame = positional {
     val distinct = terms.distinct
-    val perPassage = termPositionRows(distinct)
-      .flatMap { case (docId, term, ps, _) =>
-        val ttf = ps.length.toLong
-        ps.groupBy(_ / window).iterator.map { case (pass, occ) =>
-          (docId, term, ttf, pass.toLong, occ.length.toLong)
+    val perPassage = reader.decoded(distinct, "posBytes")
+      .flatMap { p =>
+        val ttf = p.positions.length.toLong
+        p.positions.groupBy(_ / window).iterator.map { case (pass, occ) =>
+          (p.docId, p.term, ttf, pass.toLong, occ.length.toLong)
         }
       }.toDF("doc_id", "term", "ttf", "passage", "f")
     val dl = reader.docstats
@@ -876,13 +878,13 @@ final class Searcher(val reader: IndexReader,
     val weight = lit(k1 + 1.0) *
       log(lit(1.0) + (lit(1.5) + $"dl" / lit(pivot)) / ($"ttf" + lit(0.5)))
     val tfw = $"f" / ($"f" + lit(k1) * (lit(1.0 - b) + lit(b) * plen / lit(pivot)))
-    perPassage.join(dl, Seq("doc_id"))
+    liveOnly(perPassage.join(dl, Seq("doc_id"))
       .select($"doc_id", $"passage", (weight * tfw).as("wt"))
       .groupBy($"doc_id", $"passage")
       .agg(sum($"wt").as("ws"))
       .select($"doc_id", $"passage",
         ((lit(1.0) + lit(1.0) / log(lit(pivot) + lit(window) * $"passage")) * $"ws")
-          .as("score"))
+          .as("score")))
   }
 
   /** Proximity pair count (SpanNearQuery analog for two terms, reference:
@@ -896,15 +898,15 @@ final class Searcher(val reader: IndexReader,
     val stats = reader.termStats(Seq(termA, termB))
     val terms = Seq(termA, termB)
     if (!terms.forall(stats.contains)) spark.emptyDataset[(Long, Int)]
-    else docPositions(terms, conjunction(terms.map(Seq(_)))) { (docId, _, posOf) =>
-      val pb = posOf(termB)
+    else docPositions(terms, conjunction(terms.map(Seq(_)))) { d =>
+      val pb = d.positions(termB)
       var n = 0
-      posOf(termA).foreach(a => pb.foreach { b =>
-        val d = b - a
-        if (if (ordered) d > 0 && d <= maxGap else d != 0 && math.abs(d) <= maxGap)
+      d.positions(termA).foreach(a => pb.foreach { b =>
+        val gap = b - a
+        if (if (ordered) gap > 0 && gap <= maxGap else gap != 0 && math.abs(gap) <= maxGap)
           n += 1
       })
-      if (n > 0) Some((docId, n)) else None
+      if (n > 0) Some((d.docId, n)) else None
     }
   }
 
@@ -956,9 +958,9 @@ final class Searcher(val reader: IndexReader,
     cands(q) match {
       case None => spark.emptyDataset[(Long, Int)]
       case Some(candidates) =>
-        docPositions(live.toSeq, candidates) { (docId, _, posOf) =>
-          val n = Spans.eval(q, posOf).length
-          if (n > 0) Some((docId, n)) else None
+        docPositions(live.toSeq, candidates) { d =>
+          val n = Spans.eval(q, d.positions).length
+          if (n > 0) Some((d.docId, n)) else None
         }
     }
   }
@@ -969,27 +971,20 @@ final class Searcher(val reader: IndexReader,
     * float decoding; includeSpanScore = true): score = the term's BM25
     * score × the aggregate of its per-occurrence payload floats in the
     * doc (docs whose occurrences carry no payloads keep factor 1, the
-    * reference's scorePayload-default behavior). */
+    * reference's scorePayload-default behavior). `agg` is "avg", "min"
+    * or "max"; anything else throws [[IllegalArgumentException]]. */
   def payloadTermScores(t: String, agg: String = "avg",
                         boost: Float = 1f): Dataset[ScoreDoc] = positional {
+    val factor = Searcher.payloadFactor(agg)
     require(reader.hasPayloads, "index has no payloads")
     val stats = reader.termStats(Seq(t))
     if (!stats.contains(t)) spark.emptyDataset[ScoreDoc]
     else {
       val w = BM25.weightValue(BM25.idf(stats(t).df, cs.maxDoc), boost)
       val localCache = cache
-      val aggKind = agg
-      liveOnly(reader.termPayloadRows(Seq(t)).map { case (docId, _, tf, norm, pays) =>
-        val vals = pays.iterator.filter(p => p != null && p.length >= 4)
-          .map(graft.analysis.DelimitedPayload.decodeFloat).toArray
-        val pf =
-          if (vals.isEmpty) 1f
-          else aggKind match {
-            case "min" => vals.min
-            case "max" => vals.max
-            case _ => vals.sum / vals.length
-          }
-        ScoreDoc(docId, BM25.score(tf.toFloat, norm.toByte, w, localCache) * pf)
+      liveOnly(reader.decoded(Seq(t), "payBytes").map { p =>
+        ScoreDoc(p.docId, BM25.score(p.tf.toFloat, p.norm.toByte, w, localCache) *
+          factor(p.payloads.iterator))
       })
     }
   }
@@ -1008,9 +1003,11 @@ final class Searcher(val reader: IndexReader,
     * (avg/min/max; docs whose in-span occurrences carry no payloads keep
     * factor 1). One postings scan reads each block's positions and
     * payloads from its row; the span algebra and payload collection run
-    * per doc inside the group, no driver hop. */
+    * per doc inside the group, no driver hop. `agg` is "avg", "min" or
+    * "max"; anything else throws [[IllegalArgumentException]]. */
   def payloadNearScores(q: SpanNearQ, agg: String = "avg",
                         boost: Float = 1f): Dataset[ScoreDoc] = positional {
+    val factor = Searcher.payloadFactor(agg)
     require(reader.hasPositions, "index has no positions")
     require(reader.hasPayloads, "index has no payloads")
     val terms = Spans.terms(q).toSeq.sorted
@@ -1021,61 +1018,29 @@ final class Searcher(val reader: IndexReader,
       val idfSum = live.map(t => BM25.idf(stats(t).df, cs.maxDoc)).sum
       val w = BM25.weightValue(idfSum, boost)
       val localCache = cache
-      val aggKind = agg
       val query = q
-      liveOnly(termPositionPayloadRows(live).groupByKey(_._1).flatMapGroups { (docId, it) =>
-        val rows = it.toArray
-        val posOf: String => Array[Int] = {
-          val m = rows.map(r => r._2 -> r._3).toMap
-          t => m.getOrElse(t, Array.empty)
-        }
-        val spans = Spans.eval(query, posOf)
-        if (spans.isEmpty) Iterator.empty
+      indexedDocs(live, "payBytes") { d =>
+        val spans = Spans.eval(query, d.positions)
+        if (spans.isEmpty) None
         else {
-          // collect payloads of occurrences inside ANY matching span, in
+          // the payloads of occurrences inside ANY matching span, in
           // (term asc, occurrence) order — a fixed order so the float avg
           // is run-stable (the reference collects in span-walk order; the
           // aggregate families used here are order-insensitive up to float
           // association)
-          val vals = scala.collection.mutable.ArrayBuffer.empty[Float]
-          rows.sortBy(_._2).foreach { case (_, _, ps, _, pays) =>
-            var i = 0
-            while (i < ps.length) {
-              val p = ps(i)
-              if (i < pays.length && pays(i) != null && pays(i).length >= 4 &&
-                  spans.exists(s => p >= s._1 && p < s._2))
-                vals += graft.analysis.DelimitedPayload.decodeFloat(pays(i))
-              i += 1
+          val inSpans = d.byTerm.toSeq.sortBy(_._1).iterator.flatMap { case (_, p) =>
+            p.positions.indices.iterator.collect {
+              case i if i < p.payloads.length &&
+                  spans.exists(s => p.positions(i) >= s._1 && p.positions(i) < s._2) =>
+                p.payloads(i)
             }
           }
-          val pf =
-            if (vals.isEmpty) 1f
-            else aggKind match {
-              case "min" => vals.min
-              case "max" => vals.max
-              case _ => vals.sum / vals.length
-            }
-          val norm = rows.head._4
-          Iterator.single(ScoreDoc(docId,
-            BM25.score(spans.length.toFloat, norm.toByte, w, localCache) * pf))
+          Some(ScoreDoc(d.docId,
+            BM25.score(spans.length.toFloat, d.norm.toByte, w, localCache) * factor(inSpans)))
         }
-      })
+      }
     }
   }
-
-  /** (docId, term, positions, normByte, per-position payloads) rows for a
-    * term set, decoded from the positions and payloads of each postings
-    * row. */
-  private def termPositionPayloadRows(terms: Seq[String])
-      : Dataset[(Long, String, Array[Int], Int, Array[Array[Byte]])] =
-    reader.blobBlocks(terms, "posBytes", "payBytes")
-      .as[(String, Long, Int, Array[Byte], Array[Byte], Array[Byte])]
-      .flatMap { case (term, firstDocId, n, tbytes, pbytes, ybytes) =>
-        val (ids, _, norms) = PostingsCodec.decodeBlock(firstDocId, n, tbytes)
-        val poss = PostingsCodec.decodePositionsBlock(n, pbytes)
-        val pays = PostingsCodec.decodePayloadsBlock(n, ybytes)
-        ids.indices.iterator.map(i => (ids(i), term, poss(i), norms(i), pays(i)))
-      }
 
   /** SpanPayloadCheckQuery analog (reference:
     * Search/Spans/SpanPayloadCheckQuery.cs over SpanPositionCheckQuery):
@@ -1113,25 +1078,20 @@ final class Searcher(val reader: IndexReader,
     if (live.isEmpty) return spark.emptyDataset[(Long, Int)]
     val query = q
     val want = toMatch.map(_.clone())
-    liveOnly(termPositionPayloadRows(live).groupByKey(_._1).flatMapGroups { (docId, it) =>
-      val rows = it.toArray
-      val posOf: String => Array[Int] = {
-        val m = rows.map(r => r._2 -> r._3).toMap
-        t => m.getOrElse(t, Array.empty)
-      }
+    indexedDocs(live, "payBytes") { d =>
       // position -> payload for every live-term occurrence in the doc
       val payAt = scala.collection.mutable.HashMap.empty[Int, Array[Byte]]
-      rows.foreach { case (_, _, ps, _, pays) =>
+      d.byTerm.valuesIterator.foreach { p =>
         var i = 0
-        while (i < ps.length) {
+        while (i < p.positions.length) {
           // empty byte[] = occurrence carries no payload (same contract as
           // the scoring paths' length filter)
-          if (i < pays.length && pays(i) != null && pays(i).nonEmpty)
-            payAt(ps(i)) = pays(i)
+          if (i < p.payloads.length && p.payloads(i) != null && p.payloads(i).nonEmpty)
+            payAt(p.positions(i)) = p.payloads(i)
           i += 1
         }
       }
-      val accepted = Spans.eval(query, posOf).count { case (s, e) =>
+      val accepted = Spans.eval(query, d.positions).count { case (s, e) =>
         val seq = (s until e).flatMap(payAt.get)
         seq.isEmpty || // no payloads available -> accept
           (seq.length == want.length && {
@@ -1141,14 +1101,12 @@ final class Searcher(val reader: IndexReader,
               seq.forall(a => want.exists(b => java.util.Arrays.equals(a, b)))
           })
       }
-      if (accepted > 0) Iterator.single((docId, accepted)) else Iterator.empty
-    })
+      if (accepted > 0) Some((d.docId, accepted)) else None
+    }
   }
 
   /** DocIds of one term, decoded from the pruned postings scan. */
-  private def termDocIds(t: String): Dataset[Long] =
-    reader.postingRows(Seq(t))
-      .flatMap(r => PostingsCodec.decodeBlock(r.firstDocId, r.numDocs, r.bytes)._1)
+  private def termDocIds(t: String): Dataset[Long] = reader.decoded(Seq(t)).map(_.docId)
 
   // ------------------------------------------------------ explain support
 
@@ -1163,15 +1121,8 @@ final class Searcher(val reader: IndexReader,
   private[search] def normCacheStat: Array[Float] = cache
 
   /** (tf, normByte) of one (term, doc) — block-pruned point lookup. */
-  private[search] def termHit(t: String, docId: Long): Option[(Int, Int)] = {
-    val rows = reader.postingRows(Seq(t))
-      .where($"firstDocId" <= docId && $"lastDocId" >= docId).collect()
-    rows.iterator.flatMap { r =>
-      val (ids, tfs, norms) = PostingsCodec.decodeBlock(r.firstDocId, r.numDocs, r.bytes)
-      val i = java.util.Arrays.binarySearch(ids, docId)
-      if (i >= 0) Iterator.single((tfs(i), norms(i))) else Iterator.empty
-    }.nextOption()
-  }
+  private[search] def termHit(t: String, docId: Long): Option[(Int, Int)] =
+    reader.docPostings(docId, Seq(t)).collect().headOption.map(p => (p.tf, p.norm))
 
   private def unionClauses(qs: Seq[Query], ctx: Scoring): Dataset[ClauseHit] = {
     // batch TermQ leaves into ONE postings scan; recurse for the rest

@@ -198,12 +198,11 @@ class IndexSplitterSpec extends AnyFunSuite {
     assert(phrase(union) === a)
 
     val terms = Seq("alpha", "beta", "delta")
-    def offsets(r: IndexReader) = r.termOffsetRows(terms).collect()
-      .map { case (id, t, o) => (id, t, o.toSeq) }.sortBy(x => (x._1, x._2)).toSeq
-    def payloads(r: IndexReader) = r.termPayloadRows(terms).collect()
-      .map { case (id, t, tf, norm, ys) =>
-        (id, t, tf, norm, ys.toSeq.map(y => Option(y).map(_.toSeq)))
-      }.sortBy(x => (x._1, x._2)).toSeq
+    def offsets(r: IndexReader) = r.decoded(terms, "offBytes").collect()
+      .map(p => (p.docId, p.term, p.offsets.toSeq)).sortBy(x => (x._1, x._2)).toSeq
+    def payloads(r: IndexReader) = r.decoded(terms, "payBytes").collect()
+      .map(p => (p.docId, p.term, p.tf, p.norm, p.payloads.toSeq.map(y => Option(y).map(_.toSeq))))
+      .sortBy(x => (x._1, x._2)).toSeq
     assert(offsets(whole).nonEmpty && payloads(whole).nonEmpty)
     assert(offsets(union) === offsets(whole))
     assert(payloads(union) === payloads(whole))

@@ -108,4 +108,44 @@ class PostingsCodecSpec extends AnyFunSuite {
       assert(back.map(_.toSeq).toSeq === offLists.map(_.toSeq).toSeq)
     }
   }
+
+  test("Posting.block decodes every subset of blobs like the per-blob decoders") {
+    val rnd = new scala.util.Random(7)
+    for (n <- Seq(1, 5, 128, 200)) {
+      var cur = rnd.nextInt(1000).toLong
+      val docIds = Array.fill(n) { cur += 1 + rnd.nextInt(50); cur }
+      val tfs = Array.fill(n)(1 + rnd.nextInt(4))
+      val nrm = Array.fill(n)(rnd.nextInt(256))
+      val poss = tfs.map(tf => Array.tabulate(tf)(j => j * 3 + rnd.nextInt(3)))
+      val offs = poss.map(_.flatMap(p => Array(p * 10, p * 10 + 1 + rnd.nextInt(9))))
+      val pays = tfs.map(tf => Array.fill(tf)(Array.fill(rnd.nextInt(5))(rnd.nextInt(256).toByte)))
+      var from = 0
+      PostingsCodec.encodeBlocks(docIds, tfs, nrm).foreach { b =>
+        def slice[T](xs: Array[T]) = xs.slice(from, from + b.numDocs)
+        val posBytes = PostingsCodec.encodePositionsBlock(slice(poss))
+        val offBytes = PostingsCodec.encodeOffsetsBlock(slice(offs))
+        val payBytes = PostingsCodec.encodePayloadsBlock(slice(pays))
+        val (ids, ts, ns) = PostingsCodec.decodeBlock(b.firstDocId, b.numDocs, b.bytes)
+        val ps = PostingsCodec.decodePositionsBlock(b.numDocs, posBytes)
+        val os = PostingsCodec.decodeOffsetsBlock(b.numDocs, offBytes)
+        val ys = PostingsCodec.decodePayloadsBlock(b.numDocs, payBytes)
+        for (subset <- 0 until 8) {
+          val (withPos, withOff, withPay) = ((subset & 1) != 0, (subset & 2) != 0, (subset & 4) != 0)
+          val got = graft.build.Posting.block("t", b.firstDocId, b.numDocs, b.bytes,
+            if (withPos) posBytes else null, if (withOff) offBytes else null,
+            if (withPay) payBytes else null).toArray
+          assert(got.length === b.numDocs, s"n=$n subset=$subset")
+          got.indices.foreach { i =>
+            val p = got(i)
+            assert((p.term, p.docId, p.tf, p.norm) === (("t", ids(i), ts(i), ns(i))))
+            if (withPos) assert(p.positions.toSeq === ps(i).toSeq) else assert(p.positions === null)
+            if (withOff) assert(p.offsets.toSeq === os(i).toSeq) else assert(p.offsets === null)
+            if (withPay) assert(p.payloads.map(_.toSeq).toSeq === ys(i).map(_.toSeq).toSeq)
+            else assert(p.payloads === null)
+          }
+        }
+        from += b.numDocs
+      }
+    }
+  }
 }

@@ -39,8 +39,8 @@ class OffsetsSpec extends AnyFunSuite {
 
   test("decoded offsets == re-analysis offsets, doc by doc") {
     val reader = new IndexReader(spark, dir)
-    val fromIndex = reader.termOffsetRows(Seq("merge")).collect()
-      .map(r => r._1 -> r._3.toSeq).toMap
+    val fromIndex = reader.decoded(Seq("merge"), "offBytes").collect()
+      .map(p => p.docId -> p.offsets.toSeq).toMap
     val analyzer = graft.analysis.Analyzer.noStop
     // docIds follow corpus sort order (path), fixture already sorted
     val expected = fixture.zipWithIndex.flatMap { case (f, i) =>
@@ -53,8 +53,8 @@ class OffsetsSpec extends AnyFunSuite {
 
   test("offsets-driven highlighter marks the same characters as re-analysis") {
     val reader = new IndexReader(spark, dir)
-    val offs = reader.termOffsetRows(Seq("merge")).collect()
-      .map(r => r._1 -> r._3).toMap
+    val offs = reader.decoded(Seq("merge"), "offBytes").collect()
+      .map(p => p.docId -> p.offsets).toMap
     val analyzer = graft.analysis.Analyzer.noStop
     for ((docId, content) <- Seq(0L -> fixture(0).content, 1L -> fixture(1).content)) {
       val pairs = offs(docId).grouped(2).map(a => (a(0), a(1))).toSeq
@@ -91,8 +91,8 @@ class OffsetsSpec extends AnyFunSuite {
     val reader = new IndexReader(spark, exp)
     assert(reader.hasOffsets)
     // doc0 gone; survivors renumbered 0..2 keep their offsets
-    val offs = reader.termOffsetRows(Seq("merge")).collect()
-      .map(r => r._1 -> r._3.toSeq).toMap
+    val offs = reader.decoded(Seq("merge"), "offBytes").collect()
+      .map(p => p.docId -> p.offsets.toSeq).toMap
     val analyzer = graft.analysis.Analyzer.noStop
     val expected = fixture.drop(1).zipWithIndex.flatMap { case (f, i) =>
       val o = analyzer.analyze(f.content).tokens

@@ -120,6 +120,15 @@ class PayloadSpec extends AnyFunSuite {
     assert(nf.get(1L) === None) // doc1's span carries 0.5/1.5, not 2.0
   }
 
+  test("an unknown payload function throws instead of averaging") {
+    val near = SpanNearQ(Seq(SpanTermQ("alpha"), SpanTermQ("beta")), 1, inOrder = true)
+    for (agg <- Seq("mean", "AVG", "")) {
+      intercept[IllegalArgumentException](searcher.payloadTermScores("alpha", agg))
+      intercept[IllegalArgumentException](searcher.payloadTermTopK("alpha", 10, agg))
+      intercept[IllegalArgumentException](searcher.payloadNearScores(near, agg))
+    }
+  }
+
   test("expunge keeps the payloads sidecar aligned") {
     import spark.implicits._
     Deletes.deleteDocs(spark, dir, spark.createDataset(Seq(0L)))

@@ -76,12 +76,27 @@ class PlanSpec extends AnyFunSuite {
       def onFailure(f: String, qe: org.apache.spark.sql.execution.QueryExecution,
                     e: Exception): Unit = ()
     }
-    spark.listenerManager.register(listener)
-    try {
-      assert(new Searcher(reader).search(TermQ("def"), 10).nonEmpty)
-      org.apache.spark.ListenerBusDrain(spark.sparkContext)
-    } finally spark.listenerManager.unregister(listener)
-    assert(blobFree(reads.asScala.toSeq), reads)
+    def readsOf(run: => Unit): Seq[Seq[String]] = {
+      reads.clear()
+      spark.listenerManager.register(listener)
+      try {
+        run
+        org.apache.spark.ListenerBusDrain(spark.sparkContext)
+      } finally spark.listenerManager.unregister(listener)
+      reads.asScala.toSeq
+    }
+    val termReads = readsOf(assert(new Searcher(reader).search(TermQ("def"), 10).nonEmpty))
+    assert(blobFree(termReads), termReads)
+    // the positional plans read the blobs they decode and no other
+    def readsBlobs(rs: Seq[Seq[String]], blobs: Set[String]): Boolean =
+      rs.exists(_.contains("posBytes")) && rs.forall(r =>
+        graft.build.PostingsTableRow.blobColumns.forall(b => blobs(b) || !r.contains(b)))
+    val phraseReads = readsOf(new Searcher(reader).search(PhraseQ(Seq("def", "int")), 10))
+    assert(readsBlobs(phraseReads, Set("posBytes")), phraseReads)
+    val spans = new Searcher(reader).phraseHighlightSpans(Seq("def", "int"))
+    val spanReads = postingsReads(spans.queryExecution)
+    assert(readsBlobs(spanReads, Set("posBytes", "offBytes")) &&
+      spanReads.exists(_.contains("offBytes")), spanReads)
   }
 
   test("searcher's postings scan stays whole-stage-codegen'd up to the decode") {

@@ -103,6 +103,42 @@ class PositionsSpec extends AnyFunSuite {
     }
   }
 
+  test("tombstoned docs leave every positional matcher, in both plans") {
+    import spark.implicits._
+    val dP = SparkTestSession.tmpDir("graft-pos-del-")
+    IndexBuilder.build(spark, spark.createDataset(fixture), dP, numPartitions = 2,
+      indexPositions = true, indexOffsets = true)
+    val dR = SparkTestSession.tmpDir("graft-pos-del-re-")
+    IndexBuilder.build(spark, spark.createDataset(fixture), dR, numPartitions = 2)
+    val sm = Seq("state", "machine")
+    def rows(ds: org.apache.spark.sql.Dataset[_]): Seq[Seq[Any]] =
+      ds.toDF().collect().map(_.toSeq).toSeq.sortBy(_.mkString(","))
+    val matchers: Seq[(String, Searcher => org.apache.spark.sql.Dataset[_])] = Seq(
+      "exact phrase" -> (_.phraseFreqs(sm)),
+      "sloppy phrase" -> (_.phraseFreqs(sm, 2)),
+      "multi-phrase" -> (_.multiPhraseFreqs(Seq(sm, Seq("machine", "runs")))),
+      "sparse phrase" -> (_.sparsePhraseFreqs(Seq(("state", 0), ("machine", 1)))),
+      "spanNear" -> (_.spanNearFreqs("state", "machine", maxGap = 2)),
+      "spanCount" -> (_.spanCount(
+        SpanNearQ(Seq(SpanTermQ("state"), SpanTermQ("machine")), 1, inOrder = false))))
+    // offsets and passages read indexed positions only
+    val indexedOnly: Seq[(String, Searcher => org.apache.spark.sql.Dataset[_])] = Seq(
+      "phrase highlight spans" -> (_.phraseHighlightSpans(sm)),
+      "passage scores" -> (_.passageScores(sm)))
+    def results(d: String, ms: Seq[(String, Searcher => org.apache.spark.sql.Dataset[_])]) = {
+      val s = new Searcher(new IndexReader(spark, d))
+      ms.map { case (name, run) => name -> rows(run(s)) }
+    }
+    val plans = Seq(dP -> (matchers ++ indexedOnly), dR -> matchers)
+    val before = plans.map { case (d, ms) => results(d, ms) }
+    plans.foreach { case (d, _) => Deletes.deleteDocs(spark, d, spark.createDataset(Seq(0L))) }
+    val after = plans.map { case (d, ms) => results(d, ms) }
+    for (((b, a), (d, _)) <- before.zip(after).zip(plans); ((name, rb), (_, ra)) <- b.zip(a)) {
+      assert(rb.exists(_.head == 0L), s"$name on $d: doc 0 matches before the delete")
+      assert(ra === rb.filterNot(_.head == 0L), s"$name on $d")
+    }
+  }
+
   test("expunge rebuilds aligned positions; phrases still work") {
     import spark.implicits._
     posSearcher // force build
