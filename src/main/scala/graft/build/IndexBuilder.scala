@@ -302,18 +302,9 @@ object IndexBuilder {
     * level when any term does. Read from the file footers on the driver:
     * no Spark job, no blob byte. */
   private def carriedBlobs(spark: SparkSession, dir: String): Seq[Boolean] = {
-    import org.apache.hadoop.fs.Path
-    import org.apache.parquet.hadoop.ParquetFileReader
-    import org.apache.parquet.hadoop.util.HadoopInputFile
-    val conf = spark.sparkContext.hadoopConfiguration
-    val root = new Path(IndexPaths.postings(dir))
-    val files = root.getFileSystem(conf).listStatus(root).filter(_.getPath.getName.endsWith(".parquet"))
-    val chunks = files.toSeq.flatMap { f =>
-      val reader = ParquetFileReader.open(HadoopInputFile.fromStatus(f, conf))
-      try reader.getFooter.getBlocks.asScala.toSeq.flatMap(b =>
+    val chunks = Tables.footers(spark.sparkContext.hadoopConfiguration, IndexPaths.postings(dir))
+      .flatMap(_._2).flatMap(b =>
         b.getColumns.asScala.map(c => (c.getPath.toDotString, c.getStatistics, b.getRowCount)))
-      finally reader.close()
-    }
     PostingsTableRow.blobColumns.map(c => chunks.exists { case (name, st, rows) =>
       name == c && {
         require(st.isNumNullsSet, s"a postings footer of $dir has no null count for $c")

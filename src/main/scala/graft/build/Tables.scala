@@ -1,9 +1,15 @@
 package graft.build
 
 import graft.postings.PostingsCodec
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.{FileStatus, Path}
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.metadata.BlockMetaData
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SparkSession}
 import org.apache.spark.sql.functions.{col, lit}
 
+import scala.jdk.CollectionConverters._
 import scala.reflect.runtime.universe.TypeTag
 
 /** Schemas of the index tables (SURVEY.md §7 step 3).
@@ -64,10 +70,12 @@ final case class PostingRow(
 
 object PostingRow {
   /** The postings table's columns in [[PostingRow]] field order — the one
-    * projection every typed postings scan selects before `.as[PostingRow]`. */
-  val columns: Seq[org.apache.spark.sql.Column] =
-    Seq("term", "firstDocId", "lastDocId", "numDocs", "maxTf", "maxNorm",
-      "sumTf", "segId", "bytes").map(col)
+    * projection every typed postings scan selects before `.as[PostingRow]`,
+    * and the columns the flat scorer's direct read requests
+    * ([[graft.search.PostingsFile.read]]). */
+  val names: Seq[String] = Seq("term", "firstDocId", "lastDocId", "numDocs", "maxTf", "maxNorm",
+    "sumTf", "segId", "bytes")
+  val columns: Seq[org.apache.spark.sql.Column] = names.map(col)
 }
 
 /** A postings table row: a [[PostingRow]] block plus its optional blobs,
@@ -224,6 +232,18 @@ final case class ManifestRow(
     committedAtMs: Long)
 
 object Tables {
+  /** The parquet files of the table directory `dir`, in path order, each
+    * with the row groups of its footer: the one driver-side footer walk
+    * (no Spark job, no data page read). */
+  def footers(conf: Configuration, dir: String): Seq[(FileStatus, Seq[BlockMetaData])] = {
+    val root = new Path(dir)
+    root.getFileSystem(conf).listStatus(root).toSeq
+      .filter(_.getPath.getName.endsWith(".parquet")).sortBy(_.getPath.toString).map { f =>
+        val reader = ParquetFileReader.open(HadoopInputFile.fromStatus(f, conf))
+        try f -> reader.getFooter.getBlocks.asScala.toSeq finally reader.close()
+      }
+  }
+
   /** Opens an index table with the schema of its row type `T`. Spark
     * then skips schema inference, which costs one job per read. For the
     * `flush` table, `FlushRow.kind` types the `kind=<k>` partition

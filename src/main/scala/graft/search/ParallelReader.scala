@@ -1,8 +1,6 @@
 package graft.search
 
-import graft.build.IndexPaths
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.SparkSession
 
 /** ParallelAtomicReader analog (reference:
   * /root/reference/src/Lucene.Net/Index/ParallelAtomicReader.cs): N
@@ -30,11 +28,8 @@ final class ParallelIndexReader(spark: SparkSession, primary: String,
                                 secondaries: Seq[String])
     extends IndexReader(spark, primary) {
   private val all = primary +: secondaries
-  private def unionOf(f: String => String): DataFrame =
-    all.map(d => spark.read.parquet(f(d))).reduce(_ unionByName _)
 
-  @transient override lazy val postings: DataFrame = unionOf(IndexPaths.postings)
-  @transient override lazy val termDict: DataFrame = unionOf(IndexPaths.termDict)
+  override protected def postingsDirs: Seq[String] = all
 
   override protected def termDictDirs: Seq[String] = all
 

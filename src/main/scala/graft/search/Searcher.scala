@@ -6,6 +6,7 @@ import graft.postings.PostingsCodec
 import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.util.SerializableConfiguration
 
 /** Point-in-time view over the index tables (≙ IndexReader/MultiFields,
   * reference: /root/reference/src/Lucene.Net/Index/IndexReader.cs). Pulls
@@ -30,11 +31,8 @@ class IndexReader(val spark: SparkSession, val dir: String) extends Serializable
   /** Directories whose data tables this view spans. */
   def dataDirs: Seq[String] = Seq(dir)
 
-  /** Opens one data table across [[dataDirs]] (one relation, one listing). */
-  protected def open(path: String => String): DataFrame =
-    spark.read.parquet(dataDirs.map(path): _*)
-
-  /** [[open]] with the schema of the table's one row type `T`, so the
+  /** Opens one data table across [[dataDirs]] (one relation, one
+    * listing) with the schema of the table's one row type `T`, so the
     * open runs no schema-inference job. term_dict is not opened this way:
     * a pulsed dictionary carries extra inline-postings columns, which
     * [[termDict]] keeps. */
@@ -42,15 +40,36 @@ class IndexReader(val spark: SparkSession, val dir: String) extends Serializable
       path: String => String): DataFrame =
     Tables.read[T](spark, dataDirs.map(path): _*)
 
-  /** The postings table, blob columns included; the scoring scans
-    * select [[PostingRow.columns]] ([[allPostingRows]]), every other read
-    * decodes through [[Posting.decode]] ([[decoded]], [[docPostings]]). */
-  @transient lazy val postings: DataFrame = openAs[PostingsTableRow](IndexPaths.postings)
-  @transient lazy val docstats: DataFrame = openAs[DocStatRow](IndexPaths.docstats)
-  @transient lazy val termDict: DataFrame = open(IndexPaths.termDict)
+  /** Directories whose postings tables make up this view's postings. */
+  protected def postingsDirs: Seq[String] = dataDirs
 
   /** Directories whose term_dict tables make up this view's dictionary. */
   protected def termDictDirs: Seq[String] = dataDirs
+
+  /** The postings table of [[postingsDirs]], blob columns included; the
+    * Dataset scoring scans select [[PostingRow.columns]]
+    * ([[allPostingRows]]), every other Dataset read decodes through
+    * [[Posting.decode]] ([[decoded]], [[docPostings]]). */
+  @transient lazy val postings: DataFrame =
+    Tables.read[PostingsTableRow](spark, postingsDirs.map(IndexPaths.postings): _*)
+  @transient lazy val docstats: DataFrame = openAs[DocStatRow](IndexPaths.docstats)
+  @transient lazy val termDict: DataFrame =
+    spark.read.parquet(termDictDirs.map(IndexPaths.termDict): _*)
+
+  /** The files of [[postings]], each with its term range: the map the
+    * flat scorer picks the files of a query's terms from
+    * ([[PostingsFile.holding]]). Read from the parquet footers on the
+    * driver on first use, with no Spark job, and pinned like the table
+    * handles. */
+  @transient private[search] lazy val postingsFiles: Seq[PostingsFile] = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    postingsDirs.flatMap(d => PostingsFile.list(conf, IndexPaths.postings(d)))
+  }
+
+  /** The Hadoop configuration of the tasks that read [[postingsFiles]],
+    * broadcast once per reader. */
+  @transient private[search] lazy val hadoopConf: Broadcast[SerializableConfiguration] =
+    spark.sparkContext.broadcast(new SerializableConfiguration(spark.sparkContext.hadoopConfiguration))
 
   /** The dictionary on the driver, loaded on first use by one job over
     * the five [[TermDictRow]] columns of every [[termDictDirs]] table
@@ -242,7 +261,7 @@ final class MultiIndexReader(spark0: SparkSession, dirs: Seq[String])
   /** Per-term stats re-aggregate across generations (df/ttf sum, bounds
     * max) — the MultiFields.Terms merge, done relationally. */
   @transient override lazy val termDict: DataFrame =
-    open(IndexPaths.termDict)
+    spark.read.parquet(termDictDirs.map(IndexPaths.termDict): _*)
       .groupBy($"term")
       .agg(sum($"df").as("df"), sum($"totalTf").as("totalTf"),
         max($"maxTf").as("maxTf"), max($"maxNorm").as("maxNorm"))
@@ -1317,10 +1336,12 @@ final class Searcher(val reader: IndexReader,
     }
   }
 
-  /** Top-k of a flat query in one Spark job of one task, with no shuffle:
-    * the postings blocks of its scoring and excluded terms, gathered by
-    * `coalesce(1)`, go through [[FlatScorer.topK]], which returns at
-    * most k hits. */
+  /** Top-k of a flat query in one Spark job of one task, with no shuffle
+    * and no Spark SQL plan: the task reads the posting blocks of its
+    * scoring and excluded terms from the postings files whose term range
+    * holds one of them ([[PostingsFile.read]]) and feeds them to
+    * [[FlatScorer.topK]], which returns at most k hits. The job's
+    * description counts the files opened out of the reader's. */
   private def flatTopK(spec: FlatScorer.Spec, ctx: Scoring,
                        after: ScoreDoc, k: Int): Array[ScoreDoc] = {
     val stats = ctx.stats
@@ -1329,7 +1350,14 @@ final class Searcher(val reader: IndexReader,
       return Array.empty
     val sim = ctx.sim
     val dead = deleted
-    reader.postingRows(spec.terms.filter(stats.contains)).coalesce(1).mapPartitions { rows =>
+    val conf = reader.hadoopConf
+    val terms = spec.terms.filter(stats.contains)
+    val all = reader.postingsFiles
+    val files = PostingsFile.holding(all, terms)
+    spark.sparkContext.setJobDescription(
+      s"search.scan ${reader.dir}: ${files.size}/${all.size} postings files")
+    spark.sparkContext.parallelize(Seq(files), 1).mapPartitions { fs =>
+      val rows = PostingsFile.read(conf.value.value, fs.next(), terms)
       FlatScorer.topK(rows, spec, sim, dead.value, after, k).hits.iterator
     }.collect()
   }

@@ -4,7 +4,8 @@ import graft.SparkTestSession
 import graft.build.{CheckIndex, IndexBuilder}
 import graft.corpus.CorpusGen
 import graft.streaming.StreamingIndexer
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobStart}
+import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -55,6 +56,26 @@ class JobCountSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   private def jobsOf(f: => Any): Int = jobLayersOf(f).size
+
+  /** The Spark SQL executions `f` starts. The bus is drained first, so
+    * no earlier call's execution is counted. */
+  private def sqlExecutionsOf(f: => Any): Int = {
+    val sc = spark.sparkContext
+    val n = new java.util.concurrent.atomic.AtomicInteger
+    val l = new SparkListener {
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case _: SparkListenerSQLExecutionStart => n.incrementAndGet()
+        case _ =>
+      }
+    }
+    org.apache.spark.ListenerBusDrain(sc)
+    sc.addSparkListener(l)
+    try {
+      f
+      org.apache.spark.ListenerBusDrain(sc)
+    } finally sc.removeSparkListener(l)
+    n.get
+  }
 
   override def beforeAll(): Unit = {
     import spark.implicits._
@@ -111,6 +132,20 @@ class JobCountSpec extends AnyFunSuite with BeforeAndAfterAll {
         assert(layers === Seq("search.scan") && tasks === 1,
           s"$q ran ${layers.size} jobs of $tasks tasks (the parent ran $parent jobs)")
         assert(s.search(q, 5).toSeq === s.searchOracle(q, 5).toSeq, q)
+      }
+    }
+
+    test(s"$name reader: a flat TermQ and a flat BoolQ run one job of one task and no SQL execution") {
+      val s = new Searcher(mk())
+      for (q <- Seq(TermQ(a), BoolQ(must = Seq(TermQ(a)), should = Seq(TermQ(b)),
+          mustNot = Seq(TermQ("zz_absent"))))) {
+        s.search(q, 5) // warm
+        val (layers, tasks) = jobsAndTasksOf(s.search(q, 5))
+        assert(layers === Seq("search.scan") && tasks === 1,
+          s"$q ran ${layers.size} jobs of $tasks tasks")
+        // 1 on the parent: the coalesce(1) Dataset plan of the postings scan
+        val n = sqlExecutionsOf(s.search(q, 5))
+        assert(n === 0, s"$q started $n SQL executions")
       }
     }
 

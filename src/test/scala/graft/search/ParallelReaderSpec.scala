@@ -55,6 +55,20 @@ class ParallelReaderSpec extends AnyFunSuite {
     assert(p.map(_._1) === Set(0L, 1L)) // f0, f1: scala docs containing merge
   }
 
+  test("search top-k of a secondary-only term and of a mixed bool == oracle == combined build") {
+    val combined = searcher(new IndexReader(spark, combinedDir))
+    for (q <- Seq[Query](TermQ("lang:scala"),
+        BoolQ(must = Seq(TermQ("table")), should = Seq(TermQ("lang:rust"), TermQ("vector"))),
+        BoolQ(should = Seq(TermQ("merge"), TermQ("lang:go")), mustNot = Seq(TermQ("lang:rust"))))) {
+      val s = searcher(parallel)
+      val top = s.search(q, 3).toSeq
+      assert(top.nonEmpty, q)
+      assert(top === s.searchOracle(q, 3).toSeq, q)
+      assert(top === combined.search(q, 3).toSeq, q)
+    }
+    assert(searcher(parallel).search(TermQ("lang:scala"), 10).map(_.docId).toSet === Set(0L, 1L))
+  }
+
   test("dictionary seek prunes across the unioned term spaces") {
     // a prefix in the SECONDARY's term space must expand through the
     // unioned dictionary + unioned firstchars alphabet

@@ -85,7 +85,13 @@ class PlanSpec extends AnyFunSuite {
       } finally spark.listenerManager.unregister(listener)
       reads.asScala.toSeq
     }
-    val termReads = readsOf(assert(new Searcher(reader).search(TermQ("def"), 10).nonEmpty))
+    // a flat query reads its blocks in its task, through no Dataset
+    // scan ([[PostingsFile.read]] reads the PostingRow columns); the
+    // Dataset scorers' term scan is the one a DisMax of terms runs
+    val flatReads = readsOf(assert(new Searcher(reader).search(TermQ("def"), 10).nonEmpty))
+    assert(flatReads.isEmpty, flatReads)
+    val termReads = readsOf(assert(
+      new Searcher(reader).search(DisMaxQ(Seq(TermQ("def"), TermQ("int"))), 10).nonEmpty))
     assert(blobFree(termReads), termReads)
     // the positional plans read the blobs they decode and no other
     def readsBlobs(rs: Seq[Seq[String]], blobs: Set[String]): Boolean =
