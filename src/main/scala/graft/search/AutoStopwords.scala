@@ -27,11 +27,9 @@ object AutoStopwords {
 
   def stopWordsPercent(spark: SparkSession, dir: String,
                        maxPercentDocs: Float = DefaultMaxDocFreqPercent): Set[String] = {
-    val reader = new IndexReader(spark, dir)
     // the reference thresholds on reader.NumDocs — LIVE docs, deletes
     // excluded (:86-91) — and multiplies in float32 ((int)(float * int))
-    val numDocs = reader.collectionStats.maxDoc -
-      graft.build.Deletes.tombstones(spark, dir).count()
+    val numDocs = new IndexReader(spark, dir).numDocs
     stopWords(spark, dir, (maxPercentDocs * numDocs).toInt.toLong)
   }
 

@@ -205,6 +205,11 @@ class IndexReader(val spark: SparkSession, val dir: String) extends Serializable
       ids.distinct
     }
   }
+
+  /** The live docs (≙ IndexReader.NumDocs): maxDoc minus the distinct
+    * docIds tombstoned in any of [[tombstoneDirs]], read now — a delete
+    * made after this reader opened counts. */
+  def numDocs: Long = collectionStats.maxDoc - deletedDocIds().length
 }
 
 object IndexReader {
@@ -384,8 +389,9 @@ object Searcher {
   *     intra-query read parallelism: a query's postings are small next
   *     to a job's cost;
   *   - every other tree (phrases, nested bools, DisMax, function and
-  *     boosting queries, the constant-score wide expansion) composes
-  *     Dataset scorers joined by docId shuffles ([[scoredRaw]]), drops
+  *     boosting queries, the constant-score wide expansion) scores its
+  *     leaves with Dataset scorers and its composite nodes per doc
+  *     ([[ScoreTree]]) after ONE docId shuffle ([[scoredRaw]]), drops
   *     tombstoned docs ([[liveOnly]]) and merges per-partition bounded
   *     HitQueue heaps on the driver in the same job ([[TopK]] ≙
   *     TopDocs.Merge).
@@ -507,7 +513,7 @@ final class Searcher(val reader: IndexReader,
     case mt if multiTermMatch(mt).isDefined =>
       reader.expandTermsOpt(multiTermMatch(mt).get, maxClauseCount) match {
         case Some(ts) => orOf(ts, multiTermBoost(mt))
-        case None => mt // wide: constant-score semi-join in scoredRaw
+        case None => mt // wide: constant-score semi-join in leafHits
       }
     // ComplexPhraseQueryParser semantics: each part expands to a
     // MultiPhraseQ slot (a multi-term part → its dictionary matches); an
@@ -564,21 +570,16 @@ final class Searcher(val reader: IndexReader,
     liveOnly(scoredRaw(rq, scoring(rq, defaultSimilarity)))
   }
 
-  /** The (terms, boost) of every scoring leaf of a rewritten tree — term,
-    * phrase and multi-phrase leaves under any composite, must then should
-    * then mustNot clauses, in clause order, duplicates included. A flat
-    * bool's list is its clause list, which TF-IDF's queryNorm sums. */
-  private def leafClauses(q: Query): Seq[(Seq[String], Float)] = q match {
-    case TermQ(t, b) => Seq((Seq(t), b))
-    case PhraseQ(ts, _, b, _) => Seq((ts, b))
-    case SparsePhraseQ(parts, b) => Seq((parts.map(_._1), b))
-    case MultiPhraseQ(slots, _, b) => Seq((slots.flatten, b))
-    case BoolQ(must, should, mustNot, _, _) => (must ++ should ++ mustNot).flatMap(leafClauses)
-    case DisMaxQ(qs, _) => qs.flatMap(leafClauses)
-    case ConstantScoreQ(sub, _) => leafClauses(sub)
-    case FunctionScoreQ(sub, _) => leafClauses(sub)
-    case BoostingQ(pos, ctx, _) => leafClauses(pos) ++ leafClauses(ctx)
-    case _ => Nil
+  /** The (terms, boost) of every scoring leaf of a rewritten tree — its
+    * term, phrase and multi-phrase leaves in [[ScoreTree.compile]] order
+    * (must then should then mustNot clauses, in clause order),
+    * duplicates included. A flat bool's list is its clause list, which
+    * TF-IDF's queryNorm sums. */
+  private def leafClauses(q: Query): Seq[(Seq[String], Float)] = ScoreTree.compile(q).leaves.collect {
+    case TermQ(t, b) => (Seq(t), b)
+    case PhraseQ(ts, _, b, _) => (ts, b)
+    case SparsePhraseQ(parts, b) => (parts.map(_._1), b)
+    case MultiPhraseQ(slots, _, b) => (slots.flatten, b)
   }
 
   /** The [[Scoring]] of a rewritten tree under `sim`: ONE
@@ -596,53 +597,57 @@ final class Searcher(val reader: IndexReader,
     * [[rewrite]] exactly once, so the dictionary probes a multi-term
     * rewrite needs are never repeated (the reference caches its rewrite
     * the same way, IndexSearcher.cs:667-670); `ctx` is the whole tree's
-    * [[scoring]]. */
-  private def scoredRaw(q: Query, ctx: Scoring): Dataset[ScoreDoc] = q match {
+    * [[scoring]]. [[ScoreTree.Compiled.eval]] scores each doc from its
+    * leaf hits, grouped by docId once; with one leaf, a doc has one row. */
+  private def scoredRaw(q: Query, ctx: Scoring): Dataset[ScoreDoc] = {
+    val tree = ScoreTree.compile(q)
+    val sim = ctx.sim
+    tree.root match {
+      case _: ScoreTree.Leaf => leafHits(q, ctx)
+      case _ if tree.leaves.isEmpty => spark.emptyDataset[ScoreDoc] // no leaf, no hit
+      case _ if tree.leaves.size == 1 && !tree.readsDocLen =>
+        leafHits(tree.leaves.head, ctx).flatMap(h =>
+          tree.eval(_ => Some(h.score), sim).map(ScoreDoc(h.docId, _)))
+      case _ =>
+        clauseHits(tree, ctx).groupByKey(_.docId).flatMapGroups { (docId, it) =>
+          val hits = Array.fill[Option[Float]](tree.leaves.size + 1)(None)
+          it.foreach(h => hits(h.idx) = Some(h.score))
+          tree.eval(hits(_), sim).map(ScoreDoc(docId, _))
+        }
+    }
+  }
+
+  /** A compiled tree's leaf hits keyed by leaf index, every TermQ leaf in
+    * ONE [[scoredTerms]] scan; the doc-length leaf is the EXACT docstats
+    * tokenCount (a stored numeric, like the reference's ValueSource). */
+  private def clauseHits(tree: ScoreTree.Compiled, ctx: Scoring): Dataset[ClauseHit] = {
+    val indexed = tree.leaves.zipWithIndex
+    val terms = indexed.collect { case (TermQ(t, b), i) => (t, b, i) }
+    val others = indexed.collect { case (q, i) if !q.isInstanceOf[TermQ] =>
+      leafHits(q, ctx).map(sd => ClauseHit(sd.docId, i, sd.score))
+    }
+    val docLen = if (!tree.readsDocLen) None else Some(reader.docstats
+      .select($"docId", lit(tree.docLen).as("idx"), $"tokenCount".cast("float").as("score"))
+      .as[ClauseHit])
+    ((if (terms.isEmpty) None else Some(scoredTerms(terms, ctx))) ++ others ++ docLen)
+      .reduce(_ union _)
+  }
+
+  /** The hits of one leaf of a rewritten tree. */
+  private def leafHits(q: Query, ctx: Scoring): Dataset[ScoreDoc] = q match {
     case TermQ(t, boost) =>
       scoredTerms(Seq((t, boost, 0)), ctx).map(h => ScoreDoc(h.docId, h.score))
     case MatchAllQ(boost) =>
       reader.docstats.select($"docId").as[Long].map(ScoreDoc(_, boost))
-    case ConstantScoreQ(sub, boost) =>
-      scoredRaw(sub, ctx).map(sd => ScoreDoc(sd.docId, boost))
-    case dm @ DisMaxQ(qs, tieBreak) =>
-      val hits = unionClauses(qs, ctx)
-      hits.groupByKey(_.docId).mapGroups { (docId, it) =>
-        // the reference sums sub-scorer scores in clause order
-        // (DisjunctionMaxScorer.cs) — buffer and sort by clause idx so the
-        // float sum under tieBreak > 0 is shuffle-arrival-order independent
-        val buf = it.toArray
-        java.util.Arrays.sort(buf, Ordering.by((h: ClauseHit) => h.idx))
-        var max = Float.NegativeInfinity
-        var sum = 0f
-        buf.foreach { h => sum += h.score; if (h.score > max) max = h.score }
-        ScoreDoc(docId, max + tieBreak * (sum - max))
-      }
-    case FunctionScoreQ(subQ, expr) =>
-      // hits = the sub-query's hits; score = expr(subScore, doc values).
-      // The doc-length value source reads the EXACT docstats tokenCount
-      // (a stored numeric, like the reference's ValueSource), not the
-      // lossy norm byte; evaluated per hit inside the join, no driver hop.
-      val dl = reader.docstats
-        .select($"docId", $"tokenCount".cast("float").as("dl")).as[(Long, Float)]
-      val subScores = scoredRaw(subQ, ctx)
-      subScores.joinWith(dl, subScores("docId") === dl("docId"))
-        .map { case (sd, (_, len)) =>
-          ScoreDoc(sd.docId, ScoreExpr.eval(expr, sd.score, len)) }
-    case BoostingQ(pos, boostCtx, b) =>
-      // reference BoostingQuery: context matches multiply the positive
-      // score by contextBoost; context alone never matches — a left outer
-      // join against the context's docId set (tuple-typed so an unmatched
-      // row decodes as a null tuple, not a primitive default)
-      val posScores = scoredRaw(pos, ctx)
-      val ctxDocs = scoredRaw(boostCtx, ctx).map(_.docId).distinct().map(id => (id, true))
-      posScores.joinWith(ctxDocs, posScores("docId") === ctxDocs("_1"), "left_outer")
-        .map { case (sd, matched) =>
-          if (matched == null) sd else ScoreDoc(sd.docId, sd.score * b)
-        }
-    case bq: BoolQ => scoredBool(bq, ctx)
-    case PhraseQ(terms, slop, boost, _) => scoredPhrase(terms, slop, boost, ctx)
-    case SparsePhraseQ(parts, boost) => scoredSparsePhrase(parts, boost, ctx)
-    case MultiPhraseQ(slots, slop, boost) => scoredMultiPhrase(slots, slop, boost, ctx)
+    // single-term phrases rewrite to TermQuery (PhraseQuery.cs:175)
+    case PhraseQ(Seq(t), _, boost, _) => leafHits(TermQ(t, boost), ctx)
+    case SparsePhraseQ(Seq((t, _)), boost) => leafHits(TermQ(t, boost), ctx)
+    case PhraseQ(terms, slop, boost, _) => leafHits(MultiPhraseQ(terms.map(Seq(_)), slop, boost), ctx)
+    case MultiPhraseQ(slots, slop, boost) =>
+      phraseScored(multiPhraseFreqs(slots, slop), ctx.sim, ctx.weight(slots.flatten, boost))
+    case SparsePhraseQ(parts, boost) =>
+      if (!parts.forall(p => ctx.stats.contains(p._1))) spark.emptyDataset[ScoreDoc]
+      else phraseScored(sparsePhraseFreqs(parts), ctx.sim, ctx.weight(parts.map(_._1), boost))
     case mt if multiTermMatch(mt).isDefined =>
       // CONSTANT_SCORE_AUTO fallback: a wide multi-term query (dictionary
       // match past the clause budget) scores constant over the docs of
@@ -662,48 +667,14 @@ final class Searcher(val reader: IndexReader,
 
   // ------------------------------------------------------------- phrase
 
-  /** Phrase scoring (reference: ExactPhraseScorer / SloppyPhraseScorer):
-    * phraseFreq plays tf, the clause weight is over every phrase term
-    * (BM25: Σ idf, BM25Similarity.cs:210-225), same norm byte as term
-    * scoring. Single-term phrases rewrite to TermQuery (PhraseQuery.cs:175).
-    * The freqs come from [[phraseFreqs]]: indexed positions or
-    * re-analysis, exact walk or the reference-exact [[SloppyPhrase]]
-    * traversal. */
-  private def scoredPhrase(terms: Seq[String], slop: Int, boost: Float,
-                           ctx: Scoring): Dataset[ScoreDoc] = {
-    require(terms.nonEmpty, "empty phrase")
-    if (terms.size == 1) return scoredRaw(TermQ(terms.head, boost), ctx)
-    if (!terms.forall(ctx.stats.contains)) return spark.emptyDataset[ScoreDoc]
-    phraseScored(phraseFreqs(terms, slop), ctx.sim, ctx.weight(terms, boost))
-  }
-
-  /** Exact phrase at EXPLICIT positions (PhraseQuery.Add(term, position)
-    * / the NGramPhraseQuery rewrite target). Same framing as the dense
-    * exact phrase (weight over the parts actually queried — the
-    * reference's optimized PhraseQuery carries only the kept terms, so
-    * its weight drops the skipped grams' idf the same way). */
-  private def scoredSparsePhrase(parts: Seq[(String, Int)], boost: Float,
-                                 ctx: Scoring): Dataset[ScoreDoc] = {
-    require(parts.nonEmpty, "empty sparse phrase")
-    if (parts.size == 1) return scoredRaw(TermQ(parts.head._1, boost), ctx)
-    if (!parts.forall(p => ctx.stats.contains(p._1))) return spark.emptyDataset[ScoreDoc]
-    phraseScored(sparsePhraseFreqs(parts), ctx.sim, ctx.weight(parts.map(_._1), boost))
-  }
-
-  /** Scored MultiPhraseQuery (reference: MultiPhraseQuery.cs
-    * MultiPhraseWeight): the weight is over EVERY term in every slot,
+  /** Phrase scoring (reference: ExactPhraseScorer / SloppyPhraseScorer,
+    * MultiPhraseQuery.cs MultiPhraseWeight; a [[PhraseQ]] is a phrase of
+    * one-term slots): phraseFreq plays tf under the clause weight over
+    * EVERY term in every slot (BM25: Σ idf, BM25Similarity.cs:210-225),
     * unindexed alternatives included with df = 0 (the reference's
-    * TermContext behavior). */
-  private def scoredMultiPhrase(slots: Seq[Seq[String]], slop: Int, boost: Float,
-                                ctx: Scoring): Dataset[ScoreDoc] = {
-    require(slots.nonEmpty && slots.forall(_.nonEmpty), "empty slot")
-    val liveSlots = slots.map(_.filter(ctx.stats.contains))
-    if (liveSlots.exists(_.isEmpty)) return spark.emptyDataset[ScoreDoc]
-    phraseScored(slotFreqs(liveSlots, liveSlots.indices, slop), ctx.sim,
-      ctx.weight(slots.flatten, boost))
-  }
-
-  /** The similarity's score over (docId, phraseFreq, normByte) rows. */
+    * TermContext behavior), and the same norm byte as term scoring. A
+    * sparse phrase's weight is over the parts queried: the reference's
+    * optimized NGramPhraseQuery drops the skipped grams' idf the same way. */
   private def phraseScored(freqs: Dataset[(Long, Float, Int)], sim: SimilarityLike,
                            weight: Array[Float]): Dataset[ScoreDoc] =
     freqs.map { case (docId, freq, norm) => ScoreDoc(docId, sim.score(freq, norm.toByte, weight)) }
@@ -737,6 +708,7 @@ final class Searcher(val reader: IndexReader,
     * with each part at its explicit position relative to the first, as a
     * lazy Dataset whose evaluating jobs run under the caller's job label. */
   def sparsePhraseFreqs(parts: Seq[(String, Int)]): Dataset[(Long, Float, Int)] = positional {
+    require(parts.nonEmpty, "empty sparse phrase")
     val sorted = parts.sortBy(_._2)
     slotFreqs(sorted.map(p => Seq(p._1)), sorted.map(_._2 - sorted.head._2), 0)
   }
@@ -1127,79 +1099,6 @@ final class Searcher(val reader: IndexReader,
   /** DocIds of one term, decoded from the pruned postings scan. */
   private def termDocIds(t: String): Dataset[Long] = reader.decoded(Seq(t)).map(_.docId)
 
-  // ------------------------------------------------------ explain support
-
-  private[search] def readerTermStats(ts: Seq[String]) = reader.termStats(ts)
-
-  /** Exact token count of one doc (the Explain-side doc-length value
-    * source; one-row lookup, driver-sized). */
-  private[search] def docLenOf(docId: Long): Float =
-    reader.docstats.where($"docId" === docId)
-      .select($"tokenCount".cast("float")).head().getFloat(0)
-  private[search] def maxDocStat: Long = cs.maxDoc
-  private[search] def normCacheStat: Array[Float] = cache
-
-  /** (tf, normByte) of one (term, doc) — block-pruned point lookup. */
-  private[search] def termHit(t: String, docId: Long): Option[(Int, Int)] =
-    reader.docPostings(docId, Seq(t)).collect().headOption.map(p => (p.tf, p.norm))
-
-  private def unionClauses(qs: Seq[Query], ctx: Scoring): Dataset[ClauseHit] = {
-    // batch TermQ leaves into ONE postings scan; recurse for the rest
-    val indexed = qs.zipWithIndex
-    val termLeaves = indexed.collect { case (TermQ(t, b), i) => (t, b, i) }
-    val complex = indexed.filterNot(_._1.isInstanceOf[TermQ])
-    val parts =
-      (if (termLeaves.nonEmpty)
-        Seq(scoredTerms(termLeaves, ctx))
-      else Nil) ++
-      complex.map { case (q, i) =>
-        scoredRaw(q, ctx).map(sd => ClauseHit(sd.docId, i, sd.score))
-      }
-    if (parts.isEmpty) spark.emptyDataset[ClauseHit]
-    else parts.reduce(_ union _)
-  }
-
-  /** Boolean composition: one shuffle by docId; musts enforced by presence
-    * bitmask, minShouldMatch by count, score = in-clause-order float sum
-    * times coord(present, clauses) times the boost (BooleanScorer2
-    * semantics). */
-  private def scoredBool(q: BoolQ, ctx: Scoring): Dataset[ScoreDoc] = {
-    val clauses = q.must ++ q.should
-    if (clauses.isEmpty) return spark.emptyDataset[ScoreDoc]
-    val nMust = q.must.size
-    val n = clauses.size
-    val msm = math.max(q.minShouldMatch, if (nMust == 0) 1 else 0)
-    val boost = q.boost
-    val sim = ctx.sim
-    val hits = unionClauses(clauses, ctx)
-    val combined = hits.groupByKey(_.docId).flatMapGroups { (docId, it) =>
-      val scores = new Array[Float](n)
-      val present = new Array[Boolean](n)
-      it.foreach { h => scores(h.idx) = h.score; present(h.idx) = true }
-      var mustOk = true
-      var i = 0
-      while (i < nMust) { if (!present(i)) mustOk = false; i += 1 }
-      var shouldCount = 0
-      i = nMust
-      while (i < n) { if (present(i)) shouldCount += 1; i += 1 }
-      if (mustOk && shouldCount >= msm) {
-        var sum = 0f // fixed clause order — float-exact vs the reference
-        var matched = 0
-        i = 0
-        while (i < n) { if (present(i)) { sum += scores(i); matched += 1 }; i += 1 }
-        Iterator.single(ScoreDoc(docId, sum * sim.coord(matched, n) * boost))
-      } else Iterator.empty
-    }
-    if (q.mustNot.isEmpty) combined
-    else {
-      val excluded = q.mustNot.map(mq => scoredRaw(mq, ctx).map(_.docId))
-        .reduce(_ union _).distinct().toDF("docId_ex")
-      // ReqExclScorer ≙ anti-join (reference: ReqExclScorer.cs)
-      combined.join(excluded, combined("docId") === excluded("docId_ex"), "left_anti")
-        .as[ScoreDoc]
-    }
-  }
-
   // ---------------------------------------------------- term-leaf scanning
 
   /** Score a batch of (term, boost, clause index) in one postings scan. */
@@ -1270,9 +1169,6 @@ final class Searcher(val reader: IndexReader,
     topK(after, q, k, sim)
 
   def searchWith(sim: SimilarityLike, q: Query, k: Int): Array[ScoreDoc] = topK(null, q, k, sim)
-
-  def searchAfterWith(sim: SimilarityLike, after: ScoreDoc, q: Query,
-                      k: Int): Array[ScoreDoc] = topK(after, q, k, sim)
 
   /** The one top-k path: the rewritten query's clause weights under
     * `sim`, then the flat scorer or the Dataset scorer tree. `sim` is

@@ -295,9 +295,7 @@ object Suggest {
     * ceil of the product are still included). Feed the result to
     * [[completeFromDictionary]] / spell checking. */
   def highFrequencyDictionary(reader: IndexReader, thresh: Float): DataFrame = {
-    val live = reader.collectionStats.maxDoc -
-      graft.build.Deletes.tombstones(reader.spark, reader.dir).count()
-    val minDf = (thresh.toDouble * live).toLong
+    val minDf = (thresh.toDouble * reader.numDocs).toLong
     reader.termDict.where(col("df") >= lit(minDf)).select(col("term"), col("df"))
   }
 

@@ -58,8 +58,7 @@ object ValueSources {
     * maxDoc minus deletions — not the build-time docCount constant
     * (same convention as AutoStopwords.stopWordsPercent). */
   def numDocs(reader: IndexReader): ScoreExpr =
-    Const((reader.collectionStats.maxDoc -
-      graft.build.Deletes.tombstones(reader.spark, reader.dir).count()).toFloat)
+    Const(reader.numDocs.toFloat)
   def sumTotalTermFreq(reader: IndexReader): ScoreExpr =
     Const(reader.collectionStats.sumTotalTermFreq.toFloat)
 

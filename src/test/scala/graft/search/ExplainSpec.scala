@@ -47,6 +47,26 @@ class ExplainSpec extends AnyFunSuite {
     assert(e2.description.contains("MUST"))
   }
 
+  test("a clause matching with score 0 is a match: explain == score") {
+    // doc 0 is "all"; a 0-boost clause on it scores 0 but is present
+    val constant = ConstantScoreQ(TermQ("all", 0f), 2f)
+    val must = BoolQ(must = Seq(TermQ("all", 0f), TermQ("all")))
+    for (q <- Seq(constant, must)) {
+      val hit = searcher.search(q, 10).find(_.docId == 0L)
+      assert(hit.exists(_.score > 0f), s"$q does not score doc 0 above 0")
+      val e = searcher.explain(q, 0L)
+      assert(e.matched && e.value === hit.get.score, s"$q\n${e.format()}")
+    }
+    assert(searcher.explain(constant, 0L).value === 2f)
+  }
+
+  test("explain == score for function and boosting queries over bools") {
+    val or = BoolQ(should = Seq(TermQ("all"), TermQ("dogs")))
+    checkHits(FunctionScoreQ(or, ScoreExpr.Mul(ScoreExpr.SubScore, ScoreExpr.DocLen)))
+    checkHits(BoostingQ(or, TermQ("dogs"), 0.5f))
+    checkHits(DisMaxQ(Seq(TermQ("dogs"), or), tieBreak = 0.5f))
+  }
+
   test("explanation tree carries the idf/tf/norm breakdown") {
     val e = searcher.explain(TermQ("dogs"), 1L)
     assert(e.details.exists(_.description.startsWith("idf")))

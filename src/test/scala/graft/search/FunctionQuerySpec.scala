@@ -136,6 +136,21 @@ class FunctionQuerySpec extends AnyFunSuite {
     graft.build.Deletes.deleteDocs(spark, d2, spark.createDataset(Seq(0L, 5L)))
     assert(ValueSources.numDocs(r) === Const(4f), "NumDocsValueSource.cs:43 excludes deletions")
     assert(ValueSources.maxDoc(r) === Const(6f), "maxDoc stays the commit constant")
+    // a doc tombstoned twice is one deletion: "all" is in docs 0 and 5
+    val d3 = SparkTestSession.tmpDir("graft-funcq-twice-")
+    IndexBuilder.build(spark, spark.createDataset(CorpusGen.microFixture), d3, 2)
+    graft.build.Deletes.deleteByTerm(spark, d3, "all")
+    graft.build.Deletes.deleteByTerm(spark, d3, "all")
+    assert(ValueSources.numDocs(new IndexReader(spark, d3)) === Const(4f))
+    // every generation's tombstones count, not only the first's
+    val root = SparkTestSession.tmpDir("graft-funcq-gens-")
+    IndexBuilder.build(spark, spark.createDataset(CorpusGen.microFixture), s"$root/g0", 2)
+    IndexBuilder.build(spark, spark.createDataset(CorpusGen.microFixture), s"$root/g1", 2,
+      docIdBase = 6L)
+    graft.build.Deletes.deleteDocs(spark, s"$root/g1", spark.createDataset(Seq(7L)))
+    val multi = IndexReader.multi(spark, Seq(s"$root/g0", s"$root/g1"))
+    assert(ValueSources.numDocs(multi) === Const(11f))
+    assert(ValueSources.maxDoc(multi) === Const(12f))
   }
 
   test("scaleDocLen resolves to the Linear twin of ScaleFloatFunction") {

@@ -135,6 +135,33 @@ class JobCountSpec extends AnyFunSuite with BeforeAndAfterAll {
       }
     }
 
+    test(s"$name reader: a composite tree groups its leaf hits by docId once") {
+      import ScoreExpr._
+      val s = new Searcher(mk())
+      val or = BoolQ(should = Seq(TermQ(a), TermQ(b)))
+      val and = BoolQ(must = Seq(TermQ(a), TermQ(b)))
+      val aPrefix = BoolQ(must = Seq(TermQ(a)), should = Seq(PrefixQ(b.take(1)))) // +a f*
+      assert(s.rewrite(aPrefix) match {
+        case BoolQ(Seq(_: TermQ), Seq(BoolQ(Nil, ts, Nil, _, _)), Nil, _, _) => ts.size > 1
+        case _ => false
+      }, "the prefix does not expand to an OR under the must")
+      // the parent's jobs: a groupByKey (two jobs under AQE) per bool and
+      // DisMax, a docstats join per function query, a left outer join and
+      // a distinct per boosting query. Its tasks on the single / 2-generation
+      // reader: 13/23, 13/23, 5/9, 7/13 and 14/24
+      for ((q, parent) <- Seq(
+          aPrefix -> 3,
+          DisMaxQ(Seq(TermQ(b), and), 0.5f) -> 3,
+          ConstantScoreQ(or, 2f) -> 2,
+          FunctionScoreQ(or, Mul(SubScore, DocLen)) -> 3,
+          BoostingQ(or, and, 0.5f) -> 5)) {
+        s.search(q, 5) // warm
+        val n = jobsOf(s.search(q, 5))
+        assert(n <= 2, s"$q ran $n jobs (the parent ran $parent)")
+        assert(s.search(q, 5).toSeq === s.searchOracle(q, 5).toSeq, q)
+      }
+    }
+
     test(s"$name reader: a flat TermQ and a flat BoolQ run one job of one task and no SQL execution") {
       val s = new Searcher(mk())
       for (q <- Seq(TermQ(a), BoolQ(must = Seq(TermQ(a)), should = Seq(TermQ(b)),
